@@ -1,5 +1,7 @@
 package graft
 
+import graft.dedup.SeenIndex
+import graft.dedup.SeenIndex.{Cached, Live}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
@@ -58,8 +60,7 @@ object ScaleBench {
           when(pmod(xxhash64(lit(k + 1000), i), lit(2)) === 0, x).otherwise(-x)).as("embedding"),
         col("label"))
     }
-    graft.dedup.SeenIndex.appendVectors(
-      copies.reduce(_.unionByName(_)), "embedding", "vec_id", p)
+    SeenIndex.append(copies.reduce(_.unionByName(_)), histVecs(Live), p)
   }
 
   // ---- vs-history fixtures: DETERMINISTIC paths, built OUTSIDE the
@@ -84,6 +85,14 @@ object ScaleBench {
     */
   private def vsHistoryPlanes: Array[Array[Float]] =
     graft.similarity.Similarity.hyperplanes(64, 64)
+
+  /** The embedding index family of the bench entries: the corpus's
+    * `(vec_id, embedding)` gated at cosine 0.9.
+    */
+  private def histVecs(
+      signatures: SeenIndex.Signatures,
+      planes: Array[Array[Float]] = vsHistoryPlanes): SeenIndex.Embedding =
+    SeenIndex.Embedding("embedding", "vec_id", threshold = 0.9, planes, signatures = signatures)
 
   private val VsHistoryFixtures =
     Seq("hist_sigs", "hist_vecs", "hist_vecs8", "hist_phash", "pq_index")
@@ -119,23 +128,19 @@ object ScaleBench {
 
   private def buildHistSigs(spark: SparkSession, dir: String)(p: String): Unit = {
     val docs = graft.sources.Sources.documents(spark, dir)
-    graft.dedup.SeenIndex.append(
-      docs.filter(col("doc_id") % 3 =!= 0)
-        .select(graft.dedup.SimHash64.simhash64(
-          graft.text.TextAnalysis.tokens(col("text"))).as("sig")),
-      "sig", p)
+    SeenIndex.append(
+      docs.filter(col("doc_id") % 3 =!= 0), SeenIndex.Simhash("text"), p)
   }
 
   private def buildHistVecs(spark: SparkSession, dir: String)(p: String): Unit = {
     val emb = graft.sources.Sources.embeddings(spark, dir)
-    graft.dedup.SeenIndex.appendVectors(
-      emb.filter(col("vec_id") % 3 =!= 0), "embedding", "vec_id", p)
-    graft.dedup.SeenIndex.ensureSigCache(spark, p, vsHistoryPlanes)
+    SeenIndex.append(emb.filter(col("vec_id") % 3 =!= 0), histVecs(Live), p)
+    SeenIndex.ensureSigCache(spark, p, vsHistoryPlanes)
   }
 
   private def buildHistVecs8(spark: SparkSession, dir: String)(p: String): Unit = {
     history8Into(spark, graft.sources.Sources.embeddings(spark, dir), p)
-    graft.dedup.SeenIndex.ensureSigCache(spark, p, vsHistoryPlanes)
+    SeenIndex.ensureSigCache(spark, p, vsHistoryPlanes)
   }
 
   private def buildHistPhash(spark: SparkSession, dir: String)(p: String): Unit = {
@@ -802,10 +807,11 @@ object ScaleBench {
             graft.multimodal.Multimodal.syntheticImages(part, "doc_id", "text"))
             .toDF().select(col("media_id"), col("ahash"))
         val path = graft.core.TempDirs.create("scale_phash_index_")
-        graft.dedup.SeenIndex.gateAndUpdateHamming(
-          hashes(docs.filter(col("doc_id") % 3 =!= 0)), "ahash", path).release()
-        val e2 = graft.dedup.SeenIndex.gateAndUpdateHamming(
-          hashes(docs.filter(col("doc_id") % 3 === 0)), "ahash", path)
+        val family = SeenIndex.Hamming("ahash")
+        SeenIndex.gateAndUpdate(
+          hashes(docs.filter(col("doc_id") % 3 =!= 0)), family, path).release()
+        val e2 = SeenIndex.gateAndUpdate(
+          hashes(docs.filter(col("doc_id") % 3 === 0)), family, path)
         val n = e2.result.count()
         e2.release()
         n
@@ -826,10 +832,9 @@ object ScaleBench {
       // track that gate's.
       "ingest_epochs" -> (() => {
         val path = graft.core.TempDirs.create("scale_seen_index_")
-        graft.dedup.SeenIndex.gateAndUpdateSimhash(
-          docs.filter(col("doc_id") % 3 =!= 0), "text", path).release()
-        val e2 = graft.dedup.SeenIndex.gateAndUpdateSimhash(
-          docs.filter(col("doc_id") % 3 === 0), "text", path)
+        val family = SeenIndex.Simhash("text")
+        SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 =!= 0), family, path).release()
+        val e2 = SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 === 0), family, path)
         val n = e2.result.count()
         e2.release()
         n
@@ -843,8 +848,8 @@ object ScaleBench {
         val path = graft.core.TempDirs.create("scale_window_index_")
         val slice = docs.filter(col("doc_id") % 3 === 1)
         def epoch(e: Long, minEpoch: Long): Long = {
-          val r = graft.dedup.SeenIndex.gateAndUpdateSimhashWindow(
-            slice, "text", path, e, minEpoch)
+          val r = SeenIndex.gateAndUpdate(slice, SeenIndex.Simhash("text"),
+            path, Some(SeenIndex.Window(e, minEpoch)))
           val n = r.result.count(); r.release(); n
         }
         epoch(1L, 0L) + epoch(10L, 5L) + epoch(11L, 6L)
@@ -858,9 +863,10 @@ object ScaleBench {
       "compact_index" -> (() => {
         val path = graft.core.TempDirs.create("scale_compact_index_")
         val sigs = docs.select(xxhash64(col("text")).as("sig"))
-        (1L to 3L).foreach(e => graft.dedup.SeenIndex.appendEpoch(sigs, "sig", path, e))
-        graft.dedup.SeenIndex.compact(spark, path)
-        graft.dedup.SeenIndex.read(spark, path).count()
+        val family = SeenIndex.Hamming("sig")
+        (1L to 3L).foreach(e => SeenIndex.append(sigs, family, path, Some(e)))
+        SeenIndex.compact(spark, family, path)
+        SeenIndex.read(spark, family, path).count()
       }),
       // Exactly-once ledgered ingest: two batches through the
       // per-batch protocol (ledger probe + epoch alloc + own-epoch-
@@ -871,10 +877,11 @@ object ScaleBench {
       "exactly_once_epochs" -> (() => {
         val path = graft.core.TempDirs.create("scale_eo_index_")
         val outp = graft.core.TempDirs.create("scale_eo_out_")
-        graft.dedup.SeenIndex.exactlyOnceEpochSimhash(
-          docs.filter(col("doc_id") % 3 =!= 0), "text", "b0", path, outp, 3)
-        graft.dedup.SeenIndex.exactlyOnceEpochSimhash(
-          docs.filter(col("doc_id") % 3 === 0), "text", "b1", path, outp, 3)
+        val family = SeenIndex.Simhash("text")
+        SeenIndex.exactlyOnceEpoch(
+          docs.filter(col("doc_id") % 3 =!= 0), family, "b0", path, outp)
+        SeenIndex.exactlyOnceEpoch(
+          docs.filter(col("doc_id") % 3 === 0), family, "b1", path, outp)
         spark.read.parquet(outp).where(col("epoch") === 2L).count()
       }),
       // Windowed exactly-once ingest (the composed re-crawl shape):
@@ -887,12 +894,10 @@ object ScaleBench {
         val path = graft.core.TempDirs.create("scale_weo_index_")
         val outp = graft.core.TempDirs.create("scale_weo_out_")
         val slice = docs.filter(col("doc_id") % 3 === 1)
-        graft.dedup.SeenIndex.exactlyOnceEpochSimhashWindow(
-          slice, "text", "b0", path, outp, 3, admittedAt = 100L, minAdmitted = 0L)
-        graft.dedup.SeenIndex.exactlyOnceEpochSimhashWindow(
-          slice, "text", "b1", path, outp, 3, admittedAt = 150L, minAdmitted = 70L)
-        graft.dedup.SeenIndex.exactlyOnceEpochSimhashWindow(
-          slice, "text", "b2", path, outp, 3, admittedAt = 300L, minAdmitted = 220L)
+        Seq(("b0", 100L, 0L), ("b1", 150L, 70L), ("b2", 300L, 220L)).foreach { case (key, at, min) =>
+          SeenIndex.exactlyOnceEpoch(
+            slice, SeenIndex.Simhash("text"), key, path, outp, window = Some((at, min)))
+        }
         spark.read.parquet(outp).count()
       }),
       // Gate cost vs HISTORY DEPTH, batch held FIXED. The corpus-x
@@ -912,14 +917,9 @@ object ScaleBench {
         lazy val hist =
           ensureVsHistoryFixture(spark, dir, "hist_sigs")(buildHistSigs(spark, dir))
         () => {
-          val batch = docs
-            .filter(col("doc_id") % 3 === 0 && col("doc_id") < CopyStride)
-            .withColumn("__sig", graft.dedup.SimHash64.simhash64(
-              graft.text.TextAnalysis.tokens(col("text"))))
-          graft.dedup.Dedup.dropSeenHamming(
-            batch,
-            graft.dedup.SeenIndex.read(spark, hist).select(col("sig").as("__sig")),
-            "__sig", maxHamming = 3).count()
+          val batch = docs.filter(col("doc_id") % 3 === 0 && col("doc_id") < CopyStride)
+          SeenIndex.dropSeen(batch, SeenIndex.Simhash("text"), hist)
+            .result.count()
         }
       },
       // The embedding twin: fixed ~0.7k-vector batch against a vector
@@ -942,16 +942,11 @@ object ScaleBench {
           // cold. That asymmetry, plus ensureSigCache's two count()
           // jobs per gate (now one FS listing against the sync
           // marker), was the whole "signed 1.6x slower" artifact.
-          val (kept, rel) = graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-            batch,
-            graft.dedup.SeenIndex.readVectors(spark, hist)
-              .select(col("id").as("vec_id"), col("vec").as("embedding")),
-            "embedding", "vec_id", threshold = 0.9, gatePlanes,
-            // gate regime (candidates batch-bound): the semi-prune
-            // the ingest loops use; verify plan symmetric with the
-            // signed twin below
-            semiPruneVerify = true)
-          val n = kept.count(); rel(); n
+          // the Live family gates with the semi-prune the ingest
+          // loops use (candidates batch-bound); verify plan symmetric
+          // with the signed twin below
+          val r = SeenIndex.dropSeen(batch, histVecs(Live, gatePlanes), hist)
+          val n = r.result.count(); r.release(); n
         }
       },
       // The SIGNED twin of embedding_gate_vs_history: same fixed
@@ -982,8 +977,7 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_vecs")(buildHistVecs(spark, dir))
         () => {
           val batch = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < CopyStride)
-          val r = graft.dedup.SeenIndex.dropSeenEmbeddingSigned(
-            batch, "embedding", "vec_id", histS, threshold = 0.9, planes = gatePlanesS)
+          val r = SeenIndex.dropSeen(batch, histVecs(Cached, gatePlanesS), histS)
           val n = r.result.count(); r.release(); n
         }
       },
@@ -1003,13 +997,8 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_vecs8")(buildHistVecs8(spark, dir))
         () => {
           val batch = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < CopyStride)
-          val (kept, rel) = graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-            batch,
-            graft.dedup.SeenIndex.readVectors(spark, hist8)
-              .select(col("id").as("vec_id"), col("vec").as("embedding")),
-            "embedding", "vec_id", threshold = 0.9, gatePlanes8,
-            semiPruneVerify = true)
-          val n = kept.count(); rel(); n
+          val r = SeenIndex.dropSeen(batch, histVecs(Live, gatePlanes8), hist8)
+          val n = r.result.count(); r.release(); n
         }
       },
       "embedding_gate_vs_history8_signed" -> {
@@ -1021,8 +1010,7 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_vecs8")(buildHistVecs8(spark, dir))
         () => {
           val batch = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < CopyStride)
-          val r = graft.dedup.SeenIndex.dropSeenEmbeddingSigned(
-            batch, "embedding", "vec_id", hist8S, threshold = 0.9, planes = gatePlanes8S)
+          val r = SeenIndex.dropSeen(batch, histVecs(Cached, gatePlanes8S), hist8S)
           val n = r.result.count(); r.release(); n
         }
       },
@@ -1076,12 +1064,9 @@ object ScaleBench {
         lazy val gatePlanes = graft.similarity.Similarity.hyperplanes(64, 64)
         () => {
           val path = graft.core.TempDirs.create("scale_vec_index_")
-          graft.dedup.SeenIndex.gateAndUpdateEmbedding(
-            emb.filter(col("vec_id") % 3 =!= 0), "embedding", "vec_id", path,
-            threshold = 0.9, planes = gatePlanes).release()
-          val e2 = graft.dedup.SeenIndex.gateAndUpdateEmbedding(
-            emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id", path,
-            threshold = 0.9, planes = gatePlanes)
+          val family = histVecs(Live, gatePlanes)
+          SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path).release()
+          val e2 = SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path)
           val n = e2.result.count()
           e2.release()
           n
@@ -1094,10 +1079,10 @@ object ScaleBench {
       // vectors, still linear.
       "compact_vectors" -> (() => {
         val path = graft.core.TempDirs.create("scale_compact_vecidx_")
-        (1L to 3L).foreach(e =>
-          graft.dedup.SeenIndex.appendVectorsEpoch(emb, "embedding", "vec_id", path, e))
-        graft.dedup.SeenIndex.compactVectors(spark, path)
-        graft.dedup.SeenIndex.readVectors(spark, path).count()
+        val family = histVecs(Live)
+        (1L to 3L).foreach(e => SeenIndex.append(emb, family, path, Some(e)))
+        SeenIndex.compact(spark, family, path)
+        SeenIndex.read(spark, family, path).count()
       }),
       // Full-corpus distributed Lloyd's: 5 rounds x one scan + a
       // k x dim control-plane collect per round — alpha ~ the scan's,

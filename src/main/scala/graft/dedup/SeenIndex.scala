@@ -1,8 +1,14 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{IndexLayout, Releasable}
+import graft.similarity.Similarity
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** A DURABLE seen-signature index — the cross-RUN state behind the
   * dropSeen ingest gates. The in-memory gates
@@ -12,27 +18,32 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, 
   * admitted — state that must outlive the session. This object gives
   * that state a layout and a lifecycle:
   *
-  *   - LAYOUT: a parquet directory of single-column `(sig: Long)`
-  *     rows. Appends may duplicate signatures across epochs — readers
-  *     never care, because every consumer ([[Dedup.hammingPairs]]'
-  *     distinct-signature banding, the gates) collapses to DISTINCT
-  *     signatures before joining, so compaction is an optimization,
-  *     not a correctness step. At 8 bytes per signature a year of a
-  *     billion-doc crawl is ~8 GB — a broadcast-sized object for the
-  *     cluster that produced it.
-  *   - LIFECYCLE: [[gateAndUpdateSimhash]] = read index → gate the
-  *     batch → append the ADMITTED rows' signatures → return the
-  *     admitted rows. The append is the transition that makes a
-  *     re-ingest of today's batch tomorrow gate to zero — pinned by
-  *     SeenIndexSpec's two-epoch test.
+  *   - LAYOUT: a parquet directory of key rows — `(sig: Long)` for the
+  *     signature families, `(id, vec)` for embeddings — optionally
+  *     tagged (see [[tagged]]). Appends may duplicate keys across
+  *     epochs — readers never care, because every gate collapses to
+  *     DISTINCT keys before joining, so compaction is an optimization,
+  *     not a correctness step.
+  *   - LIFECYCLE: read index → gate the batch → append the ADMITTED
+  *     rows' keys → return the admitted rows. The append is the
+  *     transition that makes a re-ingest of today's batch tomorrow gate
+  *     to zero.
+  *
+  * ONE PROTOCOL OVER THREE FAMILIES. An [[IndexFamily]] — [[Simhash]],
+  * [[Hamming]] or [[Embedding]] — owns what differs per kind of
+  * signature: the on-disk keys, the filtered read, the tagged append,
+  * the gate and the compaction grain. Three drivers run any family:
+  * [[gateAndUpdate]] (one batch epoch, optionally with a retention
+  * [[Window]]), [[gateStream]] (the at-least-once streaming loop) and
+  * [[gateStreamExactlyOnce]] (the ledgered loop, optionally windowed
+  * on the admission clock) — the Structured Streaming design of one
+  * offset/commit-log protocol over idempotent sinks.
   *
   * WITHIN-batch duplicates are deliberately out of scope: two copies
   * of a NOVEL document arriving in the same batch both pass (neither
-  * is in history yet) and both signatures land in the index once
-  * (distinct before append). Same-batch dedup is
-  * [[Dedup.exactDedup]]/[[Dedup.hammingPairs]]' job — run it before
-  * or after the gate; the gate's contract is strictly "not seen in
-  * any PRIOR epoch".
+  * is in history yet). Same-batch dedup is [[Dedup.exactDedup]] /
+  * [[Dedup.hammingPairs]]' job; the gate's contract is strictly "not
+  * seen in any PRIOR epoch".
   *
   * CONCURRENCY: one writer per index directory (the daily-ingest
   * shape). Parquet append is not transactional across writers;
@@ -43,15 +54,234 @@ object SeenIndex {
 
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private val schema = StructType(Seq(StructField("sig", LongType, nullable = false)))
+  private val SigSchema = StructType(Seq(StructField("sig", LongType, nullable = false)))
 
-  /** The pigeonhole bound every Hamming gate in this object relies on:
-    * [[Dedup.dropSeenHamming]] bands signatures into 4 slices, so the
-    * banded candidate stage is EXACT only for `maxHamming < 4` (a
-    * signature differing in <= 3 bits must agree on at least one
-    * 16-bit slice). A larger radius would silently turn the gate
-    * approximate — it starts MISSING true near-duplicates — so the
-    * entry points refuse it loudly instead.
+  private val VecSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("vec", ArrayType(FloatType, containsNull = true), nullable = true)))
+
+  /** `keys` plus the two optional tags. `epoch` is the batch retention
+    * epoch (a day number, a crawl id) or, in the exactly-once layout,
+    * the ledger's ALLOCATION COUNTER a replay excludes; `admitted` is
+    * the ADMISSION STAMP the windowed exactly-once loop expires on. The
+    * two answer different questions and never share a column. A file
+    * written without a tag reads it as NULL = never expires — the
+    * conservative direction: legacy history keeps gating forever.
+    * Forever-retention appends write the keys alone.
+    */
+  private def tagged(keys: StructType) = StructType(keys.fields ++ Seq(
+    StructField("epoch", LongType, nullable = true),
+    StructField("admitted", LongType, nullable = true)))
+
+  /** Which history a gate sees: rows NOT tagged `excludeEpoch` (the
+    * exactly-once replay view — a retried batch must not gate against
+    * its own crashed append), tagged `>= minEpoch` (the batch window)
+    * and stamped `>= minAdmitted` (the exactly-once window). Untagged
+    * rows pass every filter.
+    */
+  private[dedup] final case class View(
+      excludeEpoch: Option[Long] = None,
+      minEpoch: Option[Long] = None,
+      minAdmitted: Option[Long] = None) {
+    def isAll: Boolean = excludeEpoch.isEmpty && minEpoch.isEmpty && minAdmitted.isEmpty
+    def apply(df: DataFrame): DataFrame = Seq(
+      excludeEpoch.map(e => col("epoch").isNull || col("epoch") =!= e),
+      minEpoch.map(m => col("epoch").isNull || col("epoch") >= m),
+      minAdmitted.map(m => col("admitted").isNull || col("admitted") >= m))
+      .flatten.foldLeft(df)(_ filter _)
+  }
+
+  // ---- the families ----
+
+  /** Where the [[Embedding]] gate's reference signatures come from. */
+  sealed abstract class Signatures extends Product with Serializable
+
+  /** Recomputed from the index vectors by every gate. */
+  case object Live extends Signatures
+
+  /** Read from the geometry-keyed signature cache (see [[ensureSigCache]]). */
+  case object Cached extends Signatures
+
+  /** [[Cached]] once this geometry's cache exists or the index's parquet
+    * crosses [[AutoSignBytes]], [[Live]] before — decided per gate.
+    */
+  case object Auto extends Signatures
+
+  /** [[Auto]] with another byte floor — package-private, so specs can
+    * cross the floor with a tiny index.
+    */
+  private[dedup] final case class AutoAbove(floorBytes: Long) extends Signatures
+
+  /** One index family: every decision a gate, an append, a read or a
+    * compaction makes per kind of signature. The drivers never ask
+    * which family they run.
+    */
+  sealed abstract class IndexFamily extends Product with Serializable {
+
+    private[SeenIndex] def keySchema: StructType = this match {
+      case _: Embedding => VecSchema
+      case _ => SigSchema
+    }
+
+    /** The batch column a signature gate compares. */
+    private def gateCol: String = this match {
+      case Hamming(c, _) => c
+      case _ => "__sig"
+    }
+
+    /** The batch as the gate consumes it: the text family hashes into
+      * its working `__sig` column — and refuses a caller's column of
+      * that name rather than silently overwrite and drop it.
+      */
+    private[SeenIndex] def prepare(batch: DataFrame): DataFrame = this match {
+      case Simhash(textCol, _) =>
+        require(!batch.columns.contains("__sig"),
+          "'__sig' is a reserved working column of the simhash gates and is " +
+            "dropped from the output — rename the caller's column first")
+        batch.withColumn("__sig",
+          SimHash64.simhash64(graft.text.TextAnalysis.tokens(col(textCol))))
+      case _ => batch
+    }
+
+    /** The admitted rows as the caller sees them. */
+    private[SeenIndex] def output(kept: DataFrame): DataFrame = this match {
+      case _: Simhash => kept.drop("__sig")
+      case _ => kept
+    }
+
+    /** Whether [[gateBatch]] pins the batch before gating (precomputed
+      * signatures carry an expensive decode upstream).
+      */
+    private[SeenIndex] def pinsBatch: Boolean = isInstanceOf[Hamming]
+
+    /** [[Auto]] decided for the index at `path`; every other family is itself. */
+    private[SeenIndex] def resolved(spark: SparkSession, path: String): IndexFamily = this match {
+      case e @ Embedding(_, _, _, _, _, _, _, s @ (Auto | AutoAbove(_))) =>
+        val floor = s match { case AutoAbove(b) => b; case _ => AutoSignBytes }
+        e.copy(signatures = if (useSigned(spark, path, e.planes, floor)) Cached else Live)
+      case f => f
+    }
+
+    /** The gate's reference for `view`, named as [[gate]] wants it. The
+      * cached form validates its signature cache first.
+      */
+    private[SeenIndex] def reference(spark: SparkSession, path: String, view: View): DataFrame =
+      this match {
+        case e: Embedding if e.signatures == Cached =>
+          ensureSigCache(spark, path, e.planes)
+          readSigs(spark, path, e, view)
+        case e: Embedding =>
+          readIndex(spark, path, VecSchema, view).select(col("id").as(e.idCol), col("vec").as(e.vecCol))
+        case _ =>
+          readIndex(spark, path, SigSchema, view).select(col("sig").as(gateCol))
+      }
+
+    /** The rows of `batch` not near anything in `ref`, with the release
+      * of the gate's internal persists.
+      */
+    private[SeenIndex] def gate(batch: DataFrame, ref: DataFrame): (DataFrame, () => Unit) =
+      this match {
+        case e: Embedding if e.signatures == Cached =>
+          Similarity.dropSeenEmbeddingPresigned(batch, ref, e.vecCol, e.idCol, e.threshold,
+            e.planes, e.bands, e.probeHamming, e.broadcastVerify)
+        case e: Embedding =>
+          // candidates are batch-bound in the ingest-gate regime: the
+          // semi-prune keeps the index's wide payload off the shuffle
+          Similarity.dropSeenEmbeddingReleasable(batch, ref, e.vecCol, e.idCol, e.threshold,
+            e.planes, e.bands, e.probeHamming, e.broadcastVerify, semiPruneVerify = true)
+        case Simhash(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m) -> (() => ())
+        case Hamming(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m) -> (() => ())
+      }
+
+    /** Append the keys of `kept` (a prepared frame) with the optional
+      * tags — null keys dropped (an unhashable row has nothing to
+      * remember; a null-id vector can never gate anything), distinct
+      * WITHIN the append. The cached form then appends the matching
+      * signature rows and re-marks the cache: index first (the source
+      * of truth), cache second, marker last, so a crash in between
+      * leaves a marker naming the pre-append file set and the next gate
+      * heals by rebuild. Fails loud mid-compaction: parquet append on a
+      * missing main path would CREATE it — resurrecting the index as
+      * just this batch while `.compact-old` holds the only full copy.
+      */
+    private[SeenIndex] def append(
+        kept: DataFrame, path: String, epoch: Option[Long], admitted: Option[Long]): Unit = {
+      require(admitted.isEmpty || epoch.isDefined, "an admission stamp needs an epoch tag")
+      requireNotMidCompaction(fsFor(kept.sparkSession, new Path(path)), path)
+      val tags = epoch.map(lit(_).cast("long").as("epoch")).toSeq ++
+        admitted.map(lit(_).cast("long").as("admitted"))
+      val (keys, present) = this match {
+        case e: Embedding =>
+          (Seq(col(e.idCol).cast("long").as("id"), col(e.vecCol).cast("array<float>").as("vec")),
+            col("vec").isNotNull && col("id").isNotNull)
+        case _ => (Seq(col(gateCol).cast("long").as("sig")), col("sig").isNotNull)
+      }
+      kept.select(keys ++ tags: _*).filter(present).distinct().write.mode("append").parquet(path)
+      this match {
+        case e: Embedding if e.signatures == Cached =>
+          val dir = sigsDir(path, e.planes)
+          sigCacheRows(kept, e, epoch, admitted).write.mode("append").parquet(dir.toString)
+          val fs = fsFor(kept.sparkSession, dir)
+          writeSyncMarker(fs, dir, indexFingerprint(fs, new Path(path)))
+        case _ =>
+      }
+    }
+  }
+
+  /** The TEXT family: SimHash over the tokens of `textCol`, gated within
+    * `maxHamming` bits — exact in fingerprint space for `maxHamming < 4`
+    * (see [[requireExactRadius]]). Reserves the working column `__sig`.
+    */
+  final case class Simhash(textCol: String, maxHamming: Int = 3) extends IndexFamily {
+    requireExactRadius(maxHamming)
+  }
+
+  /** Any precomputed 64-bit signature column (perceptual hashes, audio
+    * fingerprints) gated within `maxHamming` bits; the admitted rows
+    * keep every column, `sigCol` included.
+    */
+  final case class Hamming(sigCol: String, maxHamming: Int = 3) extends IndexFamily {
+    requireExactRadius(maxHamming)
+  }
+
+  /** The EMBEDDING family — the durable form of
+    * [[graft.similarity.Similarity.dropSeenEmbedding]]: cosine >=
+    * `threshold` over `vecCol`, `(id, vec)` rows on disk. APPROXIMATE
+    * exactly like its stateless twin (an LSH miss passes) — derive
+    * (planes, bands, probeHamming) from
+    * [[graft.similarity.Similarity.lshGeometry]] at the recall the gate
+    * needs; replay-deterministic given fixed `planes`. At (8 + 4*dim)
+    * bytes per row the index is NOT broadcast-sized and need not be:
+    * the band join shuffles only band keys and signatures
+    * (`broadcastVerify` stays an opt-in for small indexes).
+    * `signatures` picks where the reference signatures come from;
+    * admissions are identical under every choice.
+    */
+  final case class Embedding(
+      vecCol: String,
+      idCol: String,
+      threshold: Double,
+      planes: Array[Array[Float]],
+      bands: Int = 8,
+      probeHamming: Int = 0,
+      broadcastVerify: Boolean = false,
+      signatures: Signatures = Live) extends IndexFamily
+
+  /** A batch RETENTION WINDOW: gate only against history tagged
+    * `>= minEpoch` (untagged history never expires) and tag this
+    * batch's admissions `epoch`. A document whose every prior sighting
+    * aged out is re-admitted and re-tagged, resetting its clock; expiry
+    * is measured from the last ADMISSION, because a gated copy writes
+    * nothing.
+    */
+  final case class Window(epoch: Long, minEpoch: Long)
+
+  // ---- shared file-system discipline ----
+
+  /** The 4-band pigeonhole every Hamming gate relies on is EXACT only
+    * for `maxHamming < 4` (a signature within 3 bits agrees on at least
+    * one 16-bit slice); a larger radius would silently turn the gate
+    * approximate and MISS true near-duplicates, so it is refused.
     */
   private def requireExactRadius(maxHamming: Int): Unit =
     require(maxHamming >= 0 && maxHamming < 4,
@@ -59,87 +289,46 @@ object SeenIndex {
         "maxHamming < 4; a larger radius would silently miss true near-duplicates. " +
         "Use Dedup.dropSeenHamming directly with more bands if you need a wider radius.")
 
-  /** The simhash forms commandeer `__sig` as a working column and
-    * DROP it from the output; a caller's column of that name would be
-    * silently overwritten and deleted — fail loud instead, matching
-    * [[graft.similarity.Similarity.unitized]]'s `__norm` guard
-    * (review r19).
-    */
-  private def requireNoSigCol(df: DataFrame): DataFrame = {
-    require(!df.columns.contains("__sig"),
-      "'__sig' is a reserved working column of the simhash gates and is " +
-        "dropped from the output — rename the caller's column first")
-    df
-  }
-
-  private def fsFor(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+  private def fsFor(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** True when the index holds no parquet yet — the bootstrap epoch.
-    * Every gate short-circuits on it: an empty reference admits the
-    * WHOLE batch by construction (the gate is an anti-join against
-    * matches of an empty set, which keeps every row including
-    * null-signature ones — the same identity the full plan computes),
-    * so the bootstrap epoch skips the entire LSH/banding machinery
-    * and pays only decode + checkpoint + append (measured r20: the
-    * two-epoch lifecycle queries spent ~half their ~26 sequential
-    * jobs gating epoch 1 against a provably empty index). Fails loud
-    * mid-compaction exactly like [[read]].
-    */
-  private def indexEmpty(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    !hasParquet(fs, p)
-  }
 
   private def toHex(bytes: Array[Byte]): String =
     bytes.map(b => f"${b & 0xff}%02x").mkString
 
   private def emptyFrame(spark: SparkSession, s: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
 
-  private def renameOrThrow(
-      fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit =
-    // Hadoop rename reports failure by RETURNING FALSE, not throwing;
-    // ignoring it here would let a failed swap delete the only full
-    // copy of the index (the exact failure ADVICE r15 named).
+  /** Hadoop rename reports failure by RETURNING FALSE; ignoring it would
+    * let a failed swap delete the only full copy of the index.
+    */
+  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst returned false; " +
         "compaction aborted with the original index intact")
 
-  private def deleteOrThrow(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): Unit =
+  private def deleteOrThrow(fs: FileSystem, p: Path): Unit =
     if (fs.exists(p) && !fs.delete(p, true))
       throw new java.io.IOException(s"delete $p returned false")
 
   /** `<path><suffix>` with the path NORMALIZED first: a trailing slash
-    * in a caller's index path must not turn a sibling artifact into a
-    * CHILD of the index directory ("/data/idx/" + ".epochs" would
-    * nest the ledger inside the index, silently defeating the sibling
-    * layout). Hadoop Path normalization strips the trailing slash.
+    * must not turn a sibling artifact into a CHILD of the index.
     */
   private def sibling(path: String, suffix: String) =
-    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path).toString + suffix)
+    new Path(new Path(path).toString + suffix)
+
+  private def hasParquet(fs: FileSystem, p: Path): Boolean =
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
 
   /** Fail LOUD when the index directory is missing while a crashed
-    * [[compact]]'s leftovers exist. `read`'s missing-directory =
-    * empty-index bootstrap rule is right for a never-written index but
-    * catastrophic mid-compaction: between the two swap renames the
-    * main path does not exist, and a reader that bootstrapped empty
-    * there would silently admit EVERYTHING. The two states are
-    * distinguishable on disk — a true bootstrap has no
-    * `.compact-old`/`.compact-tmp` sibling — so readers throw with a
-    * recovery hint instead of guessing.
+    * [[compact]]'s leftovers exist. Between the two swap renames the
+    * main path does not exist, and a reader that bootstrapped EMPTY
+    * there would silently admit everything; a true bootstrap has no
+    * `.compact-old`/`.compact-tmp` sibling, so the states are
+    * distinguishable on disk.
     */
-  private def requireNotMidCompaction(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) {
-      val leftovers =
-        graft.core.IndexLayout.CompactSuffixes.map(sibling(path, _)).filter(fs.exists)
+  private def requireNotMidCompaction(fs: FileSystem, path: String): Unit =
+    if (!fs.exists(new Path(path))) {
+      val leftovers = IndexLayout.CompactSuffixes.map(sibling(path, _)).filter(fs.exists)
       if (leftovers.nonEmpty)
         throw new IllegalStateException(
           s"seen index at $path is missing but ${leftovers.mkString(", ")} exist(s): " +
@@ -147,22 +336,35 @@ object SeenIndex {
             "and admit everything. Run SeenIndex.recover(spark, path) to restore the " +
             "pre-compaction copy, then retry.")
     }
+
+  /** True while the index holds no parquet — the bootstrap epoch. */
+  private def indexEmpty(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val fs = fsFor(spark, p)
+    requireNotMidCompaction(fs, path)
+    !hasParquet(fs, p)
   }
 
-  /** Restore an index from a crashed [[compact]]/[[compactVectors]].
-    * Idempotent over every crash state the swap protocol can leave:
-    * main missing + backup present -> the backup (a complete
-    * pre-compaction copy) moves back; main missing + only the temp
-    * present (the backup was already consumed, so the temp write is
-    * known complete) -> the compacted copy moves in; main present ->
-    * the swap finished, only stale leftovers are deleted. A no-op on
-    * a healthy or never-written index.
+  /** The one filtered read behind every gate and [[read]]: the key
+    * rows of `view`; EMPTY while the index holds no parquet.
+    */
+  private def readIndex(spark: SparkSession, path: String, keys: StructType, view: View): DataFrame =
+    if (indexEmpty(spark, path)) emptyFrame(spark, keys)
+    else if (view.isAll) spark.read.schema(keys).parquet(path)
+    else view(spark.read.schema(tagged(keys)).parquet(path)).select(keys.fieldNames.toSeq.map(col): _*)
+
+  /** Restore an index from a crashed [[compact]]. Idempotent over every
+    * crash state the swap can leave: main missing + backup present ->
+    * the backup (a complete pre-compaction copy) moves back; main
+    * missing + only the temp present (the backup was consumed, so the
+    * temp is complete) -> the compacted copy moves in; main present ->
+    * only stale leftovers are deleted. A no-op on a healthy index.
     */
   def recover(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = fsFor(spark, p)
-    val bak = sibling(path, graft.core.IndexLayout.CompactOld)
-    val tmp = sibling(path, graft.core.IndexLayout.CompactTmp)
+    val bak = sibling(path, IndexLayout.CompactOld)
+    val tmp = sibling(path, IndexLayout.CompactTmp)
     if (!fs.exists(p)) {
       if (fs.exists(bak)) renameOrThrow(fs, bak, p)
       else if (fs.exists(tmp)) renameOrThrow(fs, tmp, p)
@@ -171,381 +373,331 @@ object SeenIndex {
     deleteOrThrow(fs, bak)
   }
 
-  /** The index's signature frame — a single `sig` column, possibly
-    * with cross-epoch duplicates. A missing or empty directory reads
-    * as an EMPTY index (the bootstrap case: the first epoch gates
-    * against nothing and seeds the index), not an error — UNLESS a
-    * crashed compaction's leftovers prove the index existed, in which
-    * case the read fails loud (see [[recover]]).
+  /** The index's key rows — `sig`, or `(id, vec)` for [[Embedding]] —
+    * possibly with cross-epoch duplicates; `minEpoch` / `minAdmitted`
+    * restrict them to the history a windowed gate sees (untagged rows
+    * always pass). A missing or empty directory reads as an EMPTY index
+    * (the bootstrap case) unless a crashed compaction's leftovers prove
+    * it existed — then the read fails loud (see [[recover]]).
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(schema).parquet(path)
-    else
-      emptyFrame(spark, schema)
-  }
-
-  /** Mid-compaction guard for the APPEND primitives (review r18):
-    * parquet append on a missing main path CREATES it — resurrecting
-    * the index as just-this-batch while `.compact-old` still holds
-    * the only full copy. Every reader's fail-loud check would then
-    * pass (the path exists), gates would admit all history as novel,
-    * and [[recover]]'s main-present branch would DELETE the backup —
-    * the one sequence that permanently loses the index. Appends must
-    * fail as loud as reads.
-    */
-  private def requireAppendable(df: DataFrame, path: String): Unit =
-    requireNotMidCompaction(
-      fsFor(df.sparkSession, new org.apache.hadoop.fs.Path(path)), path)
-
-  /** Append `sigs` (any frame with a long `sigCol`) to the index —
-    * nulls dropped (an unhashable row has nothing to remember),
-    * distinct WITHIN the append (cross-epoch duplicates are the
-    * reader's non-problem, same-file duplicates are just waste).
-    */
-  def append(sigs: DataFrame, sigCol: String, path: String): Unit = {
-    requireAppendable(sigs, path)
-    sigs.select(col(sigCol).cast("long").as("sig"))
-      .filter(col("sig").isNotNull)
-      .distinct()
-      .write.mode("append").parquet(path)
-    ()
-  }
-
-  // ---- retention windows: optional epoch tags on the same layout ----
-
-  private val epochSchema = StructType(Seq(
-    StructField("sig", LongType, nullable = false),
-    StructField("epoch", LongType, nullable = true)))
-
-  /** [[epochSchema]] plus the `admitted` stamp — the windowed
-    * EXACTLY-ONCE layout. The two long columns answer two DIFFERENT
-    * questions and must never share a column (the collision the
-    * pre-composition scaladoc warned about): `epoch` is the ledger's
-    * ALLOCATION COUNTER, keyed on by a replay's own-epoch exclusion;
-    * `admitted` is the ADMISSION STAMP (wall-clock millis, a day
-    * number — any monotone long the caller's clock produces), keyed
-    * on by retention-window expiry. Files written by the unstamped
-    * appends project `admitted` as NULL = never expires, so every
-    * pre-composition index keeps gating forever under a windowed
-    * reader — the conservative direction.
-    */
-  private val winEpochSchema = StructType(epochSchema.fields :+
-    StructField("admitted", LongType, nullable = true))
-
-  /** [[append]] with an EPOCH tag — the retention-enabling form: rows
-    * carry the ingest epoch (a day number, a crawl id, any monotone
-    * long) so [[readWindow]] can expire history. Tagged and untagged
-    * appends mix freely in one directory: parquet schema projection
-    * reads an untagged file's epoch as NULL, and null means NEVER
-    * EXPIRES — the conservative direction (a legacy signature keeps
-    * gating forever rather than silently aging out). [[read]] keeps
-    * working unchanged over tagged files (it projects just `sig`), so
-    * adopting epochs never breaks an un-windowed consumer.
-    */
-  def appendEpoch(sigs: DataFrame, sigCol: String, path: String, epoch: Long): Unit = {
-    requireAppendable(sigs, path)
-    sigs.select(col(sigCol).cast("long").as("sig"), lit(epoch).cast("long").as("epoch"))
-      .filter(col("sig").isNotNull)
-      .distinct()
-      .write.mode("append").parquet(path)
-    ()
-  }
-
-  /** The signature frame restricted to epochs >= `minEpoch`, plus
-    * every untagged row — the RECRAWL-WINDOW read. A pipeline that
-    * wants "re-admit content not seen in the last 90 days" gates
-    * against `readWindow(spark, path, today - 90)` instead of
-    * [[read]].
-    */
-  def readWindow(spark: SparkSession, path: String, minEpoch: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(epochSchema).parquet(path)
-        .filter(col("epoch").isNull || col("epoch") >= minEpoch)
-        .select("sig")
-    else
-      emptyFrame(spark, schema)
-  }
-
-  /** [[gateAndUpdateSimhash]] with a RETENTION WINDOW: gate only
-    * against signatures admitted at epoch >= `minEpoch` (untagged
-    * history never expires), tag this batch's admissions with
-    * `epoch`. A document whose every prior sighting has aged out of
-    * the window is re-admitted — and re-remembered at the current
-    * epoch, resetting its clock. Note the exact semantics: only
-    * epochs where a copy was ADMITTED extend the memory, because a
-    * GATED copy writes nothing — expiry is measured from the last
-    * admission, not the last sighting.
-    */
-  def gateAndUpdateSimhashWindow(
-      batch: DataFrame,
-      textCol: String,
+  def read(
+      spark: SparkSession,
+      family: IndexFamily,
       path: String,
-      epoch: Long,
-      minEpoch: Long,
-      maxHamming: Int = 3): graft.core.Releasable[DataFrame] = {
-    requireExactRadius(maxHamming)
-    val spark = batch.sparkSession
-    // NOT persisted (unlike the Hamming gates): the double-evaluated
-    // upstream here is one tokenize+SimHash pass over the batch text —
-    // caching the text-carrying frame costs more than recomputing it
-    // (measured r19: q103 1.2 -> 4.8 s with the persist on)
-    val hashed = requireNoSigCol(batch).withColumn("__sig",
-      SimHash64.simhash64(graft.text.TextAnalysis.tokens(col(textCol))))
-    // eager localCheckpoint for the same read-what-you-write reason
-    // as gateAndUpdateSimhash (see its in-body comment); bootstrap
-    // epoch short-circuits the gate — see [[indexEmpty]]
-    val kept =
-      (if (indexEmpty(spark, path)) hashed
-       else Dedup.dropSeenHamming(
-         hashed, readWindow(spark, path, minEpoch).select(col("sig").as("__sig")),
-         "__sig", maxHamming))
-        .localCheckpoint(true)
-    appendEpoch(kept, "__sig", path, epoch)
-    graft.core.Releasable(kept.drop("__sig"), () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
-  }
+      minEpoch: Option[Long] = None,
+      minAdmitted: Option[Long] = None): DataFrame =
+    readIndex(spark, path, family.keySchema, View(minEpoch = minEpoch, minAdmitted = minAdmitted))
 
-  /** One ingest epoch at the TEXT level: gate `batch` by SimHash
-    * against everything previously admitted (exact in fingerprint
-    * space at the default `maxHamming = 3 < 4` bands — the
-    * [[Dedup.dropSeenSimhash]] pigeonhole), append the admitted
-    * signatures, return the admitted rows. The returned frame is
-    * PERSISTED (the gate result is consumed twice: the index append
-    * that already ran, and whatever the caller does next) — call the
-    * returned [[graft.core.Releasable]]'s `release()` after the
-    * terminal action.
+  /** Append `df`'s keys — the family's signature (the text family hashes
+    * `textCol`), or `(idCol, vecCol)` — to the index, optionally tagged
+    * with an `epoch` and an `admitted` stamp (see [[tagged]]). Tagged
+    * and untagged appends mix freely in one directory. A [[Cached]]
+    * family maintains its signature cache in lockstep.
     */
-  def gateAndUpdateSimhash(
-      batch: DataFrame,
-      textCol: String,
+  def append(
+      df: DataFrame,
+      family: IndexFamily,
       path: String,
-      maxHamming: Int = 3): graft.core.Releasable[DataFrame] = {
-    requireExactRadius(maxHamming)
-    val spark = batch.sparkSession
-    // NOT persisted — see gateAndUpdateSimhashWindow (q103 receipt)
-    val hashed = requireNoSigCol(batch).withColumn("__sig",
-      SimHash64.simhash64(graft.text.TextAnalysis.tokens(col(textCol))))
-    // EAGER localCheckpoint, not persist: the gate READS the very
-    // directory the append below WRITES, so a lazy (or evicted-cache)
-    // result would re-list the index on its next action and find its
-    // OWN appended signatures — every admitted row would then gate
-    // against itself and vanish. Checkpointing pins the admitted set
-    // to the pre-append file listing and truncates the lineage, so no
-    // consumer can ever re-execute the read. (Same lineage discipline
-    // as dupClusters; on a cluster where executor loss matters use a
-    // reliable checkpoint dir.) Bootstrap epoch short-circuits the
-    // gate — see [[indexEmpty]].
-    val kept =
-      (if (indexEmpty(spark, path)) hashed
-       else Dedup.dropSeenHamming(hashed, read(spark, path).select(col("sig").as("__sig")),
-         "__sig", maxHamming))
-        .localCheckpoint(true)
-    append(kept, "__sig", path)
-    graft.core.Releasable(kept.drop("__sig"), () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
+      epoch: Option[Long] = None,
+      admitted: Option[Long] = None): Unit = {
+    val f = family.resolved(df.sparkSession, path)
+    f.append(f.prepare(df), path, epoch, admitted)
   }
 
-  /** [[gateAndUpdateSimhash]] for any precomputed 64-bit signature
-    * column (perceptual hashes, audio fingerprints): gate on
-    * `sigCol`, append the admitted signatures, return admitted rows.
+  // ---- the three drivers ----
+
+  /** The one gate step every driver runs: `input` (prepared) against
+    * the family's `view` of the index, materialized by an EAGER
+    * localCheckpoint. Returns the kept rows and their release.
+    *
+    *   - READ-WHAT-YOU-WRITE: the gate reads the very directory the
+    *     caller appends to next. A lazy (or evicted) result would
+    *     re-list the index on its next action, find its OWN appended
+    *     rows and gate every admitted row against itself; the
+    *     checkpoint pins the admitted set to the pre-append listing and
+    *     truncates the lineage. (On a cluster where executor loss
+    *     matters use a reliable checkpoint dir.)
+    *   - BOOTSTRAP (`skipEmptyIndex`, the batch driver): an index with
+    *     no parquet admits the whole batch (an anti-join against the
+    *     matches of an empty set keeps every row, null signatures
+    *     included), so the gate is skipped and only the checkpoint and
+    *     the append run (measured r20: the two-epoch lifecycle queries
+    *     spent ~half their sequential jobs gating epoch 1 against a
+    *     provably empty index). The stream loops gate their first batch
+    *     anyway: skipping it there only moves the gate's first-run cost
+    *     (codegen, JIT) into the next micro-batch (measured on the
+    *     ingest_epochs workload: median batch +6%).
+    *   - PINNED BATCH: a [[Hamming]] batch is checkpointed first. The
+    *     gate consumes it twice in one action, and AQE materializes both
+    *     query stages CONCURRENTLY, so under a lazy persist both raced
+    *     one unfilled cache and paid the media decode upstream twice
+    *     (measured r20: q105's epoch stages at 7.1 s + 5.3 s of task
+    *     time). A batch the CALLER persisted is used as is and never
+    *     unpersisted here. The text family is not pinned: recomputing
+    *     one tokenize+SimHash pass is cheaper than caching the text
+    *     (measured r19: q103 1.2 -> 4.8 s with a persist).
     */
-  def gateAndUpdateHamming(
-      batch: DataFrame,
-      sigCol: String,
+  private def gateBatch(
+      input: DataFrame,
+      family: IndexFamily,
       path: String,
-      maxHamming: Int = 3): graft.core.Releasable[DataFrame] = {
-    requireExactRadius(maxHamming)
-    val spark = batch.sparkSession
-    // EAGER checkpoint of the batch, not a lazy persist: the gate
-    // consumes `batch` twice in one action (seen-set branch +
-    // anti-join left), and AQE materializes those two independent
-    // query stages CONCURRENTLY — under a lazy persist both raced
-    // the same unfilled cache and each paid (or blocked on) the
-    // media decode upstream (measured r20: q105's epoch stages at
-    // 7.1 s + 5.3 s of task time, both containing the decode
-    // MapPartitions). The eager checkpoint runs the decode exactly
-    // once, in its own job, before either consumer plans. Skipped
-    // when the caller already persisted the batch (their cache,
-    // their lifecycle — r19 advice).
-    val preCached = batch.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned = if (preCached) batch else batch.localCheckpoint(true)
-    // bootstrap epoch: nothing to gate against — see [[indexEmpty]]
+      view: View,
+      skipEmptyIndex: Boolean = false): Releasable[DataFrame] = {
+    val spark = input.sparkSession
+    val ref = family.reference(spark, path, view)
+    val bootstrap = skipEmptyIndex && indexEmpty(spark, path)
+    val pin = family.pinsBatch && input.storageLevel == StorageLevel.NONE
+    val pinned = if (pin) input.localCheckpoint(true) else input
     val kept =
-      if (indexEmpty(spark, path)) pinned
-      else
-        // eager localCheckpoint for the same read-what-you-write
-        // reason as gateAndUpdateSimhash (see its in-body comment)
-        try Dedup.dropSeenHamming(pinned, read(spark, path).select(col("sig").as(sigCol)),
-          sigCol, maxHamming)
-          .localCheckpoint(true)
-        finally if (!preCached) org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(pinned)
-    append(kept, sigCol, path)
-    // never unpersist a frame the CALLER cached (kept == batch only on
-    // the bootstrap-epoch + pre-cached path)
-    val release: () => Unit =
-      if (kept eq batch) () => () else () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () }
-    graft.core.Releasable(kept, release)
-  }
-
-  /** [[gateAndUpdateHamming]] with a RETENTION WINDOW — the media
-    * form of [[gateAndUpdateSimhashWindow]], same epoch semantics
-    * (untagged history never expires; expiry measured from the last
-    * ADMISSION, because a gated copy writes nothing).
-    */
-  def gateAndUpdateHammingWindow(
-      batch: DataFrame,
-      sigCol: String,
-      path: String,
-      epoch: Long,
-      minEpoch: Long,
-      maxHamming: Int = 3): graft.core.Releasable[DataFrame] = {
-    requireExactRadius(maxHamming)
-    val spark = batch.sparkSession
-    // eager checkpoint + bootstrap short-circuit + caller-owned-cache
-    // guard — same three rationales as gateAndUpdateHamming
-    val preCached = batch.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned = if (preCached) batch else batch.localCheckpoint(true)
-    val kept =
-      if (indexEmpty(spark, path)) pinned
-      else
-        try Dedup.dropSeenHamming(
-          pinned, readWindow(spark, path, minEpoch).select(col("sig").as(sigCol)),
-          sigCol, maxHamming)
-          .localCheckpoint(true)
-        finally if (!preCached) org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(pinned)
-    appendEpoch(kept, sigCol, path, epoch)
-    val release: () => Unit =
-      if (kept eq batch) () => () else () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () }
-    graft.core.Releasable(kept, release)
-  }
-
-  /** Rewrite the index down to one row per distinct signature.
-    * Pure OPTIMIZATION — every reader already collapses to distinct
-    * signatures, so compaction changes no gate decision (spec-pinned);
-    * it exists because a year of daily appends accumulates cross-epoch
-    * duplicate rows and small files. Epoch tags survive: a signature
-    * keeps its LATEST epoch (so [[readWindow]] expires it at exactly
-    * the moment the uncompacted rows would have), and an untagged
-    * sighting dominates every tagged one (never-expires stays
-    * never-expires). Admission stamps (the windowed-exactly-once
-    * column) survive by the same rule — latest stamp, unstamped
-    * dominates — so [[readWindowAdmitted]] visibility is preserved at
-    * every cutoff. NOTE: collapsing to one row per SIG merges the
-    * epoch tags a replay's own-epoch exclusion keys on, so an index
-    * driven by the windowed-exactly-once loops (where one signature
-    * legitimately holds several admission epochs) should use
-    * [[compactWindowed]] instead, which keeps the `(sig, epoch)`
-    * grain. Materializes the compacted set to a temp sibling
-    * directory FIRST (the rewrite plan reads the very files being
-    * replaced), then swaps old-out/new-in by two renames: the
-    * original moves to `<path>.compact-old` BEFORE anything is
-    * deleted, so no crash point leaves the machine without a full
-    * copy of the index on disk (a crash between the renames leaves
-    * `.compact-old` + `.compact-tmp`; recovery is renaming either
-    * back). The backup is deleted only after the new index is in
-    * place. Not safe concurrent with a writer — the object's
-    * one-writer-per-index rule covers compaction too; object stores
-    * where rename is a copy should compact during a scheduled quiet
-    * window.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    requireIndexFamily(spark, path, wantVec = false, "compact")
-    compactInto(spark, path)(collapseLatest(_, Seq("sig"), Nil))(winEpochSchema)
-  }
-
-  /** [[compact]] for the VECTOR index — the same one-row-per-distinct
-    * rewrite over `(id, vec)` keys (grouping on the array column is
-    * fine: Spark hashes and compares arrays element-wise), the same
-    * epoch rules (a pair keeps its LATEST epoch; an untagged sighting
-    * dominates every tagged one), the same crash-safe backup-then-swap.
-    * This is the index that NEEDS compaction most: at (8 + 4*dim)
-    * bytes per row a year of daily appends of overlapping vectors is
-    * the big duplicate bill, where the signature index's was 8 bytes.
-    */
-  def compactVectors(spark: SparkSession, path: String): Unit = {
-    requireIndexFamily(spark, path, wantVec = true, "compactVectors")
-    val fpBefore = indexFingerprint(fsFor(spark, new org.apache.hadoop.fs.Path(path)),
-      new org.apache.hadoop.fs.Path(path))
-    compactInto(spark, path)(collapseLatest(_, Seq("id", "vec"), Nil))(vecWinEpochSchema)
-    // the SAME collapse as the index rewrite, with the signature
-    // columns riding the group-by: they are functions of the vector
-    // alone, so they are constant within an (id, vec) group — the
-    // carried cache is row-for-row the signed mirror of the
-    // compacted index
-    carrySigCaches(spark, path, fpBefore)(
-      collapseLatest(_, Seq("id", "vec"), Seq("sig", "rsig", "rsig2")))
-  }
-
-  /** Carry every signature-cache sibling of a vector index through a
-    * compaction that just swapped in a rewritten index. A cache whose
-    * sync marker names the PRE-compaction fingerprint is trustworthy:
-    * `collapse` (the cache-side twin of the index rewrite) is applied
-    * under the same tmp-then-swap discipline and the cache is
-    * re-marked against the compacted index — the cost is paid here,
-    * once, visibly, instead of as a silent full-index signature
-    * rebuild inside the next gate. A cache that was ALREADY stale
-    * cannot be carried (its rows are not a mirror, and the planes
-    * behind its geometry key are unknown to compaction), so it is
-    * deleted loudly; the next signed gate rebuilds it from scratch.
-    * Crash anywhere in here leaves a markerless or missing cache —
-    * [[ensureSigCache]] heals by rebuild.
-    */
-  private def carrySigCaches(
-      spark: SparkSession, path: String, fpBefore: String)(
-      collapse: DataFrame => DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    val caches = sigCacheDirs(fs, path)
-    if (caches.isEmpty) return
-    val fpAfter = indexFingerprint(fs, p)
-    caches.foreach { dir =>
-      if (readSyncMarker(fs, dir).contains(fpBefore) && hasParquet(fs, dir)) {
-        val tmp = sibling(dir.toString, ".rebuild-tmp")
-        collapse(spark.read.schema(sigCacheSchema).parquet(dir.toString))
-          .write.mode("overwrite").parquet(tmp.toString)
-        deleteOrThrow(fs, dir)
-        renameOrThrow(fs, tmp, dir)
-        writeSyncMarker(fs, dir, fpAfter)
-      } else {
-        log.warn(s"carrySigCaches: $dir was already out of sync with $path at compaction " +
-          "time — deleting it; the next signed gate on its geometry pays one full rebuild")
-        deleteOrThrow(fs, dir)
+      if (bootstrap) { if (family.pinsBatch) pinned else pinned.localCheckpoint(true) }
+      else {
+        val (gated, releaseGate) = family.gate(pinned, ref)
+        try gated.localCheckpoint(true)
+        finally { releaseGate(); if (pin) CheckpointBridge.unpersistCheckpoint(pinned) }
       }
-    }
+    Releasable(kept, () => if (!(kept eq input)) CheckpointBridge.unpersistCheckpoint(kept))
   }
 
-  /** The shared compaction body: materialize `rewrite(index)` to a
-    * temp sibling FIRST (the rewrite plan reads the very files being
-    * replaced), then swap old-out/new-in by two CHECKED renames — the
-    * original moves to `<path>.compact-old` before anything is
-    * deleted, so no crash point leaves the machine without a full
-    * copy on disk, and every rename/delete's boolean result is
-    * verified (Hadoop reports failure by returning false; an
-    * unchecked false on the final rename would leave the main path
-    * missing and then delete the backup — the one sequence that CAN
-    * lose the index). A crash between the renames leaves
-    * `.compact-old`/`.compact-tmp`, which readers detect and refuse
-    * (see [[requireNotMidCompaction]]) and [[recover]] repairs. Not
-    * safe concurrent with a writer — the object's
-    * one-writer-per-index rule covers compaction too; object stores
-    * where rename is a copy should compact during a scheduled quiet
-    * window, and readers must be quiesced across the swap for the
-    * same reason.
+  /** One ingest epoch: gate `batch` against everything previously
+    * admitted (within `window`, when given), append the admitted rows'
+    * keys, return the admitted rows. The returned frame is
+    * checkpointed — call `release()` after the terminal action.
     */
-  /** The one collapse rule every compaction form shares: group on
-    * `keys` (the identity grain — `epoch` is INSIDE the keys for the
-    * windowed forms, collapsed across for the plain ones), keep the
-    * LATEST tag with untagged/unstamped dominating (never-expires
-    * stays never-expires), and carry `ride` columns (the signature
-    * cache's sig/rsig/rsig2 — constant within a group by
-    * construction) through the group-by. Written once so the index
-    * rewrite and its cache twin are the same code path, not two
-    * hand-synced copies (review r19).
+  def gateAndUpdate(
+      batch: DataFrame,
+      family: IndexFamily,
+      path: String,
+      window: Option[Window] = None): Releasable[DataFrame] = {
+    val f = family.resolved(batch.sparkSession, path)
+    val kept = gateBatch(f.prepare(batch), f, path, View(minEpoch = window.map(_.minEpoch)),
+      skipEmptyIndex = true)
+    f.append(kept.result, path, window.map(_.epoch), None)
+    Releasable(f.output(kept.result), kept.release)
+  }
+
+  /** The gate with NO index append — the dry-run / measurement form.
+    * The result is lazy; `release()` drops the gate's internal persists.
+    * NOT read-only for a [[Cached]] family: it validates the signature
+    * cache first ([[ensureSigCache]]), which may rebuild it — so it
+    * needs write access and the one-writer rule. A truly read-only
+    * caller checks [[listSigCaches]] and gates [[Live]].
+    */
+  def dropSeen(batch: DataFrame, family: IndexFamily, path: String): Releasable[DataFrame] = {
+    val f = family.resolved(batch.sparkSession, path)
+    val (gated, release) = f.gate(f.prepare(batch), f.reference(batch.sparkSession, path, View()))
+    Releasable(f.output(gated), release)
+  }
+
+  /** The durable gate as a STREAMING ingest loop: every micro-batch
+    * runs one [[gateAndUpdate]] epoch against `indexPath`, appends the
+    * admitted rows to `outPath`, then their keys to the index. The
+    * reference GROWS with every admitted arrival (unlike the
+    * stream-static [[graft.streaming.StreamingOps.dropSeenHammingStream]]),
+    * and a restarted query — or another cluster — resumes with
+    * everything any prior run admitted.
+    *
+    * AT-LEAST-ONCE: the output write runs BEFORE the index append, so a
+    * failure between the two re-admits the batch on retry — duplicate
+    * rows in `outPath`, never lost rows (the reverse order would gate
+    * the retry against its own signatures and DROP it). The index is a
+    * set, so re-appending is convergent. When duplicates are
+    * unacceptable use [[gateStreamExactlyOnce]].
+    */
+  def gateStream(
+      stream: DataFrame,
+      family: IndexFamily,
+      indexPath: String,
+      outPath: String,
+      checkpointDir: String): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val f = family.resolved(batch.sparkSession, indexPath)
+        val kept = gateBatch(f.prepare(batch), f, indexPath, View())
+        try {
+          f.output(kept.result).write.mode("append").parquet(outPath)
+          f.append(kept.result, indexPath, None, None)
+        } finally kept.release()
+      }
+      .start()
+
+  /** One EXACTLY-ONCE ingest batch — the body [[gateStreamExactlyOnce]]
+    * runs per micro-batch, exposed so the crash contract is directly
+    * testable (specs kill it at each `crashpoint` and replay). Every
+    * step is idempotent under replay-from-anywhere:
+    *
+    *   1. committed marker present -> the batch fully finished; the
+    *      replay does NOTHING (what upgrades at-least-once).
+    *   2. `window` = (admittedAt, minAdmitted) is PINNED to the first
+    *      attempt's clock by a `stamp-<key>-<clock>` marker
+    *      ([[attemptStamp]]), the window's age preserved: a replay whose
+    *      clock regressed evaluates the IDENTICAL window, so its kept set
+    *      can never diverge from what a crashed attempt already appended
+    *      (stranded phantom admissions would gate every future batch).
+    *   3. the epoch number is allocated once and re-found on replay
+    *      ([[allocEpoch]]).
+    *   4. the gate reads the index MINUS rows tagged with this epoch, so
+    *      the kept set is a pure function of (batch, committed history,
+    *      ledger), identical on every attempt.
+    *   5. output lands at `outPath/epoch=<allocated>` with OVERWRITE —
+    *      deterministic location + deterministic rows = idempotent; keyed
+    *      by the ALLOCATED epoch, so a second query with a fresh
+    *      checkpoint (batchIds restarting at 0) never overwrites a prior
+    *      run's output.
+    *   6. the index append tags rows with the epoch (and the pinned
+    *      stamp); a replay may duplicate rows AT THE SAME EPOCH, which
+    *      every reader collapses.
+    *   7. the committed marker is written LAST.
+    *
+    * The loop must OWN its index: epoch tags here are allocation
+    * counters, so mixing in [[Window]]-style calendar epochs on the same
+    * directory could collide with a counter and corrupt a replay's
+    * exclusion. Retention composes through `admitted` instead.
+    */
+  private[graft] def exactlyOnceEpoch(
+      batch: DataFrame,
+      family: IndexFamily,
+      key: String,
+      indexPath: String,
+      outPath: String,
+      window: Option[(Long, Long)] = None,
+      crashpoint: String => Unit = _ => ()): Unit = {
+    // the output is partitioned by the allocated epoch: a data column
+    // of that name would collide with it on read-back
+    require(!batch.columns.contains("epoch"),
+      "exactly-once batches must not carry an 'epoch' column: the output is " +
+        "partitioned by the allocated epoch and partition discovery would " +
+        "collide with the data column on read-back — rename it before the gate")
+    val spark = batch.sparkSession
+    val f = family.resolved(spark, indexPath)
+    val input = f.prepare(batch)
+    val fs = fsFor(spark, new Path(indexPath))
+    // fail BEFORE touching the ledger: a crashed compaction must stop
+    // here, leaving its state untouched for recover()
+    requireNotMidCompaction(fs, indexPath)
+    if (fs.exists(committedMarker(indexPath, key))) return
+    val stamp = window.map { case (admittedAt, minAdmitted) =>
+      val at = attemptStamp(fs, indexPath, key, admittedAt)
+      (at, at - (admittedAt - minAdmitted))
+    }
+    val epoch = allocEpoch(fs, indexPath, key)
+    crashpoint("allocated")
+    val kept = gateBatch(input, f, indexPath,
+      View(excludeEpoch = Some(epoch), minAdmitted = stamp.map(_._2)))
+    try {
+      crashpoint("gated")
+      f.output(kept.result).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
+      crashpoint("output")
+      f.append(kept.result, indexPath, Some(epoch), stamp.map(_._1))
+      crashpoint("appended")
+      fs.create(committedMarker(indexPath, key), true).close()
+    } finally kept.release()
+  }
+
+  /** The streaming loop with EXACTLY-ONCE output: admitted rows land
+    * under `outPath/epoch=<n>/` (read `outPath` as one parquet table;
+    * partition discovery adds an `epoch` column), and a crash at ANY
+    * point replays to the identical output — the per-batch protocol is
+    * [[exactlyOnceEpoch]]'s.
+    *
+    * `windowAge` adds RETENTION: each batch reads `clock()` once (then
+    * pinned in the ledger for its replays), gates only against history
+    * admitted within the last `windowAge` clock units (unstamped rows
+    * never expire) and stamps its admissions with that clock — a
+    * document whose every prior admission aged out is re-admitted. The
+    * clock defaults to wall-clock millis; inject one to key the window
+    * on crawl days or for deterministic tests. Compact this layout with
+    * `windowed = true` (see [[compact]]).
+    *
+    * `ledgerKeepLast > 0` runs [[compactLedger]] after every committed
+    * batch, keeping the marker directory O(keepLast). The index and its
+    * `<indexPath>.epochs` ledger are a UNIT (see [[dropLedger]]).
+    */
+  def gateStreamExactlyOnce(
+      stream: DataFrame,
+      family: IndexFamily,
+      indexPath: String,
+      outPath: String,
+      checkpointDir: String,
+      windowAge: Option[Long] = None,
+      clock: () => Long = () => System.currentTimeMillis(),
+      ledgerKeepLast: Int = 0): StreamingQuery = {
+    windowAge.foreach(a => require(a >= 0, s"windowAge=$a must be >= 0"))
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val window = windowAge.map { age => val now = clock(); (now, now - age) }
+        exactlyOnceEpoch(batch, family,
+          resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId),
+          indexPath, outPath, window)
+        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
+      }
+      .start()
+  }
+
+  /** [[gateStreamExactlyOnce]] over the [[Simhash]] family. */
+  def gateStreamSimhashExactlyOnce(
+      stream: DataFrame,
+      textCol: String,
+      indexPath: String,
+      outPath: String,
+      checkpointDir: String,
+      maxHamming: Int = 3,
+      ledgerKeepLast: Int = 0): StreamingQuery =
+    gateStreamExactlyOnce(stream, Simhash(textCol, maxHamming), indexPath, outPath,
+      checkpointDir, ledgerKeepLast = ledgerKeepLast)
+
+  // ---- compaction ----
+
+  /** Rewrite the index down to one row per distinct key — or, with
+    * `windowed = true`, per distinct (key, epoch): the grain of the
+    * windowed exactly-once layout, where one key legitimately holds
+    * several admission epochs and a replay's own-epoch exclusion must
+    * still see them apart. Pure OPTIMIZATION — every reader collapses
+    * to distinct keys, so no gate decision changes. Tags survive: a
+    * group keeps its LATEST epoch and stamp, and an untagged sighting
+    * dominates (never-expires stays never-expires), so windowed
+    * visibility is preserved at every cutoff. `dropAdmittedBefore`
+    * (windowed only) also deletes rows stamped before the horizon —
+    * pass a value no later than every future window start.
+    *
+    * Refuses an index of the other family: the schema-on-read
+    * projection null-fills missing columns, so the wrong grain would
+    * collapse the whole index to ONE null row. Materializes the rewrite
+    * to a temp sibling FIRST (it reads the very files being replaced),
+    * then swaps by two CHECKED renames — the original moves to
+    * `<path>.compact-old` before anything is deleted, so no crash point
+    * leaves the machine without a full copy (see [[recover]]). A
+    * vector index carries its in-sync signature caches through the
+    * same collapse and re-marks them; stale ones are deleted loudly.
+    * Same one-writer rule as the gates.
+    */
+  def compact(
+      spark: SparkSession,
+      family: IndexFamily,
+      path: String,
+      windowed: Boolean = false,
+      dropAdmittedBefore: Option[Long] = None): Unit = {
+    require(windowed || dropAdmittedBefore.isEmpty,
+      "dropAdmittedBefore applies to the windowed (key, epoch) grain only")
+    requireIndexFamily(spark, path, family)
+    val keys = family.keySchema.fieldNames.toSeq ++ (if (windowed) Seq("epoch") else Nil)
+    def collapse(df: DataFrame, ride: Seq[String]): DataFrame = {
+      val c = collapseLatest(df, keys, ride)
+      dropAdmittedBefore.fold(c)(h => c.filter(col("admitted").isNull || col("admitted") >= h))
+    }
+    val p = new Path(path)
+    val vectors = family.isInstanceOf[Embedding]
+    val fpBefore = if (vectors) indexFingerprint(fsFor(spark, p), p) else ""
+    compactInto(spark, path)(collapse(_, Nil))(tagged(family.keySchema))
+    // signatures are functions of the vector alone, so they ride the
+    // group-by: the carried cache is row for row the compacted index
+    if (vectors) carrySigCaches(spark, path, fpBefore)(collapse(_, Seq("sig", "rsig", "rsig2")))
+  }
+
+  /** The one collapse rule every compaction shares: group on `keys`,
+    * keep the LATEST tag with untagged/unstamped dominating, and carry
+    * the `ride` columns (constant within a group) through the group-by.
     */
   private def collapseLatest(
       df: DataFrame, keys: Seq[String], ride: Seq[String]): DataFrame = {
@@ -569,41 +721,33 @@ object SeenIndex {
         Seq(epochOut, admittedOut) ++ ride.map(col): _*)
   }
 
-  /** Fail LOUD when a compaction form is pointed at the WRONG index
-    * family: the schema-on-read projection null-fills missing
-    * columns, so `compact` (groups on `sig`) run against a VECTOR
-    * index would collapse the whole index to ONE null-sig row — and
-    * the swap then deletes the backup: total, silent data loss from
-    * one mistyped maintenance call (review r19). One driver-side
-    * footer read, no Spark job rows.
+  /** True for a VECTOR index, from one driver-side footer read (no
+    * Spark job); None while the index holds no parquet.
     */
-  private def requireIndexFamily(
-      spark: SparkSession, path: String, wantVec: Boolean, op: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    if (!fs.exists(p) || !hasParquet(fs, p)) return
-    val cols = spark.read.parquet(path).schema.fieldNames.toSet
-    val isVec = cols.contains("vec")
-    if (wantVec && !isVec)
+  private def storedVectors(spark: SparkSession, path: String): Option[Boolean] = {
+    val p = new Path(path)
+    if (!hasParquet(fsFor(spark, p), p)) None
+    else Some(spark.read.parquet(path).schema.fieldNames.contains("vec"))
+  }
+
+  private def requireIndexFamily(spark: SparkSession, path: String, family: IndexFamily): Unit = {
+    val wantVec = family.isInstanceOf[Embedding]
+    storedVectors(spark, path).filter(_ != wantVec).foreach { isVec =>
       throw new IllegalStateException(
-        s"$op: $path is a SIGNATURE index (columns: ${cols.mkString(", ")}) — " +
-          "use compact/compactWindowed; the vector form's (id, vec) group-by " +
-          "would collapse it to a single null row and destroy it")
-    if (!wantVec && isVec)
-      throw new IllegalStateException(
-        s"$op: $path is a VECTOR index (columns: ${cols.mkString(", ")}) — " +
-          "use compactVectors/compactVectorsWindowed; the signature form's sig " +
-          "group-by would collapse it to a single null row and destroy it")
+        s"compact: $path is a ${if (isVec) "VECTOR" else "SIGNATURE"} index but the family " +
+          s"is $family — its ${family.keySchema.fieldNames.mkString("(", ", ", ")")} group-by " +
+          "would collapse the index to a single null row and destroy it")
+    }
   }
 
   private def compactInto(spark: SparkSession, path: String)(
       rewrite: DataFrame => DataFrame)(readSchema: StructType): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = fsFor(spark, p)
     requireNotMidCompaction(fs, path) // a crashed prior swap needs recover(), not another compact
     if (!fs.exists(p)) return
-    val tmp = sibling(path, graft.core.IndexLayout.CompactTmp)
-    val bak = sibling(path, graft.core.IndexLayout.CompactOld)
+    val tmp = sibling(path, IndexLayout.CompactTmp)
+    val bak = sibling(path, IndexLayout.CompactOld)
     rewrite(spark.read.schema(readSchema).parquet(path))
       .write.mode("overwrite").parquet(tmp.toString)
     deleteOrThrow(fs, bak) // stale backup from a prior compaction that crashed after its swap
@@ -612,174 +756,93 @@ object SeenIndex {
     deleteOrThrow(fs, bak)
   }
 
-  /** The durable gate as a STREAMING ingest loop — the production
-    * shape: every micro-batch runs one [[gateAndUpdateSimhash]] epoch
-    * against the index at `indexPath`, writes the admitted rows to
-    * `outPath` (parquet append), and appends their signatures to the
-    * index. Cross-batch dedup state lives entirely in the index
-    * DIRECTORY — unlike the stateless stream-static twins
-    * ([[graft.streaming.StreamingOps.dropSeenHammingStream]] gates
-    * against a FIXED reference), the reference here GROWS with every
-    * admitted arrival, and a restarted query (or a different cluster
-    * entirely) resumes with everything any prior run admitted.
-    *
-    * Delivery semantics, honestly: the output write runs BEFORE the
-    * index append, so a failure between the two re-admits the batch
-    * on retry — duplicate rows in `outPath` (at-least-once), never
-    * lost rows (the reverse order would silently DROP a batch: its
-    * signatures would already be in the index, so the retry would
-    * gate every row against itself). The index itself is a SET —
-    * re-appending the same signatures is convergent, not corrupting.
-    * When duplicates in `outPath` are unacceptable, use
-    * [[gateStreamSimhashExactlyOnce]] — the ledgered form whose
-    * replays are idempotent end to end.
+  /** Carry every signature-cache sibling through a compaction that just
+    * swapped in a rewritten index. A cache synced with the PRE-compaction
+    * fingerprint is rewritten by `collapse` under the same tmp-then-swap
+    * discipline and re-marked, so the cost is paid here, once, visibly —
+    * not as a silent rebuild inside the next gate. A cache that was
+    * already stale cannot be carried (its rows are no mirror) and is
+    * deleted loudly. A crash in here leaves a markerless or missing
+    * cache, which [[ensureSigCache]] heals by rebuild.
     */
-  def gateStreamSimhash(
-      stream: DataFrame,
-      textCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      maxHamming: Int = 3): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireExactRadius(maxHamming)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hashed = requireNoSigCol(batch).withColumn("__sig",
-          SimHash64.simhash64(graft.text.TextAnalysis.tokens(col(textCol))))
-        val kept = Dedup.dropSeenHamming(
-          hashed, read(batch.sparkSession, indexPath).select(col("sig").as("__sig")),
-          "__sig", maxHamming)
-          .localCheckpoint(true) // same read-what-you-write pin as gateAndUpdateSimhash
-        try {
-          kept.drop("__sig").write.mode("append").parquet(outPath)
-          append(kept, "__sig", indexPath)
-        } finally org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept)
-        ()
+  private def carrySigCaches(spark: SparkSession, path: String, fpBefore: String)(
+      collapse: DataFrame => DataFrame): Unit = {
+    val p = new Path(path)
+    val fs = fsFor(spark, p)
+    val caches = sigCacheDirs(fs, path)
+    if (caches.isEmpty) return
+    val fpAfter = indexFingerprint(fs, p)
+    caches.foreach { dir =>
+      if (readSyncMarker(fs, dir).contains(fpBefore) && hasParquet(fs, dir)) {
+        val tmp = sibling(dir.toString, ".rebuild-tmp")
+        collapse(spark.read.schema(sigCacheSchema).parquet(dir.toString))
+          .write.mode("overwrite").parquet(tmp.toString)
+        deleteOrThrow(fs, dir)
+        renameOrThrow(fs, tmp, dir)
+        writeSyncMarker(fs, dir, fpAfter)
+      } else {
+        log.warn(s"carrySigCaches: $dir was already out of sync with $path at compaction " +
+          "time — deleting it; the next signed gate on its geometry pays one full rebuild")
+        deleteOrThrow(fs, dir)
       }
-      .start()
+    }
   }
 
-  /** [[gateStreamSimhash]] for any precomputed 64-bit signature column
-    * — the MEDIA form of the durable streaming ingest loop (perceptual
-    * hashes, audio fingerprints): every micro-batch gates on `sigCol`
-    * against the growing index, writes the admitted rows (signature
-    * column included) to `outPath`, appends their signatures. Same
-    * at-least-once semantics, same restart-resume: a new query over
-    * the same index directory gates against everything any prior run
-    * admitted.
-    */
-  def gateStreamHamming(
-      stream: DataFrame,
-      sigCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      maxHamming: Int = 3): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireExactRadius(maxHamming)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val kept = Dedup.dropSeenHamming(
-          batch, read(batch.sparkSession, indexPath).select(col("sig").as(sigCol)),
-          sigCol, maxHamming)
-          .localCheckpoint(true) // same read-what-you-write pin as gateAndUpdateSimhash
-        try {
-          kept.write.mode("append").parquet(outPath)
-          append(kept, sigCol, indexPath)
-        } finally org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept)
-        ()
-      }
-      .start()
-  }
+  // ---- the exactly-once ledger ----
 
-  // ---- EXACTLY-ONCE streaming ingest: the ledgered form ----
-
-  /** The `<path>.epochs` ledger directory NEXT TO the index. A
-    * sibling, not a subdirectory, for two load-bearing reasons:
-    * [[compact]]'s backup-then-swap renames the whole index directory,
-    * and a ledger inside it would ride the swap into `.compact-old`
-    * and be deleted with the backup — destroying every committed
-    * marker (a replay would re-run as epoch 1 and OVERWRITE the first
-    * batch's output); and creating the ledger must never resurrect a
-    * missing index path, or the mid-compaction fail-loud guard
-    * ([[requireNotMidCompaction]]) would see the path exist and let a
-    * batch gate against an empty index. (Parquet reads never see it
-    * either way — it is not under the index path at all.) It holds
-    * one empty marker file per micro-batch: `alloc-<key>-<epoch>`
-    * records the epoch number allocated to a (checkpoint, batchId)
-    * pair — the allocation is what survives a crash, so a replayed
-    * batch re-uses ITS OWN epoch — and `committed-<key>` records that
-    * the batch's output AND index append both finished, making any
-    * later replay a pure no-op. The WINDOWED loops add one
-    * `stamp-<key>-<clock>` marker recording the first attempt's
-    * admission clock (see [[attemptStamp]]).
+  /** The `<path>.epochs` ledger directory NEXT TO the index — a
+    * sibling, because [[compact]]'s swap renames the whole index
+    * directory (a ledger inside would be deleted with the backup,
+    * destroying every committed marker) and creating the ledger must
+    * never resurrect a missing index path. It holds empty marker files:
+    * `alloc-<key>-<epoch>` (the epoch allocated to a batch — what
+    * survives a crash), `committed-<key>` (output AND index append both
+    * finished), `stamp-<key>-<clock>` (a windowed batch's first-attempt
+    * clock) and `watermark-<n>` (see [[compactLedger]]).
     *
-    * THE INDEX AND ITS LEDGER ARE A UNIT: move, copy, back up, or
-    * delete them together. Deleting the index alone leaves committed
-    * markers behind, and a stream restarted from scratch on the SAME
-    * checkpoint path re-derives the old batch keys, finds them
-    * committed, and silently DROPS its first batches; copying the
-    * index alone strands the copy with an empty ledger, so its first
-    * batch re-allocates epoch 1 and OVERWRITES `outPath/epoch=1`.
-    * [[dropLedger]] exists so a full reset never forgets the sibling.
+    * THE INDEX AND ITS LEDGER ARE A UNIT: move, copy, back up or delete
+    * them together. Deleting the index alone leaves committed markers
+    * behind (a stream restarted on the SAME checkpoint silently DROPS
+    * its first batches); copying it alone strands the copy with an
+    * empty ledger (its first batch re-allocates epoch 1 and OVERWRITES
+    * `outPath/epoch=1`).
     */
-  private def epochsDir(indexPath: String) =
-    sibling(indexPath, graft.core.IndexLayout.Ledger)
+  private def epochsDir(indexPath: String) = sibling(indexPath, IndexLayout.Ledger)
+
+  private def committedMarker(indexPath: String, key: String) =
+    new Path(epochsDir(indexPath), s"committed-$key")
 
   /** Delete the `<indexPath>.epochs` ledger — part of a FULL pipeline
-    * reset (index + ledger + output + checkpoint together; see
-    * [[epochsDir]] for why resetting any strict subset corrupts
-    * delivery: stale committed markers silently drop batches, a
-    * fresh ledger against old output overwrites epoch 1). A no-op on
-    * a never-written ledger.
+    * reset (index + ledger + output + checkpoint together; any strict
+    * subset corrupts delivery, see [[epochsDir]]). A no-op on a
+    * never-written ledger.
     */
   def dropLedger(spark: SparkSession, indexPath: String): Unit =
     deleteOrThrow(fsFor(spark, epochsDir(indexPath)), epochsDir(indexPath))
 
   /** The stable identity of one logical micro-batch: the checkpoint
-    * location names the QUERY (it is the one thing Structured
-    * Streaming keeps fixed across restarts) and the batchId names the
-    * batch within it. Hex-hashed to stay filename-safe. The path is
-    * NORMALIZED first (same discipline as [[sibling]]): Structured
-    * Streaming resolves "/ckpt" and "/ckpt/" to the same checkpoint,
-    * so a restart script that spells the directory with a trailing
-    * slash replays the same logical batch — an unnormalized hash
-    * would miss its committed marker, allocate a FRESH epoch, and
-    * re-emit the batch's rows under a second epoch directory,
-    * breaking the exactly-once output contract (review r18).
+    * location names the QUERY, the batchId the batch within it;
+    * hex-hashed to stay filename-safe. The path is NORMALIZED first:
+    * Structured Streaming resolves "/ckpt" and "/ckpt/" to the same
+    * checkpoint, and an unnormalized hash would miss the committed
+    * marker on a differently-spelled restart and re-emit the batch.
     */
-  private[dedup] def batchKey(checkpointDir: String, batchId: Long): String = {
-    val normalized = new org.apache.hadoop.fs.Path(checkpointDir).toString
-    val md = java.security.MessageDigest.getInstance("MD5")
-    toHex(md.digest(s"$normalized#$batchId".getBytes("UTF-8")))
-  }
+  private[dedup] def batchKey(checkpointDir: String, batchId: Long): String =
+    md5Key(new Path(checkpointDir).toString, batchId)
 
-  /** Pre-r18 key: the RAW checkpoint string, unnormalized. Kept only
-    * so [[resolveBatchKey]] can find markers a pre-normalization
-    * deployment wrote — never used for new allocations.
-    */
-  private def legacyBatchKey(checkpointDir: String, batchId: Long): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    toHex(md.digest(s"$checkpointDir#$batchId".getBytes("UTF-8")))
-  }
+  private def md5Key(checkpointDir: String, batchId: Long): String =
+    toHex(java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$checkpointDir#$batchId".getBytes("UTF-8")))
 
-  /** [[batchKey]] with a one-shot LEGACY probe for upgrades. The r18
-    * normalization means a deployment whose restart script spells the
-    * checkpoint dir in a form the Hadoop Path normalizes (trailing
-    * slash, `file:///x` vs `file:/x`) computes a DIFFERENT key for
-    * the same logical batch after upgrading: the replayed last batch
-    * would miss its committed marker under the new key, allocate a
-    * fresh epoch, and re-emit its rows once (exactly-once break,
-    * ADVICE r18). So: if the normalized key has NO markers in the
-    * ledger but the legacy (raw-string) key DOES, the replay adopts
-    * the legacy key and finishes the old batch's protocol under it —
-    * committed markers are honored, a crashed attempt re-finds its
-    * allocated epoch and stamp. Fresh batches (no markers under
-    * either key) always use the normalized key. The extra FS listing
-    * only happens when the two spellings differ AND the new key is
-    * unmarked — i.e. once per batch on non-canonical spellings, never
-    * on canonical ones.
+  /** [[batchKey]] with a one-shot LEGACY probe for upgrades: the
+    * pre-normalization key hashed the RAW checkpoint string. If the
+    * normalized key has NO markers but the legacy key does, the replay
+    * adopts the legacy key and finishes the old batch's protocol under
+    * it (committed markers honored, a crashed attempt re-finds its
+    * epoch and stamp). Fresh batches always use the normalized key.
+    * Once any batchId of an (index, checkpoint) resolved to the
+    * normalized key, every later one is post-upgrade work (batchIds
+    * are monotone), so the ledger listing is paid once per process.
     */
   private[dedup] def resolveBatchKey(
       spark: SparkSession,
@@ -787,14 +850,8 @@ object SeenIndex {
       checkpointDir: String,
       batchId: Long): String = {
     val key = batchKey(checkpointDir, batchId)
-    val legacy = legacyBatchKey(checkpointDir, batchId)
+    val legacy = md5Key(checkpointDir, batchId)
     if (legacy == key) return key
-    // once ANY batch of this (index, checkpoint) resolved to the
-    // normalized key, every later batchId is post-upgrade work and
-    // can never need the legacy probe (batchIds are monotone per
-    // checkpoint; streaming replays only the last uncommitted batch)
-    // — so the per-batch ledger listing is paid once per process, not
-    // for the stream's lifetime (review r19)
     val memoKey = s"$indexPath|$checkpointDir"
     val floor = keyFmtNormalizedFrom.get(memoKey)
     if (floor != null && batchId >= floor.longValue()) return key
@@ -809,8 +866,7 @@ object SeenIndex {
     val names = fs.listStatus(dir).map(_.getPath.getName)
     def marked(k: String): Boolean = names.exists { n =>
       n == s"committed-$k" || n.startsWith(s"stamp-$k-") ||
-        (n.startsWith(s"alloc-$k-") &&
-          n.substring(s"alloc-$k-".length).forall(_.isDigit))
+        (n.startsWith(s"alloc-$k-") && n.substring(s"alloc-$k-".length).forall(_.isDigit))
     }
     if (!marked(key) && marked(legacy)) legacy else memoized
   }
@@ -821,181 +877,120 @@ object SeenIndex {
   private val keyFmtNormalizedFrom =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Allocate (or on replay, LOOK UP) the epoch number for batch
-    * `key`. Numbers live in the marker FILENAMES — `alloc-<key>-<n>`
-    * — so neither allocation nor lookup reads file contents, and a
-    * replayed batch finds its prior allocation by prefix. A
-    * `watermark-<n>` file (written by [[compactLedger]]) floors the
-    * allocation so pruned markers can never cause epoch reuse.
-    * Monotone under the one-writer rule (concurrent writers on one
-    * index are out of contract for the whole object).
+  /** The digits after `prefix` in `name`, when `name` is exactly
+    * `prefix` + digits — the one parse every marker read uses, so a
+    * key that dash-prefixes another (`a` vs `a-7`) never claims its
+    * marker and a malformed foreign file never wedges a parse.
     */
-  private[dedup] def allocEpoch(
-      fs: org.apache.hadoop.fs.FileSystem, indexPath: String, key: String): Long = {
+  private def digitsAfter(name: String, prefix: String): Option[Long] =
+    if (!name.startsWith(prefix) || name.length == prefix.length) None
+    else Some(name.substring(prefix.length)).filter(_.forall(_.isDigit)).map(_.toLong)
+
+  /** Allocate (or on replay, LOOK UP) the epoch number of batch `key`.
+    * Numbers live in the marker FILENAMES (`alloc-<key>-<n>`), so
+    * neither allocation nor lookup reads file contents. A
+    * `watermark-<n>` floors the allocation so pruned markers can never
+    * cause epoch reuse. Monotone under the one-writer rule.
+    */
+  private[dedup] def allocEpoch(fs: FileSystem, indexPath: String, key: String): Long = {
     val dir = epochsDir(indexPath)
     fs.mkdirs(dir)
     val names = fs.listStatus(dir).map(_.getPath.getName)
-    // the suffix must be PURE digits: a bare prefix match would let
-    // key "a" claim key "a-7"'s marker "alloc-a-7-2" (keys from
-    // batchKey are md5 hex, but the free-form-key forms must not
-    // cross-match on a dash)
-    val prefix = s"alloc-$key-"
-    names.collectFirst {
-      case n if n.startsWith(prefix) && n.length > prefix.length &&
-        n.substring(prefix.length).forall(_.isDigit) =>
-        n.substring(prefix.length).toLong
-    }.getOrElse {
-      // one malformed foreign file (editor backup, partial upload)
-      // must not wedge every future allocation with a
-      // NumberFormatException — parse only well-formed suffixes, the
-      // same digits-only discipline as the lookup above (review r19)
-      val next = names.collect {
-        case n if n.startsWith("alloc-") => n.substring(n.lastIndexOf('-') + 1)
-        case n if n.startsWith("watermark-") => n.substring("watermark-".length)
-      }.collect { case d if d.nonEmpty && d.forall(_.isDigit) => d.toLong }
-        .foldLeft(0L)(math.max) + 1L
-      fs.create(new org.apache.hadoop.fs.Path(dir, s"alloc-$key-$next"), false).close()
+    names.flatMap(digitsAfter(_, s"alloc-$key-")).headOption.getOrElse {
+      val next = names.flatMap { n =>
+        if (n.startsWith("alloc-")) digitsAfter(n, n.substring(0, n.lastIndexOf('-') + 1))
+        else digitsAfter(n, "watermark-")
+      }.foldLeft(0L)(math.max) + 1L
+      fs.create(new Path(dir, s"alloc-$key-$next"), false).close()
       next
     }
   }
 
-  /** Look up (or on the FIRST attempt, persist) the admission clock
-    * for batch `key`: a `stamp-<key>-<millis>` marker next to the
-    * alloc markers, so a crash REPLAY re-reads the first attempt's
-    * clock instead of sampling its own. Without it, a clock that
-    * regressed across the crash (NTP step, restart on another host)
-    * widens the replay's retention window — more history visible,
-    * FEWER rows kept — and if the crashed attempt had already
-    * appended its kept set to the index, the difference survives as
-    * epoch-tagged signatures the committed output never admitted:
-    * phantom admissions gating every future batch. Pinning the stamp
-    * to the allocation makes the windowed gate a pure function of
-    * (batch, committed history, ledger), the same argument the
-    * unwindowed protocol already makes. Same marker-filename
-    * discipline as [[allocEpoch]] (values live in names, digits-only
-    * suffix parse); [[compactLedger]] prunes stamps with their
-    * marker pair. COST: one more O(markers) directory listing per
-    * windowed batch on top of allocEpoch's — on an object store
-    * where LIST is the expensive op, run the loops with
-    * `ledgerKeepLast > 0` so both listings stay O(keepLast).
+  /** Look up (or on the FIRST attempt, persist) the admission clock of
+    * batch `key` as a `stamp-<key>-<clock>` marker, so a crash REPLAY
+    * re-reads the first attempt's clock instead of sampling its own —
+    * see step 2 of [[exactlyOnceEpoch]]. One more O(markers) listing
+    * per windowed batch; on an object store run the loop with
+    * `ledgerKeepLast > 0`.
     */
   private[dedup] def attemptStamp(
-      fs: org.apache.hadoop.fs.FileSystem, indexPath: String, key: String, now: Long): Long = {
+      fs: FileSystem, indexPath: String, key: String, now: Long): Long = {
     require(now >= 0, s"attemptStamp: clock value $now must be >= 0")
     val dir = epochsDir(indexPath)
     fs.mkdirs(dir)
-    val prefix = s"stamp-$key-"
-    fs.listStatus(dir).map(_.getPath.getName).collectFirst {
-      case n if n.startsWith(prefix) && n.length > prefix.length &&
-        n.substring(prefix.length).forall(_.isDigit) =>
-        n.substring(prefix.length).toLong
-    }.getOrElse {
-      fs.create(new org.apache.hadoop.fs.Path(dir, s"stamp-$key-$now"), false).close()
-      now
-    }
+    fs.listStatus(dir).map(_.getPath.getName).flatMap(digitsAfter(_, s"stamp-$key-"))
+      .headOption.getOrElse {
+        fs.create(new Path(dir, s"stamp-$key-$now"), false).close()
+        now
+      }
   }
 
-  /** Prune the exactly-once ledger. The `.epochs` directory grows two
-    * marker files per micro-batch forever, and [[allocEpoch]] LISTS
-    * the directory every batch — a year of 5-minute batches is 200 k
-    * files and an O(n²) listing bill over the stream's life. This
-    * collapses history: every COMMITTED batch older than the
-    * `keepLast` most recent epochs loses its marker pair, and a
-    * single `watermark-<n>` file (n = the highest pruned epoch)
-    * floors all future allocations so a pruned epoch number can never
-    * be reissued.
+  /** Prune the exactly-once ledger, which otherwise grows two or three
+    * markers per micro-batch forever while [[allocEpoch]] LISTS it every
+    * batch. Every COMMITTED batch older than the `keepLast` most recent
+    * epochs loses its markers, and one `watermark-<n>` (n = the highest
+    * pruned epoch) floors all future allocations.
     *
-    * Safety argument, honestly: a pruned batch's replay would no
-    * longer find its committed marker and would RE-RUN (re-allocating
-    * a fresh epoch — duplicate output rows). Structured Streaming
-    * only ever replays batches its own checkpoint has not committed —
-    * the most recent one(s), never deep history — so `keepLast` is a
-    * paranoia window, not a correctness knob, as long as it exceeds
-    * the number of batches the engine can have in flight (1 for the
-    * micro-batch runner). Uncommitted allocs (a batch that crashed
-    * and was never replayed, e.g. after a checkpoint was abandoned)
-    * are kept regardless: they cost one file each and pruning them
-    * would be wrong if that checkpoint ever resumes. Run it from the
-    * writer's maintenance window (same one-writer rule as
-    * [[compact]]).
+    * A pruned batch's replay would no longer find its committed marker
+    * and would RE-RUN; Structured Streaming only replays batches its
+    * checkpoint has not committed — the most recent one — so `keepLast`
+    * is a paranoia window as long as it exceeds the batches in flight.
+    * Uncommitted allocs are kept regardless (their checkpoint may
+    * resume). Run it from the writer's maintenance window.
     */
   def compactLedger(spark: SparkSession, indexPath: String, keepLast: Int = 100): Unit = {
     require(keepLast >= 1, s"keepLast=$keepLast must be >= 1")
     val dir = epochsDir(indexPath)
     val fs = fsFor(spark, dir)
     if (!fs.exists(dir)) return
+    def marker(n: String) = new Path(dir, n)
     val names = fs.listStatus(dir).map(_.getPath.getName)
     val committed = names.collect {
       case n if n.startsWith("committed-") => n.substring("committed-".length)
     }.toSet
-    // skip malformed foreign names (no dash, non-digit suffix) — the
-    // digits-only discipline of allocEpoch's parses (review r19)
     val allocs = names.collect {
-      case n if n.startsWith("alloc-") => n.substring("alloc-".length)
-    }.collect {
-      case body if body.lastIndexOf('-') > 0 && {
-        val d = body.substring(body.lastIndexOf('-') + 1)
-        d.nonEmpty && d.forall(_.isDigit)
-      } =>
-        val cut = body.lastIndexOf('-')
-        (body.substring(0, cut), body.substring(cut + 1).toLong)
-    }
-    // the windowed loops persist one stamp-<key>-<clock> per batch
-    // (attemptStamp); pruned with the pair, keyed here for the lookup
+      case n if n.startsWith("alloc-") && n.lastIndexOf('-') > "alloc-".length =>
+        (n.substring("alloc-".length, n.lastIndexOf('-')),
+          digitsAfter(n, n.substring(0, n.lastIndexOf('-') + 1)))
+    }.collect { case (key, Some(epoch)) => (key, epoch) }
     val stampByKey = names.collect {
-      case n if n.startsWith("stamp-") && n.substring("stamp-".length).lastIndexOf('-') > 0 =>
-        val body = n.substring("stamp-".length)
-        (body.substring(0, body.lastIndexOf('-')), n)
+      case n if n.startsWith("stamp-") && n.lastIndexOf('-') > "stamp-".length =>
+        (n.substring("stamp-".length, n.lastIndexOf('-')), n)
     }.toMap
-    // a committed marker with no alloc can only be the leftover of a
-    // prune that crashed between the deletes (allocs are created
-    // first and deleted first) — sweep it so re-runs converge. A
-    // stamp with no alloc is the same crash leftover (stamps are
-    // deleted LAST) or an abandoned checkpoint's attempt that crashed
-    // before allocating — which appended nothing, so its clock value
-    // protects nothing; sweep both. (One-writer rule: compactLedger
-    // never runs concurrently with a live attempt.)
+    // a committed marker or stamp with no alloc is the leftover of a
+    // prune that crashed between its deletes (allocs go first, stamps
+    // last) or of an attempt that crashed before allocating — which
+    // appended nothing; sweep both so re-runs converge
     val allocKeys = allocs.map(_._1).toSet
-    committed.diff(allocKeys).foreach { key =>
-      deleteOrThrow(fs, new org.apache.hadoop.fs.Path(dir, s"committed-$key"))
-    }
-    stampByKey.foreach { case (key, n) =>
-      if (!allocKeys.contains(key)) deleteOrThrow(fs, new org.apache.hadoop.fs.Path(dir, n))
-    }
-    val prunable = allocs.filter { case (key, _) => committed.contains(key) }
+    committed.diff(allocKeys).foreach(k => deleteOrThrow(fs, marker(s"committed-$k")))
+    stampByKey.foreach { case (k, n) => if (!allocKeys.contains(k)) deleteOrThrow(fs, marker(n)) }
+    val prunable = allocs.filter { case (k, _) => committed.contains(k) }
       .sortBy(_._2)
       .dropRight(keepLast)
     if (prunable.isEmpty) return
     val newWatermark = prunable.map(_._2).max
-    // watermark FIRST: if pruning crashes midway, a present watermark
-    // with surviving markers is safe (allocEpoch takes the max), while
-    // pruned markers without a watermark could reissue an epoch
-    fs.create(new org.apache.hadoop.fs.Path(dir, s"watermark-$newWatermark"), true).close()
-    prunable.foreach { case (key, epoch) =>
-      deleteOrThrow(fs, new org.apache.hadoop.fs.Path(dir, s"alloc-$key-$epoch"))
-      deleteOrThrow(fs, new org.apache.hadoop.fs.Path(dir, s"committed-$key"))
-      stampByKey.get(key).foreach(n =>
-        deleteOrThrow(fs, new org.apache.hadoop.fs.Path(dir, n)))
+    // watermark FIRST: a present watermark with surviving markers is
+    // safe (allocEpoch takes the max); pruned markers without it are not
+    fs.create(marker(s"watermark-$newWatermark"), true).close()
+    prunable.foreach { case (k, epoch) =>
+      deleteOrThrow(fs, marker(s"alloc-$k-$epoch"))
+      deleteOrThrow(fs, marker(s"committed-$k"))
+      stampByKey.get(k).foreach(n => deleteOrThrow(fs, marker(n)))
     }
-    // sweep superseded watermark files (monotone: keep only the max)
-    names.collect {
-      case n if n.startsWith("watermark-") && {
-        val d = n.substring("watermark-".length)
-        d.nonEmpty && d.forall(_.isDigit) && d.toLong < newWatermark
-      } => deleteOrThrow(fs, new org.apache.hadoop.fs.Path(dir, n))
-    }
-    ()
+    names.filter(n => digitsAfter(n, "watermark-").exists(_ < newWatermark))
+      .foreach(n => deleteOrThrow(fs, marker(n)))
   }
 
-  /** Operational snapshot of one index directory — the numbers a
-    * maintenance window decides from: `rows` vs `distinct` says how
-    * much a [[compact]] would reclaim, `dataFiles` says whether the
-    * small-file count justifies one, the epoch range bounds a
-    * retention window's effect, and the ledger counts say whether
-    * [[compactLedger]] is due. `midCompaction` reports (rather than
+  // ---- maintenance view ----
+
+  /** Operational snapshot of one index directory: `rows` vs `distinct`
+    * says how much a [[compact]] would reclaim, `dataFiles` whether the
+    * small-file count justifies one, the epoch range bounds a retention
+    * window's effect, the ledger counts whether [[compactLedger]] is
+    * due, and `sigCaches` counts the geometry-keyed signature caches
+    * (see [[listSigCaches]]). `midCompaction` REPORTS (rather than
     * throws, unlike the gates) that a crashed compaction needs
-    * [[recover]] first — a diagnostic call must work on a broken
-    * index.
+    * [[recover]] — a diagnostic must work on a broken index.
     */
   case class IndexStats(
       rows: Long,
@@ -1009,67 +1004,39 @@ object SeenIndex {
       ledgerCommitted: Long,
       ledgerWatermark: Option[Long],
       midCompaction: Boolean,
-      // geometry-keyed signature-cache siblings (`.sigs-<key>`) —
-      // the maintenance window should know derived caches exist
-      // (compactVectors carries in-sync ones through the rewrite and
-      // deletes stale ones loudly; a retired geometry's cache is
-      // reclaimable — see listSigCaches/dropSigCache)
       sigCaches: Long = 0L)
 
-  /** [[IndexStats]] for a SIGNATURE index (`distinct` = distinct
-    * sigs). One aggregate pass over the index parquet plus two
-    * directory listings; safe to call on a missing, empty, or
-    * mid-compaction directory.
+  /** [[IndexStats]] for the index at `path`, of either family
+    * (`distinct` = distinct keys, detected from the parquet footer).
+    * One aggregate pass plus directory listings; safe to call on a
+    * missing, empty or mid-compaction directory.
     */
-  def stats(spark: SparkSession, path: String): IndexStats =
-    statsOf(spark, path, spark.read.schema(epochSchema).parquet(path), Seq("sig"))
-
-  /** [[IndexStats]] for a VECTOR index (`distinct` = distinct
-    * `(id, vec)` pairs).
-    */
-  def vectorStats(spark: SparkSession, path: String): IndexStats =
-    statsOf(spark, path, spark.read.schema(vecEpochSchema).parquet(path), Seq("id", "vec"))
-
-  private def statsOf(
-      spark: SparkSession, path: String, load: => DataFrame,
-      keyCols: Seq[String]): IndexStats = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  def stats(spark: SparkSession, path: String): IndexStats = {
+    val p = new Path(path)
     val fs = fsFor(spark, p)
     val mid = !fs.exists(p) &&
-      graft.core.IndexLayout.CompactSuffixes.exists(s => fs.exists(sibling(path, s)))
+      IndexLayout.CompactSuffixes.exists(s => fs.exists(sibling(path, s)))
     val dataFiles =
-      if (fs.exists(p))
-        fs.listStatus(p).filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      if (fs.exists(p)) fs.listStatus(p).filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       else Array.empty[org.apache.hadoop.fs.FileStatus]
-    val (rows, dist, untagged, minE, maxE) =
-      if (dataFiles.isEmpty) (0L, 0L, 0L, None, None)
-      else {
-        val r = load.agg(
+    val (rows, dist, untagged, minE, maxE) = storedVectors(spark, path) match {
+      case None => (0L, 0L, 0L, None, None)
+      case Some(isVec) =>
+        val keys = if (isVec) VecSchema else SigSchema
+        val r = spark.read.schema(tagged(keys)).parquet(path).agg(
           count(lit(1)),
-          count_distinct(struct(keyCols.map(col): _*)),
+          count_distinct(struct(keys.fieldNames.map(col).toSeq: _*)),
           sum(when(col("epoch").isNull, 1L).otherwise(0L)),
           min("epoch"), max("epoch")).head()
         (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) 0L else r.getLong(2),
           if (r.isNullAt(3)) None else Some(r.getLong(3)),
           if (r.isNullAt(4)) None else Some(r.getLong(4)))
-      }
+    }
     val ledger = epochsDir(path)
     val markers =
-      if (fs.exists(ledger)) fs.listStatus(ledger).map(_.getPath.getName)
-      else Array.empty[String]
-    val watermarks = markers.collect {
-      case n if n.startsWith("watermark-") &&
-        n.substring("watermark-".length).nonEmpty &&
-        n.substring("watermark-".length).forall(_.isDigit) =>
-        n.substring("watermark-".length).toLong
-    }
-    // the normalized path's parent (sibling artifacts live there);
-    // normalize first so a trailing slash doesn't look one level deep
-    // exact `.sigs-<16 hex>` names only: a crashed rebuild's leftover
-    // `.sigs-<key>.rebuild-tmp` is not a live cache and must not
-    // inflate the maintenance view (ADVICE r17)
-    val sigCaches = sigCacheDirs(fs, path).length.toLong
+      if (fs.exists(ledger)) fs.listStatus(ledger).map(_.getPath.getName) else Array.empty[String]
+    val watermarks = markers.flatMap(digitsAfter(_, "watermark-"))
     IndexStats(
       rows = rows, distinct = dist, untagged = untagged,
       minEpoch = minE, maxEpoch = maxE,
@@ -1078,966 +1045,37 @@ object SeenIndex {
       ledgerCommitted = markers.count(_.startsWith("committed-")).toLong,
       ledgerWatermark = if (watermarks.isEmpty) None else Some(watermarks.max),
       midCompaction = mid,
-      sigCaches = sigCaches)
+      sigCaches = sigCacheDirs(fs, path).length.toLong)
   }
 
-  private def committedMarker(indexPath: String, key: String) =
-    new org.apache.hadoop.fs.Path(epochsDir(indexPath), s"committed-$key")
-
-  /** The index's signatures EXCLUDING rows tagged `epoch` — the
-    * replay view: a re-attempted batch must not gate against its own
-    * prior (crashed) append, or every row it admitted would vanish
-    * from the retry and the overwritten output would silently DROP
-    * the batch.
-    */
-  private def readExcluding(spark: SparkSession, path: String, epoch: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(epochSchema).parquet(path)
-        .filter(col("epoch").isNull || col("epoch") =!= epoch)
-        .select("sig")
-    else
-      emptyFrame(spark, schema)
-  }
-
-  /** One EXACTLY-ONCE ingest batch — the body [[gateStreamSimhashExactlyOnce]]
-    * runs per micro-batch, factored out so the crash contract is
-    * directly testable (SeenIndexSpec kills it at each `crashpoint`
-    * and replays). The protocol makes every step idempotent under
-    * replay-from-anywhere:
-    *
-    *   1. committed marker present -> the batch fully finished; the
-    *      replay does NOTHING (this is what upgrades at-least-once to
-    *      exactly-once).
-    *   2. the batch's epoch number is allocated once and re-found on
-    *      replay ([[allocEpoch]]), so step 3 is deterministic even
-    *      after a crash BETWEEN index append and marker write.
-    *   3. gate against the index MINUS rows tagged with this batch's
-    *      own epoch ([[readExcluding]]) -> the kept set is a pure
-    *      function of (batch, committed history), identical on every
-    *      attempt.
-    *   4. output lands at `outPath/epoch=<allocated>` with OVERWRITE
-    *      — the deterministic location + deterministic kept set make
-    *      the write idempotent, and keying by the ALLOCATED epoch
-    *      (not the raw batchId) keeps locations unique when a second
-    *      query with a fresh checkpoint — whose batchIds restart at 0
-    *      — resumes the same index: its batch 0 gets a NEW epoch, so
-    *      it can never overwrite a prior run's output. A reader of
-    *      `outPath` sees each admitted row exactly once, with an
-    *      `epoch` partition column.
-    *   5. the index append tags rows with the batch's epoch; a replay
-    *      may duplicate rows AT THE SAME EPOCH — the index is a set
-    *      to every reader and [[compact]] collapses them, so the
-    *      duplication is convergent, never visible.
-    *   6. the committed marker is written LAST.
-    *
-    * The loop must OWN its index exclusively: epoch tags here are
-    * allocation counters, not calendar days — mixing in
-    * [[gateAndUpdateSimhashWindow]]-style calendar epochs on the same
-    * directory could collide a calendar value with an allocated
-    * counter and corrupt a replay's exclusion (and violates the
-    * one-writer rule anyway). When the pipeline needs BOTH retention
-    * expiry and exactly-once output, use the composed forms
-    * ([[gateStreamSimhashWindowExactlyOnce]] and siblings): they keep
-    * the counter in `epoch` and carry the retention clock in a
-    * separate `admitted` column, so the two semantics never share a
-    * value space.
-    */
-  /** The shared exactly-once batch body: `gate(epoch)` must build the
-    * admitted-rows plan reading the index MINUS rows tagged `epoch`
-    * and return it with a release thunk for any internal persists the
-    * gate holds (released the moment the eager checkpoint
-    * materializes — a per-micro-batch loop must not pin cache entries
-    * batch after batch), `appendKept(kept, epoch)` must tag its
-    * append with `epoch`, and `project` shapes the output rows.
-    * Deterministic gates + the ledger make every step idempotent (see
-    * [[exactlyOnceEpochSimhash]] for the numbered protocol).
-    */
-  private def exactlyOnceEpoch(
-      batch: DataFrame,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      crashpoint: String => Unit)(
-      gate: Long => (DataFrame, () => Unit))(
-      appendKept: (DataFrame, Long) => Unit)(
-      project: DataFrame => DataFrame): Unit = {
-    // the output lands under outPath/epoch=<n>; a batch that already
-    // carries an 'epoch' data column would collide with the partition
-    // column on read-back (Spark throws "duplicate column(s) in the
-    // data schema and the partition schema"), breaking the documented
-    // read-outPath-as-one-table contract — refuse up front (review r19)
-    require(!batch.columns.contains("epoch"),
-      "exactly-once batches must not carry an 'epoch' column: the output is " +
-        "partitioned by the allocated epoch and partition discovery would " +
-        "collide with the data column on read-back — rename it before the gate")
-    val spark = batch.sparkSession
-    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(indexPath))
-    // fail BEFORE touching the ledger: a crashed compaction must stop
-    // the protocol here, not after an epoch is allocated (the gate's
-    // readExcluding would throw anyway — the ledger is a sibling, so
-    // nothing below recreates the missing index path — but failing
-    // first keeps the crash state untouched for recover())
-    requireNotMidCompaction(fs, indexPath)
-    if (fs.exists(committedMarker(indexPath, key))) return
-    val epoch = allocEpoch(fs, indexPath, key)
-    crashpoint("allocated")
-    val (gated, releaseGate) = gate(epoch)
-    val kept =
-      try gated.localCheckpoint(true) // same read-what-you-write pin as gateAndUpdateSimhash
-      finally releaseGate()
-    try {
-      crashpoint("gated")
-      project(kept).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
-      crashpoint("output")
-      appendKept(kept, epoch)
-      crashpoint("appended")
-      fs.create(committedMarker(indexPath, key), true).close()
-    } finally org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept)
-  }
-
-  private[graft] def exactlyOnceEpochSimhash(
-      batch: DataFrame,
-      textCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      maxHamming: Int,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    val hashed = requireNoSigCol(batch).withColumn("__sig",
-      SimHash64.simhash64(graft.text.TextAnalysis.tokens(col(textCol))))
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      Dedup.dropSeenHamming(
-        hashed, readExcluding(spark, indexPath, epoch).select(col("sig").as("__sig")),
-        "__sig", maxHamming) -> (() => ())
-    } { (kept, epoch) =>
-      appendEpoch(kept, "__sig", indexPath, epoch)
-    } (_.drop("__sig"))
-  }
-
-  /** [[exactlyOnceEpochSimhash]] for a precomputed 64-bit signature
-    * column — the media form. Output rows keep `sigCol`.
-    */
-  private[graft] def exactlyOnceEpochHamming(
-      batch: DataFrame,
-      sigCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      maxHamming: Int,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      Dedup.dropSeenHamming(
-        batch, readExcluding(spark, indexPath, epoch).select(col("sig").as(sigCol)),
-        sigCol, maxHamming) -> (() => ())
-    } { (kept, epoch) =>
-      appendEpoch(kept, sigCol, indexPath, epoch)
-    } (identity)
-  }
-
-  /** [[gateStreamSimhash]] with EXACTLY-ONCE output — the composed
-    * form its at-least-once sibling's scaladoc promises. Admitted
-    * rows land under `outPath/epoch=<n>/` (read `outPath` as one
-    * parquet table; partition discovery adds an `epoch` column); the
-    * per-batch protocol is [[exactlyOnceEpochSimhash]]'s. A crash at
-    * ANY point replays to the identical output — no duplicate rows,
-    * no dropped batch — because the gate excludes the batch's own
-    * prior append and the output location is deterministic. The index
-    * append itself stays convergent-at-least-once (same-epoch
-    * duplicate rows that every reader collapses), which is exactly as
-    * strong as it needs to be: the user-visible rows are the output.
-    *
-    * `ledgerKeepLast > 0` runs [[compactLedger]] after every committed
-    * batch so a long-lived stream's marker directory stays O(keepLast)
-    * instead of growing two files per batch forever; 0 (the default)
-    * leaves maintenance to the caller.
-    *
-    * The index and its `<indexPath>.epochs` ledger are a UNIT — reset,
-    * copy, or back them up together (see [[dropLedger]]).
-    */
-  def gateStreamSimhashExactlyOnce(
-      stream: DataFrame,
-      textCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      maxHamming: Int = 3,
-      ledgerKeepLast: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireExactRadius(maxHamming)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exactlyOnceEpochSimhash(
-          batch, textCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath, maxHamming)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-  }
-
-  /** [[gateStreamHamming]] with EXACTLY-ONCE output — the media form
-    * of [[gateStreamSimhashExactlyOnce]], same ledgered protocol,
-    * admitted rows (signature column included) landing under
-    * `outPath/epoch=<n>/`. `ledgerKeepLast` as in
-    * [[gateStreamSimhashExactlyOnce]].
-    */
-  def gateStreamHammingExactlyOnce(
-      stream: DataFrame,
-      sigCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      maxHamming: Int = 3,
-      ledgerKeepLast: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireExactRadius(maxHamming)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exactlyOnceEpochHamming(
-          batch, sigCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath, maxHamming)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-  }
-
-  // ---- the EMBEDDING index: same lifecycle, vector-valued state ----
-
-  private val vecSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("vec", ArrayType(FloatType, containsNull = true), nullable = true)))
-
-  private val vecEpochSchema = StructType(vecSchema.fields :+
-    StructField("epoch", LongType, nullable = true))
-
-  /** [[winEpochSchema]] for the vector index — `(id, vec, epoch,
-    * admitted)`, same counter-vs-stamp split, same unstamped =
-    * never-expires projection rule.
-    */
-  private val vecWinEpochSchema = StructType(vecEpochSchema.fields :+
-    StructField("admitted", LongType, nullable = true))
-
-  /** The vector index's frame — `(id, vec)` rows, the admitted
-    * embeddings. Unlike the 8-byte signature index this is
-    * (8 + 4*dim) bytes per row (~264 GB for a billion 64-dim docs):
-    * NOT broadcast-sized, and it doesn't need to be — the gate's band
-    * join shuffles only band keys + refine signatures, and the exact
-    * verify is a shuffle-hash join on candidate ids, so the reference
-    * vectors stream from parquet without ever being collected
-    * (`broadcastVerify` stays an opt-in for small indexes). A missing
-    * or empty directory reads as an EMPTY index (bootstrap).
-    */
-  def readVectors(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(vecSchema).parquet(path)
-    else
-      emptyFrame(spark, vecSchema)
-  }
-
-  /** Append `(idCol, vecCol)` rows to the vector index — null vectors
-    * AND null ids dropped (the gate's read-side normalization would
-    * discard a null vector anyway, and a null-id reference row can
-    * never gate anything: the exact-verify stage joins candidates by
-    * id, where a null key never matches — it would be dead weight at
-    * (8 + 4*dim) bytes/row; a zero-norm or NaN vector IS appended but
-    * never gates anything, mirroring the family rule that unhashable
-    * rows can't be proven seen), distinct within the append.
-    */
-  def appendVectors(df: DataFrame, vecCol: String, idCol: String, path: String): Unit = {
-    requireAppendable(df, path)
-    df.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<float>").as("vec"))
-      .filter(col("vec").isNotNull && col("id").isNotNull)
-      .distinct()
-      .write.mode("append").parquet(path)
-    ()
-  }
-
-  /** [[appendVectors]] with an EPOCH tag — same mixing rules as the
-    * signature index's [[appendEpoch]] (untagged files read as epoch
-    * NULL = never expires; [[readVectors]] keeps working unchanged).
-    */
-  def appendVectorsEpoch(
-      df: DataFrame, vecCol: String, idCol: String, path: String, epoch: Long): Unit = {
-    requireAppendable(df, path)
-    df.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<float>").as("vec"),
-        lit(epoch).cast("long").as("epoch"))
-      .filter(col("vec").isNotNull && col("id").isNotNull)
-      .distinct()
-      .write.mode("append").parquet(path)
-    ()
-  }
-
-  /** The vector frame restricted to epochs >= `minEpoch` plus every
-    * untagged row — [[readWindow]] for embeddings.
-    */
-  def readVectorsWindow(spark: SparkSession, path: String, minEpoch: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(vecEpochSchema).parquet(path)
-        .filter(col("epoch").isNull || col("epoch") >= minEpoch)
-        .select("id", "vec")
-    else
-      emptyFrame(spark, vecSchema)
-  }
-
-  /** One ingest epoch at the EMBEDDING level — the durable form of
-    * [[graft.similarity.Similarity.dropSeenEmbedding]]: gate `batch`
-    * by cosine >= `threshold` against every previously admitted
-    * vector, append the admitted `(id, vec)` rows, return the
-    * admitted rows. APPROXIMATE exactly like its stateless twin (an
-    * LSH miss passes the gate) — derive (planes, bands, probeHamming)
-    * from [[graft.similarity.Similarity.lshGeometry]] at the recall
-    * the gate's policy requires; the index round-trip itself changes
-    * no admission (pinned by the q104 contract). Eager localCheckpoint
-    * for the same read-what-you-write reason as
-    * [[gateAndUpdateSimhash]] (see its in-body comment).
-    */
-  def gateAndUpdateEmbedding(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      path: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): graft.core.Releasable[DataFrame] = {
-    val spark = batch.sparkSession
-    // bootstrap epoch: the gate against an empty index admits the
-    // whole batch (anti-join against an empty match set) — skip the
-    // entire LSH machinery and pay only checkpoint + append
-    if (indexEmpty(spark, path)) {
-      val kept = batch.localCheckpoint(true)
-      appendVectors(kept, vecCol, idCol, path)
-      return graft.core.Releasable(kept, () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
-    }
-    val ref = readVectors(spark, path)
-      .select(col("id").as(idCol), col("vec").as(vecCol))
-    val (gated, releaseMiner) = graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-      batch, ref, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-      // candidates are batch-bound in the ingest-gate regime: the
-      // semi-prune keeps the index's wide payload off the shuffle
-      semiPruneVerify = true)
-    // eager checkpoint materializes the gate, so the miner's internal
-    // persists are releasable immediately
-    val kept = try gated.localCheckpoint(true) finally releaseMiner()
-    appendVectors(kept, vecCol, idCol, path)
-    graft.core.Releasable(kept, () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
-  }
-
-  /** [[gateAndUpdateEmbedding]] with a RETENTION WINDOW — the
-    * semantic form of [[gateAndUpdateSimhashWindow]], same epoch
-    * semantics (untagged history never expires; expiry measured from
-    * the last ADMISSION).
-    */
-  def gateAndUpdateEmbeddingWindow(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      path: String,
-      epoch: Long,
-      minEpoch: Long,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): graft.core.Releasable[DataFrame] = {
-    val spark = batch.sparkSession
-    // bootstrap epoch short-circuit — see gateAndUpdateEmbedding
-    if (indexEmpty(spark, path)) {
-      val kept = batch.localCheckpoint(true)
-      appendVectorsEpoch(kept, vecCol, idCol, path, epoch)
-      return graft.core.Releasable(kept, () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
-    }
-    val ref = readVectorsWindow(spark, path, minEpoch)
-      .select(col("id").as(idCol), col("vec").as(vecCol))
-    // eager localCheckpoint for the same read-what-you-write reason
-    // as gateAndUpdateSimhash (see its in-body comment); miner
-    // internals released the moment it materializes
-    val (gated, releaseMiner) = graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-      batch, ref, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-      // candidates are batch-bound in the ingest-gate regime: the
-      // semi-prune keeps the index's wide payload off the shuffle
-      semiPruneVerify = true)
-    val kept = try gated.localCheckpoint(true) finally releaseMiner()
-    appendVectorsEpoch(kept, vecCol, idCol, path, epoch)
-    graft.core.Releasable(kept, () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
-  }
-
-  /** One at-least-once embedding-gate micro-batch — the shared body
-    * of [[gateStreamEmbedding]], [[gateStreamEmbeddingSigned]] and
-    * [[gateStreamEmbeddingAuto]] (review r18: previously three
-    * hand-synced copies). Order is the at-least-once contract: gate
-    * -> eager localCheckpoint (read-what-you-write; miner persists
-    * released the moment it materializes) -> output append -> index
-    * append (signed form: index + cache in lockstep).
-    */
-  private def embeddingGateBatch(
-      batch: DataFrame, vecCol: String, idCol: String, indexPath: String,
-      outPath: String, threshold: Double, planes: Array[Array[Float]],
-      bands: Int, probeHamming: Int, broadcastVerify: Boolean, signed: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val (gated, releaseMiner) =
-      if (signed) {
-        ensureSigCache(spark, indexPath, planes)
-        graft.similarity.Similarity.dropSeenEmbeddingPresigned(
-          batch, readSigs(spark, indexPath, planes, vecCol, idCol),
-          vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify)
-      } else {
-        val ref = readVectors(spark, indexPath)
-          .select(col("id").as(idCol), col("vec").as(vecCol))
-        graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-          batch, ref, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-          semiPruneVerify = true)
-      }
-    val kept = try gated.localCheckpoint(true) finally releaseMiner()
-    try {
-      kept.write.mode("append").parquet(outPath)
-      if (signed) appendVectorsAndSigs(kept, vecCol, idCol, indexPath, planes, None, None)
-      else appendVectors(kept, vecCol, idCol, indexPath)
-    } finally org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept)
-    ()
-  }
-
-  /** [[gateStreamSimhash]] at the EMBEDDING level — the durable
-    * streaming ingest loop for the semantic gate: every micro-batch
-    * runs one [[gateAndUpdateEmbedding]] epoch against the vector
-    * index at `indexPath`, writes the admitted rows to `outPath`, and
-    * appends their `(id, vec)` pairs. Same at-least-once ordering
-    * (output before append — a failure between the two re-admits the
-    * batch on retry, never drops it), same restart-resume (a new
-    * query, or a new cluster, gates against everything any prior run
-    * admitted), same APPROXIMATE caveat as the batch gate (an LSH
-    * banding miss passes).
-    */
-  def gateStreamEmbedding(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        embeddingGateBatch(batch, vecCol, idCol, indexPath, outPath,
-          threshold, planes, bands, probeHamming, broadcastVerify, signed = false)
-      }
-      .start()
-
-  /** The vector index MINUS rows tagged `epoch` — [[readExcluding]]
-    * for embeddings (the exactly-once replay view).
-    */
-  private def readVectorsExcluding(spark: SparkSession, path: String, epoch: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(vecEpochSchema).parquet(path)
-        .filter(col("epoch").isNull || col("epoch") =!= epoch)
-        .select("id", "vec")
-    else
-      emptyFrame(spark, vecSchema)
-  }
-
-  /** [[exactlyOnceEpochSimhash]] at the EMBEDDING level — same
-    * ledgered protocol over the vector index; the gate is
-    * deterministic given fixed `planes`, so replays land on the
-    * identical admitted set.
-    */
-  private[graft] def exactlyOnceEpochEmbedding(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      val ref = readVectorsExcluding(spark, indexPath, epoch)
-        .select(col("id").as(idCol), col("vec").as(vecCol))
-      graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-        batch, ref, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-        semiPruneVerify = true)
-    } { (kept, epoch) =>
-      appendVectorsEpoch(kept, vecCol, idCol, indexPath, epoch)
-    } (identity)
-  }
-
-  /** [[gateStreamEmbedding]] with EXACTLY-ONCE output — the semantic
-    * form of [[gateStreamSimhashExactlyOnce]], same ledgered protocol,
-    * admitted rows landing under `outPath/epoch=<n>/`. The gate stays
-    * APPROXIMATE (an LSH miss passes) but replay-deterministic.
-    * `ledgerKeepLast` as in [[gateStreamSimhashExactlyOnce]].
-    */
-  def gateStreamEmbeddingExactlyOnce(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      ledgerKeepLast: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exactlyOnceEpochEmbedding(
-          batch, vecCol, idCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath,
-          threshold, planes, bands, probeHamming, broadcastVerify)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-
-  // ---- WINDOWED EXACTLY-ONCE: retention expiry + ledgered replay composed ----
+  // ---- the SIGNATURE CACHE of the vector index ----
   //
-  // The production re-crawl shape — "re-admit content whose every
-  // prior admission aged out" AND "a crash replays to identical
-  // output" — needs BOTH the retention window and the ledger on one
-  // index. The window gates key expiry on an epoch; the ledger keys
-  // exclusion on an epoch; one column cannot serve both (a calendar
-  // value colliding with an allocation counter corrupts a replay's
-  // exclusion — the hazard the plain forms' scaladoc names). The
-  // composed forms therefore split them: `epoch` stays the ledger's
-  // ALLOCATION COUNTER, and a separate `admitted` column carries the
-  // ADMISSION STAMP the retention window expires on (see
-  // [[winEpochSchema]]). Unstamped history (every pre-composition
-  // append) reads as admitted-NULL = never expires.
-
-  /** [[appendEpoch]] with an ADMISSION STAMP: rows carry the ledger's
-    * allocation `epoch` (the replay-exclusion key) AND the caller's
-    * `admitted` stamp (the retention-expiry key).
-    */
-  def appendEpochAdmitted(
-      sigs: DataFrame, sigCol: String, path: String, epoch: Long, admitted: Long): Unit = {
-    requireAppendable(sigs, path)
-    sigs.select(col(sigCol).cast("long").as("sig"), lit(epoch).cast("long").as("epoch"),
-        lit(admitted).cast("long").as("admitted"))
-      .filter(col("sig").isNotNull)
-      .distinct()
-      .write.mode("append").parquet(path)
-    ()
-  }
-
-  /** The signature frame restricted to admission stamps >=
-    * `minAdmitted`, plus every unstamped row — [[readWindow]] keyed on
-    * the `admitted` column instead of the epoch counter. This is the
-    * visibility read the windowed-exactly-once gates derive from (and
-    * a diagnostic: "what would still gate at cutoff m").
-    */
-  def readWindowAdmitted(spark: SparkSession, path: String, minAdmitted: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(winEpochSchema).parquet(path)
-        .filter(col("admitted").isNull || col("admitted") >= minAdmitted)
-        .select("sig")
-    else
-      emptyFrame(spark, schema)
-  }
-
-  /** The replay view of a WINDOWED index: signatures that are (a) not
-    * tagged with the replaying batch's own allocation `epoch` and
-    * (b) still inside the retention window (`admitted >= minAdmitted`;
-    * unstamped rows never expire). An aged-out signature is invisible
-    * exactly like a same-epoch one — but for an independently-keyed
-    * reason, which is the whole point of the two-column layout.
-    */
-  private def readWindowAdmittedExcluding(
-      spark: SparkSession, path: String, epoch: Long, minAdmitted: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(winEpochSchema).parquet(path)
-        .filter(col("epoch").isNull || col("epoch") =!= epoch)
-        .filter(col("admitted").isNull || col("admitted") >= minAdmitted)
-        .select("sig")
-    else
-      emptyFrame(spark, schema)
-  }
-
-  /** Pin one windowed attempt's clock pair to the FIRST attempt's:
-    * the `stamp-<key>-<clock>` marker persisted next to the alloc
-    * markers re-anchors `admittedAt`, and the window AGE
-    * (admittedAt - minAdmitted) is preserved relative to it — so a
-    * replay whose clock regressed (or jumped) evaluates the
-    * IDENTICAL retention window, and its kept set can never diverge
-    * from what a crashed attempt already appended (the
-    * phantom-admission hazard [[attemptStamp]] documents). Lives
-    * inside the shared windowed bodies so every caller — stream loop,
-    * test harness, future batch driver — is safe by default (review
-    * r18: previously only the stream loops stamped). Skips stamping
-    * for an already-committed key: the protocol's step 1 makes that
-    * replay a no-op, and stamping would recreate a pruned marker as
-    * an orphan.
-    */
-  private def pinnedWindow(
-      spark: SparkSession, indexPath: String, key: String,
-      admittedAt: Long, minAdmitted: Long): (Long, Long) = {
-    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(indexPath))
-    requireNotMidCompaction(fs, indexPath)
-    if (fs.exists(committedMarker(indexPath, key))) (admittedAt, minAdmitted)
-    else {
-      val at = attemptStamp(fs, indexPath, key, admittedAt)
-      (at, at - (admittedAt - minAdmitted))
-    }
-  }
-
-  /** One WINDOWED exactly-once ingest batch — [[exactlyOnceEpochSimhash]]
-    * with the gate reading [[readWindowAdmittedExcluding]] and the
-    * append stamping [[appendEpochAdmitted]]. The ledger protocol is
-    * unchanged (committed marker, idempotent epoch allocation,
-    * deterministic overwrite output), so every crash point replays to
-    * identical output; the window only changes WHICH history can gate
-    * a row. `admittedAt`/`minAdmitted` are PINNED to the first
-    * attempt's values ([[pinnedWindow]]): the output is exactly-once
-    * under any values (the kept set lands wholesale at the
-    * epoch-keyed overwrite location), but a replay that re-evaluated
-    * the window at a DIFFERENT clock could keep a different set than
-    * a crashed attempt already appended to the index — stranding
-    * epoch-tagged signatures the committed output never admitted,
-    * which would gate future batches as phantom admissions. The pin
-    * makes every caller safe by default, not just the stream loops
-    * (review r18).
-    */
-  private[graft] def exactlyOnceEpochSimhashWindow(
-      batch: DataFrame,
-      textCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      maxHamming: Int,
-      admittedAt: Long,
-      minAdmitted: Long,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    val (at, minAt) = pinnedWindow(spark, indexPath, key, admittedAt, minAdmitted)
-    val hashed = requireNoSigCol(batch).withColumn("__sig",
-      SimHash64.simhash64(graft.text.TextAnalysis.tokens(col(textCol))))
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      Dedup.dropSeenHamming(
-        hashed,
-        readWindowAdmittedExcluding(spark, indexPath, epoch, minAt)
-          .select(col("sig").as("__sig")),
-        "__sig", maxHamming) -> (() => ())
-    } { (kept, epoch) =>
-      appendEpochAdmitted(kept, "__sig", indexPath, epoch, at)
-    } (_.drop("__sig"))
-  }
-
-  /** [[exactlyOnceEpochSimhashWindow]] for a precomputed 64-bit
-    * signature column — the media form. Output rows keep `sigCol`.
-    */
-  private[graft] def exactlyOnceEpochHammingWindow(
-      batch: DataFrame,
-      sigCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      maxHamming: Int,
-      admittedAt: Long,
-      minAdmitted: Long,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    val (at, minAt) = pinnedWindow(spark, indexPath, key, admittedAt, minAdmitted)
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      Dedup.dropSeenHamming(
-        batch,
-        readWindowAdmittedExcluding(spark, indexPath, epoch, minAt)
-          .select(col("sig").as(sigCol)),
-        sigCol, maxHamming) -> (() => ())
-    } { (kept, epoch) =>
-      appendEpochAdmitted(kept, sigCol, indexPath, epoch, at)
-    } (identity)
-  }
-
-  /** [[gateStreamSimhashExactlyOnce]] WITH RETENTION: every
-    * micro-batch reads the clock ONCE — on its first attempt, after
-    * which the value is persisted in the ledger ([[attemptStamp]])
-    * and every crash replay re-reads it, so a regressed clock can
-    * never let a replay keep a different set than the crashed
-    * attempt appended — gates against history admitted within the
-    * last `windowAge` clock units (unstamped legacy rows never
-    * expire), and stamps its own admissions at that clock value — so
-    * a document whose every prior admission aged out is RE-ADMITTED,
-    * lands under a fresh `outPath/epoch=<n>/`, and resets its
-    * retention clock, while a crash at any point still replays to
-    * identical output with zero duplicates. `clock` defaults to
-    * wall-clock millis; inject a fake for deterministic tests or to
-    * key the window on crawl days instead. The index and
-    * its `<indexPath>.epochs` ledger remain a UNIT (see [[dropLedger]]);
-    * compaction for this layout is [[compactWindowed]], which keeps
-    * the `(sig, epoch)` exclusion grain.
-    */
-  def gateStreamSimhashWindowExactlyOnce(
-      stream: DataFrame,
-      textCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      windowAge: Long,
-      maxHamming: Int = 3,
-      ledgerKeepLast: Int = 0,
-      clock: () => Long = () => System.currentTimeMillis()): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireExactRadius(maxHamming)
-    require(windowAge >= 0, s"windowAge=$windowAge must be >= 0")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch body pins the attempt clock in the ledger
-        // (pinnedWindow), so a crash replay re-reads the first
-        // attempt's window even if this clock() regressed
-        val now = clock()
-        exactlyOnceEpochSimhashWindow(
-          batch, textCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath, maxHamming,
-          admittedAt = now, minAdmitted = now - windowAge)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-  }
-
-  /** [[gateStreamSimhashWindowExactlyOnce]] for a precomputed 64-bit
-    * signature column — the media form of the composed loop.
-    */
-  def gateStreamHammingWindowExactlyOnce(
-      stream: DataFrame,
-      sigCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      windowAge: Long,
-      maxHamming: Int = 3,
-      ledgerKeepLast: Int = 0,
-      clock: () => Long = () => System.currentTimeMillis()): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireExactRadius(maxHamming)
-    require(windowAge >= 0, s"windowAge=$windowAge must be >= 0")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val now = clock() // replay-pinned inside the body (pinnedWindow)
-        exactlyOnceEpochHammingWindow(
-          batch, sigCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath, maxHamming,
-          admittedAt = now, minAdmitted = now - windowAge)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-  }
-
-  /** [[compact]] for a WINDOWED-exactly-once index: collapses replay
-    * duplicates at the `(sig, epoch)` grain — never across epochs, so
-    * a replay's own-epoch exclusion sees exactly the history it would
-    * have uncompacted (one signature legitimately holds SEVERAL
-    * admission epochs here: that is what re-admission writes).
-    * Within a group the latest admission stamp survives and an
-    * unstamped sighting dominates (never-expires stays never-expires).
-    * `dropAdmittedBefore` additionally deletes rows whose stamp
-    * expired before the given horizon — pass a value no later than
-    * every future batch's window start (`clock() - windowAge`), and
-    * the deleted rows are exactly the ones no future gate could see
-    * (a replay of the row's own epoch never saw it anyway, and
-    * re-appends it). Same crash-safe backup-then-swap, same
-    * one-writer rule as [[compact]].
-    */
-  def compactWindowed(
-      spark: SparkSession, path: String, dropAdmittedBefore: Option[Long] = None): Unit = {
-    requireIndexFamily(spark, path, wantVec = false, "compactWindowed")
-    compactInto(spark, path) { df =>
-      val collapsed = collapseLatest(df, Seq("sig", "epoch"), Nil)
-      dropAdmittedBefore.fold(collapsed)(h =>
-        collapsed.filter(col("admitted").isNull || col("admitted") >= h))
-    }(winEpochSchema)
-  }
-
-  // -- the embedding modality of the composed loop --
-
-  /** [[appendVectorsEpoch]] with an ADMISSION STAMP — the vector form
-    * of [[appendEpochAdmitted]].
-    */
-  def appendVectorsEpochAdmitted(
-      df: DataFrame, vecCol: String, idCol: String, path: String,
-      epoch: Long, admitted: Long): Unit = {
-    requireAppendable(df, path)
-    df.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<float>").as("vec"),
-        lit(epoch).cast("long").as("epoch"), lit(admitted).cast("long").as("admitted"))
-      .filter(col("vec").isNotNull && col("id").isNotNull)
-      .distinct()
-      .write.mode("append").parquet(path)
-    ()
-  }
-
-  /** The vector replay view of a windowed index —
-    * [[readWindowAdmittedExcluding]] for embeddings.
-    */
-  private def readVectorsWindowAdmittedExcluding(
-      spark: SparkSession, path: String, epoch: Long, minAdmitted: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    requireNotMidCompaction(fs, path)
-    if (hasParquet(fs, p))
-      spark.read.schema(vecWinEpochSchema).parquet(path)
-        .filter(col("epoch").isNull || col("epoch") =!= epoch)
-        .filter(col("admitted").isNull || col("admitted") >= minAdmitted)
-        .select("id", "vec")
-    else
-      emptyFrame(spark, vecSchema)
-  }
-
-  /** [[exactlyOnceEpochSimhashWindow]] at the EMBEDDING level — same
-    * composed protocol over the vector index; the gate stays
-    * APPROXIMATE (an LSH miss passes) but replay-deterministic given
-    * fixed `planes` and a fixed attempt clock.
-    */
-  private[graft] def exactlyOnceEpochEmbeddingWindow(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      admittedAt: Long,
-      minAdmitted: Long,
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    val (at, minAt) = pinnedWindow(spark, indexPath, key, admittedAt, minAdmitted)
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      val ref = readVectorsWindowAdmittedExcluding(spark, indexPath, epoch, minAt)
-        .select(col("id").as(idCol), col("vec").as(vecCol))
-      graft.similarity.Similarity.dropSeenEmbeddingReleasable(
-        batch, ref, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-        semiPruneVerify = true)
-    } { (kept, epoch) =>
-      appendVectorsEpochAdmitted(kept, vecCol, idCol, indexPath, epoch, at)
-    } (identity)
-  }
-
-  /** [[gateStreamSimhashWindowExactlyOnce]] at the EMBEDDING level —
-    * the semantic form of the composed loop. Compaction for this
-    * layout is [[compactVectorsWindowed]].
-    */
-  def gateStreamEmbeddingWindowExactlyOnce(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      windowAge: Long,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      ledgerKeepLast: Int = 0,
-      clock: () => Long = () => System.currentTimeMillis()): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(windowAge >= 0, s"windowAge=$windowAge must be >= 0")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val now = clock() // replay-pinned inside the body (pinnedWindow)
-        exactlyOnceEpochEmbeddingWindow(
-          batch, vecCol, idCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath,
-          threshold, planes, admittedAt = now, minAdmitted = now - windowAge,
-          bands = bands, probeHamming = probeHamming, broadcastVerify = broadcastVerify)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-  }
-
-  /** [[compactWindowed]] for the vector index — `(id, vec, epoch)`
-    * grain, same stamp rules, same optional expiry horizon.
-    */
-  def compactVectorsWindowed(
-      spark: SparkSession, path: String, dropAdmittedBefore: Option[Long] = None): Unit = {
-    requireIndexFamily(spark, path, wantVec = true, "compactVectorsWindowed")
-    val fpBefore = indexFingerprint(fsFor(spark, new org.apache.hadoop.fs.Path(path)),
-      new org.apache.hadoop.fs.Path(path))
-    def expire(collapsed: DataFrame): DataFrame =
-      dropAdmittedBefore.fold(collapsed)(h =>
-        collapsed.filter(col("admitted").isNull || col("admitted") >= h))
-    compactInto(spark, path)(df =>
-      expire(collapseLatest(df, Seq("id", "vec", "epoch"), Nil)))(vecWinEpochSchema)
-    // the (id, vec, epoch)-grain twin of the index rewrite above;
-    // signatures ride the group-by (constant per vec)
-    carrySigCaches(spark, path, fpBefore)(cache =>
-      expire(collapseLatest(cache, Seq("id", "vec", "epoch"), Seq("sig", "rsig", "rsig2"))))
-  }
-
-  // ---- the SIGNED vector index: precomputed-signature gating ----
-  //
-  // Every embedding gate above recomputes the reference side's
-  // 190-plane RHP signatures (64 coarse + 2x63 refine dots of dim
-  // floats per row) over the ENTIRE growing index, every epoch /
-  // micro-batch — at a billion-vector index that pass, not the scan,
-  // is the dominant history-linear term. The signed forms cache the
-  // signatures durably in a GEOMETRY-KEYED sibling directory
+  // A [[Live]] embedding gate recomputes the reference side's 190-plane
+  // RHP signatures (64 coarse + 2x63 refine dots of dim floats per row)
+  // over the ENTIRE growing index every epoch — at a billion vectors
+  // that pass, not the scan, is the dominant history-linear term.
+  // [[Cached]] keeps the signatures durably in a GEOMETRY-KEYED sibling
   // (`<path>.sigs-<key>`, key = hash of the coarse planes; the refine
-  // geometries are fixed constants of the mining contract and bands
-  // only matter at band-slicing time, so neither keys the cache):
+  // geometries are fixed constants of the mining contract):
   //
-  //   - rows mirror the index ((id, vec, epoch, admitted)) plus the
+  //   - rows mirror the index (`(id, vec, epoch, admitted)`) plus the
   //     three signature columns, computed by the SAME
-  //     Similarity.withSignatures projection the live path derives
-  //     from (one normalization from raw — see its scaladoc for why
-  //     re-normalizing is not an identity), so cached and live
-  //     signatures are bit-identical by construction;
-  //   - appends run in LOCKSTEP (index first — the source of truth —
-  //     then cache), and the cache carries a SYNC MARKER naming the
-  //     exact index file set it was built against (`_synced-<fp>`,
-  //     fp = hash of the sorted (file name, length) pairs — one FS
-  //     listing, no Spark job). Every gate compares the marker to the
-  //     index's CURRENT fingerprint: any divergence — a crash between
-  //     the two appends, a compaction's rewrite, a direct unsigned
-  //     append — triggers a full rebuild from the index, which costs
-  //     exactly what ONE unsigned gate's signature pass pays. (A
-  //     row-count parity check was the first design; it is blind to
-  //     equal-count divergence — a compaction collapsing K duplicates
-  //     followed by K unsigned appends — and costs two count() jobs
-  //     per gate. The file-set fingerprint closes both holes: part
-  //     file names are write-UUID-unique, so no append, rewrite, or
-  //     swap can reproduce a prior fingerprint.)
-  //   - degenerate vectors ride along with null signatures (they
-  //     never gate; keeping the row keeps the cache a faithful row
-  //     mirror of the index);
-  //   - [[compactVectors]]/[[compactVectorsWindowed]] carry every
-  //     in-sync cache THROUGH the compaction (the same collapse, run
-  //     on the cache rows — signatures are functions of the vector
-  //     alone, so they ride the group-by), re-marked against the
-  //     compacted fingerprint: the cost is paid once, visibly, at
-  //     compaction, not as a silent full rebuild in the next gate;
-  //   - a caller changing `planes` simply lands on a fresh cache dir;
-  //     [[listSigCaches]] reports every geometry's cache and its sync
-  //     state, [[dropSigCache]]/[[dropSigCaches]] reclaim retired
-  //     ones (two gates with different thresholds may legitimately
-  //     share one index under different geometries).
+  //     Similarity.withSignatures projection the live path uses, so
+  //     cached and live signatures are bit-identical by construction;
+  //     degenerate vectors ride along with null signatures;
+  //   - appends run in LOCKSTEP (index, cache, then marker), and the
+  //     cache carries a SYNC MARKER `_synced-<fp>` naming the exact
+  //     index file set it mirrors (fp = hash of the sorted part-file
+  //     (name, length) pairs — one listing, no Spark job). Any
+  //     divergence — a torn lockstep append, an out-of-band compaction,
+  //     a direct append through a [[Live]] family — fails the
+  //     comparison and triggers one rebuild. Part-file names carry
+  //     write UUIDs, so no append or rewrite can reproduce a prior
+  //     fingerprint (row-count parity could not tell a compaction that
+  //     collapsed K duplicates followed by K fresh appends);
+  //   - [[compact]] carries in-sync caches through the rewrite;
+  //   - another `planes` lands on another cache dir; [[listSigCaches]],
+  //     [[dropSigCache]] and [[dropSigCaches]] manage retired ones.
 
   private def geomKey(planes: Array[Array[Float]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -2051,21 +1089,14 @@ object SeenIndex {
   private def sigsDir(path: String, planes: Array[Array[Float]]) =
     sibling(path, s".sigs-${geomKey(planes)}")
 
-  /** The cache-sibling name shape: `<index>.sigs-<16 hex chars>`.
-    * Exact-match (not prefix) so a crashed rebuild's leftover
+  /** Exact-match (not prefix), so a crashed rebuild's leftover
     * `.sigs-<key>.rebuild-tmp` never counts as a live cache.
     */
   private val SigCacheName = """\.sigs-[0-9a-f]{16}$""".r
 
-  /** Every `.sigs-`-prefixed sibling directory of the index at
-    * `path` — the shared listing behind [[sigCacheDirs]] (live
-    * caches) and [[sigCacheTmpDirs]] (crashed-rebuild leftovers), so
-    * the normalize-then-list-parent discipline exists once.
-    */
-  private def sigSiblings(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[org.apache.hadoop.fs.Path] = {
-    val normalized = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path).toString)
+  /** Every `.sigs-`-prefixed sibling directory of the index. */
+  private def sigSiblings(fs: FileSystem, path: String): Seq[Path] = {
+    val normalized = new Path(new Path(path).toString)
     val parent = normalized.getParent
     if (parent == null || !fs.exists(parent)) Seq.empty
     else fs.listStatus(parent).toSeq.collect {
@@ -2074,33 +1105,18 @@ object SeenIndex {
     }
   }
 
-  private def sigCacheDirs(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[org.apache.hadoop.fs.Path] =
+  private def sigCacheDirs(fs: FileSystem, path: String): Seq[Path] =
     sigSiblings(fs, path).filter(q => SigCacheName.findFirstIn(q.getName).isDefined)
 
-  private def sigCacheTmpDirs(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[org.apache.hadoop.fs.Path] =
-    sigSiblings(fs, path).filter(_.getName.endsWith(".rebuild-tmp"))
-
-  private val sigCacheSchema = StructType(vecWinEpochSchema.fields ++ Seq(
+  private val sigCacheSchema = StructType(tagged(VecSchema).fields ++ Seq(
     StructField("sig", LongType, nullable = true),
     StructField("rsig", LongType, nullable = true),
     StructField("rsig2", LongType, nullable = true)))
 
-  private def hasParquet(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-
-  /** Fingerprint of the index's current parquet-file set: MD5 over
-    * the sorted (name, length) pairs. One FS listing, no Spark job.
-    * Part-file names carry write UUIDs, so any append, compaction, or
-    * rewrite changes the set — marker equality therefore means "the
-    * cache was synced against EXACTLY this index state", an invariant
-    * row-count parity cannot give (equal counts survive a compaction
-    * that collapses K duplicates followed by K fresh appends).
+  /** MD5 over the sorted (name, length) pairs of the index's parquet
+    * files: one FS listing, no Spark job.
     */
-  private def indexFingerprint(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
+  private def indexFingerprint(fs: FileSystem, p: Path): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     if (fs.exists(p))
       fs.listStatus(p)
@@ -2111,88 +1127,52 @@ object SeenIndex {
     toHex(md.digest())
   }
 
-  /** The `_synced-<fingerprint>` marker inside a cache dir. The
-    * leading underscore keeps it invisible to parquet reads (Spark
-    * skips `_`/`.`-prefixed files). At most one is ever live:
-    * [[writeSyncMarker]] deletes stale markers BEFORE creating the
-    * new one, so a crash between the two leaves none (= rebuild,
-    * safe) rather than two (= ambiguity).
+  /** The `_synced-<fingerprint>` marker inside a cache dir (the leading
+    * underscore hides it from parquet reads). At most one is live:
+    * [[writeSyncMarker]] deletes stale markers BEFORE creating the new
+    * one, so a crash between leaves none (= rebuild, safe).
     */
   private val SyncMarkerPrefix = "_synced-"
 
-  private def readSyncMarker(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): Option[String] =
+  private def readSyncMarker(fs: FileSystem, dir: Path): Option[String] =
     if (!fs.exists(dir)) None
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith(SyncMarkerPrefix)) match {
-        case Array(one) => Some(one.substring(SyncMarkerPrefix.length))
-        case _ => None // zero, or a state no crash point can produce — treat as unsynced
-      }
+    else fs.listStatus(dir).map(_.getPath.getName).filter(_.startsWith(SyncMarkerPrefix)) match {
+      case Array(one) => Some(one.substring(SyncMarkerPrefix.length))
+      case _ => None // zero, or a state no crash point can produce — treat as unsynced
+    }
 
-  private def writeSyncMarker(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path, fp: String): Unit = {
+  private def writeSyncMarker(fs: FileSystem, dir: Path, fp: String): Unit = {
     fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith(SyncMarkerPrefix))
       .foreach(deleteOrThrow(fs, _))
-    fs.create(new org.apache.hadoop.fs.Path(dir, SyncMarkerPrefix + fp), true).close()
+    fs.create(new Path(dir, SyncMarkerPrefix + fp), true).close()
   }
 
-  /** The exact row set the vector appends write (distinct non-null
-    * (id, vec), optional tags) with the three signature columns —
-    * the cache's append unit.
+  /** The row set a vector append writes (distinct non-null (id, vec),
+    * optional tags) with the three signature columns — the cache's
+    * append unit.
     */
   private def sigCacheRows(
-      df: DataFrame, vecCol: String, idCol: String, planes: Array[Array[Float]],
-      epoch: Option[Long], admitted: Option[Long]): DataFrame = {
+      df: DataFrame, e: Embedding, epoch: Option[Long], admitted: Option[Long]): DataFrame = {
     val rows = df
-      .select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<float>").as("vec"))
+      .select(col(e.idCol).cast("long").as("id"), col(e.vecCol).cast("array<float>").as("vec"))
       .filter(col("vec").isNotNull && col("id").isNotNull)
       .distinct()
-      .withColumn("epoch", epoch.map(e => lit(e)).getOrElse(lit(null)).cast("long"))
-      .withColumn("admitted", admitted.map(a => lit(a)).getOrElse(lit(null)).cast("long"))
-    graft.similarity.Similarity.withSignatures(rows, "vec", planes)
+      .withColumn("epoch", epoch.map(lit(_)).getOrElse(lit(null)).cast("long"))
+      .withColumn("admitted", admitted.map(lit(_)).getOrElse(lit(null)).cast("long"))
+    Similarity.withSignatures(rows, "vec", e.planes)
       .select(col("id"), col("vec"), col("epoch"), col("admitted"),
         col("__sig").as("sig"), col("__rsig").as("rsig"), col("__rsig2").as("rsig2"))
   }
 
-  /** Lockstep append: index rows first (the source of truth), then
-    * the matching signature rows, then the sync marker re-stamped to
-    * the index's NEW fingerprint. A crash before the marker write
-    * leaves it naming the pre-append file set, which no longer
-    * matches — the next gate detects the divergence and heals by
-    * rebuild.
-    */
-  private def appendVectorsAndSigs(
-      df: DataFrame, vecCol: String, idCol: String, path: String,
-      planes: Array[Array[Float]], epoch: Option[Long], admitted: Option[Long]): Unit = {
-    (epoch, admitted) match {
-      case (None, _) => appendVectors(df, vecCol, idCol, path)
-      case (Some(e), None) => appendVectorsEpoch(df, vecCol, idCol, path, e)
-      case (Some(e), Some(a)) => appendVectorsEpochAdmitted(df, vecCol, idCol, path, e, a)
-    }
-    val dir = sigsDir(path, planes)
-    sigCacheRows(df, vecCol, idCol, planes, epoch, admitted)
-      .write.mode("append").parquet(dir.toString)
-    val fs = fsFor(df.sparkSession, dir)
-    writeSyncMarker(fs, dir, indexFingerprint(fs, new org.apache.hadoop.fs.Path(path)))
-  }
-
   /** Validate (and if needed rebuild) the signature cache for this
-    * index + geometry. The check is one FS listing compared against
-    * the cache's sync marker — NO Spark job, so a synced gate pays
-    * ~nothing here. (The first design ran two count() jobs per gate;
-    * together with a benchmark twin that compared a released signed
-    * gate against an unsigned gate whose persists stayed warm in the
-    * LRU store, that produced r17's "signed 1.6x slower" artifact —
-    * both halves fixed in r18, see ScaleBench's
-    * embedding_gate_vs_history pair.) A divergent marker rebuilds
-    * the cache wholesale from the index — the cost of one unsigned
-    * gate's signature pass, paid only after a crash, an out-of-band
-    * compaction, or an unsigned append touched the index — and the
-    * rebuild logs its reason (a silent rebuild inside a gate would
-    * read as the gate being slow).
+    * index + geometry: one FS listing compared with the sync marker, NO
+    * Spark job, so a synced gate pays ~nothing here. A divergent marker
+    * rebuilds the cache wholesale from the index — the cost of one
+    * [[Live]] gate's signature pass — and logs why (a silent rebuild
+    * inside a gate would read as the gate being slow).
     */
   def ensureSigCache(spark: SparkSession, path: String, planes: Array[Array[Float]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = fsFor(spark, p)
     requireNotMidCompaction(fs, path)
     val dir = sigsDir(path, planes)
@@ -2205,26 +1185,23 @@ object SeenIndex {
        else "sync marker names a different index file set — an unsigned append, " +
          "an out-of-band compaction, or a torn lockstep append") + ")")
     val tmp = sibling(dir.toString, ".rebuild-tmp")
-    graft.similarity.Similarity.withSignatures(
-      spark.read.schema(vecWinEpochSchema).parquet(path), "vec", planes)
+    Similarity.withSignatures(spark.read.schema(tagged(VecSchema)).parquet(path), "vec", planes)
       .select(col("id"), col("vec"), col("epoch"), col("admitted"),
         col("__sig").as("sig"), col("__rsig").as("rsig"), col("__rsig2").as("rsig2"))
       .write.mode("overwrite").parquet(tmp.toString)
-    // tmp-then-swap: a crash mid-rebuild must not leave a half-built
-    // cache behind a marker that could be mistaken for synced (the
-    // fresh dir has no marker until the line below)
+    // tmp-then-swap: the fresh dir has no marker until the line below,
+    // so a crash mid-rebuild never leaves a half-built cache that reads
+    // as synced
     deleteOrThrow(fs, dir)
     renameOrThrow(fs, tmp, dir)
     writeSyncMarker(fs, dir, fp)
   }
 
-  /** One signature-cache sibling of a vector index, as
-    * [[listSigCaches]] reports it: the 16-hex geometry key from the
-    * directory name, the directory itself, its parquet footprint, and
-    * whether its sync marker names the index's CURRENT fingerprint
-    * (`synced = false` means the next signed gate on this geometry
-    * pays a full rebuild — or the geometry is retired and the cache
-    * is reclaimable via [[dropSigCache]]).
+  /** One signature cache as [[listSigCaches]] reports it: the 16-hex
+    * geometry key, the directory, its parquet footprint, and whether
+    * its marker names the index's CURRENT fingerprint (`synced = false`:
+    * the next gate on this geometry rebuilds it, or the geometry is
+    * retired and the cache reclaimable via [[dropSigCache]]).
     */
   case class SigCacheInfo(
       geometryKey: String,
@@ -2233,12 +1210,11 @@ object SeenIndex {
       dataBytes: Long,
       synced: Boolean)
 
-  /** Every live signature cache of the vector index at `path` — the
-    * maintenance view [[IndexStats.sigCaches]] counts, itemized. Two
-    * FS listings per cache, no Spark job; safe on a missing index.
+  /** Every live signature cache of the vector index at `path`. Two FS
+    * listings per cache, no Spark job; safe on a missing index.
     */
   def listSigCaches(spark: SparkSession, path: String): Seq[SigCacheInfo] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = fsFor(spark, p)
     val fp = indexFingerprint(fs, p)
     sigCacheDirs(fs, path).map { dir =>
@@ -2253,188 +1229,71 @@ object SeenIndex {
     }
   }
 
-  /** Delete ONE geometry's signature cache — the reclaim path for a
-    * retired geometry (a caller that stopped gating at its old
-    * threshold leaves the old planes' cache orphaned forever
-    * otherwise). Also sweeps a crashed rebuild's `.rebuild-tmp`
-    * leftover for the same key. Idempotent; a no-op on an unknown
-    * key. Deleting a LIVE geometry's cache is safe but wasteful (the
-    * next signed gate rebuilds it).
+  /** Delete ONE geometry's signature cache (and a crashed rebuild's
+    * `.rebuild-tmp` for the same key) — the reclaim path for a retired
+    * geometry. Idempotent; deleting a live geometry's cache is safe but
+    * wasteful (the next gate rebuilds it).
     */
   def dropSigCache(spark: SparkSession, path: String, geometryKey: String): Unit = {
     require(geometryKey.matches("[0-9a-f]{16}"),
       s"geometryKey='$geometryKey' is not a 16-hex cache key (see listSigCaches)")
-    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(path))
+    val fs = fsFor(spark, new Path(path))
     val dir = sibling(path, s".sigs-$geometryKey")
     deleteOrThrow(fs, dir)
     deleteOrThrow(fs, sibling(dir.toString, ".rebuild-tmp"))
   }
 
   /** [[dropSigCache]] for EVERY geometry of the index at `path`,
-    * rebuild-tmp leftovers included — the full-reset / orphan-sweep
-    * form. The index itself is untouched.
+    * rebuild-tmp leftovers included. The index itself is untouched.
     */
   def dropSigCaches(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(path))
-    (sigCacheDirs(fs, path) ++ sigCacheTmpDirs(fs, path)).foreach(deleteOrThrow(fs, _))
+    val fs = fsFor(spark, new Path(path))
+    sigSiblings(fs, path)
+      .filter(q => SigCacheName.findFirstIn(q.getName).isDefined || q.getName.endsWith(".rebuild-tmp"))
+      .foreach(deleteOrThrow(fs, _))
   }
 
   /** The cache as a PRESIGNED reference frame for
     * [[graft.similarity.Similarity.dropSeenEmbeddingPresigned]]:
-    * `(idCol, unit vecCol, __sig, __rsig, __rsig2)`, optionally
-    * epoch-excluded (the exactly-once replay view) and
-    * admission-windowed. Degenerate rows (null signatures) drop here
-    * — they never gate.
+    * `(idCol, unit vecCol, __sig, __rsig, __rsig2)` restricted to
+    * `view`. Degenerate rows (null signatures) drop here — they never
+    * gate.
     */
-  private def readSigs(
-      spark: SparkSession, path: String, planes: Array[Array[Float]],
-      vecCol: String, idCol: String,
-      excludeEpoch: Option[Long] = None,
-      minAdmitted: Option[Long] = None): DataFrame = {
-    val dir = sigsDir(path, planes)
-    val fs = fsFor(spark, dir)
-    if (!hasParquet(fs, dir))
+  private def readSigs(spark: SparkSession, path: String, e: Embedding, view: View): DataFrame = {
+    val dir = sigsDir(path, e.planes)
+    if (!hasParquet(fsFor(spark, dir), dir))
       return emptyFrame(spark, StructType(Seq(
-        StructField(idCol, LongType), StructField(vecCol, ArrayType(FloatType, true)),
+        StructField(e.idCol, LongType), StructField(e.vecCol, ArrayType(FloatType, true)),
         StructField("__sig", LongType), StructField("__rsig", LongType),
         StructField("__rsig2", LongType))))
-    val raw = spark.read.schema(sigCacheSchema).parquet(dir.toString)
-    val epochOk = excludeEpoch
-      .map(e => col("epoch").isNull || col("epoch") =!= e).getOrElse(lit(true))
-    val windowOk = minAdmitted
-      .map(m => col("admitted").isNull || col("admitted") >= m).getOrElse(lit(true))
-    val selected = raw.filter(epochOk && windowOk)
+    val selected = view(spark.read.schema(sigCacheSchema).parquet(dir.toString))
       .filter(col("sig").isNotNull)
-      .select(col("id").as(idCol), col("vec").as(vecCol),
+      .select(col("id").as(e.idCol), col("vec").as(e.vecCol),
         col("sig").as("__sig"), col("rsig").as("__rsig"), col("rsig2").as("__rsig2"))
-    // the miner's verify stage needs UNIT vectors; normalize the raw
-    // stored vector with the shared expression (one normalization
-    // from raw — identical floats to the live path)
-    graft.similarity.Similarity.unitized(selected, vecCol)
-      .filter(col(vecCol).isNotNull)
+    // the verify stage needs UNIT vectors: normalize the raw stored
+    // vector with the shared expression (identical floats to Live)
+    Similarity.unitized(selected, e.vecCol).filter(col(e.vecCol).isNotNull)
   }
 
-  /** Signed gate with NO index append — the dry-run / measurement
-    * form. NOT fully read-only: it validates the signature cache
-    * first ([[ensureSigCache]]), which REBUILDS the cache (a parquet
-    * write + swap) when the sync marker is stale and deletes it when
-    * the index is empty — so it needs write access to the cache
-    * sibling and must respect the one-writer rule like any other
-    * signed form. A truly read-only caller (monitoring with read-only
-    * credentials) should check [[listSigCaches]] first and use the
-    * unsigned [[graft.similarity.Similarity.dropSeenEmbedding]] dry
-    * run when the cache is out of sync. The result is lazy; call
-    * `release()` after the terminal action (it drops the miner's
-    * internal persists).
-    */
-  def dropSeenEmbeddingSigned(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      path: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): graft.core.Releasable[DataFrame] = {
-    val spark = batch.sparkSession
-    ensureSigCache(spark, path, planes)
-    val (gated, releaseMiner) = graft.similarity.Similarity.dropSeenEmbeddingPresigned(
-      batch, readSigs(spark, path, planes, vecCol, idCol),
-      vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify)
-    graft.core.Releasable(gated, releaseMiner)
-  }
-
-  /** [[gateAndUpdateEmbedding]] over the SIGNED index: identical
-    * admissions (spec-pinned), but the reference side's signatures
-    * read from the cache instead of being recomputed — the gate's
-    * history-scaling term drops from 190 dim-float dots per index row
-    * to a 24-byte column scan. Honest sizing (BENCH_scale r18,
-    * released-per-call on both sides): at the 64-dim / 64-plane
-    * measured geometry the recompute is comparable to the parquet
-    * scan both forms pay, so the signed gate is at PARITY up to
-    * ~40 k-row indexes and pulls ahead as planes x dim x rows grows
-    * (the 8x-history pair); the win scales with the geometry, the
-    * scan does not. Prefer [[gateAndUpdateEmbeddingAuto]], which
-    * encodes exactly that rule.
-    */
-  def gateAndUpdateEmbeddingSigned(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      path: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): graft.core.Releasable[DataFrame] = {
-    val spark = batch.sparkSession
-    ensureSigCache(spark, path, planes)
-    // bootstrap epoch short-circuit (see gateAndUpdateEmbedding) —
-    // the signed protocol's side artifacts (cache dir + lockstep
-    // signature append) still run unchanged below
-    val kept =
-      if (indexEmpty(spark, path)) batch.localCheckpoint(true)
-      else {
-        val (gated, releaseMiner) = graft.similarity.Similarity.dropSeenEmbeddingPresigned(
-          batch, readSigs(spark, path, planes, vecCol, idCol),
-          vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify)
-        try gated.localCheckpoint(true) finally releaseMiner()
-      }
-    appendVectorsAndSigs(kept, vecCol, idCol, path, planes, None, None)
-    graft.core.Releasable(kept, () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(kept); () })
-  }
-
-  /** [[gateStreamEmbedding]] over the SIGNED index — same
-    * at-least-once ordering, signature cache maintained in lockstep
-    * per micro-batch.
-    */
-  def gateStreamEmbeddingSigned(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        embeddingGateBatch(batch, vecCol, idCol, indexPath, outPath,
-          threshold, planes, bands, probeHamming, broadcastVerify, signed = true)
-      }
-      .start()
-
-  /** Default byte floor below which [[gateAndUpdateEmbeddingAuto]]
-    * stays unsigned: under ~16 MB of index parquet the whole gate is
-    * sub-second either way and the signed path's extra artifacts
-    * (cache dir, marker round-trips, the cache write on every append)
-    * buy nothing worth their operational surface. Above it the signed
-    * path never loses and increasingly wins: validation is one FS
-    * listing (no Spark job), the cache scan costs the index scan plus
-    * 24 B/row, and the saving — 190 dim-float dots per index row —
-    * grows with planes x dim x rows while the scan term does not
+  /** [[Auto]]'s byte floor: under ~16 MB of index parquet the whole
+    * gate is sub-second either way and the cache's artifacts buy
+    * nothing worth their operational surface. Above it the cached path
+    * never loses and increasingly wins: validation is one FS listing,
+    * the cache scan costs the index scan plus 24 B/row, and the saving —
+    * 190 dim-float dots per index row — grows with planes x dim x rows
     * (BENCH_scale's embedding_gate_vs_history pair measures parity at
-    * 64-dim/40 k rows; the 8x-history pair shows the gap opening).
+    * 64-dim / 40 k rows; the 8x-history pair shows the gap opening).
     */
   val AutoSignBytes: Long = 16L << 20
 
-  /** Should a gate on `path` with `planes` take the signed path? Yes
-    * if this geometry's cache already exists (using it is free;
-    * ignoring it would strand it stale), or if the index's parquet
-    * footprint crosses `autoSignBytes` (building the cache costs
-    * roughly the signature pass one unsigned gate pays anyway, plus
-    * one write of the index's footprint — amortized across every
-    * subsequent gate). One or two FS listings, no Spark job.
+  /** Cached if this geometry's cache already exists (using it is free;
+    * ignoring it would strand it stale) or the index's parquet crosses
+    * `floorBytes` (the build costs about one Live signature pass plus
+    * one write, amortized over every later gate).
     */
   private def useSigned(
-      spark: SparkSession, path: String, planes: Array[Array[Float]],
-      autoSignBytes: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+      spark: SparkSession, path: String, planes: Array[Array[Float]], floorBytes: Long): Boolean = {
+    val p = new Path(path)
     val fs = fsFor(spark, p)
     hasParquet(fs, sigsDir(path, planes)) || {
       val bytes =
@@ -2443,236 +1302,7 @@ object SeenIndex {
             .collect { case st if st.isFile && st.getPath.getName.endsWith(".parquet") => st.getLen }
             .sum
         else 0L
-      bytes >= autoSignBytes
+      bytes >= floorBytes
     }
-  }
-
-  /** [[gateAndUpdateEmbedding]] that CHOOSES signed vs unsigned per
-    * call: signed iff this geometry's cache already exists or the
-    * index's parquet footprint crosses `autoSignBytes` (default
-    * [[AutoSignBytes]]) — the first gate past the floor pays one
-    * cache build (≈ the signature pass an unsigned gate runs anyway)
-    * and every later gate skips the full-index 190-dot recompute.
-    * Admissions are identical on both paths (spec-pinned); only the
-    * plan changes. Prefer this over picking a form by hand in any
-    * long-lived ingest loop.
-    */
-  def gateAndUpdateEmbeddingAuto(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      path: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      autoSignBytes: Long = AutoSignBytes): graft.core.Releasable[DataFrame] =
-    if (useSigned(batch.sparkSession, path, planes, autoSignBytes))
-      gateAndUpdateEmbeddingSigned(
-        batch, vecCol, idCol, path, threshold, planes, bands, probeHamming, broadcastVerify)
-    else
-      gateAndUpdateEmbedding(
-        batch, vecCol, idCol, path, threshold, planes, bands, probeHamming, broadcastVerify)
-
-  /** [[gateStreamEmbedding]] with per-micro-batch signed/unsigned
-    * selection ([[gateAndUpdateEmbeddingAuto]]'s policy): the loop
-    * starts unsigned while the index is small and switches to the
-    * signed path — building the cache once — the batch after the
-    * index crosses `autoSignBytes`; from then on the cache is
-    * maintained in lockstep. Same at-least-once ordering as
-    * [[gateStreamEmbedding]].
-    */
-  def gateStreamEmbeddingAuto(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      autoSignBytes: Long = AutoSignBytes): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        embeddingGateBatch(batch, vecCol, idCol, indexPath, outPath,
-          threshold, planes, bands, probeHamming, broadcastVerify,
-          signed = useSigned(batch.sparkSession, indexPath, planes, autoSignBytes))
-      }
-      .start()
-
-  /** [[exactlyOnceEpochEmbedding]] over the SIGNED index. Replay
-    * correctness with the cache: a crash between the index and cache
-    * appends leaves the sync marker naming the pre-append file set
-    * (a fingerprint mismatch), the replay's [[ensureSigCache]]
-    * rebuilds from the index (own-epoch rows INCLUDED, tagged), and
-    * the gate's epoch exclusion then removes them from the replay
-    * view — the same identical-admitted-set argument as the unsigned
-    * protocol.
-    */
-  private[graft] def exactlyOnceEpochEmbeddingSigned(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    ensureSigCache(spark, indexPath, planes)
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      graft.similarity.Similarity.dropSeenEmbeddingPresigned(
-        batch, readSigs(spark, indexPath, planes, vecCol, idCol, excludeEpoch = Some(epoch)),
-        vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify)
-    } { (kept, epoch) =>
-      appendVectorsAndSigs(kept, vecCol, idCol, indexPath, planes, Some(epoch), None)
-    } (identity)
-  }
-
-  /** [[gateStreamEmbeddingExactlyOnce]] over the SIGNED index. */
-  def gateStreamEmbeddingExactlyOnceSigned(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      ledgerKeepLast: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exactlyOnceEpochEmbeddingSigned(
-          batch, vecCol, idCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath,
-          threshold, planes, bands, probeHamming, broadcastVerify)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-
-  /** [[exactlyOnceEpochEmbeddingWindow]] over the SIGNED index — the
-    * full composition: retention window + exactly-once + cached
-    * signatures on one index.
-    */
-  private[graft] def exactlyOnceEpochEmbeddingWindowSigned(
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      key: String,
-      indexPath: String,
-      outPath: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      admittedAt: Long,
-      minAdmitted: Long,
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      crashpoint: String => Unit = _ => ()): Unit = {
-    val spark = batch.sparkSession
-    val (at, minAt) = pinnedWindow(spark, indexPath, key, admittedAt, minAdmitted)
-    ensureSigCache(spark, indexPath, planes)
-    exactlyOnceEpoch(batch, key, indexPath, outPath, crashpoint) { epoch =>
-      graft.similarity.Similarity.dropSeenEmbeddingPresigned(
-        batch,
-        readSigs(spark, indexPath, planes, vecCol, idCol,
-          excludeEpoch = Some(epoch), minAdmitted = Some(minAt)),
-        vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify)
-    } { (kept, epoch) =>
-      appendVectorsAndSigs(kept, vecCol, idCol, indexPath, planes, Some(epoch), Some(at))
-    } (identity)
-  }
-
-  /** [[gateStreamEmbeddingWindowExactlyOnce]] with per-micro-batch
-    * signed/unsigned selection ([[gateAndUpdateEmbeddingAuto]]'s
-    * policy, same [[AutoSignBytes]] floor) — the FULL composition on
-    * autopilot: retention window + exactly-once + cached signatures,
-    * with the loop starting unsigned while the index is small and
-    * switching to the signed path (building the cache once) the
-    * batch after the index crosses `autoSignBytes`. Admissions and
-    * the exactly-once output are identical on both paths and across
-    * the switch (the ledger protocol is path-independent: epoch
-    * allocation, pinned window stamps, and committed markers are
-    * shared; only WHERE the reference signatures come from changes) —
-    * spec-pinned including a mid-stream switch and a crash replay
-    * straddling it.
-    */
-  def gateStreamEmbeddingWindowExactlyOnceAuto(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      windowAge: Long,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      ledgerKeepLast: Int = 0,
-      autoSignBytes: Long = AutoSignBytes,
-      clock: () => Long = () => System.currentTimeMillis()): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(windowAge >= 0, s"windowAge=$windowAge must be >= 0")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val now = clock() // replay-pinned inside the body (pinnedWindow)
-        val key = resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId)
-        if (useSigned(batch.sparkSession, indexPath, planes, autoSignBytes))
-          exactlyOnceEpochEmbeddingWindowSigned(
-            batch, vecCol, idCol, key, indexPath, outPath,
-            threshold, planes, admittedAt = now, minAdmitted = now - windowAge,
-            bands = bands, probeHamming = probeHamming, broadcastVerify = broadcastVerify)
-        else
-          exactlyOnceEpochEmbeddingWindow(
-            batch, vecCol, idCol, key, indexPath, outPath,
-            threshold, planes, admittedAt = now, minAdmitted = now - windowAge,
-            bands = bands, probeHamming = probeHamming, broadcastVerify = broadcastVerify)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
-  }
-
-  /** [[gateStreamEmbeddingWindowExactlyOnce]] over the SIGNED index. */
-  def gateStreamEmbeddingWindowExactlyOnceSigned(
-      stream: DataFrame,
-      vecCol: String,
-      idCol: String,
-      indexPath: String,
-      outPath: String,
-      checkpointDir: String,
-      windowAge: Long,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      ledgerKeepLast: Int = 0,
-      clock: () => Long = () => System.currentTimeMillis()): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(windowAge >= 0, s"windowAge=$windowAge must be >= 0")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val now = clock() // replay-pinned inside the body (pinnedWindow)
-        exactlyOnceEpochEmbeddingWindowSigned(
-          batch, vecCol, idCol, resolveBatchKey(batch.sparkSession, indexPath, checkpointDir, batchId), indexPath, outPath,
-          threshold, planes, admittedAt = now, minAdmitted = now - windowAge,
-          bands = bands, probeHamming = probeHamming, broadcastVerify = broadcastVerify)
-        if (ledgerKeepLast > 0) compactLedger(batch.sparkSession, indexPath, ledgerKeepLast)
-      }
-      .start()
   }
 }

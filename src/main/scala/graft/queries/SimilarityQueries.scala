@@ -576,8 +576,8 @@ object SimilarityQueries {
   }
 
   /** q105: the durable MEDIA ingest lifecycle — q103's two-epoch shape
-    * for perceptual hashes, wiring [[graft.dedup.SeenIndex
-    * .gateAndUpdateHamming]]: epoch 1 decodes and hashes the reference
+    * for perceptual hashes, wiring [[graft.dedup.SeenIndex.gateAndUpdate]]
+    * over the `Hamming` family: epoch 1 decodes and hashes the reference
     * images (doc_id % 3 != 0) map-side and seeds a fresh on-disk
     * signature index with their aHashes, epoch 2 gates the batch
     * (doc_id % 3 == 0) against everything epoch 1 admitted and appends
@@ -596,10 +596,10 @@ object SimilarityQueries {
         graft.multimodal.Multimodal.syntheticImages(part, "doc_id", "text"))
         .toDF().select(col("media_id"), col("ahash"))
     val path = graft.core.TempDirs.create("q105_phash_index_")
-    graft.dedup.SeenIndex.gateAndUpdateHamming(
-      hashes(docs.filter(col("doc_id") % 3 =!= 0)), "ahash", path).release()
-    graft.dedup.SeenIndex.gateAndUpdateHamming(
-      hashes(docs.filter(col("doc_id") % 3 === 0)), "ahash", path)
+    val family = graft.dedup.SeenIndex.Hamming("ahash")
+    graft.dedup.SeenIndex.gateAndUpdate(
+      hashes(docs.filter(col("doc_id") % 3 =!= 0)), family, path).release()
+    graft.dedup.SeenIndex.gateAndUpdate(hashes(docs.filter(col("doc_id") % 3 === 0)), family, path)
       .result // checkpointed: never recomputes, safe to return un-released
       .select("media_id")
       .orderBy("media_id")
@@ -667,21 +667,18 @@ object SimilarityQueries {
     val g = Similarity.lshGeometry(threshold = 0.4, targetRecall = 0.95, numPlanes = 64)
     val planes = Similarity.hyperplanes(dim = 64, numPlanes = 64)
     val path = graft.core.TempDirs.create("q104_vec_index_")
-    graft.dedup.SeenIndex.gateAndUpdateEmbedding(
-      emb.filter(col("vec_id") % 3 =!= 0), "embedding", "vec_id", path,
-      threshold = 0.4, planes = planes, bands = g.bands,
-      probeHamming = g.probeHamming, broadcastVerify = true).release()
-    graft.dedup.SeenIndex.gateAndUpdateEmbedding(
-      emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id", path,
-      threshold = 0.4, planes = planes, bands = g.bands,
-      probeHamming = g.probeHamming, broadcastVerify = true)
+    val family = graft.dedup.SeenIndex.Embedding("embedding", "vec_id",
+      threshold = 0.4, planes = planes, bands = g.bands, probeHamming = g.probeHamming,
+      broadcastVerify = true, signatures = graft.dedup.SeenIndex.Live)
+    graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path).release()
+    graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path)
       .result // checkpointed: never recomputes, safe to return un-released
       .select("vec_id")
       .orderBy("vec_id")
   }
 
   /** q108: q104's durable semantic ingest lifecycle over the SIGNED
-    * vector index ([[graft.dedup.SeenIndex.gateAndUpdateEmbeddingSigned]]
+    * vector index ([[graft.dedup.SeenIndex.Cached]] signatures
     * — reference signatures read from the geometry-keyed cache
     * instead of recomputed per epoch, the gate's history-scaling
     * term). Admissions are IDENTICAL to q104's by construction (the
@@ -695,14 +692,11 @@ object SimilarityQueries {
     val g = Similarity.lshGeometry(threshold = 0.4, targetRecall = 0.95, numPlanes = 64)
     val planes = Similarity.hyperplanes(dim = 64, numPlanes = 64)
     val path = graft.core.TempDirs.create("q108_signed_vec_index_")
-    graft.dedup.SeenIndex.gateAndUpdateEmbeddingSigned(
-      emb.filter(col("vec_id") % 3 =!= 0), "embedding", "vec_id", path,
-      threshold = 0.4, planes = planes, bands = g.bands,
-      probeHamming = g.probeHamming, broadcastVerify = true).release()
-    graft.dedup.SeenIndex.gateAndUpdateEmbeddingSigned(
-      emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id", path,
-      threshold = 0.4, planes = planes, bands = g.bands,
-      probeHamming = g.probeHamming, broadcastVerify = true)
+    val family = graft.dedup.SeenIndex.Embedding("embedding", "vec_id",
+      threshold = 0.4, planes = planes, bands = g.bands, probeHamming = g.probeHamming,
+      broadcastVerify = true, signatures = graft.dedup.SeenIndex.Cached)
+    graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path).release()
+    graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path)
       .result // checkpointed: never recomputes, safe to return un-released
       .select("vec_id")
       .orderBy("vec_id")

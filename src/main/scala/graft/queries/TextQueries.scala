@@ -330,10 +330,9 @@ object TextQueries {
     val path = graft.core.TempDirs.create("q103_seen_index_")
     // epoch 1 seeds the index (the append runs inside the call);
     // its admitted frame is not this query's output
-    graft.dedup.SeenIndex.gateAndUpdateSimhash(
-      docs.filter(col("doc_id") % 3 =!= 0), "text", path).release()
-    graft.dedup.SeenIndex.gateAndUpdateSimhash(
-      docs.filter(col("doc_id") % 3 === 0), "text", path)
+    val family = graft.dedup.SeenIndex.Simhash("text")
+    graft.dedup.SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 =!= 0), family, path).release()
+    graft.dedup.SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 === 0), family, path)
       .result // checkpointed: never recomputes, safe to return un-released
       .select("doc_id")
       .orderBy("doc_id")
@@ -341,7 +340,7 @@ object TextQueries {
 
   /** q106: the RETENTION-WINDOW ingest lifecycle — the re-crawl
     * pipeline shape ("re-admit content not seen in the last N days")
-    * that [[graft.dedup.SeenIndex.gateAndUpdateSimhashWindow]] exists
+    * that [[graft.dedup.SeenIndex.Window]] exists
     * for, run as three epochs of the SAME corpus slice against one
     * windowed index: epoch 1 bootstraps (empty history admits every
     * doc), epoch 10 gates against a window starting at 5 — every
@@ -365,7 +364,8 @@ object TextQueries {
     // (eager localCheckpoint), so the next epoch sees it; results are
     // checkpointed — never recompute — and safe to return un-released
     def epoch(e: Long, minEpoch: Long): DataFrame =
-      graft.dedup.SeenIndex.gateAndUpdateSimhashWindow(docs, "text", path, e, minEpoch)
+      graft.dedup.SeenIndex.gateAndUpdate(docs, graft.dedup.SeenIndex.Simhash("text"), path,
+        Some(graft.dedup.SeenIndex.Window(e, minEpoch)))
         .result
         .select(col("doc_id"), lit(e).as("epoch"))
     val admitted = Seq(epoch(1L, 0L), epoch(10L, 5L), epoch(11L, 6L))
@@ -382,7 +382,7 @@ object TextQueries {
   /** q107: the WINDOWED EXACTLY-ONCE ingest lifecycle — q106's
     * retention semantics COMPOSED with q103's durable-index shape
     * under the exactly-once ledger
-    * ([[graft.dedup.SeenIndex.exactlyOnceEpochSimhashWindow]]): three
+    * ([[graft.dedup.SeenIndex.exactlyOnceEpoch]] with a window): three
     * ledgered batches of the SAME corpus slice with an advancing
     * admission clock. Batch 1 (@t=100) bootstraps; batch 2 (@t=150,
     * window from 70) finds every admission live and gates to ZERO;
@@ -405,8 +405,8 @@ object TextQueries {
     val outp = graft.core.TempDirs.create("q107_weo_out_")
     Seq(("b1", 100L, 0L), ("b2", 150L, 70L), ("b3", 300L, 220L)).foreach {
       case (key, at, min) =>
-        graft.dedup.SeenIndex.exactlyOnceEpochSimhashWindow(
-          docs, "text", key, path, outp, 3, admittedAt = at, minAdmitted = min)
+        graft.dedup.SeenIndex.exactlyOnceEpoch(
+          docs, graft.dedup.SeenIndex.Simhash("text"), key, path, outp, window = Some((at, min)))
     }
     spark.read.parquet(outp)
       .select(col("doc_id"), col("epoch").cast("long").as("epoch"))

@@ -520,8 +520,8 @@ object StreamingOps {
     * signature pass over the whole reference re-runs every trigger, a
     * reference-sized per-batch tax at second-scale triggers. At that
     * regime gate in a `foreachBatch` loop against a persisted
-    * signature table ([[graft.dedup.SeenIndex.gateStreamSimhash]] is
-    * the durable form of exactly that shape). Each arrival pays one
+    * signature table ([[graft.dedup.SeenIndex.gateStream]] is the
+    * durable form of exactly that shape). Each arrival pays one
     * shingle+signature pass, one
     * stream-static LEFT join per banded MinHash key against the
     * reference's banded signatures, one stream-static join pulling

@@ -52,96 +52,92 @@ object SeenIndexLayoutCases {
 
   private def batch(r: graft.core.Releasable[DataFrame]): Unit = { r.result.count(); r.release() }
 
+  import SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Live, Simhash, Window}
+  private def emb(signatures: SeenIndex.Signatures, vecCol: String = "embedding", idCol: String = "vec_id") =
+    Embedding(vecCol, idCol, threshold = 0.9, planes = planes, broadcastVerify = true, signatures = signatures)
+  private val text = Simhash("text")
+  private val ahash = Hamming("ahash")
+
   /** case name -> (spark, root) => run the lifecycle. */
   val cases: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     // ---- direct appends ----
     "append/sig" -> { (s, r) =>
       import s.implicits._
-      SeenIndex.append(Seq(Some(1L), None, Some(1L), Some(2L)).toDF("sig"), "sig", s"$r/idx")
-      SeenIndex.appendEpoch(Seq(2L, 3L).toDF("sig"), "sig", s"$r/idx", 4L)
-      SeenIndex.appendEpochAdmitted(Seq(3L, 5L).toDF("sig"), "sig", s"$r/idx", 6L, 700L)
+      SeenIndex.append(Seq(Some(1L), None, Some(1L), Some(2L)).toDF("sig"), Hamming("sig"), s"$r/idx")
+      SeenIndex.append(Seq(2L, 3L).toDF("sig"), Hamming("sig"), s"$r/idx", Some(4L))
+      SeenIndex.append(Seq(3L, 5L).toDF("sig"), Hamming("sig"), s"$r/idx", Some(6L), Some(700L))
     },
     "append/vec" -> { (s, r) =>
       import s.implicits._
       val v = Seq((1L, unit(0)), (2L, unit(1))).toDF("id", "vec")
-      SeenIndex.appendVectors(v, "vec", "id", s"$r/idx")
-      SeenIndex.appendVectorsEpoch(v, "vec", "id", s"$r/idx", 4L)
-      SeenIndex.appendVectorsEpochAdmitted(v, "vec", "id", s"$r/idx", 6L, 700L)
+      SeenIndex.append(v, emb(Live, "vec", "id"), s"$r/idx")
+      SeenIndex.append(v, emb(Live, "vec", "id"), s"$r/idx", Some(4L))
+      SeenIndex.append(v, emb(Live, "vec", "id"), s"$r/idx", Some(6L), Some(700L))
     },
     // ---- batch gates ----
     "batch/simhash/forever" -> { (s, r) =>
-      batch(SeenIndex.gateAndUpdateSimhash(texts1(s), "text", s"$r/idx"))
-      batch(SeenIndex.gateAndUpdateSimhash(texts2(s), "text", s"$r/idx"))
+      batch(SeenIndex.gateAndUpdate(texts1(s), text, s"$r/idx"))
+      batch(SeenIndex.gateAndUpdate(texts2(s), text, s"$r/idx"))
     },
     "batch/simhash/window" -> { (s, r) =>
-      batch(SeenIndex.gateAndUpdateSimhashWindow(texts1(s), "text", s"$r/idx", 1L, 0L))
-      batch(SeenIndex.gateAndUpdateSimhashWindow(texts2(s), "text", s"$r/idx", 10L, 5L))
+      batch(SeenIndex.gateAndUpdate(texts1(s), text, s"$r/idx", Some(Window(1L, 0L))))
+      batch(SeenIndex.gateAndUpdate(texts2(s), text, s"$r/idx", Some(Window(10L, 5L))))
     },
     "batch/hamming/forever" -> { (s, r) =>
-      batch(SeenIndex.gateAndUpdateHamming(hashes1(s), "ahash", s"$r/idx"))
-      batch(SeenIndex.gateAndUpdateHamming(hashes2(s), "ahash", s"$r/idx"))
+      batch(SeenIndex.gateAndUpdate(hashes1(s), ahash, s"$r/idx"))
+      batch(SeenIndex.gateAndUpdate(hashes2(s), ahash, s"$r/idx"))
     },
     "batch/hamming/window" -> { (s, r) =>
-      batch(SeenIndex.gateAndUpdateHammingWindow(hashes1(s), "ahash", s"$r/idx", 1L, 0L))
-      batch(SeenIndex.gateAndUpdateHammingWindow(hashes2(s), "ahash", s"$r/idx", 2L, 1L))
+      batch(SeenIndex.gateAndUpdate(hashes1(s), ahash, s"$r/idx", Some(Window(1L, 0L))))
+      batch(SeenIndex.gateAndUpdate(hashes2(s), ahash, s"$r/idx", Some(Window(2L, 1L))))
     },
     "batch/embedding/forever/live" -> { (s, r) =>
-      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdateEmbedding(
-        b, "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true)))
+      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdate(b, emb(Live), s"$r/idx")))
     },
     "batch/embedding/window/live" -> { (s, r) =>
       Seq((vecs1(s), 1L, 0L), (vecs2(s), 10L, 5L)).foreach { case (b, e, m) =>
-        batch(SeenIndex.gateAndUpdateEmbeddingWindow(b, "embedding", "vec_id", s"$r/idx",
-          e, m, threshold = 0.9, planes = planes, broadcastVerify = true))
+        batch(SeenIndex.gateAndUpdate(b, emb(Live), s"$r/idx", Some(Window(e, m))))
       }
     },
     "batch/embedding/forever/cached" -> { (s, r) =>
-      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdateEmbeddingSigned(
-        b, "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true)))
+      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdate(b, emb(Cached), s"$r/idx")))
     },
     "batch/embedding/forever/auto-below-floor" -> { (s, r) =>
-      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdateEmbeddingAuto(
-        b, "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true)))
+      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdate(b, emb(Auto), s"$r/idx")))
     },
     "batch/embedding/forever/auto-above-floor" -> { (s, r) =>
-      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdateEmbeddingAuto(
-        b, "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true,
-        autoSignBytes = 1L)))
+      Seq(vecs1(s), vecs2(s)).foreach(b =>
+        batch(SeenIndex.gateAndUpdate(b, emb(AutoAbove(1L)), s"$r/idx")))
     },
     "dry-run/embedding/cached" -> { (s, r) =>
-      batch(SeenIndex.gateAndUpdateEmbedding(
-        vecs1(s), "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true))
-      batch(SeenIndex.dropSeenEmbeddingSigned(
-        vecs2(s), "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true))
+      batch(SeenIndex.gateAndUpdate(vecs1(s), emb(Live), s"$r/idx"))
+      batch(SeenIndex.dropSeen(vecs2(s), emb(Cached), s"$r/idx"))
     },
     // ---- at-least-once streams ----
     "stream/simhash" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, textRows._1, textRows._2, Seq("doc_id", "text"))(
-        SeenIndex.gateStreamSimhash(_, "text", s"$r/idx", s"$r/out", s"$r/ckpt"))
+        SeenIndex.gateStream(_, text, s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "stream/hamming" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, hashRows._1, hashRows._2, Seq("media_id", "ahash"))(
-        SeenIndex.gateStreamHamming(_, "ahash", s"$r/idx", s"$r/out", s"$r/ckpt"))
+        SeenIndex.gateStream(_, ahash, s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "stream/embedding/live" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"))(
-        SeenIndex.gateStreamEmbedding(_, "embedding", "vec_id", s"$r/idx", s"$r/out", s"$r/ckpt",
-          threshold = 0.9, planes = planes, broadcastVerify = true))
+        SeenIndex.gateStream(_, emb(Live), s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "stream/embedding/cached" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"))(
-        SeenIndex.gateStreamEmbeddingSigned(_, "embedding", "vec_id", s"$r/idx", s"$r/out", s"$r/ckpt",
-          threshold = 0.9, planes = planes, broadcastVerify = true))
+        SeenIndex.gateStream(_, emb(Cached), s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "stream/embedding/auto" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"))(
-        SeenIndex.gateStreamEmbeddingAuto(_, "embedding", "vec_id", s"$r/idx", s"$r/out", s"$r/ckpt",
-          threshold = 0.9, planes = planes, broadcastVerify = true, autoSignBytes = 1L))
+        SeenIndex.gateStream(_, emb(AutoAbove(1L)), s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     // ---- exactly-once streams ----
     "exactly-once/simhash/forever" -> { (s, r) =>
@@ -152,92 +148,85 @@ object SeenIndexLayoutCases {
     "exactly-once/hamming/forever" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, hashRows._1, hashRows._2, Seq("media_id", "ahash"))(
-        SeenIndex.gateStreamHammingExactlyOnce(_, "ahash", s"$r/idx", s"$r/out", s"$r/ckpt"))
+        SeenIndex.gateStreamExactlyOnce(_, ahash, s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "exactly-once/embedding/forever/live" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"))(
-        SeenIndex.gateStreamEmbeddingExactlyOnce(_, "embedding", "vec_id", s"$r/idx", s"$r/out",
-          s"$r/ckpt", threshold = 0.9, planes = planes, broadcastVerify = true))
+        SeenIndex.gateStreamExactlyOnce(_, emb(Live), s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "exactly-once/embedding/forever/cached" -> { (s, r) =>
       import s.implicits._
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"))(
-        SeenIndex.gateStreamEmbeddingExactlyOnceSigned(_, "embedding", "vec_id", s"$r/idx", s"$r/out",
-          s"$r/ckpt", threshold = 0.9, planes = planes, broadcastVerify = true))
+        SeenIndex.gateStreamExactlyOnce(_, emb(Cached), s"$r/idx", s"$r/out", s"$r/ckpt"))
     },
     "exactly-once/simhash/window" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, textRows._1, textRows._2, Seq("doc_id", "text"), i => now = 100L + 150L * i)(
-        SeenIndex.gateStreamSimhashWindowExactlyOnce(_, "text", s"$r/idx", s"$r/out", s"$r/ckpt",
-          windowAge = 100L, clock = () => now))
+        SeenIndex.gateStreamExactlyOnce(_, text, s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
     },
     "exactly-once/hamming/window" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, hashRows._1, hashRows._2, Seq("media_id", "ahash"), i => now = 100L + 50L * i)(
-        SeenIndex.gateStreamHammingWindowExactlyOnce(_, "ahash", s"$r/idx", s"$r/out", s"$r/ckpt",
-          windowAge = 100L, clock = () => now))
+        SeenIndex.gateStreamExactlyOnce(_, ahash, s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
     },
     "exactly-once/embedding/window/live" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"), i => now = 100L + 50L * i)(
-        SeenIndex.gateStreamEmbeddingWindowExactlyOnce(_, "embedding", "vec_id", s"$r/idx", s"$r/out",
-          s"$r/ckpt", windowAge = 100L, threshold = 0.9, planes = planes, broadcastVerify = true,
-          clock = () => now))
+        SeenIndex.gateStreamExactlyOnce(_, emb(Live), s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
     },
     "exactly-once/embedding/window/cached" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"), i => now = 100L + 50L * i)(
-        SeenIndex.gateStreamEmbeddingWindowExactlyOnceSigned(_, "embedding", "vec_id", s"$r/idx",
-          s"$r/out", s"$r/ckpt", windowAge = 100L, threshold = 0.9, planes = planes,
-          broadcastVerify = true, clock = () => now))
+        SeenIndex.gateStreamExactlyOnce(_, emb(Cached), s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
     },
     "exactly-once/embedding/window/auto" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"), i => now = 100L + 50L * i)(
-        SeenIndex.gateStreamEmbeddingWindowExactlyOnceAuto(_, "embedding", "vec_id", s"$r/idx",
-          s"$r/out", s"$r/ckpt", windowAge = 100L, threshold = 0.9, planes = planes,
-          broadcastVerify = true, autoSignBytes = 1L, clock = () => now))
+        SeenIndex.gateStreamExactlyOnce(_, emb(AutoAbove(1L)), s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
     },
     // ---- compaction forms ----
     "compact/sig" -> { (s, r) =>
-      batch(SeenIndex.gateAndUpdateSimhashWindow(texts1(s), "text", s"$r/idx", 1L, 0L))
-      batch(SeenIndex.gateAndUpdateSimhashWindow(texts1(s), "text", s"$r/idx", 10L, 5L))
-      batch(SeenIndex.gateAndUpdateSimhash(texts2(s), "text", s"$r/idx"))
-      SeenIndex.compact(s, s"$r/idx")
+      batch(SeenIndex.gateAndUpdate(texts1(s), text, s"$r/idx", Some(Window(1L, 0L))))
+      batch(SeenIndex.gateAndUpdate(texts1(s), text, s"$r/idx", Some(Window(10L, 5L))))
+      batch(SeenIndex.gateAndUpdate(texts2(s), text, s"$r/idx"))
+      SeenIndex.compact(s, text, s"$r/idx")
     },
     "compact/vec" -> { (s, r) =>
       import s.implicits._
-      SeenIndex.appendVectorsEpoch(Seq((9L, unit(6))).toDF("id", "vec"), "vec", "id", s"$r/idx", 2L)
-      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdateEmbeddingSigned(
-        b, "embedding", "vec_id", s"$r/idx", threshold = 0.9, planes = planes, broadcastVerify = true)))
-      SeenIndex.appendVectorsEpoch(Seq((9L, unit(6))).toDF("id", "vec"), "vec", "id", s"$r/idx", 3L)
+      SeenIndex.append(Seq((9L, unit(6))).toDF("id", "vec"), emb(Live, "vec", "id"), s"$r/idx", Some(2L))
+      Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdate(b, emb(Cached), s"$r/idx")))
+      SeenIndex.append(Seq((9L, unit(6))).toDF("id", "vec"), emb(Live, "vec", "id"), s"$r/idx", Some(3L))
       SeenIndex.ensureSigCache(s, s"$r/idx", planes)
-      SeenIndex.compactVectors(s, s"$r/idx")
+      SeenIndex.compact(s, emb(Cached), s"$r/idx")
     },
     "compact/sig-windowed" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, textRows._1, textRows._2, Seq("doc_id", "text"), i => now = 100L + 150L * i)(
-        SeenIndex.gateStreamSimhashWindowExactlyOnce(_, "text", s"$r/idx", s"$r/out", s"$r/ckpt",
-          windowAge = 100L, clock = () => now))
-      SeenIndex.appendEpochAdmitted(Seq(7L, 7L).toDF("sig"), "sig", s"$r/idx", 9L, 120L)
-      SeenIndex.compactWindowed(s, s"$r/idx")
-      SeenIndex.compactWindowed(s, s"$r/idx", dropAdmittedBefore = Some(150L))
+        SeenIndex.gateStreamExactlyOnce(_, text, s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
+      SeenIndex.append(Seq(7L, 7L).toDF("sig"), Hamming("sig"), s"$r/idx", Some(9L), Some(120L))
+      SeenIndex.compact(s, text, s"$r/idx", windowed = true)
+      SeenIndex.compact(s, text, s"$r/idx", windowed = true, dropAdmittedBefore = Some(150L))
     },
     "compact/vec-windowed" -> { (s, r) =>
       import s.implicits._
       var now = 100L
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"), i => now = 100L + 150L * i)(
-        SeenIndex.gateStreamEmbeddingWindowExactlyOnceSigned(_, "embedding", "vec_id", s"$r/idx",
-          s"$r/out", s"$r/ckpt", windowAge = 100L, threshold = 0.9, planes = planes,
-          broadcastVerify = true, clock = () => now))
-      SeenIndex.compactVectorsWindowed(s, s"$r/idx", dropAdmittedBefore = Some(150L))
+        SeenIndex.gateStreamExactlyOnce(_, emb(Cached), s"$r/idx", s"$r/out", s"$r/ckpt",
+          windowAge = Some(100L), clock = () => now))
+      SeenIndex.compact(s, emb(Cached), s"$r/idx", windowed = true, dropAdmittedBefore = Some(150L))
     },
     "compact/ledger" -> { (s, r) =>
       import s.implicits._

@@ -1,9 +1,14 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.dedup.SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Simhash, Window}
 import org.apache.spark.sql.functions._
 
 class SeenIndexSpec extends SparkSpec {
+
+  // the two index layouts, for reads, appends and compactions
+  private val sigIndex = Hamming("sig")
+  private val vecIndex = Embedding("vec", "id", threshold = 0.9, planes = Array.empty[Array[Float]])
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("seen_index_").toString
@@ -15,15 +20,15 @@ class SeenIndexSpec extends SparkSpec {
     val other = (100 to 160).map(i => s"v$i").mkString(" ")
     val novel = (500 to 560).map(i => s"z$i").mkString(" ")
     // bootstrap: a missing index reads empty, so epoch 1 keeps all
-    assert(SeenIndex.read(spark, path).count() == 0)
-    val e1 = SeenIndex.gateAndUpdateSimhash(
-      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), "text", path)
+    assert(SeenIndex.read(spark, sigIndex, path).count() == 0)
+    val e1 = SeenIndex.gateAndUpdate(
+      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), Simhash("text"), path)
     assert(e1.result.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     e1.release()
     // epoch 2: an exact re-ingest of epoch-1 content is gated, the
     // novel doc passes and is remembered in turn
     val batch2 = Seq((10L, base), (11L, novel)).toDF("doc_id", "text")
-    val e2 = SeenIndex.gateAndUpdateSimhash(batch2, "text", path)
+    val e2 = SeenIndex.gateAndUpdate(batch2, Simhash("text"), path)
     val kept2 = e2.result.collect().map(_.getLong(0)).toSet
     e2.release()
     assert(kept2 == Set(11L), s"kept2=$kept2")
@@ -35,35 +40,35 @@ class SeenIndexSpec extends SparkSpec {
     assert(kept2 == statelessKept)
     // epoch 3: re-ingesting epoch 2's survivor gates to ZERO — the
     // append in epoch 2 is what makes the index remember it
-    val e3 = SeenIndex.gateAndUpdateSimhash(
-      Seq((20L, novel)).toDF("doc_id", "text"), "text", path)
+    val e3 = SeenIndex.gateAndUpdate(
+      Seq((20L, novel)).toDF("doc_id", "text"), Simhash("text"), path)
     assert(e3.result.isEmpty)
     e3.release()
     // the index holds exactly the admitted signatures (3 distinct)
-    assert(SeenIndex.read(spark, path).distinct().count() == 3)
+    assert(SeenIndex.read(spark, sigIndex, path).distinct().count() == 3)
   }
 
   test("generic Hamming epochs: near signatures gate, the admitted frame keeps its columns") {
     import sqlImplicits._
     val path = tmpDir()
     val s0 = 0x0123456789abcdefL
-    val e1 = SeenIndex.gateAndUpdateHamming(
-      Seq((1L, s0, "a")).toDF("media_id", "ahash", "tag"), "ahash", path)
+    val e1 = SeenIndex.gateAndUpdate(
+      Seq((1L, s0, "a")).toDF("media_id", "ahash", "tag"), Hamming("ahash"), path)
     assert(e1.result.columns.toSeq == Seq("media_id", "ahash", "tag"))
     assert(e1.result.count() == 1)
     e1.release()
     // near (hamming 2) and far arrivals: only the far one is admitted
-    val e2 = SeenIndex.gateAndUpdateHamming(
-      Seq((2L, s0 ^ 3L, "b"), (3L, ~s0, "c")).toDF("media_id", "ahash", "tag"), "ahash", path)
+    val e2 = SeenIndex.gateAndUpdate(
+      Seq((2L, s0 ^ 3L, "b"), (3L, ~s0, "c")).toDF("media_id", "ahash", "tag"), Hamming("ahash"), path)
     val kept = e2.result.collect().map(r => (r.getLong(0), r.getString(2))).toSet
     e2.release()
     assert(kept == Set((3L, "c")), s"kept=$kept")
     // within-batch duplicates both pass (history-only contract), one sig lands
-    val e3 = SeenIndex.gateAndUpdateHamming(
-      Seq((4L, 0x7777L, "d"), (5L, 0x7777L, "e")).toDF("media_id", "ahash", "tag"), "ahash", path)
+    val e3 = SeenIndex.gateAndUpdate(
+      Seq((4L, 0x7777L, "d"), (5L, 0x7777L, "e")).toDF("media_id", "ahash", "tag"), Hamming("ahash"), path)
     assert(e3.result.count() == 2)
     e3.release()
-    assert(SeenIndex.read(spark, path).filter(col("sig") === 0x7777L).count() == 1)
+    assert(SeenIndex.read(spark, sigIndex, path).filter(col("sig") === 0x7777L).count() == 1)
   }
 
   test("embedding epochs: near vectors gate, novel and degenerate vectors pass, re-ingest gates to zero") {
@@ -72,9 +77,11 @@ class SeenIndexSpec extends SparkSpec {
     val dim = 8
     val planes = graft.similarity.Similarity.hyperplanes(dim, numPlanes = 64)
     def gate(rows: Seq[(Long, Seq[Float])]) =
-      SeenIndex.gateAndUpdateEmbedding(
-        rows.toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-        threshold = 0.9, planes = planes, bands = 8, broadcastVerify = true)
+      SeenIndex.gateAndUpdate(
+        rows.toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          bands = 8, broadcastVerify = true),
+        path)
     val e1 = Seq(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)
     val e2 = Seq(0f, 1f, 0f, 0f, 0f, 0f, 0f, 0f)
     val novel = Seq(0f, 0f, 0f, 1f, 0f, 0f, 0f, 0f)
@@ -97,7 +104,7 @@ class SeenIndexSpec extends SparkSpec {
     assert(r3.result.collect().map(_.getLong(0)).toSet == Set(21L))
     r3.release()
     // the index holds every admitted non-null vector row
-    assert(SeenIndex.readVectors(spark, path).count() == 5)
+    assert(SeenIndex.read(spark, vecIndex, path).count() == 5)
   }
 
   test("streaming ingest loop: each micro-batch gates against the GROWING index; a restarted query resumes from it") {
@@ -112,8 +119,8 @@ class SeenIndexSpec extends SparkSpec {
       spark.read.schema("doc_id LONG, text STRING").parquet(out)
         .collect().map(_.getLong(0)).toSet
     val input = MemoryStream[(Long, String)]
-    val q = SeenIndex.gateStreamSimhash(
-      input.toDF().toDF("doc_id", "text"), "text", idx, out, tmpDir())
+    val q = SeenIndex.gateStream(
+      input.toDF().toDF("doc_id", "text"), Simhash("text"), idx, out, tmpDir())
     // batch 1 bootstraps: both docs admitted and remembered
     input.addData((1L, base), (2L, novel)); q.processAllAvailable()
     assert(admitted() == Set(1L, 2L))
@@ -125,20 +132,20 @@ class SeenIndexSpec extends SparkSpec {
     // a brand-new query (fresh checkpoint, fresh stream) resumes from
     // the index directory: re-ingesting history gates to zero
     val input2 = MemoryStream[(Long, String)]
-    val q2 = SeenIndex.gateStreamSimhash(
-      input2.toDF().toDF("doc_id", "text"), "text", idx, out, tmpDir())
+    val q2 = SeenIndex.gateStream(
+      input2.toDF().toDF("doc_id", "text"), Simhash("text"), idx, out, tmpDir())
     input2.addData((20L, novel), (21L, later)); q2.processAllAvailable()
     q2.stop()
     assert(admitted() == Set(1L, 2L, 11L))
     // and the streamed lifecycle left the same index a batch epoch would
-    assert(SeenIndex.read(spark, idx).distinct().count() == 3)
+    assert(SeenIndex.read(spark, sigIndex, idx).distinct().count() == 3)
   }
 
   test("append drops null signatures; empty-dir bootstrap reads as empty") {
     import sqlImplicits._
     val path = tmpDir()
-    SeenIndex.append(Seq(Some(1L), None, Some(1L)).toDF("sig"), "sig", path)
-    assert(SeenIndex.read(spark, path).collect().map(_.getLong(0)).toSeq == Seq(1L))
+    SeenIndex.append(Seq(Some(1L), None, Some(1L)).toDF("sig"), sigIndex, path)
+    assert(SeenIndex.read(spark, sigIndex, path).collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("retention window: history expires, re-admission resets the clock, untagged rows never expire, compact preserves it all") {
@@ -147,8 +154,8 @@ class SeenIndexSpec extends SparkSpec {
     val docA = (1 to 50).map(i => s"w$i").mkString(" ")
     val docB = (100 to 160).map(i => s"v$i").mkString(" ")
     def gate(id: Long, text: String, epoch: Long, minEpoch: Long): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateSimhashWindow(
-        Seq((id, text)).toDF("doc_id", "text"), "text", path, epoch, minEpoch)
+      val r = SeenIndex.gateAndUpdate(
+        Seq((id, text)).toDF("doc_id", "text"), Simhash("text"), path, Some(Window(epoch, minEpoch)))
       val kept = r.result.collect().map(_.getLong(0)).toSet
       r.release(); kept
     }
@@ -161,17 +168,17 @@ class SeenIndexSpec extends SparkSpec {
     // epoch 11, window from 6: the epoch-10 re-admission is live again
     assert(gate(4L, docA, epoch = 11, minEpoch = 6).isEmpty)
     // an UNTAGGED admission (the pre-retention API) never expires
-    SeenIndex.gateAndUpdateSimhash(
-      Seq((20L, docB)).toDF("doc_id", "text"), "text", path).release()
+    SeenIndex.gateAndUpdate(
+      Seq((20L, docB)).toDF("doc_id", "text"), Simhash("text"), path).release()
     assert(gate(21L, docB, epoch = 1000, minEpoch = 999).isEmpty)
     // compact: one row per sig, docA's sig keeps its LATEST epoch (10)
     // and docB's stays untagged — the SAME decisions replay after
-    SeenIndex.compact(spark, path)
+    SeenIndex.compact(spark, sigIndex, path)
     assert(gate(5L, docA, epoch = 12, minEpoch = 6).isEmpty)  // epoch-10 tag survived
     assert(gate(6L, docA, epoch = 20, minEpoch = 11) == Set(6L)) // and still expires
     assert(gate(22L, docB, epoch = 2000, minEpoch = 1999).isEmpty) // untagged survived
     // plain read() sees every signature regardless of tags
-    assert(SeenIndex.read(spark, path).distinct().count() == 2)
+    assert(SeenIndex.read(spark, sigIndex, path).distinct().count() == 2)
   }
 
   test("retention window for precomputed hashes: the media form expires and resets like the text form") {
@@ -179,8 +186,8 @@ class SeenIndexSpec extends SparkSpec {
     val path = tmpDir()
     val s0 = 0x0f0f0f0f0f0f0f0fL
     def gate(id: Long, sig: Long, epoch: Long, minEpoch: Long): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateHammingWindow(
-        Seq((id, sig)).toDF("media_id", "ahash"), "ahash", path, epoch, minEpoch)
+      val r = SeenIndex.gateAndUpdate(
+        Seq((id, sig)).toDF("media_id", "ahash"), Hamming("ahash"), path, Some(Window(epoch, minEpoch)))
       val kept = r.result.collect().map(_.getLong(0)).toSet
       r.release(); kept
     }
@@ -200,9 +207,10 @@ class SeenIndexSpec extends SparkSpec {
     val e1 = Seq(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)
     val e2 = Seq(0f, 0f, 1f, 0f, 0f, 0f, 0f, 0f)
     def gate(id: Long, v: Seq[Float], epoch: Long, minEpoch: Long): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateEmbeddingWindow(
-        Seq((id, v)).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-        epoch, minEpoch, threshold = 0.9, planes = planes, broadcastVerify = true)
+      val r = SeenIndex.gateAndUpdate(
+        Seq((id, v)).toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        path, Some(Window(epoch, minEpoch)))
       val kept = r.result.collect().map(_.getLong(0)).toSet
       r.release(); kept
     }
@@ -211,37 +219,38 @@ class SeenIndexSpec extends SparkSpec {
     assert(gate(3L, e1, epoch = 10, minEpoch = 5) == Set(3L)) // expired -> re-admitted
     assert(gate(4L, e1, epoch = 11, minEpoch = 6).isEmpty)  // clock reset at 10
     // an UNTAGGED vector (pre-retention API) never expires
-    SeenIndex.gateAndUpdateEmbedding(
-      Seq((20L, e2)).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-      threshold = 0.9, planes = planes, broadcastVerify = true).release()
+    SeenIndex.gateAndUpdate(
+      Seq((20L, e2)).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+      path).release()
     assert(gate(21L, e2, epoch = 1000, minEpoch = 999).isEmpty)
     // the un-windowed read sees every ADMITTED vector regardless of
     // tags: ids 1 and 3 (tagged epochs 1 and 10) plus 20 (untagged);
     // gated arrivals (2, 4, 21) never reached the index
-    assert(SeenIndex.readVectors(spark, path).select("id").distinct().count() == 3)
+    assert(SeenIndex.read(spark, vecIndex, path).select("id").distinct().count() == 3)
   }
 
   test("compact collapses cross-epoch duplicate rows without changing any gate decision") {
     import sqlImplicits._
     val path = tmpDir()
     // three epochs appending overlapping signature sets
-    SeenIndex.append(Seq(1L, 2L, 3L).toDF("sig"), "sig", path)
-    SeenIndex.append(Seq(2L, 3L, 4L).toDF("sig"), "sig", path)
-    SeenIndex.append(Seq(3L, 4L, 5L).toDF("sig"), "sig", path)
-    assert(SeenIndex.read(spark, path).count() == 9)
+    SeenIndex.append(Seq(1L, 2L, 3L).toDF("sig"), sigIndex, path)
+    SeenIndex.append(Seq(2L, 3L, 4L).toDF("sig"), sigIndex, path)
+    SeenIndex.append(Seq(3L, 4L, 5L).toDF("sig"), sigIndex, path)
+    assert(SeenIndex.read(spark, sigIndex, path).count() == 9)
     val gateBefore = Dedup.dropSeenHamming(
-      Seq((1L, 5L), (2L, 1024L)).toDF("id", "sig"), SeenIndex.read(spark, path), "sig",
+      Seq((1L, 5L), (2L, 1024L)).toDF("id", "sig"), SeenIndex.read(spark, sigIndex, path), "sig",
       maxHamming = 0).collect().map(_.getLong(0)).toSet
-    SeenIndex.compact(spark, path)
+    SeenIndex.compact(spark, sigIndex, path)
     // physically one row per distinct signature now
-    assert(SeenIndex.read(spark, path).count() == 5)
-    assert(SeenIndex.read(spark, path).collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
+    assert(SeenIndex.read(spark, sigIndex, path).count() == 5)
+    assert(SeenIndex.read(spark, sigIndex, path).collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
     val gateAfter = Dedup.dropSeenHamming(
-      Seq((1L, 5L), (2L, 1024L)).toDF("id", "sig"), SeenIndex.read(spark, path), "sig",
+      Seq((1L, 5L), (2L, 1024L)).toDF("id", "sig"), SeenIndex.read(spark, sigIndex, path), "sig",
       maxHamming = 0).collect().map(_.getLong(0)).toSet
     assert(gateBefore == gateAfter && gateAfter == Set(2L))
     // compacting a missing index is a no-op, not an error
-    SeenIndex.compact(spark, tmpDir() + "/never-written")
+    SeenIndex.compact(spark, sigIndex, tmpDir() + "/never-written")
   }
 
   test("compactVectors collapses duplicate (id, vec) rows, keeps the latest epoch, untagged dominates, decisions unchanged") {
@@ -253,28 +262,29 @@ class SeenIndexSpec extends SparkSpec {
     val e2 = Seq(0f, 0f, 1f, 0f, 0f, 0f, 0f, 0f)
     // the same (id, vec) lands at epochs 3 and 7, plus an untagged copy
     // of a second vector and a tagged duplicate of it
-    SeenIndex.appendVectorsEpoch(Seq((1L, e1)).toDF("id", "vec"), "vec", "id", path, 3L)
-    SeenIndex.appendVectorsEpoch(Seq((1L, e1)).toDF("id", "vec"), "vec", "id", path, 7L)
-    SeenIndex.appendVectors(Seq((2L, e2)).toDF("id", "vec"), "vec", "id", path)
-    SeenIndex.appendVectorsEpoch(Seq((2L, e2)).toDF("id", "vec"), "vec", "id", path, 5L)
-    assert(SeenIndex.readVectors(spark, path).count() == 4)
+    SeenIndex.append(Seq((1L, e1)).toDF("id", "vec"), vecIndex, path, Some(3L))
+    SeenIndex.append(Seq((1L, e1)).toDF("id", "vec"), vecIndex, path, Some(7L))
+    SeenIndex.append(Seq((2L, e2)).toDF("id", "vec"), vecIndex, path)
+    SeenIndex.append(Seq((2L, e2)).toDF("id", "vec"), vecIndex, path, Some(5L))
+    assert(SeenIndex.read(spark, vecIndex, path).count() == 4)
     def gate(id: Long, v: Seq[Float], epoch: Long, minEpoch: Long): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateEmbeddingWindow(
-        Seq((id, v)).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-        epoch, minEpoch, threshold = 0.9, planes = planes, broadcastVerify = true)
+      val r = SeenIndex.gateAndUpdate(
+        Seq((id, v)).toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        path, Some(Window(epoch, minEpoch)))
       val kept = r.result.collect().map(_.getLong(0)).toSet
       r.release(); kept
     }
-    SeenIndex.compactVectors(spark, path)
+    SeenIndex.compact(spark, vecIndex, path)
     // physically one row per distinct (id, vec) now
-    assert(SeenIndex.readVectors(spark, path).count() == 2)
+    assert(SeenIndex.read(spark, vecIndex, path).count() == 2)
     // e1 kept its LATEST epoch (7): live in a window from 6, expired from 8
     assert(gate(10L, e1, epoch = 9, minEpoch = 6).isEmpty)
     assert(gate(11L, e1, epoch = 20, minEpoch = 15) == Set(11L))
     // e2's untagged sighting dominates its epoch-5 tag: never expires
     assert(gate(12L, e2, epoch = 1000, minEpoch = 999).isEmpty)
     // compacting a missing vector index is a no-op, not an error
-    SeenIndex.compactVectors(spark, tmpDir() + "/never-written")
+    SeenIndex.compact(spark, vecIndex, tmpDir() + "/never-written")
   }
 
   test("mid-compaction crash states: reads fail loud with a recovery hint, recover() restores, true bootstrap still reads empty") {
@@ -282,40 +292,40 @@ class SeenIndexSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     val path = tmpDir() + "/idx"
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SeenIndex.append(Seq(1L, 2L, 3L).toDF("sig"), "sig", path)
+    SeenIndex.append(Seq(1L, 2L, 3L).toDF("sig"), sigIndex, path)
     // crash state A: after rename(p, bak), before rename(tmp, p) —
     // the main dir is missing, the backup holds the full copy
     assert(fs.rename(new Path(path), new Path(path + ".compact-old")))
-    val exA = intercept[IllegalStateException] { SeenIndex.read(spark, path) }
+    val exA = intercept[IllegalStateException] { SeenIndex.read(spark, sigIndex, path) }
     assert(exA.getMessage.contains("recover"), exA.getMessage)
-    intercept[IllegalStateException] { SeenIndex.readWindow(spark, path, 0L) }
-    intercept[IllegalStateException] { SeenIndex.compact(spark, path) }
+    intercept[IllegalStateException] { SeenIndex.read(spark, sigIndex, path, minEpoch = Some(0L)) }
+    intercept[IllegalStateException] { SeenIndex.compact(spark, sigIndex, path) }
     SeenIndex.recover(spark, path)
-    assert(SeenIndex.read(spark, path).collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    assert(SeenIndex.read(spark, sigIndex, path).collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
     assert(!fs.exists(new Path(path + ".compact-old")))
     // crash state B: backup already consumed, only the (complete)
     // compacted temp remains — recover() installs it
     assert(fs.rename(new Path(path), new Path(path + ".compact-tmp")))
-    intercept[IllegalStateException] { SeenIndex.read(spark, path) }
+    intercept[IllegalStateException] { SeenIndex.read(spark, sigIndex, path) }
     SeenIndex.recover(spark, path)
-    assert(SeenIndex.read(spark, path).count() == 3)
+    assert(SeenIndex.read(spark, sigIndex, path).count() == 3)
     // crash state C: swap finished, stale backup remains — reads are
     // fine (main exists) and recover() just sweeps the leftovers
     fs.mkdirs(new Path(path + ".compact-old"))
-    assert(SeenIndex.read(spark, path).count() == 3)
+    assert(SeenIndex.read(spark, sigIndex, path).count() == 3)
     SeenIndex.recover(spark, path)
     assert(!fs.exists(new Path(path + ".compact-old")))
     // vector index: same detection
     val vpath = tmpDir() + "/vidx"
-    SeenIndex.appendVectors(Seq((1L, Seq(1f, 0f))).toDF("id", "vec"), "vec", "id", vpath)
+    SeenIndex.append(Seq((1L, Seq(1f, 0f))).toDF("id", "vec"), vecIndex, vpath)
     val vfs = new Path(vpath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(vfs.rename(new Path(vpath), new Path(vpath + ".compact-old")))
-    intercept[IllegalStateException] { SeenIndex.readVectors(spark, vpath) }
-    intercept[IllegalStateException] { SeenIndex.readVectorsWindow(spark, vpath, 0L) }
+    intercept[IllegalStateException] { SeenIndex.read(spark, vecIndex, vpath) }
+    intercept[IllegalStateException] { SeenIndex.read(spark, vecIndex, vpath, minEpoch = Some(0L)) }
     SeenIndex.recover(spark, vpath)
-    assert(SeenIndex.readVectors(spark, vpath).count() == 1)
+    assert(SeenIndex.read(spark, vecIndex, vpath).count() == 1)
     // a never-written path with no leftovers is still a clean bootstrap
-    assert(SeenIndex.read(spark, tmpDir() + "/never").count() == 0)
+    assert(SeenIndex.read(spark, sigIndex, tmpDir() + "/never").count() == 0)
     // recover on a healthy or missing index is a no-op
     SeenIndex.recover(spark, tmpDir() + "/never")
   }
@@ -325,19 +335,19 @@ class SeenIndexSpec extends SparkSpec {
     val df = Seq((1L, "a b c")).toDF("doc_id", "text")
     val sigs = Seq((1L, 7L)).toDF("media_id", "ahash")
     intercept[IllegalArgumentException] {
-      SeenIndex.gateAndUpdateSimhash(df, "text", tmpDir(), maxHamming = 4)
+      SeenIndex.gateAndUpdate(df, Simhash("text", maxHamming = 4), tmpDir())
     }
     intercept[IllegalArgumentException] {
-      SeenIndex.gateAndUpdateSimhashWindow(df, "text", tmpDir(), 1L, 0L, maxHamming = 5)
+      SeenIndex.gateAndUpdate(df, Simhash("text", maxHamming = 5), tmpDir(), Some(Window(1L, 0L)))
     }
     intercept[IllegalArgumentException] {
-      SeenIndex.gateAndUpdateHamming(sigs, "ahash", tmpDir(), maxHamming = 4)
+      SeenIndex.gateAndUpdate(sigs, Hamming("ahash", maxHamming = 4), tmpDir())
     }
     intercept[IllegalArgumentException] {
-      SeenIndex.gateAndUpdateHammingWindow(sigs, "ahash", tmpDir(), 1L, 0L, maxHamming = 4)
+      SeenIndex.gateAndUpdate(sigs, Hamming("ahash", maxHamming = 4), tmpDir(), Some(Window(1L, 0L)))
     }
     intercept[IllegalArgumentException] {
-      SeenIndex.gateAndUpdateSimhash(df, "text", tmpDir(), maxHamming = -1)
+      SeenIndex.gateAndUpdate(df, Simhash("text", maxHamming = -1), tmpDir())
     }
   }
 
@@ -354,7 +364,7 @@ class SeenIndexSpec extends SparkSpec {
             killAt: String = ""): Unit = {
       val cp: String => Unit =
         s => if (s == killAt) throw new RuntimeException(s"killed at $s")
-      SeenIndex.exactlyOnceEpochSimhash(batch, "text", key, idx, out, 3, cp)
+      SeenIndex.exactlyOnceEpoch(batch, Simhash("text", 3), key, idx, out, crashpoint = cp)
     }
     val b0 = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
     // batch k0 (allocated epoch 1): kill after the epoch allocation, replay
@@ -396,8 +406,8 @@ class SeenIndexSpec extends SparkSpec {
       spark.read.parquet(out).select("media_id", "epoch")
         .collect().map(r => (r.getLong(0), r.getAs[Number]("epoch").longValue)).toSeq
     def run(batch: org.apache.spark.sql.DataFrame, key: String, killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochHamming(batch, "ahash", key, idx, out, 3,
-        s => if (s == killAt) throw new RuntimeException(s"killed at $s"))
+      SeenIndex.exactlyOnceEpoch(batch, Hamming("ahash", 3), key, idx, out,
+        crashpoint = s => if (s == killAt) throw new RuntimeException(s"killed at $s"))
     val b0 = Seq((1L, s0), (2L, ~s0)).toDF("media_id", "ahash")
     intercept[RuntimeException] { run(b0, "k0", killAt = "output") }
     run(b0, "k0")
@@ -423,8 +433,9 @@ class SeenIndexSpec extends SparkSpec {
       spark.read.parquet(out).select("vec_id", "epoch")
         .collect().map(r => (r.getLong(0), r.getAs[Number]("epoch").longValue)).toSeq
     def run(batch: org.apache.spark.sql.DataFrame, key: String, killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochEmbedding(batch, "embedding", "vec_id", key, idx, out,
-        threshold = 0.9, planes = planes, broadcastVerify = true,
+      SeenIndex.exactlyOnceEpoch(batch,
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        key, idx, out,
         crashpoint = s => if (s == killAt) throw new RuntimeException(s"killed at $s"))
     val b0 = Seq((1L, e1)).toDF("vec_id", "embedding")
     intercept[RuntimeException] { run(b0, "k0", killAt = "output") }
@@ -444,9 +455,9 @@ class SeenIndexSpec extends SparkSpec {
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def doc(i: Int) = (i.toLong, (i * 100 to i * 100 + 60).map(j => s"t$j").mkString(" "))
     def run(i: Int, killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochSimhash(
-        Seq(doc(i)).toDF("doc_id", "text"), "text", s"k$i", idx, out, 3,
-        s => if (s == killAt) throw new RuntimeException("kill"))
+      SeenIndex.exactlyOnceEpoch(
+        Seq(doc(i)).toDF("doc_id", "text"), Simhash("text", 3), s"k$i", idx, out,
+        crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
     (0 to 4).foreach(i => run(i)) // epochs 1..5, all committed
     intercept[RuntimeException] { run(5, killAt = "gated") } // epoch 6 allocated, never committed
     def names() = fs.listStatus(new Path(idx + ".epochs")).map(_.getPath.getName).toSet
@@ -507,11 +518,11 @@ class SeenIndexSpec extends SparkSpec {
       (0 until rnd.nextInt(3)).foreach { _ =>
         val killAt = stages(rnd.nextInt(stages.length))
         intercept[RuntimeException] {
-          SeenIndex.exactlyOnceEpochSimhash(batch, "text", key, idx, out, 3,
-            s => if (s == killAt) throw new RuntimeException(s"killed at $s"))
+          SeenIndex.exactlyOnceEpoch(batch, Simhash("text", 3), key, idx, out,
+            crashpoint = s => if (s == killAt) throw new RuntimeException(s"killed at $s"))
         }
       }
-      SeenIndex.exactlyOnceEpochSimhash(batch, "text", key, idx, out, 3)
+      SeenIndex.exactlyOnceEpoch(batch, Simhash("text", 3), key, idx, out)
     }
     val got = spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(got.length == got.distinct.length, s"duplicated rows: $got")
@@ -555,8 +566,8 @@ class SeenIndexSpec extends SparkSpec {
       spark.read.schema("media_id LONG, ahash LONG").parquet(out)
         .collect().map(_.getLong(0)).toSet
     val input = MemoryStream[(Long, Long)]
-    val q = SeenIndex.gateStreamHamming(
-      input.toDF().toDF("media_id", "ahash"), "ahash", idx, out, tmpDir())
+    val q = SeenIndex.gateStream(
+      input.toDF().toDF("media_id", "ahash"), Hamming("ahash"), idx, out, tmpDir())
     input.addData((1L, s0)); q.processAllAvailable()
     assert(admitted() == Set(1L))
     // near (hamming 2) gated by batch 1's admission; far admitted
@@ -564,12 +575,12 @@ class SeenIndexSpec extends SparkSpec {
     assert(admitted() == Set(1L, 3L))
     q.stop()
     val input2 = MemoryStream[(Long, Long)]
-    val q2 = SeenIndex.gateStreamHamming(
-      input2.toDF().toDF("media_id", "ahash"), "ahash", idx, out, tmpDir())
+    val q2 = SeenIndex.gateStream(
+      input2.toDF().toDF("media_id", "ahash"), Hamming("ahash"), idx, out, tmpDir())
     input2.addData((10L, s0), (11L, ~s0 ^ 1L)); q2.processAllAvailable()
     q2.stop()
     assert(admitted() == Set(1L, 3L))
-    assert(SeenIndex.read(spark, idx).distinct().count() == 2)
+    assert(SeenIndex.read(spark, sigIndex, idx).distinct().count() == 2)
   }
 
   test("streaming embedding ingest loop: micro-batches gate against the growing vector index, restart resumes") {
@@ -585,9 +596,10 @@ class SeenIndexSpec extends SparkSpec {
       spark.read.schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(out)
         .collect().map(_.getLong(0)).toSet
     def loop(in: MemoryStream[(Long, Seq[Float])]) =
-      SeenIndex.gateStreamEmbedding(
-        in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", idx, out, tmpDir(),
-        threshold = 0.9, planes = planes, broadcastVerify = true)
+      SeenIndex.gateStream(
+        in.toDF().toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        idx, out, tmpDir())
     val input = MemoryStream[(Long, Seq[Float])]
     val q = loop(input)
     input.addData((1L, e1)); q.processAllAvailable()
@@ -601,7 +613,7 @@ class SeenIndexSpec extends SparkSpec {
     input2.addData((10L, e1), (11L, novel)); q2.processAllAvailable()
     q2.stop()
     assert(admitted() == Set(1L, 3L))
-    assert(SeenIndex.readVectors(spark, idx).select("id").distinct().count() == 2)
+    assert(SeenIndex.read(spark, vecIndex, idx).select("id").distinct().count() == 2)
   }
 
   test("stats: rows vs distinct, epoch range, file/ledger counts; a broken index reports instead of throwing") {
@@ -613,16 +625,16 @@ class SeenIndexSpec extends SparkSpec {
     val empty = SeenIndex.stats(spark, idx)
     assert(empty == SeenIndex.IndexStats(0, 0, 0, None, None, 0, 0, 0, 0, None, false))
     val sigs = Seq(1L, 2L, 3L).toDF("sig")
-    SeenIndex.appendEpoch(sigs, "sig", idx, 1L)
-    SeenIndex.appendEpoch(sigs, "sig", idx, 2L)   // full overlap: 3 reclaimable rows
-    SeenIndex.append(Seq(9L).toDF("sig"), "sig", idx)
+    SeenIndex.append(sigs, sigIndex, idx, Some(1L))
+    SeenIndex.append(sigs, sigIndex, idx, Some(2L))   // full overlap: 3 reclaimable rows
+    SeenIndex.append(Seq(9L).toDF("sig"), sigIndex, idx)
     val s = SeenIndex.stats(spark, idx)
     assert(s.rows == 7 && s.distinct == 4 && s.untagged == 1, s.toString)
     assert(s.minEpoch.contains(1L) && s.maxEpoch.contains(2L))
     assert(s.dataFiles >= 3 && s.dataBytes > 0)
     assert(s.ledgerAllocs == 0 && s.ledgerCommitted == 0 && s.ledgerWatermark.isEmpty)
     // after compact the reclaimable gap closes: one row per sig
-    SeenIndex.compact(spark, idx)
+    SeenIndex.compact(spark, sigIndex, idx)
     val c = SeenIndex.stats(spark, idx)
     assert(c.rows == 4 && c.distinct == 4 && c.untagged == 1, c.toString)
     // mid-compaction crash state: stats REPORTS it (the gates throw)
@@ -635,9 +647,9 @@ class SeenIndexSpec extends SparkSpec {
     // the vector form: distinct = distinct (id, vec) pairs
     val vidx = tmpDir() + "/vidx"
     val vecs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("id", "vec")
-    SeenIndex.appendVectorsEpoch(vecs, "vec", "id", vidx, 1L)
-    SeenIndex.appendVectorsEpoch(vecs, "vec", "id", vidx, 2L)
-    val v = SeenIndex.vectorStats(spark, vidx)
+    SeenIndex.append(vecs, vecIndex, vidx, Some(1L))
+    SeenIndex.append(vecs, vecIndex, vidx, Some(2L))
+    val v = SeenIndex.stats(spark, vidx)
     assert(v.rows == 4 && v.distinct == 2 && v.untagged == 0, v.toString)
     assert(v.minEpoch.contains(1L) && v.maxEpoch.contains(2L))
   }
@@ -649,8 +661,8 @@ class SeenIndexSpec extends SparkSpec {
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def doc(i: Int) = (i.toLong, (i * 100 to i * 100 + 60).map(j => s"o$j").mkString(" "))
     (0 to 3).foreach { i =>
-      SeenIndex.exactlyOnceEpochSimhash(Seq(doc(i)).toDF("doc_id", "text"), "text",
-        s"k$i", idx, out, 3)
+      SeenIndex.exactlyOnceEpoch(Seq(doc(i)).toDF("doc_id", "text"), Simhash("text", 3),
+        s"k$i", idx, out)
     }
     // simulate a prune crash between its two deletes: alloc gone,
     // committed still present (deletion order is alloc first)
@@ -700,10 +712,10 @@ class SeenIndexSpec extends SparkSpec {
     val idx = tmpDir() + "/idx"; val out = tmpDir() + "/out"
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def doc(i: Int) = (i.toLong, (i * 100 to i * 100 + 60).map(j => s"c$j").mkString(" "))
-    def run(i: Int) = SeenIndex.exactlyOnceEpochSimhash(
-      Seq(doc(i)).toDF("doc_id", "text"), "text", s"k$i", idx, out, 3)
+    def run(i: Int) = SeenIndex.exactlyOnceEpoch(
+      Seq(doc(i)).toDF("doc_id", "text"), Simhash("text", 3), s"k$i", idx, out)
     (0 to 2).foreach(run) // epochs 1..3 committed
-    SeenIndex.compact(spark, idx)
+    SeenIndex.compact(spark, sigIndex, idx)
     // the ledger is a SIBLING of the index dir, so the compaction's
     // whole-directory swap cannot have touched it
     val names = fs.listStatus(new Path(idx + ".epochs")).map(_.getPath.getName).toSet
@@ -726,13 +738,13 @@ class SeenIndexSpec extends SparkSpec {
     val idx = tmpDir() + "/idx"; val out = tmpDir() + "/out"
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val text = (1 to 60).map(i => s"m$i").mkString(" ")
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((1L, text)).toDF("doc_id", "text"), "text", "k1", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((1L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k1", idx, out)
     // crash state: the swap's first rename happened, the second didn't
     assert(fs.rename(new Path(idx), new Path(idx + ".compact-old")))
     val e = intercept[IllegalStateException] {
-      SeenIndex.exactlyOnceEpochSimhash(
-        Seq((2L, text)).toDF("doc_id", "text"), "text", "k2", idx, out, 3)
+      SeenIndex.exactlyOnceEpoch(
+        Seq((2L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k2", idx, out)
     }
     assert(e.getMessage.contains("recover"))
     // nothing recreated the index path (the ledger is a sibling), so
@@ -740,8 +752,8 @@ class SeenIndexSpec extends SparkSpec {
     assert(!fs.exists(new Path(idx)))
     SeenIndex.recover(spark, idx)
     // after recovery the duplicate is gated against the restored history
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((2L, text)).toDF("doc_id", "text"), "text", "k2", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((2L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k2", idx, out)
     assert(spark.read.parquet(out).select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(1L))
   }
@@ -752,19 +764,19 @@ class SeenIndexSpec extends SparkSpec {
     val idx = tmpDir() + "/idx"; val out = tmpDir() + "/out"
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val text = (1 to 60).map(i => s"r$i").mkString(" ")
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((1L, text)).toDF("doc_id", "text"), "text", "k1", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((1L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k1", idx, out)
     // a PARTIAL reset (index + output, ledger forgotten): the stale
     // committed marker makes the re-run a no-op — the batch is DROPPED
     fs.delete(new Path(idx), true); fs.delete(new Path(out), true)
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((1L, text)).toDF("doc_id", "text"), "text", "k1", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((1L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k1", idx, out)
     assert(!fs.exists(new Path(out)), "stale committed marker must no-op (the documented hazard)")
     // the FULL reset adds dropLedger: the same batch now lands at epoch 1
     SeenIndex.dropLedger(spark, idx)
     fs.delete(new Path(idx), true)
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((1L, text)).toDF("doc_id", "text"), "text", "k1", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((1L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k1", idx, out)
     assert(spark.read.parquet(out).select("doc_id", "epoch")
       .collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue)).toSet == Set((1L, 1L)))
     // idempotent on a never-written ledger
@@ -779,14 +791,14 @@ class SeenIndexSpec extends SparkSpec {
     val out = tmpDir() + "/out"
     val text = (1 to 60).map(i => s"s$i").mkString(" ")
     // ledger: created via the slashed path, must land as a sibling
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((1L, text)).toDF("doc_id", "text"), "text", "k1", idx + "/", out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((1L, text)).toDF("doc_id", "text"), Simhash("text", 3), "k1", idx + "/", out)
     assert(fs.exists(new Path(idx + ".epochs")), "ledger must be a sibling, not a child")
     assert(!fs.exists(new Path(idx, ".epochs")))
     // compaction through the slashed path: the swap must not try to
     // rename the index into its own child
-    SeenIndex.compact(spark, idx + "/")
-    assert(SeenIndex.read(spark, idx).count() == 1)
+    SeenIndex.compact(spark, sigIndex, idx + "/")
+    assert(SeenIndex.read(spark, sigIndex, idx).count() == 1)
     assert(!fs.exists(new Path(idx, ".compact-tmp")))
   }
 
@@ -805,19 +817,19 @@ class SeenIndexSpec extends SparkSpec {
       (hasUntagged.keySet ++ maxEpoch.keySet).filter(s =>
         hasUntagged(s) || maxEpoch.get(s).exists(_ >= m)).toSet
     def visibleIndex(m: Long): Set[Long] =
-      SeenIndex.readWindow(spark, idx, m).collect().map(_.getLong(0)).toSet
+      SeenIndex.read(spark, sigIndex, idx, minEpoch = Some(m)).collect().map(_.getLong(0)).toSet
     (0 until 24).foreach { step =>
       val sigs = Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(12).toLong).distinct
       rnd.nextInt(3) match {
         case 0 => // tagged append at a random epoch
           val e = 1L + rnd.nextInt(8)
-          SeenIndex.appendEpoch(sigs.toDF("sig"), "sig", idx, e)
+          SeenIndex.append(sigs.toDF("sig"), sigIndex, idx, Some(e))
           sigs.foreach(s => maxEpoch += s -> math.max(e, maxEpoch.getOrElse(s, Long.MinValue)))
         case 1 => // untagged append: those sigs never expire
-          SeenIndex.append(sigs.toDF("sig"), "sig", idx)
+          SeenIndex.append(sigs.toDF("sig"), sigIndex, idx)
           sigs.foreach(s => hasUntagged += s -> true)
         case 2 =>
-          SeenIndex.compact(spark, idx)
+          SeenIndex.compact(spark, sigIndex, idx)
       }
       // check a random cutoff every step, all cutoffs after compaction
       val cutoffs = if (step % 6 == 5) 0L to 9L else Seq(rnd.nextInt(10).toLong)
@@ -828,9 +840,9 @@ class SeenIndexSpec extends SparkSpec {
     }
     // terminal compact: full visibility parity at every cutoff, and
     // the physical index is minimal (one row per sig)
-    SeenIndex.compact(spark, idx)
+    SeenIndex.compact(spark, sigIndex, idx)
     (0L to 9L).foreach(m => assert(visibleIndex(m) == visibleModel(m)))
-    assert(SeenIndex.read(spark, idx).count() == visibleModel(0L).size)
+    assert(SeenIndex.read(spark, sigIndex, idx).count() == visibleModel(0L).size)
   }
 
   test("windowed exactly-once: kills at every crash point; re-admission happens exactly when every prior admission aged out; zero duplicate rows") {
@@ -844,8 +856,8 @@ class SeenIndexSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getAs[Number]("epoch").longValue)).toSeq
     def run(batch: org.apache.spark.sql.DataFrame, key: String, at: Long, min: Long,
             killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochSimhashWindow(batch, "text", key, idx, out, 3,
-        admittedAt = at, minAdmitted = min,
+      SeenIndex.exactlyOnceEpoch(batch, Simhash("text", 3), key, idx, out,
+        window = Some((at, min)),
         crashpoint = s => if (s == killAt) throw new RuntimeException(s"killed at $s"))
     // batch w0 @ t=100 (epoch 1): bootstrap, with kills before + after the gate
     val b0 = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
@@ -894,9 +906,8 @@ class SeenIndexSpec extends SparkSpec {
     def admitted(): Set[Long] =
       spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).toSet
     val input = MemoryStream[(Long, String)]
-    val q = SeenIndex.gateStreamSimhashWindowExactlyOnce(
-      input.toDF().toDF("doc_id", "text"), "text", idx, out, tmpDir(),
-      windowAge = 100L, clock = () => now)
+    val q = SeenIndex.gateStreamExactlyOnce(
+      input.toDF().toDF("doc_id", "text"), Simhash("text"), idx, out, tmpDir(), windowAge = Some(100L), clock = () => now)
     input.addData((1L, base)); q.processAllAvailable()   // t=1000: bootstrap
     now = 1050L
     input.addData((2L, base)); q.processAllAvailable()   // in window -> gated
@@ -912,9 +923,8 @@ class SeenIndexSpec extends SparkSpec {
     // same windowed index: the @1200 admission still gates at t=1260
     val input2 = MemoryStream[(Long, String)]
     now = 1260L
-    val q2 = SeenIndex.gateStreamSimhashWindowExactlyOnce(
-      input2.toDF().toDF("doc_id", "text"), "text", idx, out, tmpDir(),
-      windowAge = 100L, clock = () => now)
+    val q2 = SeenIndex.gateStreamExactlyOnce(
+      input2.toDF().toDF("doc_id", "text"), Simhash("text"), idx, out, tmpDir(), windowAge = Some(100L), clock = () => now)
     input2.addData((5L, base)); q2.processAllAvailable()
     q2.stop()
     assert(admitted() == Set(1L, 3L))
@@ -927,8 +937,8 @@ class SeenIndexSpec extends SparkSpec {
     val s0 = 0x0123456789abcdefL
     def runH(batch: org.apache.spark.sql.DataFrame, key: String, at: Long, min: Long,
              killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochHammingWindow(batch, "ahash", key, hidx, hout, 3,
-        admittedAt = at, minAdmitted = min,
+      SeenIndex.exactlyOnceEpoch(batch, Hamming("ahash", 3), key, hidx, hout,
+        window = Some((at, min)),
         crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
     runH(Seq((1L, s0)).toDF("media_id", "ahash"), "h0", 100L, 0L)
     // near signature in-window -> gated (even across a replay)
@@ -948,9 +958,10 @@ class SeenIndexSpec extends SparkSpec {
     val e1 = Seq(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)
     def runE(batch: org.apache.spark.sql.DataFrame, key: String, at: Long, min: Long,
              killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochEmbeddingWindow(batch, "embedding", "vec_id", key,
-        eidx, eout, threshold = 0.9, planes = planes,
-        admittedAt = at, minAdmitted = min, broadcastVerify = true,
+      SeenIndex.exactlyOnceEpoch(batch,
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        key, eidx, eout,
+        window = Some((at, min)),
         crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
     runE(Seq((1L, e1)).toDF("vec_id", "embedding"), "e0", 100L, 0L)
     val eb1 = Seq((2L, e1)).toDF("vec_id", "embedding")
@@ -972,12 +983,12 @@ class SeenIndexSpec extends SparkSpec {
     // sig 7 admitted at epoch 1 (t=100, a replay duplicated the row)
     // and RE-admitted at epoch 5 (t=300); sig 8 at epoch 2 (t=100);
     // sig 9 from the pre-composition API (untagged, unstamped)
-    SeenIndex.appendEpochAdmitted(Seq(7L).toDF("sig"), "sig", idx, 1L, 100L)
-    SeenIndex.appendEpochAdmitted(Seq(7L).toDF("sig"), "sig", idx, 1L, 100L)
-    SeenIndex.appendEpochAdmitted(Seq(7L).toDF("sig"), "sig", idx, 5L, 300L)
-    SeenIndex.appendEpochAdmitted(Seq(8L).toDF("sig"), "sig", idx, 2L, 100L)
-    SeenIndex.append(Seq(9L).toDF("sig"), "sig", idx)
-    SeenIndex.compactWindowed(spark, idx)
+    SeenIndex.append(Seq(7L).toDF("sig"), sigIndex, idx, Some(1L), Some(100L))
+    SeenIndex.append(Seq(7L).toDF("sig"), sigIndex, idx, Some(1L), Some(100L))
+    SeenIndex.append(Seq(7L).toDF("sig"), sigIndex, idx, Some(5L), Some(300L))
+    SeenIndex.append(Seq(8L).toDF("sig"), sigIndex, idx, Some(2L), Some(100L))
+    SeenIndex.append(Seq(9L).toDF("sig"), sigIndex, idx)
+    SeenIndex.compact(spark, sigIndex, idx, windowed = true)
     // the (sig, epoch) grain survives — sig 7 keeps BOTH epochs (the
     // rows a replay's own-epoch exclusion distinguishes); the
     // same-epoch duplicate collapsed; untagged stays untagged
@@ -986,29 +997,29 @@ class SeenIndexSpec extends SparkSpec {
       (8L, Some(2L), Some(100L)), (9L, None, None)))
     // windowed visibility at every cutoff matches the uncompacted rules
     def visible(m: Long): Set[Long] =
-      SeenIndex.readWindowAdmitted(spark, idx, m).collect().map(_.getLong(0)).toSet
+      SeenIndex.read(spark, sigIndex, idx, minAdmitted = Some(m)).collect().map(_.getLong(0)).toSet
     assert(visible(0L) == Set(7L, 8L, 9L))
     assert(visible(200L) == Set(7L, 9L))
     assert(visible(400L) == Set(9L))
     // the expiry horizon deletes exactly the rows no future gate could
     // see; unstamped rows are never dropped
-    SeenIndex.compactWindowed(spark, idx, dropAdmittedBefore = Some(200L))
+    SeenIndex.compact(spark, sigIndex, idx, windowed = true, dropAdmittedBefore = Some(200L))
     assert(rows() == Set((7L, Some(5L), Some(300L)), (9L, None, None)))
     assert(visible(200L) == Set(7L, 9L))
     // vector form: same grain + horizon rules
     val vidx = tmpDir() + "/cwvidx"
     val v = Seq((1L, Seq(1f, 0f))).toDF("id", "vec")
-    SeenIndex.appendVectorsEpochAdmitted(v, "vec", "id", vidx, 1L, 100L)
-    SeenIndex.appendVectorsEpochAdmitted(v, "vec", "id", vidx, 1L, 100L)
-    SeenIndex.appendVectorsEpochAdmitted(v, "vec", "id", vidx, 4L, 300L)
-    SeenIndex.compactVectorsWindowed(spark, vidx)
+    SeenIndex.append(v, vecIndex, vidx, Some(1L), Some(100L))
+    SeenIndex.append(v, vecIndex, vidx, Some(1L), Some(100L))
+    SeenIndex.append(v, vecIndex, vidx, Some(4L), Some(300L))
+    SeenIndex.compact(spark, vecIndex, vidx, windowed = true)
     assert(spark.read.schema("id LONG, vec ARRAY<FLOAT>, epoch LONG, admitted LONG")
       .parquet(vidx).count() == 2)
-    SeenIndex.compactVectorsWindowed(spark, vidx, dropAdmittedBefore = Some(200L))
+    SeenIndex.compact(spark, vecIndex, vidx, windowed = true, dropAdmittedBefore = Some(200L))
     assert(spark.read.schema("id LONG, vec ARRAY<FLOAT>, epoch LONG, admitted LONG")
       .parquet(vidx).select("epoch").collect().map(_.getLong(0)).toSeq == Seq(4L))
     // compacting a never-written index stays a no-op
-    SeenIndex.compactWindowed(spark, tmpDir() + "/never")
+    SeenIndex.compact(spark, sigIndex, tmpDir() + "/never", windowed = true)
   }
 
   test("windowed exactly-once fuzz: random kill schedules with an advancing clock never duplicate or drop an admission") {
@@ -1036,13 +1047,13 @@ class SeenIndexSpec extends SparkSpec {
       (0 until rnd.nextInt(3)).foreach { _ =>
         val killAt = stages(rnd.nextInt(stages.length))
         intercept[RuntimeException] {
-          SeenIndex.exactlyOnceEpochSimhashWindow(batch, "text", key, idx, out, 3,
-            admittedAt = now, minAdmitted = min,
+          SeenIndex.exactlyOnceEpoch(batch, Simhash("text", 3), key, idx, out,
+            window = Some((now, min)),
             crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
         }
       }
-      SeenIndex.exactlyOnceEpochSimhashWindow(batch, "text", key, idx, out, 3,
-        admittedAt = now, minAdmitted = min)
+      SeenIndex.exactlyOnceEpoch(batch, Simhash("text", 3), key, idx, out,
+        window = Some((now, min)))
     }
     val got = spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(got.length == got.distinct.length, s"duplicated rows: $got")
@@ -1058,15 +1069,18 @@ class SeenIndexSpec extends SparkSpec {
     val zero = Seq.fill(dim)(0f)
     val pathU = tmpDir() + "/u"; val pathS = tmpDir() + "/s"
     def gateU(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateEmbedding(
-        rows.toDF("vec_id", "embedding"), "embedding", "vec_id", pathU,
-        threshold = 0.9, planes = planes, broadcastVerify = true)
+      val r = SeenIndex.gateAndUpdate(
+        rows.toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        pathU)
       val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
     }
     def gateS(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateEmbeddingSigned(
-        rows.toDF("vec_id", "embedding"), "embedding", "vec_id", pathS,
-        threshold = 0.9, planes = planes, broadcastVerify = true)
+      val r = SeenIndex.gateAndUpdate(
+        rows.toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          broadcastVerify = true, signatures = Cached),
+        pathS)
       val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
     }
     // three epochs, degenerates included: every admission decision
@@ -1082,16 +1096,16 @@ class SeenIndexSpec extends SparkSpec {
     // SELF-HEAL 1: an UNSIGNED append leaves the cache short; the next
     // signed gate must detect the count mismatch, rebuild, and gate
     // against the directly-appended vector
-    SeenIndex.appendVectors(Seq((30L, unit(5))).toDF("id", "vec"), "vec", "id", pathS)
+    SeenIndex.append(Seq((30L, unit(5))).toDF("id", "vec"), vecIndex, pathS)
     assert(gateS(Seq((31L, unit(5)))).isEmpty,
       "a vector appended outside the signed path must still gate after the rebuild")
     // SELF-HEAL 2: compaction rewrites the index (fewer rows); signed
     // decisions must survive the rebuild it triggers
-    SeenIndex.compactVectors(spark, pathS)
+    SeenIndex.compact(spark, vecIndex, pathS)
     assert(gateS(Seq((40L, unit(0)), (41L, unit(6)))) == Set(41L))
     // the maintenance view reports the cache sibling
-    assert(SeenIndex.vectorStats(spark, pathS).sigCaches == 1L)
-    assert(SeenIndex.vectorStats(spark, pathU).sigCaches == 0L)
+    assert(SeenIndex.stats(spark, pathS).sigCaches == 1L)
+    assert(SeenIndex.stats(spark, pathU).sigCaches == 0L)
     // the cache mirrors the compacted index rows exactly (count parity)
     val idxRows = spark.read.schema("id LONG, vec ARRAY<FLOAT>, epoch LONG, admitted LONG")
       .parquet(pathS).count()
@@ -1114,8 +1128,10 @@ class SeenIndexSpec extends SparkSpec {
     def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
     val idx = tmpDir() + "/seidx"; val out = tmpDir() + "/seout"
     def run(batch: org.apache.spark.sql.DataFrame, key: String, killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochEmbeddingSigned(batch, "embedding", "vec_id", key, idx, out,
-        threshold = 0.9, planes = planes, broadcastVerify = true,
+      SeenIndex.exactlyOnceEpoch(batch,
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          broadcastVerify = true, signatures = Cached),
+        key, idx, out,
         crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
     run(Seq((1L, unit(0))).toDF("vec_id", "embedding"), "k0")
     val b1 = Seq((10L, unit(0)), (11L, unit(3))).toDF("vec_id", "embedding")
@@ -1127,7 +1143,7 @@ class SeenIndexSpec extends SparkSpec {
     // torn lockstep: an index-only append (no cache row) before the
     // next batch — ensureSigCache's fingerprint check must rebuild, and the
     // stray vector then gates the batch
-    SeenIndex.appendVectorsEpoch(Seq((50L, unit(5))).toDF("id", "vec"), "vec", "id", idx, 99L)
+    SeenIndex.append(Seq((50L, unit(5))).toDF("id", "vec"), vecIndex, idx, Some(99L))
     run(Seq((20L, unit(5))).toDF("vec_id", "embedding"), "k2")
     assert(spark.read.parquet(out).select("vec_id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 11L))
@@ -1135,9 +1151,11 @@ class SeenIndexSpec extends SparkSpec {
     val widx = tmpDir() + "/wseidx"; val wout = tmpDir() + "/wseout"
     def runW(batch: org.apache.spark.sql.DataFrame, key: String, at: Long, min: Long,
              killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochEmbeddingWindowSigned(batch, "embedding", "vec_id", key,
-        widx, wout, threshold = 0.9, planes = planes,
-        admittedAt = at, minAdmitted = min, broadcastVerify = true,
+      SeenIndex.exactlyOnceEpoch(batch,
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          broadcastVerify = true, signatures = Cached),
+        key, widx, wout,
+        window = Some((at, min)),
         crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
     runW(Seq((1L, unit(0))).toDF("vec_id", "embedding"), "w0", 100L, 0L)
     val wb1 = Seq((2L, unit(0))).toDF("vec_id", "embedding")
@@ -1164,17 +1182,21 @@ class SeenIndexSpec extends SparkSpec {
       spark.read.schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(out)
         .collect().map(_.getLong(0)).toSet
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = SeenIndex.gateStreamEmbeddingSigned(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", idx, out, tmpDir(),
-      threshold = 0.9, planes = planes, broadcastVerify = true)
+    val q = SeenIndex.gateStream(
+      input.toDF().toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Cached),
+      idx, out, tmpDir())
     input.addData((1L, unit(0))); q.processAllAvailable()
     input.addData((2L, unit(0)), (3L, unit(3))); q.processAllAvailable() // 2 gated, 3 novel
     q.stop()
     assert(admitted() == Set(1L, 3L))
     val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = SeenIndex.gateStreamEmbeddingSigned(
-      input2.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", idx, out, tmpDir(),
-      threshold = 0.9, planes = planes, broadcastVerify = true)
+    val q2 = SeenIndex.gateStream(
+      input2.toDF().toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Cached),
+      idx, out, tmpDir())
     input2.addData((10L, unit(0)), (11L, unit(3))); q2.processAllAvailable()
     q2.stop()
     assert(admitted() == Set(1L, 3L), "a restarted signed query must resume from the index")
@@ -1184,9 +1206,11 @@ class SeenIndexSpec extends SparkSpec {
     def wAdmitted(): Set[Long] =
       spark.read.parquet(wout).select("vec_id").collect().map(_.getLong(0)).toSet
     val input3 = MemoryStream[(Long, Seq[Float])]
-    val q3 = SeenIndex.gateStreamEmbeddingWindowExactlyOnceSigned(
-      input3.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", widx, wout, tmpDir(),
-      windowAge = 100L, threshold = 0.9, planes = planes, broadcastVerify = true,
+    val q3 = SeenIndex.gateStreamExactlyOnce(
+      input3.toDF().toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Cached),
+      widx, wout, tmpDir(), windowAge = Some(100L),
       clock = () => now)
     input3.addData((1L, unit(0))); q3.processAllAvailable()       // t=1000 bootstrap
     now = 1050L
@@ -1217,17 +1241,17 @@ class SeenIndexSpec extends SparkSpec {
       (hasUnstamped.keySet ++ maxStamp.keySet).filter(s =>
         hasUnstamped(s) || maxStamp.get(s).exists(_ >= m)).toSet
     def visibleIndex(m: Long): Set[Long] =
-      SeenIndex.readWindowAdmitted(spark, idx, m).collect().map(_.getLong(0)).toSet
+      SeenIndex.read(spark, sigIndex, idx, minAdmitted = Some(m)).collect().map(_.getLong(0)).toSet
     (0 until 24).foreach { step =>
       val sigs = Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(12).toLong).distinct
       rnd.nextInt(4) match {
         case 0 | 1 => // stamped append at a fresh epoch, random stamp 1..8
           nextEpoch += 1
           val t = 1L + rnd.nextInt(8)
-          SeenIndex.appendEpochAdmitted(sigs.toDF("sig"), "sig", idx, nextEpoch, t)
+          SeenIndex.append(sigs.toDF("sig"), sigIndex, idx, Some(nextEpoch), Some(t))
           sigs.foreach(s => maxStamp += s -> math.max(t, maxStamp.getOrElse(s, Long.MinValue)))
         case 2 => // unstamped append: those sigs never expire
-          SeenIndex.append(sigs.toDF("sig"), "sig", idx)
+          SeenIndex.append(sigs.toDF("sig"), sigIndex, idx)
           sigs.foreach(s => hasUnstamped += s -> true)
         case 3 =>
           // any horizon: visibility depends only on the MAX stamp per
@@ -1237,7 +1261,7 @@ class SeenIndexSpec extends SparkSpec {
           // visibility change the scaladoc warns gates about is
           // exactly what both sides mirror here)
           val horizon = if (rnd.nextBoolean()) Some(rnd.nextInt(10).toLong) else None
-          SeenIndex.compactWindowed(spark, idx, dropAdmittedBefore = horizon)
+          SeenIndex.compact(spark, sigIndex, idx, windowed = true, dropAdmittedBefore = horizon)
           horizon.foreach { h =>
             maxStamp = maxStamp.filter { case (_, t) => t >= h }
           }
@@ -1250,7 +1274,7 @@ class SeenIndexSpec extends SparkSpec {
     }
     // terminal compact with a mid-range horizon: parity holds at
     // every cutoff after the drop on both sides
-    SeenIndex.compactWindowed(spark, idx, dropAdmittedBefore = Some(5L))
+    SeenIndex.compact(spark, sigIndex, idx, windowed = true, dropAdmittedBefore = Some(5L))
     maxStamp = maxStamp.filter { case (_, t) => t >= 5L }
     (1L to 9L).foreach(m => assert(visibleIndex(m) == visibleModel(m)))
   }
@@ -1263,22 +1287,26 @@ class SeenIndexSpec extends SparkSpec {
     val path = tmpDir() + "/eqidx"
     // seed a DUPLICATE (1, v0) row pair directly, then let the signed
     // gate build a cache mirroring the 3-row index (v0, v0, v1)
-    SeenIndex.appendVectors(Seq((1L, unit(0))).toDF("id", "vec"), "vec", "id", path)
-    SeenIndex.appendVectors(Seq((1L, unit(0))).toDF("id", "vec"), "vec", "id", path)
-    val g1 = SeenIndex.gateAndUpdateEmbeddingSigned(
-      Seq((2L, unit(1))).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-      threshold = 0.9, planes = planes, broadcastVerify = true)
+    SeenIndex.append(Seq((1L, unit(0))).toDF("id", "vec"), vecIndex, path)
+    SeenIndex.append(Seq((1L, unit(0))).toDF("id", "vec"), vecIndex, path)
+    val g1 = SeenIndex.gateAndUpdate(
+      Seq((2L, unit(1))).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Cached),
+      path)
     assert(g1.result.collect().map(_.getLong(0)).toSet == Set(2L)); g1.release()
     // compaction collapses the duplicate (3 -> 2 rows), then ONE
     // unsigned append restores the row count to 3: a cache validated
     // by row-count parity alone would see 3 == 3 and trust content
     // that has never seen v5 (the r17 ADVICE hole) — the file-set
     // fingerprint names the exact index state, so the gate rebuilds
-    SeenIndex.compactVectors(spark, path)
-    SeenIndex.appendVectors(Seq((9L, unit(5))).toDF("id", "vec"), "vec", "id", path)
-    val g2 = SeenIndex.gateAndUpdateEmbeddingSigned(
-      Seq((10L, unit(5))).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-      threshold = 0.9, planes = planes, broadcastVerify = true)
+    SeenIndex.compact(spark, vecIndex, path)
+    SeenIndex.append(Seq((9L, unit(5))).toDF("id", "vec"), vecIndex, path)
+    val g2 = SeenIndex.gateAndUpdate(
+      Seq((10L, unit(5))).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Cached),
+      path)
     assert(g2.result.isEmpty,
       "a vector appended after an equal-count compact+append sequence must still gate")
     g2.release()
@@ -1291,14 +1319,16 @@ class SeenIndexSpec extends SparkSpec {
     def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
     val path = tmpDir() + "/carryidx"
     def gateS(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateEmbeddingSigned(
-        rows.toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-        threshold = 0.9, planes = planes, broadcastVerify = true)
+      val r = SeenIndex.gateAndUpdate(
+        rows.toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          broadcastVerify = true, signatures = Cached),
+        path)
       val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
     }
     assert(gateS(Seq((1L, unit(0)), (2L, unit(1)))) == Set(1L, 2L))
     assert(gateS(Seq((3L, unit(2)))) == Set(3L))
-    SeenIndex.compactVectors(spark, path)
+    SeenIndex.compact(spark, vecIndex, path)
     // synced == ensureSigCache will return without a rebuild: the
     // carry paid the compaction cost once, inside compactVectors
     val infos = SeenIndex.listSigCaches(spark, path)
@@ -1309,13 +1339,14 @@ class SeenIndexSpec extends SparkSpec {
     // with an expiry horizon, cache still synced and gating correctly
     val widx = tmpDir() + "/carrywidx"; val wout = tmpDir() + "/carrywout"
     def runW(rows: Seq[(Long, Seq[Float])], key: String, at: Long, min: Long): Unit =
-      SeenIndex.exactlyOnceEpochEmbeddingWindowSigned(
-        rows.toDF("vec_id", "embedding"), "embedding", "vec_id", key, widx, wout,
-        threshold = 0.9, planes = planes, admittedAt = at, minAdmitted = min,
-        broadcastVerify = true)
+      SeenIndex.exactlyOnceEpoch(
+        rows.toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          broadcastVerify = true, signatures = Cached),
+        key, widx, wout, window = Some((at, min)))
     runW(Seq((1L, unit(0))), "w0", 100L, 0L)
     runW(Seq((2L, unit(1))), "w1", 200L, 150L)
-    SeenIndex.compactVectorsWindowed(spark, widx, dropAdmittedBefore = Some(150L))
+    SeenIndex.compact(spark, vecIndex, widx, windowed = true, dropAdmittedBefore = Some(150L))
     val winfos = SeenIndex.listSigCaches(spark, widx)
     assert(winfos.length == 1 && winfos.head.synced,
       s"windowed cache not carried: $winfos")
@@ -1333,27 +1364,31 @@ class SeenIndexSpec extends SparkSpec {
     val planesB = graft.similarity.Similarity.hyperplanes(dim, numPlanes = 64, seed = 7L)
     def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
     val path = tmpDir() + "/toolidx"
-    val g = SeenIndex.gateAndUpdateEmbeddingSigned(
-      Seq((1L, unit(0))).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-      threshold = 0.9, planes = planesA, broadcastVerify = true)
+    val g = SeenIndex.gateAndUpdate(
+      Seq((1L, unit(0))).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planesA,
+        broadcastVerify = true, signatures = Cached),
+      path)
     g.result.count(); g.release()
     // a read-only signed gate on a SECOND geometry builds its cache
-    val r = SeenIndex.dropSeenEmbeddingSigned(
-      Seq((2L, unit(1))).toDF("vec_id", "embedding"), "embedding", "vec_id", path,
-      threshold = 0.9, planes = planesB, broadcastVerify = true)
+    val r = SeenIndex.dropSeen(
+      Seq((2L, unit(1))).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planesB,
+        broadcastVerify = true, signatures = Cached),
+      path)
     r.result.count(); r.release()
     val infos = SeenIndex.listSigCaches(spark, path)
     assert(infos.length == 2 && infos.forall(_.synced) && infos.forall(_.dataBytes > 0)
       && infos.map(_.geometryKey).distinct.length == 2, infos.toString)
     // an unsigned append desyncs BOTH geometries' caches
-    SeenIndex.appendVectors(Seq((9L, unit(5))).toDF("id", "vec"), "vec", "id", path)
+    SeenIndex.append(Seq((9L, unit(5))).toDF("id", "vec"), vecIndex, path)
     assert(SeenIndex.listSigCaches(spark, path).forall(!_.synced))
     // a crashed rebuild's leftover must not count as a live cache
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keyA = infos.head.geometryKey
     fs.mkdirs(new org.apache.hadoop.fs.Path(path + ".sigs-" + keyA + ".rebuild-tmp"))
-    assert(SeenIndex.vectorStats(spark, path).sigCaches == 2L,
+    assert(SeenIndex.stats(spark, path).sigCaches == 2L,
       "rebuild-tmp leftover inflated the cache count")
     assert(SeenIndex.listSigCaches(spark, path).length == 2)
     // reclaim one geometry (its rebuild-tmp leftover goes with it)
@@ -1364,7 +1399,7 @@ class SeenIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException] { SeenIndex.dropSigCache(spark, path, "not-a-key") }
     SeenIndex.dropSigCaches(spark, path)
     assert(SeenIndex.listSigCaches(spark, path).isEmpty)
-    assert(SeenIndex.vectorStats(spark, path).sigCaches == 0L)
+    assert(SeenIndex.stats(spark, path).sigCaches == 0L)
   }
 
   test("windowed exactly-once replay under a REGRESSED clock: the persisted attempt stamp keeps admissions identical") {
@@ -1377,9 +1412,9 @@ class SeenIndexSpec extends SparkSpec {
     // the shared windowed body (pinnedWindow), so no caller-side
     // stamping ritual is needed for replay safety
     def run(id: Long, key: String, clockNow: Long, killAt: String = ""): Unit =
-      SeenIndex.exactlyOnceEpochSimhashWindow(
-        Seq((id, docA)).toDF("doc_id", "text"), "text", key, idx, out, 3,
-        admittedAt = clockNow, minAdmitted = clockNow - 50L,
+      SeenIndex.exactlyOnceEpoch(
+        Seq((id, docA)).toDF("doc_id", "text"), Simhash("text", 3), key, idx, out,
+        window = Some((clockNow, clockNow - 50L)),
         crashpoint = s => if (s == killAt) throw new RuntimeException("kill"))
     run(1L, "b0", 10L) // bootstrap admission at t=10
     // t=100: the t=10 admission aged out -> re-admit; crash AFTER the
@@ -1412,18 +1447,22 @@ class SeenIndexSpec extends SparkSpec {
     def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
     // tiny index, default floor: stays unsigned — no cache artifacts
     val pathU = tmpDir() + "/autou"
-    val a1 = SeenIndex.gateAndUpdateEmbeddingAuto(
-      Seq((1L, unit(0)), (2L, unit(1))).toDF("vec_id", "embedding"), "embedding", "vec_id",
-      pathU, threshold = 0.9, planes = planes, broadcastVerify = true)
+    val a1 = SeenIndex.gateAndUpdate(
+      Seq((1L, unit(0)), (2L, unit(1))).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Auto),
+      pathU)
     assert(a1.result.collect().map(_.getLong(0)).toSet == Set(1L, 2L)); a1.release()
     assert(SeenIndex.listSigCaches(spark, pathU).isEmpty,
       "auto must not build a cache under the byte floor")
     // floor 0: signed from the first gate, cache built and maintained
     val pathS = tmpDir() + "/autos"
     def gateAuto(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
-      val r = SeenIndex.gateAndUpdateEmbeddingAuto(
-        rows.toDF("vec_id", "embedding"), "embedding", "vec_id", pathS,
-        threshold = 0.9, planes = planes, broadcastVerify = true, autoSignBytes = 0L)
+      val r = SeenIndex.gateAndUpdate(
+        rows.toDF("vec_id", "embedding"),
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+          broadcastVerify = true, signatures = AutoAbove(0L)),
+        pathS)
       val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
     }
     assert(gateAuto(Seq((1L, unit(0)), (2L, unit(1)))) == Set(1L, 2L))
@@ -1432,9 +1471,11 @@ class SeenIndexSpec extends SparkSpec {
     assert(sInfos.length == 1 && sInfos.head.synced, sInfos.toString)
     // ONCE a cache exists the auto gate uses it even under the
     // default floor (ignoring it would strand it stale)
-    val a2 = SeenIndex.gateAndUpdateEmbeddingAuto(
-      Seq((5L, unit(4))).toDF("vec_id", "embedding"), "embedding", "vec_id", pathS,
-      threshold = 0.9, planes = planes, broadcastVerify = true)
+    val a2 = SeenIndex.gateAndUpdate(
+      Seq((5L, unit(4))).toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Auto),
+      pathS)
     assert(a2.result.isEmpty); a2.release()
     assert(SeenIndex.listSigCaches(spark, pathS).forall(_.synced))
     // stream form: batch 1 runs unsigned (empty index, 0 bytes < 1),
@@ -1443,9 +1484,11 @@ class SeenIndexSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val idx = tmpDir() + "/autostream"; val sout = tmpDir() + "/autostreamout"
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = SeenIndex.gateStreamEmbeddingAuto(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", idx, sout, tmpDir(),
-      threshold = 0.9, planes = planes, broadcastVerify = true, autoSignBytes = 1L)
+    val q = SeenIndex.gateStream(
+      input.toDF().toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = AutoAbove(1L)),
+      idx, sout, tmpDir())
     input.addData((1L, unit(0))); q.processAllAvailable()
     assert(SeenIndex.listSigCaches(spark, idx).isEmpty, "batch 1 must run unsigned")
     input.addData((2L, unit(0)), (3L, unit(3))); q.processAllAvailable()
@@ -1467,10 +1510,11 @@ class SeenIndexSpec extends SparkSpec {
     val idx = tmpDir() + "/autoweo"; val out = tmpDir() + "/autoweoout"
     var now = 1000L
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = SeenIndex.gateStreamEmbeddingWindowExactlyOnceAuto(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", idx, out, tmpDir(),
-      windowAge = 500L, threshold = 0.9, planes = planes, broadcastVerify = true,
-      autoSignBytes = 1L, clock = () => now)
+    val q = SeenIndex.gateStreamExactlyOnce(
+      input.toDF().toDF("vec_id", "embedding"),
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = AutoAbove(1L)),
+      idx, out, tmpDir(), windowAge = Some(500L), clock = () => now)
     // batch 1: empty index (0 bytes < floor) -> unsigned, no cache
     input.addData((1L, unit(0)), (2L, unit(1))); q.processAllAvailable()
     assert(SeenIndex.listSigCaches(spark, idx).isEmpty, "batch 1 must run unsigned")
@@ -1499,20 +1543,27 @@ class SeenIndexSpec extends SparkSpec {
     // body with the same key — output must equal a clean single run
     val idx2 = tmpDir() + "/autoweo2"; val out2 = tmpDir() + "/autoweo2out"
     val b1 = Seq((1L, unit(0)), (2L, unit(1))).toDF("vec_id", "embedding")
-    SeenIndex.exactlyOnceEpochEmbeddingWindow(
-      b1, "embedding", "vec_id", "k1", idx2, out2, threshold = 0.9, planes = planes,
-      admittedAt = 1000L, minAdmitted = 500L, broadcastVerify = true)
+    SeenIndex.exactlyOnceEpoch(
+      b1,
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+      "k1", idx2, out2,
+      window = Some((1000L, 500L)))
     val b2 = Seq((3L, unit(0)), (4L, unit(4))).toDF("vec_id", "embedding")
     intercept[RuntimeException] {
-      SeenIndex.exactlyOnceEpochEmbeddingWindow(
-        b2, "embedding", "vec_id", "k2", idx2, out2, threshold = 0.9, planes = planes,
-        admittedAt = 1100L, minAdmitted = 600L, broadcastVerify = true,
+      SeenIndex.exactlyOnceEpoch(
+        b2,
+        Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
+        "k2", idx2, out2,
+        window = Some((1100L, 600L)),
         crashpoint = p => if (p == "appended") throw new RuntimeException("kill"))
     }
     // replay of k2 on the signed path (auto switched after restart)
-    SeenIndex.exactlyOnceEpochEmbeddingWindowSigned(
-      b2, "embedding", "vec_id", "k2", idx2, out2, threshold = 0.9, planes = planes,
-      admittedAt = 1100L, minAdmitted = 600L, broadcastVerify = true)
+    SeenIndex.exactlyOnceEpoch(
+      b2,
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = Cached),
+      "k2", idx2, out2,
+      window = Some((1100L, 600L)))
     val got2 = spark.read.schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(out2)
       .collect().map(_.getLong(0)).toSeq.sorted
     assert(got2 == Seq(1L, 2L, 4L),
@@ -1534,7 +1585,7 @@ class SeenIndexSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     val path = tmpDir() + "/midc"
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SeenIndex.append(Seq(1L, 2L).toDF("sig"), "sig", path)
+    SeenIndex.append(Seq(1L, 2L).toDF("sig"), sigIndex, path)
     // simulate a compaction crash between the two swap renames: the
     // main path is gone, .compact-old holds the only full copy
     assert(fs.rename(new Path(path), new Path(path + ".compact-old")))
@@ -1543,42 +1594,42 @@ class SeenIndexSpec extends SparkSpec {
     // would admit all history as novel, and recover() would DELETE
     // the backup (review r18). It must throw instead.
     intercept[IllegalStateException] {
-      SeenIndex.append(Seq(3L).toDF("sig"), "sig", path)
+      SeenIndex.append(Seq(3L).toDF("sig"), sigIndex, path)
     }
     intercept[IllegalStateException] {
-      SeenIndex.appendVectors(
-        Seq((1L, Seq(1f, 0f))).toDF("id", "vec"), "vec", "id", path)
+      SeenIndex.append(
+        Seq((1L, Seq(1f, 0f))).toDF("id", "vec"), vecIndex, path)
     }
     intercept[IllegalStateException] {
-      SeenIndex.appendEpochAdmitted(Seq(3L).toDF("sig"), "sig", path, 1L, 100L)
+      SeenIndex.append(Seq(3L).toDF("sig"), sigIndex, path, Some(1L), Some(100L))
     }
     // recover() restores the backup; the append then works
     SeenIndex.recover(spark, path)
-    SeenIndex.append(Seq(3L).toDF("sig"), "sig", path)
-    assert(SeenIndex.read(spark, path).distinct().count() == 3)
+    SeenIndex.append(Seq(3L).toDF("sig"), sigIndex, path)
+    assert(SeenIndex.read(spark, sigIndex, path).distinct().count() == 3)
   }
 
   test("compaction forms refuse the wrong index family instead of collapsing it to one null row") {
     import sqlImplicits._
     val sigIdx = tmpDir() + "/sigidx"
     val vecIdx = tmpDir() + "/vecidx"
-    SeenIndex.append(Seq(1L, 2L).toDF("sig"), "sig", sigIdx)
-    SeenIndex.append(Seq(2L).toDF("sig"), "sig", sigIdx) // cross-append duplicate
-    SeenIndex.appendVectors(
-      Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("id", "vec"), "vec", "id", vecIdx)
+    SeenIndex.append(Seq(1L, 2L).toDF("sig"), sigIndex, sigIdx)
+    SeenIndex.append(Seq(2L).toDF("sig"), sigIndex, sigIdx) // cross-append duplicate
+    SeenIndex.append(
+      Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("id", "vec"), vecIndex, vecIdx)
     // the schema-on-read projection null-fills missing columns, so the
     // wrong form's group-by would silently collapse the whole index to
     // ONE null row and the swap would delete the backup (review r19)
-    intercept[IllegalStateException] { SeenIndex.compact(spark, vecIdx) }
-    intercept[IllegalStateException] { SeenIndex.compactWindowed(spark, vecIdx) }
-    intercept[IllegalStateException] { SeenIndex.compactVectors(spark, sigIdx) }
-    intercept[IllegalStateException] { SeenIndex.compactVectorsWindowed(spark, sigIdx) }
+    intercept[IllegalStateException] { SeenIndex.compact(spark, sigIndex, vecIdx) }
+    intercept[IllegalStateException] { SeenIndex.compact(spark, sigIndex, vecIdx, windowed = true) }
+    intercept[IllegalStateException] { SeenIndex.compact(spark, vecIndex, sigIdx) }
+    intercept[IllegalStateException] { SeenIndex.compact(spark, vecIndex, sigIdx, windowed = true) }
     // the indexes are untouched and the RIGHT forms still work
-    assert(SeenIndex.read(spark, sigIdx).count() == 3)
-    SeenIndex.compact(spark, sigIdx)
-    assert(SeenIndex.read(spark, sigIdx).count() == 2)
-    SeenIndex.compactVectors(spark, vecIdx)
-    assert(SeenIndex.readVectors(spark, vecIdx).count() == 2)
+    assert(SeenIndex.read(spark, sigIndex, sigIdx).count() == 3)
+    SeenIndex.compact(spark, sigIndex, sigIdx)
+    assert(SeenIndex.read(spark, sigIndex, sigIdx).count() == 2)
+    SeenIndex.compact(spark, vecIndex, vecIdx)
+    assert(SeenIndex.read(spark, vecIndex, vecIdx).count() == 2)
   }
 
   test("exactly-once batches with an 'epoch' column are refused (partition-column collision on read-back)") {
@@ -1586,7 +1637,7 @@ class SeenIndexSpec extends SparkSpec {
     val idx = tmpDir() + "/idx"; val out = tmpDir() + "/out"
     val bad = Seq((1L, "alpha beta", 7L)).toDF("doc_id", "text", "epoch")
     val e = intercept[IllegalArgumentException] {
-      SeenIndex.exactlyOnceEpochSimhash(bad, "text", "k1", idx, out, 3)
+      SeenIndex.exactlyOnceEpoch(bad, Simhash("text", 3), "k1", idx, out)
     }
     assert(e.getMessage.contains("epoch"), e.getMessage)
   }
@@ -1595,7 +1646,7 @@ class SeenIndexSpec extends SparkSpec {
     import sqlImplicits._
     val bad = Seq((1L, "alpha beta", 99L)).toDF("doc_id", "text", "__sig")
     val e = intercept[IllegalArgumentException] {
-      SeenIndex.gateAndUpdateSimhash(bad, "text", tmpDir() + "/idx")
+      SeenIndex.gateAndUpdate(bad, Simhash("text"), tmpDir() + "/idx")
     }
     assert(e.getMessage.contains("__sig"), e.getMessage)
   }
@@ -1604,8 +1655,8 @@ class SeenIndexSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     import sqlImplicits._
     val idx = tmpDir() + "/idx"; val out = tmpDir() + "/out"
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"), "text", "k1", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"), Simhash("text", 3), "k1", idx, out)
     val ledger = new Path(idx + ".epochs")
     val fs = ledger.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // an editor backup / partial upload next to the real markers:
@@ -1614,8 +1665,8 @@ class SeenIndexSpec extends SparkSpec {
     fs.create(new Path(ledger, "alloc-k1-1~"), true).close()
     fs.create(new Path(ledger, "watermark-old.bak"), true).close()
     fs.create(new Path(ledger, "stamp-nodash"), true).close()
-    SeenIndex.exactlyOnceEpochSimhash(
-      Seq((2L, "delta epsilon zeta")).toDF("doc_id", "text"), "text", "k2", idx, out, 3)
+    SeenIndex.exactlyOnceEpoch(
+      Seq((2L, "delta epsilon zeta")).toDF("doc_id", "text"), Simhash("text", 3), "k2", idx, out)
     SeenIndex.compactLedger(spark, idx, keepLast = 1)
     val stats = SeenIndex.stats(spark, idx)
     assert(stats.ledgerCommitted >= 1)
