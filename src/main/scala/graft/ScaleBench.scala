@@ -60,7 +60,7 @@ object ScaleBench {
           when(pmod(xxhash64(lit(k + 1000), i), lit(2)) === 0, x).otherwise(-x)).as("embedding"),
         col("label"))
     }
-    SeenIndex.append(copies.reduce(_.unionByName(_)), histVecs(Live), p)
+    SeenIndex.append(copies.reduce(_.unionByName(_)), histKeys, p)
   }
 
   // ---- vs-history fixtures: DETERMINISTIC paths, built OUTSIDE the
@@ -93,6 +93,11 @@ object ScaleBench {
       signatures: SeenIndex.Signatures,
       planes: Array[Array[Float]] = vsHistoryPlanes): SeenIndex.Embedding =
     SeenIndex.Embedding("embedding", "vec_id", threshold = 0.9, planes, signatures = signatures)
+
+  /** The corpus's `(vec_id, embedding)` keys, for the index's appends,
+    * reads and compactions.
+    */
+  private val histKeys = SeenIndex.Vectors("embedding", "vec_id")
 
   private val VsHistoryFixtures =
     Seq("hist_sigs", "hist_vecs", "hist_vecs8", "hist_phash", "pq_index")
@@ -134,7 +139,7 @@ object ScaleBench {
 
   private def buildHistVecs(spark: SparkSession, dir: String)(p: String): Unit = {
     val emb = graft.sources.Sources.embeddings(spark, dir)
-    SeenIndex.append(emb.filter(col("vec_id") % 3 =!= 0), histVecs(Live), p)
+    SeenIndex.append(emb.filter(col("vec_id") % 3 =!= 0), histKeys, p)
     SeenIndex.ensureSigCache(spark, p, vsHistoryPlanes)
   }
 
@@ -863,10 +868,10 @@ object ScaleBench {
       "compact_index" -> (() => {
         val path = graft.core.TempDirs.create("scale_compact_index_")
         val sigs = docs.select(xxhash64(col("text")).as("sig"))
-        val family = SeenIndex.Hamming("sig")
-        (1L to 3L).foreach(e => SeenIndex.append(sigs, family, path, Some(e)))
-        SeenIndex.compact(spark, family, path)
-        SeenIndex.read(spark, family, path).count()
+        val keys = SeenIndex.Hamming("sig")
+        (1L to 3L).foreach(e => SeenIndex.append(sigs, keys, path, Some(e)))
+        SeenIndex.compact(spark, keys, path)
+        SeenIndex.read(spark, keys, path).count()
       }),
       // Exactly-once ledgered ingest: two batches through the
       // per-batch protocol (ledger probe + epoch alloc + own-epoch-
@@ -1079,10 +1084,9 @@ object ScaleBench {
       // vectors, still linear.
       "compact_vectors" -> (() => {
         val path = graft.core.TempDirs.create("scale_compact_vecidx_")
-        val family = histVecs(Live)
-        (1L to 3L).foreach(e => SeenIndex.append(emb, family, path, Some(e)))
-        SeenIndex.compact(spark, family, path)
-        SeenIndex.read(spark, family, path).count()
+        (1L to 3L).foreach(e => SeenIndex.append(emb, histKeys, path, Some(e)))
+        SeenIndex.compact(spark, histKeys, path)
+        SeenIndex.read(spark, histKeys, path).count()
       }),
       // Full-corpus distributed Lloyd's: 5 rounds x one scan + a
       // k x dim control-plane collect per round — alpha ~ the scan's,

@@ -32,7 +32,9 @@ import org.apache.spark.storage.StorageLevel
   * ONE PROTOCOL OVER THREE FAMILIES. An [[IndexFamily]] — [[Simhash]],
   * [[Hamming]] or [[Embedding]] — owns what differs per kind of
   * signature: the on-disk keys, the filtered read, the tagged append,
-  * the gate and the compaction grain. Three drivers run any family:
+  * the gate and the compaction grain. Reads, appends and compactions
+  * need only the keys ([[IndexKeys]]; [[Vectors]] names a vector
+  * index's columns without gate settings). Three drivers run any family:
   * [[gateAndUpdate]] (one batch epoch, optionally with a retention
   * [[Window]]), [[gateStream]] (the at-least-once streaming loop) and
   * [[gateStreamExactlyOnce]] (the ledgered loop, optionally windowed
@@ -112,26 +114,21 @@ object SeenIndex {
     */
   private[dedup] final case class AutoAbove(floorBytes: Long) extends Signatures
 
-  /** One index family: every decision a gate, an append, a read or a
-    * compaction makes per kind of signature. The drivers never ask
-    * which family they run.
+  /** The on-disk KEYS of an index — all a [[read]], an [[append]] or a
+    * [[compact]] needs: `(sig)` for the signature families, `(id, vec)`
+    * for [[Vectors]] and [[Embedding]]. Every [[IndexFamily]] is one;
+    * [[Vectors]] names a vector index's columns without gate settings.
     */
-  sealed abstract class IndexFamily extends Product with Serializable {
+  sealed abstract class IndexKeys extends Product with Serializable {
 
     private[SeenIndex] def keySchema: StructType = this match {
-      case _: Embedding => VecSchema
+      case _: Embedding | _: Vectors => VecSchema
       case _ => SigSchema
     }
 
-    /** The batch column a signature gate compares. */
-    private def gateCol: String = this match {
-      case Hamming(c, _) => c
-      case _ => "__sig"
-    }
-
-    /** The batch as the gate consumes it: the text family hashes into
-      * its working `__sig` column — and refuses a caller's column of
-      * that name rather than silently overwrite and drop it.
+    /** The frame as the gate and the append consume it: the text family
+      * hashes into its working `__sig` column — and refuses a caller's
+      * column of that name rather than silently overwrite and drop it.
       */
     private[SeenIndex] def prepare(batch: DataFrame): DataFrame = this match {
       case Simhash(textCol, _) =>
@@ -143,14 +140,60 @@ object SeenIndex {
       case _ => batch
     }
 
+    /** Append the keys of `kept` (a prepared frame) with the optional
+      * tags — null keys dropped (an unhashable row has nothing to
+      * remember; a null-id vector can never gate anything), distinct
+      * WITHIN the append. Keys only: a signature cache the append makes
+      * stale is rebuilt by the next [[Cached]] gate. Fails loud
+      * mid-compaction: parquet append on a missing main path would
+      * CREATE it — resurrecting the index as just this batch while
+      * `.compact-old` holds the only full copy.
+      */
+    private[SeenIndex] def appendKeys(
+        kept: DataFrame, path: String, epoch: Option[Long], admitted: Option[Long]): Unit = {
+      require(admitted.isEmpty || epoch.isDefined, "an admission stamp needs an epoch tag")
+      requireNotMidCompaction(fsFor(kept.sparkSession, new Path(path)), path)
+      val tags = epoch.map(lit(_).cast("long").as("epoch")).toSeq ++
+        admitted.map(lit(_).cast("long").as("admitted"))
+      def vec(vecCol: String, idCol: String) =
+        (Seq(col(idCol).cast("long").as("id"), col(vecCol).cast("array<float>").as("vec")),
+          col("vec").isNotNull && col("id").isNotNull)
+      def sig(sigCol: String) = (Seq(col(sigCol).cast("long").as("sig")), col("sig").isNotNull)
+      val (keys, present) = this match {
+        case Vectors(v, i) => vec(v, i)
+        case e: Embedding => vec(e.vecCol, e.idCol)
+        case Hamming(c, _) => sig(c)
+        case _: Simhash => sig("__sig")
+      }
+      kept.select(keys ++ tags: _*).filter(present).distinct().write.mode("append").parquet(path)
+    }
+  }
+
+  /** A vector index's key columns alone — for reading, appending to or
+    * compacting an index without an [[Embedding]] gate's settings.
+    */
+  final case class Vectors(vecCol: String, idCol: String) extends IndexKeys
+
+  /** One index family: every decision a gate makes per kind of
+    * signature, on top of its [[IndexKeys]]. The drivers never ask
+    * which family they run.
+    */
+  sealed abstract class IndexFamily extends IndexKeys {
+
+    /** The batch column a signature gate compares. */
+    private def gateCol: String = this match {
+      case Hamming(c, _) => c
+      case _ => "__sig"
+    }
+
     /** The admitted rows as the caller sees them. */
     private[SeenIndex] def output(kept: DataFrame): DataFrame = this match {
       case _: Simhash => kept.drop("__sig")
       case _ => kept
     }
 
-    /** Whether [[gateBatch]] pins the batch before gating (precomputed
-      * signatures carry an expensive decode upstream).
+    /** Whether the batch driver pins the batch before gating
+      * (precomputed signatures carry an expensive decode upstream).
       */
     private[SeenIndex] def pinsBatch: Boolean = isInstanceOf[Hamming]
 
@@ -193,30 +236,17 @@ object SeenIndex {
         case Hamming(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m) -> (() => ())
       }
 
-    /** Append the keys of `kept` (a prepared frame) with the optional
-      * tags — null keys dropped (an unhashable row has nothing to
-      * remember; a null-id vector can never gate anything), distinct
-      * WITHIN the append. The cached form then appends the matching
-      * signature rows and re-marks the cache: index first (the source
-      * of truth), cache second, marker last, so a crash in between
-      * leaves a marker naming the pre-append file set and the next gate
-      * heals by rebuild. Fails loud mid-compaction: parquet append on a
-      * missing main path would CREATE it — resurrecting the index as
-      * just this batch while `.compact-old` holds the only full copy.
+    /** The drivers' append of a gated batch: its keys, and for the cached
+      * form the matching signature rows and a fresh sync marker — index
+      * first (the source of truth), cache second, marker last, so a
+      * crash in between leaves a marker naming the pre-append file set
+      * and the next gate heals by rebuild. Runs only after [[reference]]
+      * validated the cache against this very index, so the cache
+      * mirrors the index up to this append.
       */
-    private[SeenIndex] def append(
+    private[SeenIndex] def admit(
         kept: DataFrame, path: String, epoch: Option[Long], admitted: Option[Long]): Unit = {
-      require(admitted.isEmpty || epoch.isDefined, "an admission stamp needs an epoch tag")
-      requireNotMidCompaction(fsFor(kept.sparkSession, new Path(path)), path)
-      val tags = epoch.map(lit(_).cast("long").as("epoch")).toSeq ++
-        admitted.map(lit(_).cast("long").as("admitted"))
-      val (keys, present) = this match {
-        case e: Embedding =>
-          (Seq(col(e.idCol).cast("long").as("id"), col(e.vecCol).cast("array<float>").as("vec")),
-            col("vec").isNotNull && col("id").isNotNull)
-        case _ => (Seq(col(gateCol).cast("long").as("sig")), col("sig").isNotNull)
-      }
-      kept.select(keys ++ tags: _*).filter(present).distinct().write.mode("append").parquet(path)
+      appendKeys(kept, path, epoch, admitted)
       this match {
         case e: Embedding if e.signatures == Cached =>
           val dir = sigsDir(path, e.planes)
@@ -373,7 +403,7 @@ object SeenIndex {
     deleteOrThrow(fs, bak)
   }
 
-  /** The index's key rows — `sig`, or `(id, vec)` for [[Embedding]] —
+  /** The index's key rows — `sig`, or `(id, vec)` for a vector index —
     * possibly with cross-epoch duplicates; `minEpoch` / `minAdmitted`
     * restrict them to the history a windowed gate sees (untagged rows
     * always pass). A missing or empty directory reads as an EMPTY index
@@ -382,27 +412,26 @@ object SeenIndex {
     */
   def read(
       spark: SparkSession,
-      family: IndexFamily,
+      keys: IndexKeys,
       path: String,
       minEpoch: Option[Long] = None,
       minAdmitted: Option[Long] = None): DataFrame =
-    readIndex(spark, path, family.keySchema, View(minEpoch = minEpoch, minAdmitted = minAdmitted))
+    readIndex(spark, path, keys.keySchema, View(minEpoch = minEpoch, minAdmitted = minAdmitted))
 
-  /** Append `df`'s keys — the family's signature (the text family hashes
+  /** Append `df`'s keys — the signature column (the text family hashes
     * `textCol`), or `(idCol, vecCol)` — to the index, optionally tagged
     * with an `epoch` and an `admitted` stamp (see [[tagged]]). Tagged
-    * and untagged appends mix freely in one directory. A [[Cached]]
-    * family maintains its signature cache in lockstep.
+    * and untagged appends mix freely in one directory. Writes the index
+    * only, whatever `signatures` an [[Embedding]] names: its signature
+    * caches go stale and the next [[Cached]] gate rebuilds them.
     */
   def append(
       df: DataFrame,
-      family: IndexFamily,
+      keys: IndexKeys,
       path: String,
       epoch: Option[Long] = None,
-      admitted: Option[Long] = None): Unit = {
-    val f = family.resolved(df.sparkSession, path)
-    f.append(f.prepare(df), path, epoch, admitted)
-  }
+      admitted: Option[Long] = None): Unit =
+    keys.appendKeys(keys.prepare(df), path, epoch, admitted)
 
   // ---- the three drivers ----
 
@@ -417,7 +446,7 @@ object SeenIndex {
     *     checkpoint pins the admitted set to the pre-append listing and
     *     truncates the lineage. (On a cluster where executor loss
     *     matters use a reliable checkpoint dir.)
-    *   - BOOTSTRAP (`skipEmptyIndex`, the batch driver): an index with
+    *   - BOOTSTRAP (`batchEpoch`, the batch driver only): an index with
     *     no parquet admits the whole batch (an anti-join against the
     *     matches of an empty set keeps every row, null signatures
     *     included), so the gate is skipped and only the checkpoint and
@@ -425,28 +454,31 @@ object SeenIndex {
     *     spent ~half their sequential jobs gating epoch 1 against a
     *     provably empty index). The stream loops gate their first batch
     *     anyway: skipping it there only moves the gate's first-run cost
-    *     (codegen, JIT) into the next micro-batch (measured on the
-    *     ingest_epochs workload: median batch +6%).
-    *   - PINNED BATCH: a [[Hamming]] batch is checkpointed first. The
-    *     gate consumes it twice in one action, and AQE materializes both
-    *     query stages CONCURRENTLY, so under a lazy persist both raced
-    *     one unfilled cache and paid the media decode upstream twice
-    *     (measured r20: q105's epoch stages at 7.1 s + 5.3 s of task
-    *     time). A batch the CALLER persisted is used as is and never
-    *     unpersisted here. The text family is not pinned: recomputing
-    *     one tokenize+SimHash pass is cheaper than caching the text
-    *     (measured r19: q103 1.2 -> 4.8 s with a persist).
+    *     (codegen, JIT) into the next micro-batch (ingest_epochs
+    *     workload, 4 cores: op_cpu_s median +7% over 6 interleaved run
+    *     pairs).
+    *   - PINNED BATCH (`batchEpoch`, the batch driver only): a
+    *     [[Hamming]] batch is checkpointed first. The gate consumes it
+    *     twice in one action, and AQE materializes both query stages
+    *     CONCURRENTLY, so under a lazy persist both raced one unfilled
+    *     cache and paid the media decode upstream twice (measured r20:
+    *     q105's epoch stages at 7.1 s + 5.3 s of task time). A batch the
+    *     CALLER persisted is used as is and never unpersisted here. The
+    *     text family is not pinned: recomputing one tokenize+SimHash
+    *     pass is cheaper than caching the text (measured r19: q103 1.2
+    *     -> 4.8 s with a persist). The stream loops do not pin their
+    *     micro-batches.
     */
   private def gateBatch(
       input: DataFrame,
       family: IndexFamily,
       path: String,
       view: View,
-      skipEmptyIndex: Boolean = false): Releasable[DataFrame] = {
+      batchEpoch: Boolean = false): Releasable[DataFrame] = {
     val spark = input.sparkSession
     val ref = family.reference(spark, path, view)
-    val bootstrap = skipEmptyIndex && indexEmpty(spark, path)
-    val pin = family.pinsBatch && input.storageLevel == StorageLevel.NONE
+    val bootstrap = batchEpoch && indexEmpty(spark, path)
+    val pin = batchEpoch && family.pinsBatch && input.storageLevel == StorageLevel.NONE
     val pinned = if (pin) input.localCheckpoint(true) else input
     val kept =
       if (bootstrap) { if (family.pinsBatch) pinned else pinned.localCheckpoint(true) }
@@ -470,8 +502,8 @@ object SeenIndex {
       window: Option[Window] = None): Releasable[DataFrame] = {
     val f = family.resolved(batch.sparkSession, path)
     val kept = gateBatch(f.prepare(batch), f, path, View(minEpoch = window.map(_.minEpoch)),
-      skipEmptyIndex = true)
-    f.append(kept.result, path, window.map(_.epoch), None)
+      batchEpoch = true)
+    f.admit(kept.result, path, window.map(_.epoch), None)
     Releasable(f.output(kept.result), kept.release)
   }
 
@@ -488,9 +520,11 @@ object SeenIndex {
     Releasable(f.output(gated), release)
   }
 
-  /** The durable gate as a STREAMING ingest loop: every micro-batch
-    * runs one [[gateAndUpdate]] epoch against `indexPath`, appends the
-    * admitted rows to `outPath`, then their keys to the index. The
+  /** The durable gate as a STREAMING ingest loop: every micro-batch is
+    * gated against `indexPath` by the same step as [[gateAndUpdate]]'s
+    * (with no bootstrap skip and no batch pin, see [[gateBatch]]), its
+    * admitted rows are appended to `outPath`, then their keys to the
+    * index. The
     * reference GROWS with every admitted arrival (unlike the
     * stream-static [[graft.streaming.StreamingOps.dropSeenHammingStream]]),
     * and a restarted query — or another cluster — resumes with
@@ -516,7 +550,7 @@ object SeenIndex {
         val kept = gateBatch(f.prepare(batch), f, indexPath, View())
         try {
           f.output(kept.result).write.mode("append").parquet(outPath)
-          f.append(kept.result, indexPath, None, None)
+          f.admit(kept.result, indexPath, None, None)
         } finally kept.release()
       }
       .start()
@@ -588,7 +622,7 @@ object SeenIndex {
       crashpoint("gated")
       f.output(kept.result).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
       crashpoint("output")
-      f.append(kept.result, indexPath, Some(epoch), stamp.map(_._1))
+      f.admit(kept.result, indexPath, Some(epoch), stamp.map(_._1))
       crashpoint("appended")
       fs.create(committedMarker(indexPath, key), true).close()
     } finally kept.release()
@@ -661,7 +695,8 @@ object SeenIndex {
     * (windowed only) also deletes rows stamped before the horizon —
     * pass a value no later than every future window start.
     *
-    * Refuses an index of the other family: the schema-on-read
+    * Refuses an index with the other keys (`sig` vs `(id, vec)`): the
+    * schema-on-read
     * projection null-fills missing columns, so the wrong grain would
     * collapse the whole index to ONE null row. Materializes the rewrite
     * to a temp sibling FIRST (it reads the very files being replaced),
@@ -674,22 +709,22 @@ object SeenIndex {
     */
   def compact(
       spark: SparkSession,
-      family: IndexFamily,
+      keys: IndexKeys,
       path: String,
       windowed: Boolean = false,
       dropAdmittedBefore: Option[Long] = None): Unit = {
     require(windowed || dropAdmittedBefore.isEmpty,
       "dropAdmittedBefore applies to the windowed (key, epoch) grain only")
-    requireIndexFamily(spark, path, family)
-    val keys = family.keySchema.fieldNames.toSeq ++ (if (windowed) Seq("epoch") else Nil)
+    requireIndexFamily(spark, path, keys)
+    val grain = keys.keySchema.fieldNames.toSeq ++ (if (windowed) Seq("epoch") else Nil)
     def collapse(df: DataFrame, ride: Seq[String]): DataFrame = {
-      val c = collapseLatest(df, keys, ride)
+      val c = collapseLatest(df, grain, ride)
       dropAdmittedBefore.fold(c)(h => c.filter(col("admitted").isNull || col("admitted") >= h))
     }
     val p = new Path(path)
-    val vectors = family.isInstanceOf[Embedding]
+    val vectors = keys.keySchema == VecSchema
     val fpBefore = if (vectors) indexFingerprint(fsFor(spark, p), p) else ""
-    compactInto(spark, path)(collapse(_, Nil))(tagged(family.keySchema))
+    compactInto(spark, path)(collapse(_, Nil))(tagged(keys.keySchema))
     // signatures are functions of the vector alone, so they ride the
     // group-by: the carried cache is row for row the compacted index
     if (vectors) carrySigCaches(spark, path, fpBefore)(collapse(_, Seq("sig", "rsig", "rsig2")))
@@ -730,12 +765,12 @@ object SeenIndex {
     else Some(spark.read.parquet(path).schema.fieldNames.contains("vec"))
   }
 
-  private def requireIndexFamily(spark: SparkSession, path: String, family: IndexFamily): Unit = {
-    val wantVec = family.isInstanceOf[Embedding]
+  private def requireIndexFamily(spark: SparkSession, path: String, keys: IndexKeys): Unit = {
+    val wantVec = keys.keySchema == VecSchema
     storedVectors(spark, path).filter(_ != wantVec).foreach { isVec =>
       throw new IllegalStateException(
-        s"compact: $path is a ${if (isVec) "VECTOR" else "SIGNATURE"} index but the family " +
-          s"is $family — its ${family.keySchema.fieldNames.mkString("(", ", ", ")")} group-by " +
+        s"compact: $path is a ${if (isVec) "VECTOR" else "SIGNATURE"} index but the keys " +
+          s"are $keys — their ${keys.keySchema.fieldNames.mkString("(", ", ", ")")} group-by " +
           "would collapse the index to a single null row and destroy it")
     }
   }
@@ -1063,12 +1098,12 @@ object SeenIndex {
   //     Similarity.withSignatures projection the live path uses, so
   //     cached and live signatures are bit-identical by construction;
   //     degenerate vectors ride along with null signatures;
-  //   - appends run in LOCKSTEP (index, cache, then marker), and the
-  //     cache carries a SYNC MARKER `_synced-<fp>` naming the exact
-  //     index file set it mirrors (fp = hash of the sorted part-file
-  //     (name, length) pairs — one listing, no Spark job). Any
-  //     divergence — a torn lockstep append, an out-of-band compaction,
-  //     a direct append through a [[Live]] family — fails the
+  //   - a [[Cached]] gate's append runs in LOCKSTEP (index, cache,
+  //     then marker), and the cache carries a SYNC MARKER `_synced-<fp>`
+  //     naming the exact index file set it mirrors (fp = hash of the
+  //     sorted part-file (name, length) pairs — one listing, no Spark
+  //     job). Any divergence — a torn lockstep append, an out-of-band
+  //     compaction, a [[Live]] gate's or a direct [[append]] — fails the
   //     comparison and triggers one rebuild. Part-file names carry
   //     write UUIDs, so no append or rewrite can reproduce a prior
   //     fingerprint (row-count parity could not tell a compaction that

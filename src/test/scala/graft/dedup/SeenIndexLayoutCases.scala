@@ -52,7 +52,7 @@ object SeenIndexLayoutCases {
 
   private def batch(r: graft.core.Releasable[DataFrame]): Unit = { r.result.count(); r.release() }
 
-  import SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Live, Simhash, Window}
+  import SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Live, Simhash, Vectors, Window}
   private def emb(signatures: SeenIndex.Signatures, vecCol: String = "embedding", idCol: String = "vec_id") =
     Embedding(vecCol, idCol, threshold = 0.9, planes = planes, broadcastVerify = true, signatures = signatures)
   private val text = Simhash("text")
@@ -70,9 +70,9 @@ object SeenIndexLayoutCases {
     "append/vec" -> { (s, r) =>
       import s.implicits._
       val v = Seq((1L, unit(0)), (2L, unit(1))).toDF("id", "vec")
-      SeenIndex.append(v, emb(Live, "vec", "id"), s"$r/idx")
-      SeenIndex.append(v, emb(Live, "vec", "id"), s"$r/idx", Some(4L))
-      SeenIndex.append(v, emb(Live, "vec", "id"), s"$r/idx", Some(6L), Some(700L))
+      SeenIndex.append(v, Vectors("vec", "id"), s"$r/idx")
+      SeenIndex.append(v, Vectors("vec", "id"), s"$r/idx", Some(4L))
+      SeenIndex.append(v, Vectors("vec", "id"), s"$r/idx", Some(6L), Some(700L))
     },
     // ---- batch gates ----
     "batch/simhash/forever" -> { (s, r) =>
@@ -204,11 +204,11 @@ object SeenIndexLayoutCases {
     },
     "compact/vec" -> { (s, r) =>
       import s.implicits._
-      SeenIndex.append(Seq((9L, unit(6))).toDF("id", "vec"), emb(Live, "vec", "id"), s"$r/idx", Some(2L))
+      SeenIndex.append(Seq((9L, unit(6))).toDF("id", "vec"), Vectors("vec", "id"), s"$r/idx", Some(2L))
       Seq(vecs1(s), vecs2(s)).foreach(b => batch(SeenIndex.gateAndUpdate(b, emb(Cached), s"$r/idx")))
-      SeenIndex.append(Seq((9L, unit(6))).toDF("id", "vec"), emb(Live, "vec", "id"), s"$r/idx", Some(3L))
+      SeenIndex.append(Seq((9L, unit(6))).toDF("id", "vec"), Vectors("vec", "id"), s"$r/idx", Some(3L))
       SeenIndex.ensureSigCache(s, s"$r/idx", planes)
-      SeenIndex.compact(s, emb(Cached), s"$r/idx")
+      SeenIndex.compact(s, Vectors("embedding", "vec_id"), s"$r/idx")
     },
     "compact/sig-windowed" -> { (s, r) =>
       import s.implicits._
@@ -226,7 +226,7 @@ object SeenIndexLayoutCases {
       twoBatches(s, vecRows._1, vecRows._2, Seq("vec_id", "embedding"), i => now = 100L + 150L * i)(
         SeenIndex.gateStreamExactlyOnce(_, emb(Cached), s"$r/idx", s"$r/out", s"$r/ckpt",
           windowAge = Some(100L), clock = () => now))
-      SeenIndex.compact(s, emb(Cached), s"$r/idx", windowed = true, dropAdmittedBefore = Some(150L))
+      SeenIndex.compact(s, Vectors("embedding", "vec_id"), s"$r/idx", windowed = true, dropAdmittedBefore = Some(150L))
     },
     "compact/ledger" -> { (s, r) =>
       import s.implicits._

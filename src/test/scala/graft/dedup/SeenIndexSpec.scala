@@ -1,14 +1,14 @@
 package graft.dedup
 
 import graft.SparkSpec
-import graft.dedup.SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Simhash, Window}
+import graft.dedup.SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Simhash, Vectors, Window}
 import org.apache.spark.sql.functions._
 
 class SeenIndexSpec extends SparkSpec {
 
   // the two index layouts, for reads, appends and compactions
   private val sigIndex = Hamming("sig")
-  private val vecIndex = Embedding("vec", "id", threshold = 0.9, planes = Array.empty[Array[Float]])
+  private val vecIndex = Vectors("vec", "id")
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("seen_index_").toString
@@ -1119,6 +1119,33 @@ class SeenIndexSpec extends SparkSpec {
       .schema("id LONG, vec ARRAY<FLOAT>, epoch LONG, admitted LONG, sig LONG, rsig LONG, rsig2 LONG")
       .parquet(tmpPathParent(pathS) + "/" + sigDirs.head).count()
     assert(cacheRows == idxRows, s"cache=$cacheRows index=$idxRows")
+  }
+
+  test("a direct append with a Cached family writes keys only: the next cached gate rebuilds and admits no historical duplicate") {
+    import sqlImplicits._
+    val dim = 8
+    val planes = graft.similarity.Similarity.hyperplanes(dim, numPlanes = 64)
+    def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
+    def emb(signatures: SeenIndex.Signatures) =
+      Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
+        broadcastVerify = true, signatures = signatures)
+    def gate(path: String, signatures: SeenIndex.Signatures, rows: Seq[(Long, Seq[Float])]): Set[Long] = {
+      val r = SeenIndex.gateAndUpdate(rows.toDF("vec_id", "embedding"), emb(signatures), path)
+      val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
+    }
+    def appendCached(path: String, rows: Seq[(Long, Seq[Float])]): Unit =
+      SeenIndex.append(rows.toDF("vec_id", "embedding"), emb(Cached), path)
+    // an index with parquet and NO cache (built by Live gates)
+    val live = tmpDir() + "/live"
+    assert(gate(live, SeenIndex.Live, Seq((1L, unit(0)), (2L, unit(1)))) == Set(1L, 2L))
+    appendCached(live, Seq((3L, unit(2))))
+    assert(gate(live, Cached, Seq((11L, unit(0)), (12L, unit(1)), (13L, unit(2)), (14L, unit(3)))) == Set(14L))
+    // a STALE cache: a Live gate admits past it, then a Cached append
+    val stale = tmpDir() + "/stale"
+    assert(gate(stale, Cached, Seq((1L, unit(0)))) == Set(1L))
+    assert(gate(stale, SeenIndex.Live, Seq((2L, unit(1)))) == Set(2L))
+    appendCached(stale, Seq((3L, unit(2))))
+    assert(gate(stale, Cached, Seq((11L, unit(0)), (12L, unit(1)), (13L, unit(2)), (14L, unit(3)))) == Set(14L))
   }
 
   test("signed exactly-once embedding ingest (plain + windowed): kills replay clean, a torn lockstep append heals, aged-out re-admits") {

@@ -2,11 +2,12 @@ package graft.dedup
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[SeenIndex]]'s public surface by reflection. Every gate,
-  * read, append and compaction takes an [[SeenIndex.IndexFamily]], so
-  * a change that brings back a per-family or per-delivery entry point
-  * (`gateAndUpdateSimhash`, `readVectors`, `compactWindowed`, ...) has
-  * to edit the sets below, where a reviewer sees it.
+/** Pins [[SeenIndex]]'s public surface by reflection. Every gate takes
+  * an [[SeenIndex.IndexFamily]] and every read, append and compaction
+  * an [[SeenIndex.IndexKeys]], so a change that brings back a
+  * per-family or per-delivery entry point (`gateAndUpdateSimhash`,
+  * `readVectors`, `compactWindowed`, ...) has to edit the sets below,
+  * where a reviewer sees it.
   */
 class SeenIndexSurfaceSpec extends AnyFunSuite {
 
@@ -32,13 +33,13 @@ class SeenIndexSurfaceSpec extends AnyFunSuite {
       "AutoSignBytes"))
   }
 
-  test("SeenIndex's public types are the three families, their options and the reports") {
+  test("SeenIndex's public types are the keys, the three families, their options and the reports") {
     val types = decls.collect {
       case c: ClassSymbol => c.name.decodedName.toString
       case m: ModuleSymbol if !m.isSynthetic && !m.companion.isClass => m.name.decodedName.toString
     }.toSet
     assert(types == Set(
-      "IndexFamily", "Simhash", "Hamming", "Embedding",
+      "IndexKeys", "Vectors", "IndexFamily", "Simhash", "Hamming", "Embedding",
       "Signatures", "Live", "Cached", "Auto",
       "Window", "IndexStats", "SigCacheInfo"))
   }
