@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main — runs every SparkEntry query on
@@ -35,28 +34,7 @@ object Bench {
     // Written relative to the working directory unless overridden —
     // the driver invokes from the repo root (see build.sbt outputStrategy).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE partition coalescing for CACHED plan fragments too (off by
-      // default for historical plan-stability reasons): the engine's
-      // hot paths persist small intermediates (miner signature
-      // projections, hamming member tables, shingle tables), and with
-      // this off every one of them — and every exchange downstream of
-      // it — is pinned at spark.sql.shuffle.partitions map tasks
-      // regardless of data size, each paying the per-shuffle-file
-      // fixed cost (measured r19: q90's post-cache stages were 32
-      // tasks x ~500 ms of shuffle-file I/O for ~5000 rows; with AQE
-      // they coalesce to 1 task x ~25 ms). Scale-adaptive by
-      // construction — AQE sizes partitions from bytes, so large data
-      // keeps large partition counts (guide §2).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sort-writer shuffle at low reducer counts — see GraftSession
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // 64k AQE coalescing floor — see GraftSession
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so session init is not billed to the first
     // query: one shuffle + one parquet footer read.

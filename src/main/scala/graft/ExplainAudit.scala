@@ -15,19 +15,9 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("local[4]", 4)
       // audit output: don't elide wide schemas/field lists in dumps
       .config("spark.sql.debug.maxToStringFields", "100")
-      // AQE coalescing for cached plan fragments — see Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sort-writer shuffle at low reducer counts — see GraftSession
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // 64k AQE coalescing floor — see GraftSession
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory for the engine: all the configuration the
-  * library depends on, in one place.
+  * library depends on, in one place. Every main builds its session here
+  * and layers only its own extras on top, so a benchmark measures the
+  * session library users get.
   *
   *  - shuffle partitions sized to the core count (never the 200
   *    default on a single node);

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -26,16 +25,7 @@ object ProfileQuery {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = args.lift(2).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val reps = args.lift(3).map(_.toInt).getOrElse(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing for cached plan fragments — see Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sort-writer shuffle at low reducer counts — see GraftSession
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // 64k AQE coalescing floor — see GraftSession
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder(s"local[$cpus]", cpus.toInt)
     // measurement escape hatch: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets a
     // profiling run A/B a conf without touching the engine sessions
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.CacheScope
 import graft.dedup.SeenIndex
 import graft.dedup.SeenIndex.{Cached, Live}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -283,11 +284,8 @@ object ScaleBench {
       "exact_dedup" -> (() => graft.dedup.Dedup.exactDedup(docs, "text", "doc_id").count()),
       "minhash_candidates" -> (() =>
         graft.dedup.Dedup.minhashCandidatePairs(docs, "text", "doc_id").count()),
-      "lsh_verified_jaccard" -> (() => {
-        val (pairs, release) =
-          graft.dedup.Dedup.verifyCandidatesReleasable(docs, "text", "doc_id", n = 3, threshold = 0.5)
-        val c = pairs.count(); release(); c
-      }),
+      "lsh_verified_jaccard" -> (() => CacheScope.run(spark)(
+        graft.dedup.Dedup.verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5).count())),
       "curation_pipeline" -> (() =>
         graft.text.CurationPipeline.run(spark, dir).table("curated").count()),
       // broadcastVerify: the vector table is n x 64 floats (15 MB at
@@ -354,10 +352,9 @@ object ScaleBench {
       // semantics) over this scale's real verified pair list. rows =
       // distinct clusters (a correctness signal, not just volume).
       "dup_clusters_forced_distributed" -> (() => {
-        val (pairs, release) = graft.dedup.Dedup
-          .verifyCandidatesReleasable(docs, "text", "doc_id", n = 3, threshold = 0.5)
-        val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
-        release()
+        val p = CacheScope.checkpoint(spark)(graft.dedup.Dedup
+          .verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5)
+          .select(col("id_a"), col("id_b")))
         val run = graft.dedup.Dedup.dupClustersDistributedRun(p, maxIter = 25)
         val nClusters = run.labels.dropDuplicates("cluster").count()
         ccExtra("dup_clusters_forced_distributed", run)
@@ -813,13 +810,10 @@ object ScaleBench {
             .toDF().select(col("media_id"), col("ahash"))
         val path = graft.core.TempDirs.create("scale_phash_index_")
         val family = SeenIndex.Hamming("ahash")
-        SeenIndex.gateAndUpdate(
-          hashes(docs.filter(col("doc_id") % 3 =!= 0)), family, path).release()
-        val e2 = SeenIndex.gateAndUpdate(
-          hashes(docs.filter(col("doc_id") % 3 === 0)), family, path)
-        val n = e2.result.count()
-        e2.release()
-        n
+        CacheScope.run(spark) {
+          SeenIndex.gateAndUpdate(hashes(docs.filter(col("doc_id") % 3 =!= 0)), family, path)
+          SeenIndex.gateAndUpdate(hashes(docs.filter(col("doc_id") % 3 === 0)), family, path).count()
+        }
       }),
       // Text ingest gate (batch vs reference SimHash anti-join):
       // output linear in the batch and reference text never shuffles
@@ -838,11 +832,10 @@ object ScaleBench {
       "ingest_epochs" -> (() => {
         val path = graft.core.TempDirs.create("scale_seen_index_")
         val family = SeenIndex.Simhash("text")
-        SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 =!= 0), family, path).release()
-        val e2 = SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 === 0), family, path)
-        val n = e2.result.count()
-        e2.release()
-        n
+        CacheScope.run(spark) {
+          SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 =!= 0), family, path)
+          SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 === 0), family, path).count()
+        }
       }),
       // Retention-window ingest (q106's scale twin): three windowed
       // epochs of the SAME slice — bootstrap, expiry re-admission,
@@ -852,11 +845,9 @@ object ScaleBench {
       "window_gate_epochs" -> (() => {
         val path = graft.core.TempDirs.create("scale_window_index_")
         val slice = docs.filter(col("doc_id") % 3 === 1)
-        def epoch(e: Long, minEpoch: Long): Long = {
-          val r = SeenIndex.gateAndUpdate(slice, SeenIndex.Simhash("text"),
-            path, Some(SeenIndex.Window(e, minEpoch)))
-          val n = r.result.count(); r.release(); n
-        }
+        def epoch(e: Long, minEpoch: Long): Long = CacheScope.run(spark)(
+          SeenIndex.gateAndUpdate(slice, SeenIndex.Simhash("text"),
+            path, Some(SeenIndex.Window(e, minEpoch))).count())
         epoch(1L, 0L) + epoch(10L, 5L) + epoch(11L, 6L)
       }),
       // Index compaction: three fully-overlapping tagged epochs (3n
@@ -923,8 +914,7 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_sigs")(buildHistSigs(spark, dir))
         () => {
           val batch = docs.filter(col("doc_id") % 3 === 0 && col("doc_id") < CopyStride)
-          SeenIndex.dropSeen(batch, SeenIndex.Simhash("text"), hist)
-            .result.count()
+          SeenIndex.dropSeen(batch, SeenIndex.Simhash("text"), hist).count()
         }
       },
       // The embedding twin: fixed ~0.7k-vector batch against a vector
@@ -950,8 +940,7 @@ object ScaleBench {
           // the Live family gates with the semi-prune the ingest
           // loops use (candidates batch-bound); verify plan symmetric
           // with the signed twin below
-          val r = SeenIndex.dropSeen(batch, histVecs(Live, gatePlanes), hist)
-          val n = r.result.count(); r.release(); n
+          CacheScope.run(spark)(SeenIndex.dropSeen(batch, histVecs(Live, gatePlanes), hist).count())
         }
       },
       // The SIGNED twin of embedding_gate_vs_history: same fixed
@@ -982,8 +971,7 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_vecs")(buildHistVecs(spark, dir))
         () => {
           val batch = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < CopyStride)
-          val r = SeenIndex.dropSeen(batch, histVecs(Cached, gatePlanesS), histS)
-          val n = r.result.count(); r.release(); n
+          CacheScope.run(spark)(SeenIndex.dropSeen(batch, histVecs(Cached, gatePlanesS), histS).count())
         }
       },
       // The crossover pair: same fixed batch, history 8x the vs_history
@@ -1002,8 +990,7 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_vecs8")(buildHistVecs8(spark, dir))
         () => {
           val batch = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < CopyStride)
-          val r = SeenIndex.dropSeen(batch, histVecs(Live, gatePlanes8), hist8)
-          val n = r.result.count(); r.release(); n
+          CacheScope.run(spark)(SeenIndex.dropSeen(batch, histVecs(Live, gatePlanes8), hist8).count())
         }
       },
       "embedding_gate_vs_history8_signed" -> {
@@ -1015,8 +1002,7 @@ object ScaleBench {
           ensureVsHistoryFixture(spark, dir, "hist_vecs8")(buildHistVecs8(spark, dir))
         () => {
           val batch = emb.filter(col("vec_id") % 3 === 0 && col("vec_id") < CopyStride)
-          val r = SeenIndex.dropSeen(batch, histVecs(Cached, gatePlanes8S), hist8S)
-          val n = r.result.count(); r.release(); n
+          CacheScope.run(spark)(SeenIndex.dropSeen(batch, histVecs(Cached, gatePlanes8S), hist8S).count())
         }
       },
       // Jaccard ingest gate (batch vs reference MinHash banding +
@@ -1050,14 +1036,13 @@ object ScaleBench {
           // released per call (the per-micro-batch production shape;
           // the plain form's LRU-keep made earlier rounds' run-2
           // numbers warm-cache reads — see embedding_gate_vs_history)
-          val (kept, rel) = graft.similarity.Similarity.dropSeenEmbeddingReleasable(
+          CacheScope.run(spark)(graft.similarity.Similarity.dropSeenEmbedding(
             emb.filter(col("vec_id") % 3 === 0),
             emb.filter(col("vec_id") % 3 =!= 0),
             "embedding", "vec_id", threshold = 0.9, gatePlanes,
             // gate regime: explicit opt-in now that the public
             // default is the robust pure-shuffle plan
-            semiPruneVerify = true)
-          val n = kept.count(); rel(); n
+            semiPruneVerify = true).count())
         }
       },
       // Durable two-epoch embedding ingest: epoch 1 writes the
@@ -1070,11 +1055,10 @@ object ScaleBench {
         () => {
           val path = graft.core.TempDirs.create("scale_vec_index_")
           val family = histVecs(Live, gatePlanes)
-          SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path).release()
-          val e2 = SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path)
-          val n = e2.result.count()
-          e2.release()
-          n
+          CacheScope.run(spark) {
+            SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path)
+            SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path).count()
+          }
         }
       },
       // Vector-index compaction: three fully-overlapping tagged
@@ -1235,17 +1219,7 @@ object ScaleBench {
     */
   private def fixturesMain(args: Array[String]): Unit = {
     val baseDir = args(1); val dir = args(2); val x = args(3).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // AQE coalescing for cached plan fragments — see Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sort-writer shuffle at low reducer counts — see GraftSession
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // 64k AQE coalescing floor — see GraftSession
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     try {
       spark.sparkContext.setLogLevel("WARN")
       ensureFixture(spark, baseDir, dir, x)
@@ -1299,17 +1273,7 @@ object ScaleBench {
       sys.env.get("SPARK_GRAFT_SCALE_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
         .filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // AQE coalescing for cached plan fragments — see Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sort-writer shuffle at low reducer counts — see GraftSession
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // 64k AQE coalescing floor — see GraftSession
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try { spark.range(1000000L).selectExpr("sum(id) s").collect() } catch { case NonFatal(_) => () }
 

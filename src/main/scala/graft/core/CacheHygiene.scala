@@ -29,7 +29,7 @@ object CacheHygiene {
   def resetAll(spark: SparkSession): Unit = {
     // keep the pool's bookkeeping in step with the wholesale drop below
     // (unpersisting twice is a no-op, so the order is immaterial)
-    CachePool.drain(spark)
+    CacheScope.drain(spark)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }

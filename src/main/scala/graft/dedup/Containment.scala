@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.CacheScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,7 +109,8 @@ object Containment {
     * instead of Σ|A|). Documents whose every shingle is hot
     * still pay that bucket's cost — that is the measure's intrinsic
     * price, not a plan defect (their qualifying partners genuinely
-    * live in those buckets).
+    * live in those buckets). The checkpointed shingle table lives as
+    * long as the enclosing [[graft.core.CacheScope]].
     */
   def containmentPairsPrefix(
       df: DataFrame,
@@ -119,41 +121,6 @@ object Containment {
     containmentPairsPrefixDetailed(df, textCol, idCol, n, threshold)
       .select("id_a", "id_b", "containment")
 
-  /** [[containmentPairsPrefix]] with an explicit release handle over
-    * the persisted shingle table (see [[graft.core.Releasable]]) —
-    * for long-lived applications that mine containment repeatedly and
-    * must not accumulate session-lifetime cache entries. Call
-    * `release()` after the terminal action on `result`.
-    */
-  def containmentPairsPrefixReleasable(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8): graft.core.Releasable[DataFrame] = {
-    val (out, sh) = containmentPairsPrefixImpl(df, textCol, idCol, n, threshold)
-    graft.core.Releasable(
-      out.select("id_a", "id_b", "containment"),
-      () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(sh); () })
-  }
-
-  private def containmentPairsPrefixDetailed(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      threshold: Double): DataFrame = {
-    val (out, sh) = containmentPairsPrefixImpl(df, textCol, idCol, n, threshold)
-    // plain form: bound the checkpointed shingle table instead of
-    // leaking it (checkpoint blocks never LRU-age out; see CachePool)
-    graft.core.CachePool.register(df.sparkSession, () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(sh); () })
-    out
-  }
-
-  /** Returns the pair frame plus the persisted shingle table backing
-    * it, so the public wrappers can either drop the handle (default:
-    * LRU ages it out) or surface it ([[containmentPairsPrefixReleasable]]).
-    */
   /** The rarest-first prefix slice both prefix paths share (review
     * r18: previously two hand-synced copies of the window block and
     * the pigeonhole length formula). Order: document frequency ASC,
@@ -184,12 +151,12 @@ object Containment {
       .select("id", "g")
   }
 
-  private def containmentPairsPrefixImpl(
+  private def containmentPairsPrefixDetailed(
       df: DataFrame,
       textCol: String,
       idCol: String,
       n: Int,
-      threshold: Double): (DataFrame, DataFrame) = {
+      threshold: Double): DataFrame = {
     requireThreshold(threshold)
     // EAGER localCheckpoint, not a lazy persist: the shingle table
     // feeds ~4 independent plan branches (dfreq, the prefix join, the
@@ -202,7 +169,7 @@ object Containment {
     // branch then reads the materialized blocks. (Receipt r19 #5: an
     // eager count() fill regressed q86 — the checkpoint replaces the
     // cache entirely instead of pre-filling it.)
-    val sh = shingleTable(df, textCol, idCol, n).localCheckpoint(true)
+    val sh = CacheScope.checkpoint(df.sparkSession)(shingleTable(df, textCol, idCol, n))
 
     // Global shingle order + pigeonhole prefix length: see
     // prefixSlice (the ONE definition both prefix paths share)
@@ -248,7 +215,7 @@ object Containment {
     // carried, just array-packed — n_sh is size(gs), so the separate
     // sizes aggregate disappears with the expansion joins.
     val sets = sh.groupBy("id").agg(collect_set(col("g")).as("gs"))
-    val out = cand
+    cand
       .join(sets.toDF("id_a", "gs_a"), "id_a")
       .join(sets.toDF("id_b", "gs_b"), "id_b")
       .select(
@@ -260,11 +227,6 @@ object Containment {
         col("shared").cast("double") / least(col("na"), col("nb")).cast("double"))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "containment", "na", "nb")
-    // The checkpoint above is consumed by 4 branches of ONE job; the
-    // default wrappers let it age out naturally rather than
-    // unpersisting under a lazy result, and the Releasable wrapper
-    // hands the choice to the caller.
-    (out, sh)
   }
 
   /** `(id, g)` — shingle-hash table, distinct PER ROW
@@ -304,34 +266,13 @@ object Containment {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    val r = dropContainedReleasable(df, textCol, idCol, n, threshold)
-    graft.core.CachePool.register(df.sparkSession, r.release) // bound, don't leak
-    r.result
-  }
-
-  /** [[dropContained]] with a release handle over the persisted
-    * shingle table — the form a long-lived service looping the
-    * resolution must use (review r18: the plain form persists per
-    * call and disk-persisted blocks are not LRU-reclaimed, so
-    * repeated calls accumulate dead cache entries; same contract as
-    * every other `*Releasable` here).
-    */
-  def dropContainedReleasable(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8): graft.core.Releasable[DataFrame] = {
-    val (pairs, sh) = containmentPairsPrefixImpl(df, textCol, idCol, n, threshold)
-    val losers = pairs
+    val losers = containmentPairsPrefixDetailed(df, textCol, idCol, n, threshold)
       .select(
         when(col("na") < col("nb"), col("id_a"))
           .when(col("nb") < col("na"), col("id_b"))
           .otherwise(greatest(col("id_a"), col("id_b"))).as("__loser"))
       .distinct()
-    graft.core.Releasable(
-      df.join(losers, df(idCol) === col("__loser"), "left_anti"),
-      () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(sh); () })
+    df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
 
   /** Containment ACROSS two corpora — the COVERAGE pair miner behind
@@ -362,28 +303,12 @@ object Containment {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    val r = containmentPairsAgainstReleasable(batch, ref, textCol, idCol, n, threshold)
-    graft.core.CachePool.register(batch.sparkSession, r.release) // bound, don't leak
-    r.result
-  }
-
-  /** [[containmentPairsAgainst]] with a release handle over the two
-    * persisted shingle tables (each feeds multiple join branches).
-    * Call `release()` after the terminal action.
-    */
-  def containmentPairsAgainstReleasable(
-      batch: DataFrame,
-      ref: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8): graft.core.Releasable[DataFrame] = {
     requireThreshold(threshold)
     // eager checkpoints, not lazy persists — each table feeds 3 plan
     // branches whose AQE stages raced the unfilled cache (same
-    // mechanism and measurement as containmentPairsPrefixImpl)
-    val shA = shingleTable(batch, textCol, idCol, n).localCheckpoint(true)
-    val shB = shingleTable(ref, textCol, idCol, n).localCheckpoint(true)
+    // mechanism and measurement as containmentPairsPrefixDetailed)
+    val shA = CacheScope.checkpoint(batch.sparkSession)(shingleTable(batch, textCol, idCol, n))
+    val shB = CacheScope.checkpoint(batch.sparkSession)(shingleTable(ref, textCol, idCol, n))
     // rarest-in-reference first; absent shingles rank as dfreq 0 —
     // see prefixSlice (the ONE definition both prefix paths share)
     val dfreqRef = shB.groupBy("g").agg(count(lit(1)).as("__dfreq"))
@@ -393,12 +318,12 @@ object Containment {
       .select("id_a", "id_b")
       .distinct()
     // pair-grain set-intersection verification — same restructuring
-    // and measurement as containmentPairsPrefixImpl (one
+    // and measurement as containmentPairsPrefixDetailed (one
     // array_intersect per candidate instead of a |A|-way expansion
     // join; na is size(gs_a), so the separate count aggregate folds in)
     val setsA = shA.groupBy("id").agg(collect_set(col("g")).as("gs"))
     val setsB = shB.groupBy("id").agg(collect_set(col("g")).as("gs"))
-    val out = cand
+    cand
       .join(setsA.toDF("id_a", "gs_a"), "id_a")
       .join(setsB.toDF("id_b", "gs_b"), "id_b")
       .select(
@@ -407,12 +332,6 @@ object Containment {
           size(col("gs_a")).cast("double")).as("containment"))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "containment")
-    graft.core.Releasable(out,
-      () => {
-        org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(shA)
-        org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(shB)
-        ()
-      })
   }
 
   /** The COVERAGE ingest gate — keep only the batch rows whose
@@ -434,27 +353,8 @@ object Containment {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    val r = dropSeenContainedReleasable(batch, ref, textCol, idCol, n, threshold)
-    graft.core.CachePool.register(batch.sparkSession, r.release) // bound, don't leak
-    r.result
-  }
-
-  /** [[dropSeenContained]] with a release handle over BOTH persisted
-    * shingle tables (batch + the corpus-token-sized exploded
-    * reference) — the form a per-batch ingest loop must call (review
-    * r18: the plain gate dropped the handle, so a long-running
-    * service accumulated two dead cache entries per batch).
-    */
-  def dropSeenContainedReleasable(
-      batch: DataFrame,
-      ref: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8): graft.core.Releasable[DataFrame] = {
-    val r = containmentPairsAgainstReleasable(batch, ref, textCol, idCol, n, threshold)
-    val seen = r.result.select(col("id_a").as("__seen_id")).distinct()
-    graft.core.Releasable(
-      batch.join(seen, batch(idCol) === col("__seen_id"), "left_anti"), r.release)
+    val seen = containmentPairsAgainst(batch, ref, textCol, idCol, n, threshold)
+      .select(col("id_a").as("__seen_id")).distinct()
+    batch.join(seen, batch(idCol) === col("__seen_id"), "left_anti")
   }
 }

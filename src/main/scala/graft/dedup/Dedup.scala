@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.CacheScope
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -133,25 +134,15 @@ object Dedup {
     * longer are. Only ids and 8-byte band keys ride any exchange; the
     * signatures re-join at id grain where needed
     * ([[minhashCandidatePairs]]).
-    *
-    * Returns the pair frame AND a release thunk for the two internal
-    * persists (class table + member map) — callers thread it into
-    * their own Releasable handle so a long-lived session's repeated
-    * mining calls don't pin cache entries for the JVM lifetime.
     */
-  private def candidatePairsFromSig(
-      sig: DataFrame, numHashes: Int, bands: Int): (DataFrame, () => Unit) = {
+  private def candidatePairsFromSig(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     // class table (sig -> surrogate key = min id) via a map-side
     // combined AGGREGATE, never a sig-partitioned window (a window
     // would put each mega-class in one task — the hazard this shape
     // exists to remove); both it and the member map are multi-consumer
-    // so they persist lazily (LRU trade, see videoDupPairsReleasable)
-    val classKeys = sig
-      .groupBy(col("sig")).agg(min(col("id")).as("__sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val members = sig.join(classKeys, Seq("sig"))
-      .select(col("id"), col("__sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // so they persist lazily (see graft.core.CacheScope)
+    val classKeys = CacheScope.persist(sig.groupBy(col("sig")).agg(min(col("id")).as("__sk")))
+    val members = CacheScope.persist(sig.join(classKeys, Seq("sig")).select(col("id"), col("__sk")))
     // one banded row set per CLASS
     val classes = classKeys
       .select(col("__sk"), explode(bandStructs(col("sig"), numHashes, bands)).as("bk"))
@@ -165,7 +156,7 @@ object Dedup {
       .filter(col("sk_a") <= col("sk_b"))
       .select("sk_a", "sk_b")
       .distinct()
-    val pairs = classPairs
+    classPairs
       .join(members.toDF("__ma", "sk_a").hint("shuffle_hash"), "sk_a")
       .join(members.toDF("__mb", "sk_b").hint("shuffle_hash"), "sk_b")
       // distinct classes: every member combination collides (ordered
@@ -174,13 +165,14 @@ object Dedup {
       .select(
         least(col("__ma"), col("__mb")).as("id_a"),
         greatest(col("__ma"), col("__mb")).as("id_b"))
-    pairs -> (() => { classKeys.unpersist(); members.unpersist(); () })
   }
 
   /** LSH candidate pairs: band the signature (`bands` x `rowsPerBand`),
     * hash each band, self-join on (band, bandHash). Returns distinct
     * (id_a < id_b) candidate pairs with their estimated Jaccard =
-    * fraction of agreeing minhash components.
+    * fraction of agreeing minhash components. Three internal caches
+    * (the signature table and the banding pass's class/member maps)
+    * live as long as the enclosing [[graft.core.CacheScope]].
     */
   def minhashCandidatePairs(
       df: DataFrame,
@@ -189,39 +181,19 @@ object Dedup {
       n: Int = 3,
       numHashes: Int = 32,
       bands: Int = 8,
-      seed: Long = 42L): DataFrame =
-    minhashCandidatePairsReleasable(df, textCol, idCol, n, numHashes, bands, seed)._1
-
-  /** [[minhashCandidatePairs]] plus a scoped release handle for the
-    * three internal persists (the signature table and the banding
-    * pass's class/member maps). The plain form leaves them cached —
-    * the LRU trade a repeated dedup workload wants; a long-lived
-    * session running ONE mining pass should call the thunk after its
-    * terminal action (same contract as [[verifyCandidatesReleasable]]).
-    */
-  def minhashCandidatePairsReleasable(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 8,
-      seed: Long = 42L): (DataFrame, () => Unit) = {
+      seed: Long = 42L): DataFrame = {
     // Two tight expressions end to end: text -> distinct shingle
     // hashes (one byte-level pass, [[ShingleHashes]]) -> signature
     // (one pass over the hash array, [[MinHashSig]]). No strings are
     // built and no interpreted higher-order function runs on this path.
-    val sig = df
+    // feeds the banding pass and the two id-grain signature lookups
+    // below — lazy persist, one shingling/minhash pass total
+    val sig = CacheScope.persist(df
       .select(col(idCol).as("id"), ShingleHashes.shingleHashes(col(textCol), n).as("__gh"))
-      .select(col("id"), MinHashSig.minhashSig(col("__gh"), numHashes, seed).as("sig"))
-      // feeds the banding pass and the two id-grain signature lookups
-      // below — lazy persist, one shingling/minhash pass total (LRU
-      // trade as documented at PerceptualHash.videoDupPairsReleasable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), MinHashSig.minhashSig(col("__gh"), numHashes, seed).as("sig")))
     // signatures rejoin AT ID GRAIN after the distinct — shuffle-hash
     // so the candidate stream is never sorted carrying the arrays
-    val (cand, releaseBanding) = candidatePairsFromSig(sig, numHashes, bands)
-    val pairs = cand
+    candidatePairsFromSig(sig, numHashes, bands)
       .join(sig.toDF("id_a", "sig_a").hint("shuffle_hash"), "id_a")
       .join(sig.toDF("id_b", "sig_b").hint("shuffle_hash"), "id_b")
       .withColumn(
@@ -230,7 +202,6 @@ object Dedup {
           zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, x) => acc + x).cast("double") / numHashes)
       .select("id_a", "id_b", "est_jaccard")
-    pairs -> (() => { releaseBanding(); sig.unpersist(); () })
   }
 
   /** Transitive duplicate clusters from a verified pair list:
@@ -614,35 +585,13 @@ object Dedup {
       sigCol: String,
       maxHamming: Int,
       bands: Int = 4): DataFrame = {
-    val (out, release) = hammingPairsReleasable(df, idCol, sigCol, maxHamming, bands)
-    // the plain form has no "after the action" point to release at —
-    // bound the accumulated internal caches instead of leaking them
-    // (MEMORY_AND_DISK entries never LRU-age out of the disk store)
-    graft.core.CachePool.register(df.sparkSession, release)
-    out
-  }
-
-  /** [[hammingPairs]] plus a release thunk for the internal persisted
-    * member table — for callers that must leave no cache entry behind
-    * (the media Releasable wrappers compose it into their handles;
-    * the plain form routes the thunk through the bounded
-    * [[graft.core.CachePool]] so long-lived sessions cannot
-    * accumulate unbounded cache state).
-    */
-  private[graft] def hammingPairsReleasable(
-      df: DataFrame,
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int,
-      bands: Int = 4): (DataFrame, () => Unit) = {
     // ONE persisted (id, sig) member table: five plan branches consume
     // it (banding, the two cross-expansion joins, both intra sides),
     // and the upstream is typically an EXPENSIVE decode/hash pass
     // (measured r19: q95's WAV-synthesis + Welch FFT executed twice at
     // ~70 s of task time each — the persist halves the query). 16-ish
     // bytes per id.
-    val members = memberTable(df, idCol, sigCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val members = CacheScope.persist(memberTable(df, idCol, sigCol))
     val sigEdges = sigHammingEdges(members, maxHamming, bands)
     // Cross-signature pairs: expand each near-sig edge to its member
     // cross product. Edges have sig_a < sig_b, so each unordered id
@@ -663,8 +612,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(lit(0L)).as("hamming")) // typed like the cross branch
-    (cross.unionByName(intra).select("id_a", "id_b", "hamming"),
-      () => { members.unpersist(blocking = false); () })
+    cross.unionByName(intra).select("id_a", "id_b", "hamming")
   }
 
   /** Distinct `(id, sig)` members with null ids/sigs dropped — a null
@@ -757,41 +705,15 @@ object Dedup {
       sigCol: String,
       maxHamming: Int,
       bands: Int = 4): DataFrame = {
-    val (out, release) =
-      hammingPairsAgainstReleasable(left, right, idCol, sigCol, maxHamming, bands)
-    // bounded-pool discipline, same as the plain hammingPairs form
-    graft.core.CachePool.register(left.sparkSession, release)
-    out
-  }
-
-  /** [[hammingPairsAgainst]] plus a release thunk for BOTH internal
-    * persisted member tables — the cross-corpus twin of
-    * [[hammingPairsReleasable]], for callers that must leave no cache
-    * entry behind.
-    */
-  private[graft] def hammingPairsAgainstReleasable(
-      left: DataFrame,
-      right: DataFrame,
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int,
-      bands: Int = 4): (DataFrame, () => Unit) = {
     // Both member tables feed two branches each (banding + the id
     // expansion join) over typically expensive decode/hash upstreams —
     // same persist rationale as hammingPairs.
-    val mL = memberTable(left, idCol, sigCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mR = memberTable(right, idCol, sigCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = sigHammingEdgesAgainst(mL.select("sig"), mR.select("sig"), maxHamming, bands)
+    val mL = CacheScope.persist(memberTable(left, idCol, sigCol))
+    val mR = CacheScope.persist(memberTable(right, idCol, sigCol))
+    sigHammingEdgesAgainst(mL.select("sig"), mR.select("sig"), maxHamming, bands)
       .join(mL.toDF("id_a", "sig_a"), "sig_a")
       .join(mR.toDF("id_b", "sig_b"), "sig_b")
       .select(col("id_a"), col("id_b"), col("hamming"))
-    (out, () => {
-      mL.unpersist(blocking = false)
-      mR.unpersist(blocking = false)
-      ()
-    })
   }
 
   /** Keep only the rows of `df` whose signature is NOT within
@@ -870,6 +792,13 @@ object Dedup {
     * comes from one more map-side-combined aggregate — no id-level
     * pair is ever materialized. Feed the result straight to
     * [[clusterRepresentatives]] for keep-best resolution.
+    *
+    * The `(id, sig)` members persist: they feed FOUR plan branches
+    * (signature distinct, anchor aggregate, bridge join, membership
+    * join) and typically sit behind an expensive upstream (media
+    * decode, tokenization) that would otherwise re-execute once per
+    * branch. 16-ish bytes per id; the eager signature-space CC
+    * materializes it as its first job.
     */
   def hammingClusters(
       df: DataFrame,
@@ -878,32 +807,8 @@ object Dedup {
       maxHamming: Int,
       bands: Int = 4,
       maxIter: Int = 20,
-      collectThreshold: Long = 10000000L): DataFrame =
-    hammingClustersReleasable(df, idCol, sigCol, maxHamming, bands, maxIter, collectThreshold).result
-
-  /** [[hammingClusters]] with an explicit release handle over the
-    * persisted member table (see [[graft.core.Releasable]]). The
-    * `(id, sig)` members feed FOUR plan branches (signature distinct,
-    * anchor aggregate, bridge join, membership join) and typically
-    * sit behind an expensive upstream (media decode, tokenization) —
-    * without the persist that upstream would re-execute once per
-    * branch. The table itself is 16-ish bytes per id
-    * (MEMORY_AND_DISK, spills rather than evicts), the eager
-    * signature-space CC materializes it as its first job, and the
-    * default entry point lets it age out of the LRU store — the
-    * right trade for one-shot batch jobs; long-lived services call
-    * this variant and `release()` after their terminal action.
-    */
-  def hammingClustersReleasable(
-      df: DataFrame,
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int,
-      bands: Int = 4,
-      maxIter: Int = 20,
-      collectThreshold: Long = 10000000L): graft.core.Releasable[DataFrame] = {
-    val members = memberTable(df, idCol, sigCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      collectThreshold: Long = 10000000L): DataFrame = {
+    val members = CacheScope.persist(memberTable(df, idCol, sigCol))
     val sigEdges = sigHammingEdges(members, maxHamming, bands)
     // An id carrying SEVERAL sigs bridges their components exactly as
     // it does in the pair-based path (hammingPairs pairs it with both
@@ -933,9 +838,7 @@ object Dedup {
     // choosing between labels — they are already equal.
     val perId = labeled.groupBy("id").agg(min(col("__sc")).as("__sc"))
     val reps = perId.groupBy("__sc").agg(min(col("id")).as("cluster"))
-    graft.core.Releasable(
-      perId.join(reps, "__sc").select("id", "cluster"),
-      () => { members.unpersist(blocking = false); () })
+    perId.join(reps, "__sc").select("id", "cluster")
   }
 
   // ---------------------------------------------------- embedding cosine
@@ -1024,12 +927,8 @@ object Dedup {
     * (MEMORY_AND_DISK): three branches consume it — the signature
     * pass and both sides of the verification join — and without the
     * persist each branch would re-run the full-corpus byte-level
-    * shingling. It stays cached after the action (an index a repeated
-    * dedup workload wants warm); callers that run ONE dedup pass and
-    * move on should use [[verifyCandidatesReleasable]] and invoke the
-    * returned release handle after their action, which unpersists just
-    * this dataset (`spark.catalog.clearCache()` remains the blunt
-    * global fallback).
+    * shingling. It and the banding pass's class/member maps live as
+    * long as the enclosing [[graft.core.CacheScope]].
     */
   def verifyCandidates(
       df: DataFrame,
@@ -1039,29 +938,10 @@ object Dedup {
       threshold: Double = 0.5,
       numHashes: Int = 32,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame =
-    verifyCandidatesReleasable(df, textCol, idCol, n, threshold, numHashes, bands, seed)._1
-
-  /** [[verifyCandidates]] plus a scoped release handle: calling the
-    * returned thunk unpersists the internal shingle-hash cache AND the
-    * banding pass's class/member maps (a no-op if already dropped).
-    * Call it AFTER the action that consumes the pairs — the result
-    * DataFrame is lazy and releasing early forces each verification
-    * branch to re-shingle the corpus.
-    */
-  def verifyCandidatesReleasable(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      seed: Long = 42L): (DataFrame, () => Unit) = {
+      seed: Long = 42L): DataFrame = {
     // tiny-bytes / heavy-CPU shingling: see spreadIfNarrow (identity at scale)
-    val gs = graft.core.Parallelism.spreadIfNarrow(df)
-      .select(col(idCol).as("id"), ShingleHashes.shingleHashes(col(textCol), n).as("gs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gs = CacheScope.persist(graft.core.Parallelism.spreadIfNarrow(df)
+      .select(col(idCol).as("id"), ShingleHashes.shingleHashes(col(textCol), n).as("gs")))
     // Shingle-less docs (< n tokens) never reach a positive Jaccard
     // threshold, so they leave the candidate stage entirely. This is
     // not just a skip: their MinHash signature is the all-sentinel
@@ -1070,9 +950,7 @@ object Dedup {
     // non-matches) and the exact verify would then divide 0 by 0.
     val sig = gs.filter(size(col("gs")) > 0)
       .select(col("id"), MinHashSig.minhashSig(col("gs"), numHashes, seed).as("sig"))
-    val (cand, releaseBanding) = candidatePairsFromSig(sig, numHashes, bands)
-    verifyJaccard(cand.select("id_a", "id_b"), gs, gs, threshold) ->
-      (() => { releaseBanding(); gs.unpersist(); () })
+    verifyJaccard(candidatePairsFromSig(sig, numHashes, bands).select("id_a", "id_b"), gs, gs, threshold)
   }
 
   /** Exact-Jaccard verification of a candidate `(id_a, id_b)` stream
@@ -1120,14 +998,14 @@ object Dedup {
     * EXACTLY against both shingle-hash sets — same arithmetic, same
     * banding-recall argument as the self-join path.
     *
-    * Both shingle tables persist for the duration (each feeds its
-    * signature pass and its verification branch); the returned handle
-    * releases both. Candidate volume note: when `right` is a
+    * Both shingle tables persist for the enclosing
+    * [[graft.core.CacheScope]] (each feeds its signature pass and its
+    * verification branch). Candidate volume note: when `right` is a
     * benchmark (control-plane-sized), the band join is corpus x
     * bench — collisions are bounded by bench bucket occupancy, so the
     * verify stage is output-bound the way decontamination overlap is.
     */
-  def crossVerifyCandidatesReleasable(
+  def crossVerifyCandidates(
       left: DataFrame,
       right: DataFrame,
       textCol: String,
@@ -1136,10 +1014,9 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 32,
       bands: Int = 16,
-      seed: Long = 42L): (DataFrame, () => Unit) = {
-    def shingles(df: DataFrame) = df
-      .select(col(idCol).as("id"), ShingleHashes.shingleHashes(col(textCol), n).as("gs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      seed: Long = 42L): DataFrame = {
+    def shingles(df: DataFrame) = CacheScope.persist(
+      df.select(col(idCol).as("id"), ShingleHashes.shingleHashes(col(textCol), n).as("gs")))
     val gsL = shingles(left)
     val gsR = shingles(right)
     // same shingle-less exclusion as the self-join path: an empty
@@ -1152,29 +1029,12 @@ object Dedup {
       .join(bandKeys(sigOf(gsR), numHashes, bands).toDF("id_b", "band", "h"), Seq("band", "h"))
       .select("id_a", "id_b")
       .distinct()
-    verifyJaccard(cand, gsL, gsR, threshold) -> (() => { gsL.unpersist(); gsR.unpersist(); () })
+    verifyJaccard(cand, gsL, gsR, threshold)
   }
-
-  /** [[crossVerifyCandidatesReleasable]] leaving the shingle caches
-    * warm (the repeated-workload default; a bench harness that clears
-    * cached state between queries reclaims them).
-    */
-  def crossVerifyCandidates(
-      left: DataFrame,
-      right: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      seed: Long = 42L): DataFrame =
-    crossVerifyCandidatesReleasable(
-      left, right, textCol, idCol, n, threshold, numHashes, bands, seed)._1
 
   /** The n-gram-JACCARD ingest gate — keep only the rows of `df`
     * whose text is NOT within exact Jaccard >= `threshold` of any
-    * reference document ([[crossVerifyCandidatesReleasable]] finds
+    * reference document ([[crossVerifyCandidates]] finds
     * the seen ids; one anti join removes them). Completes the
     * dropSeen family: [[dropSeenSimhash]] gates on weighted-token
     * fingerprints (cheap, Hamming-exact), this one on SET OVERLAP of
@@ -1194,28 +1054,7 @@ object Dedup {
     * unhashable row cannot be proven seen (their all-sentinel
     * signatures do collide in candidate space, but 0-over-0 Jaccard
     * is NaN, which never passes the threshold).
-    *
-    * The returned release handle drops both shingle caches — call it
-    * after the action; [[dropSeenJaccard]] leaves them warm
-    * (repeated-ingest default).
     */
-  def dropSeenJaccardReleasable(
-      df: DataFrame,
-      ref: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      seed: Long = 42L): (DataFrame, () => Unit) = {
-    val (pairs, release) = crossVerifyCandidatesReleasable(
-      df, ref, textCol, idCol, n, threshold, numHashes, bands, seed)
-    val seen = pairs.select(col("id_a").as("__seen_id")).distinct()
-    df.join(seen, col(idCol) === col("__seen_id"), "left_anti") -> release
-  }
-
-  /** [[dropSeenJaccardReleasable]] leaving the shingle caches warm. */
   def dropSeenJaccard(
       df: DataFrame,
       ref: DataFrame,
@@ -1225,6 +1064,9 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 32,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame =
-    dropSeenJaccardReleasable(df, ref, textCol, idCol, n, threshold, numHashes, bands, seed)._1
+      seed: Long = 42L): DataFrame = {
+    val seen = crossVerifyCandidates(df, ref, textCol, idCol, n, threshold, numHashes, bands, seed)
+      .select(col("id_a").as("__seen_id")).distinct()
+    df.join(seen, col(idCol) === col("__seen_id"), "left_anti")
+  }
 }

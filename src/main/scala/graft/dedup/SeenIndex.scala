@@ -1,11 +1,10 @@
 package graft.dedup
 
-import graft.core.{IndexLayout, Releasable}
+import graft.core.{CacheScope, IndexLayout}
 import graft.similarity.Similarity
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -219,10 +218,8 @@ object SeenIndex {
           readIndex(spark, path, SigSchema, view).select(col("sig").as(gateCol))
       }
 
-    /** The rows of `batch` not near anything in `ref`, with the release
-      * of the gate's internal persists.
-      */
-    private[SeenIndex] def gate(batch: DataFrame, ref: DataFrame): (DataFrame, () => Unit) =
+    /** The rows of `batch` not near anything in `ref`. */
+    private[SeenIndex] def gate(batch: DataFrame, ref: DataFrame): DataFrame =
       this match {
         case e: Embedding if e.signatures == Cached =>
           Similarity.dropSeenEmbeddingPresigned(batch, ref, e.vecCol, e.idCol, e.threshold,
@@ -230,10 +227,10 @@ object SeenIndex {
         case e: Embedding =>
           // candidates are batch-bound in the ingest-gate regime: the
           // semi-prune keeps the index's wide payload off the shuffle
-          Similarity.dropSeenEmbeddingReleasable(batch, ref, e.vecCol, e.idCol, e.threshold,
+          Similarity.dropSeenEmbedding(batch, ref, e.vecCol, e.idCol, e.threshold,
             e.planes, e.bands, e.probeHamming, e.broadcastVerify, semiPruneVerify = true)
-        case Simhash(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m) -> (() => ())
-        case Hamming(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m) -> (() => ())
+        case Simhash(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m)
+        case Hamming(_, m) => Dedup.dropSeenHamming(batch, ref, gateCol, m)
       }
 
     /** The drivers' append of a gated batch: its keys, and for the cached
@@ -437,7 +434,8 @@ object SeenIndex {
 
   /** The one gate step every driver runs: `input` (prepared) against
     * the family's `view` of the index, materialized by an EAGER
-    * localCheckpoint. Returns the kept rows and their release.
+    * localCheckpoint owned by the caller's [[CacheScope]]; the gate's
+    * own caches are released as soon as that checkpoint holds the rows.
     *
     *   - READ-WHAT-YOU-WRITE: the gate reads the very directory the
     *     caller appends to next. A lazy (or evicted) result would
@@ -474,50 +472,47 @@ object SeenIndex {
       family: IndexFamily,
       path: String,
       view: View,
-      batchEpoch: Boolean = false): Releasable[DataFrame] = {
+      batchEpoch: Boolean = false): DataFrame = {
     val spark = input.sparkSession
     val ref = family.reference(spark, path, view)
     val bootstrap = batchEpoch && indexEmpty(spark, path)
     val pin = batchEpoch && family.pinsBatch && input.storageLevel == StorageLevel.NONE
-    val pinned = if (pin) input.localCheckpoint(true) else input
-    val kept =
-      if (bootstrap) { if (family.pinsBatch) pinned else pinned.localCheckpoint(true) }
-      else {
-        val (gated, releaseGate) = family.gate(pinned, ref)
-        try gated.localCheckpoint(true)
-        finally { releaseGate(); if (pin) CheckpointBridge.unpersistCheckpoint(pinned) }
-      }
-    Releasable(kept, () => if (!(kept eq input)) CheckpointBridge.unpersistCheckpoint(kept))
+    if (bootstrap && family.pinsBatch && !pin) input
+    else CacheScope.checkpoint(spark) {
+      if (bootstrap) input
+      else family.gate(if (pin) CacheScope.checkpoint(spark)(input) else input, ref)
+    }
   }
 
   /** One ingest epoch: gate `batch` against everything previously
     * admitted (within `window`, when given), append the admitted rows'
-    * keys, return the admitted rows. The returned frame is
-    * checkpointed — call `release()` after the terminal action.
+    * keys, return the admitted rows. The returned frame is a
+    * checkpoint owned by the enclosing [[CacheScope]]: it never
+    * recomputes, so it may outlive the call that appended it.
     */
   def gateAndUpdate(
       batch: DataFrame,
       family: IndexFamily,
       path: String,
-      window: Option[Window] = None): Releasable[DataFrame] = {
+      window: Option[Window] = None): DataFrame = {
     val f = family.resolved(batch.sparkSession, path)
     val kept = gateBatch(f.prepare(batch), f, path, View(minEpoch = window.map(_.minEpoch)),
       batchEpoch = true)
-    f.admit(kept.result, path, window.map(_.epoch), None)
-    Releasable(f.output(kept.result), kept.release)
+    f.admit(kept, path, window.map(_.epoch), None)
+    f.output(kept)
   }
 
   /** The gate with NO index append — the dry-run / measurement form.
-    * The result is lazy; `release()` drops the gate's internal persists.
-    * NOT read-only for a [[Cached]] family: it validates the signature
-    * cache first ([[ensureSigCache]]), which may rebuild it — so it
-    * needs write access and the one-writer rule. A truly read-only
-    * caller checks [[listSigCaches]] and gates [[Live]].
+    * The result is lazy; its internal caches belong to the enclosing
+    * [[CacheScope]]. NOT read-only for a [[Cached]] family: it
+    * validates the signature cache first ([[ensureSigCache]]), which
+    * may rebuild it — so it needs write access and the one-writer
+    * rule. A truly read-only caller checks [[listSigCaches]] and gates
+    * [[Live]].
     */
-  def dropSeen(batch: DataFrame, family: IndexFamily, path: String): Releasable[DataFrame] = {
+  def dropSeen(batch: DataFrame, family: IndexFamily, path: String): DataFrame = {
     val f = family.resolved(batch.sparkSession, path)
-    val (gated, release) = f.gate(f.prepare(batch), f.reference(batch.sparkSession, path, View()))
-    Releasable(f.output(gated), release)
+    f.output(f.gate(f.prepare(batch), f.reference(batch.sparkSession, path, View())))
   }
 
   /** The durable gate as a STREAMING ingest loop: every micro-batch is
@@ -546,12 +541,12 @@ object SeenIndex {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val f = family.resolved(batch.sparkSession, indexPath)
-        val kept = gateBatch(f.prepare(batch), f, indexPath, View())
-        try {
-          f.output(kept.result).write.mode("append").parquet(outPath)
-          f.admit(kept.result, indexPath, None, None)
-        } finally kept.release()
+        CacheScope.run(batch.sparkSession) {
+          val f = family.resolved(batch.sparkSession, indexPath)
+          val kept = gateBatch(f.prepare(batch), f, indexPath, View())
+          f.output(kept).write.mode("append").parquet(outPath)
+          f.admit(kept, indexPath, None, None)
+        }
       }
       .start()
 
@@ -616,16 +611,16 @@ object SeenIndex {
     }
     val epoch = allocEpoch(fs, indexPath, key)
     crashpoint("allocated")
-    val kept = gateBatch(input, f, indexPath,
-      View(excludeEpoch = Some(epoch), minAdmitted = stamp.map(_._2)))
-    try {
+    CacheScope.run(spark) {
+      val kept = gateBatch(input, f, indexPath,
+        View(excludeEpoch = Some(epoch), minAdmitted = stamp.map(_._2)))
       crashpoint("gated")
-      f.output(kept.result).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
+      f.output(kept).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
       crashpoint("output")
-      f.admit(kept.result, indexPath, Some(epoch), stamp.map(_._1))
+      f.admit(kept, indexPath, Some(epoch), stamp.map(_._1))
       crashpoint("appended")
       fs.create(committedMarker(indexPath, key), true).close()
-    } finally kept.release()
+    }
   }
 
   /** The streaming loop with EXACTLY-ONCE output: admitted rows land

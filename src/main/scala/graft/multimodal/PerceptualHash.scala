@@ -163,33 +163,19 @@ object PerceptualHash {
     * all video pairs.
     *
     * Output: `(id_a, id_b, matched_a, matched_b, n_a, n_b,
-    * match_frac)` with `id_a < id_b`.
+    * match_frac)` with `id_a < id_b`. The persisted frame-hash table
+    * lives as long as the enclosing [[graft.core.CacheScope]].
     */
   def videoDupPairs(
       media: Dataset[Multimodal.MediaRow],
       maxHamming: Int = 2,
       minMatchFrac: Double = 0.5,
-      everyN: Int = 1): DataFrame =
-    videoDupPairsReleasable(media, maxHamming, minMatchFrac, everyN).result
-
-  /** [[videoDupPairs]] with an explicit release handle over the
-    * persisted frame-hash table (see [[graft.core.Releasable]]) — for
-    * long-lived applications that must not accumulate session-lifetime
-    * cache entries. Call `release()` after the terminal action; the
-    * default entry point drops the handle and lets the cache age out
-    * of the LRU store, the right trade for one-shot batch jobs.
-    */
-  def videoDupPairsReleasable(
-      media: Dataset[Multimodal.MediaRow],
-      maxHamming: Int = 2,
-      minMatchFrac: Double = 0.5,
-      everyN: Int = 1): graft.core.Releasable[DataFrame] = {
+      everyN: Int = 1): DataFrame = {
     require(minMatchFrac > 0.0 && minMatchFrac <= 1.0,
       s"minMatchFrac $minMatchFrac must be in (0, 1]")
     // One decode+hash pass feeds three plan branches (counts twice,
     // the Hamming join once).
-    val fh = frameHashes(media, everyN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fh = graft.core.CacheScope.persist(frameHashes(media, everyN))
     val counts = fh.groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"))
     // Composite-key range is ENFORCED per row, not just documented: a
     // negative media_id would decompose wrong (truncating div vs
@@ -212,9 +198,7 @@ object PerceptualHash {
     // which with validated non-negative components implies va <= vb —
     // so after the va =!= vb filter the video pair is already
     // canonically ordered and fa/fb sides need no swap.
-    val (framePairsRaw, releaseMembers) =
-      graft.dedup.Dedup.hammingPairsReleasable(keyed, "id", "sig", maxHamming)
-    val framePairs = framePairsRaw
+    val framePairs = graft.dedup.Dedup.hammingPairs(keyed, "id", "sig", maxHamming)
       .select(
         expr(s"id_a div $FrameStride").as("va"),
         pmod(col("id_a"), lit(FrameStride)).as("fa"),
@@ -222,7 +206,7 @@ object PerceptualHash {
         pmod(col("id_b"), lit(FrameStride)).as("fb"))
       .filter(col("va") =!= col("vb"))
       .select(col("va").as("id_a"), col("vb").as("id_b"), col("fa"), col("fb"))
-    val out = framePairs
+    framePairs
       .groupBy("id_a", "id_b")
       .agg(
         countDistinct(col("fa")).as("matched_a"),
@@ -235,8 +219,6 @@ object PerceptualHash {
           col("matched_b").cast("double") / col("n_b").cast("double")))
       .filter(col("match_frac") >= minMatchFrac)
       .select("id_a", "id_b", "matched_a", "matched_b", "n_a", "n_b", "match_frac")
-    graft.core.Releasable(out,
-      () => { releaseMembers(); fh.unpersist(blocking = false); () })
   }
 
   /** Video near-duplicate CLUSTERS without any pair materialization —
@@ -272,26 +254,16 @@ object PerceptualHash {
     * joins back at frame grain (8-byte keys); the per-video sequence
     * is one `collect_list` bounded by frames-per-video (`everyN`
     * dials it); the final group-by shuffles one comp-array per video.
-    * Every exchange is linear in frames or videos.
+    * Every exchange is linear in frames or videos. The frame-hash
+    * table persists (one decode pass feeds both the signature-space
+    * CC and the per-video sequence aggregate) for the enclosing
+    * [[graft.core.CacheScope]].
     */
   def videoDupClusters(
       media: Dataset[Multimodal.MediaRow],
       maxHamming: Int = 2,
-      everyN: Int = 1): DataFrame =
-    videoDupClustersReleasable(media, maxHamming, everyN).result
-
-  /** [[videoDupClusters]] with an explicit release handle over the
-    * persisted frame-hash table (see [[graft.core.Releasable]] and
-    * [[videoDupPairsReleasable]] — same rationale: one decode pass
-    * feeds both the signature-space CC and the per-video sequence
-    * aggregate).
-    */
-  def videoDupClustersReleasable(
-      media: Dataset[Multimodal.MediaRow],
-      maxHamming: Int = 2,
-      everyN: Int = 1): graft.core.Releasable[DataFrame] = {
-    val fh = frameHashes(media, everyN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      everyN: Int = 1): DataFrame = {
+    val fh = graft.core.CacheScope.persist(frameHashes(media, everyN))
     // (frame hash -> component) over the DISTINCT hashes — the raw
     // signature-space CC (comp = min hash in the Hamming-connected
     // component). Singleton hashes are absent from the label table
@@ -307,9 +279,7 @@ object PerceptualHash {
           coalesce(col("__comp"), col("ahash")).as("__c")))),
         f => f.getField("__c")).as("__fseq"))
     val reps = seqs.groupBy("__fseq").agg(min(col("media_id")).as("cluster"))
-    graft.core.Releasable(
-      seqs.join(reps, "__fseq").select("media_id", "cluster"),
-      () => { fh.unpersist(blocking = false); () })
+    seqs.join(reps, "__fseq").select("media_id", "cluster")
   }
 
   /** Composite frame-key stride: supports videos up to one million

@@ -597,10 +597,10 @@ object SimilarityQueries {
         .toDF().select(col("media_id"), col("ahash"))
     val path = graft.core.TempDirs.create("q105_phash_index_")
     val family = graft.dedup.SeenIndex.Hamming("ahash")
-    graft.dedup.SeenIndex.gateAndUpdate(
-      hashes(docs.filter(col("doc_id") % 3 =!= 0)), family, path).release()
+    graft.core.CacheScope.run[Unit](spark)(
+      graft.dedup.SeenIndex.gateAndUpdate(hashes(docs.filter(col("doc_id") % 3 =!= 0)), family, path))
+    // checkpointed: never recomputes, safe to return from the query
     graft.dedup.SeenIndex.gateAndUpdate(hashes(docs.filter(col("doc_id") % 3 === 0)), family, path)
-      .result // checkpointed: never recomputes, safe to return un-released
       .select("media_id")
       .orderBy("media_id")
   }
@@ -670,9 +670,10 @@ object SimilarityQueries {
     val family = graft.dedup.SeenIndex.Embedding("embedding", "vec_id",
       threshold = 0.4, planes = planes, bands = g.bands, probeHamming = g.probeHamming,
       broadcastVerify = true, signatures = graft.dedup.SeenIndex.Live)
-    graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path).release()
+    graft.core.CacheScope.run[Unit](spark)(
+      graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path))
+    // checkpointed: never recomputes, safe to return from the query
     graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path)
-      .result // checkpointed: never recomputes, safe to return un-released
       .select("vec_id")
       .orderBy("vec_id")
   }
@@ -695,9 +696,10 @@ object SimilarityQueries {
     val family = graft.dedup.SeenIndex.Embedding("embedding", "vec_id",
       threshold = 0.4, planes = planes, bands = g.bands, probeHamming = g.probeHamming,
       broadcastVerify = true, signatures = graft.dedup.SeenIndex.Cached)
-    graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path).release()
+    graft.core.CacheScope.run[Unit](spark)(
+      graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 =!= 0), family, path))
+    // checkpointed: never recomputes, safe to return from the query
     graft.dedup.SeenIndex.gateAndUpdate(emb.filter(col("vec_id") % 3 === 0), family, path)
-      .result // checkpointed: never recomputes, safe to return un-released
       .select("vec_id")
       .orderBy("vec_id")
   }

@@ -331,9 +331,10 @@ object TextQueries {
     // epoch 1 seeds the index (the append runs inside the call);
     // its admitted frame is not this query's output
     val family = graft.dedup.SeenIndex.Simhash("text")
-    graft.dedup.SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 =!= 0), family, path).release()
+    graft.core.CacheScope.run[Unit](spark)(
+      graft.dedup.SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 =!= 0), family, path))
+    // checkpointed: never recomputes, safe to return from the query
     graft.dedup.SeenIndex.gateAndUpdate(docs.filter(col("doc_id") % 3 === 0), family, path)
-      .result // checkpointed: never recomputes, safe to return un-released
       .select("doc_id")
       .orderBy("doc_id")
   }
@@ -362,11 +363,10 @@ object TextQueries {
     val path = graft.core.TempDirs.create("q106_window_index_")
     // sequential epochs: each gate's append lands inside the call
     // (eager localCheckpoint), so the next epoch sees it; results are
-    // checkpointed — never recompute — and safe to return un-released
+    // checkpointed — never recompute — and safe to return from the query
     def epoch(e: Long, minEpoch: Long): DataFrame =
       graft.dedup.SeenIndex.gateAndUpdate(docs, graft.dedup.SeenIndex.Simhash("text"), path,
         Some(graft.dedup.SeenIndex.Window(e, minEpoch)))
-        .result
         .select(col("doc_id"), lit(e).as("epoch"))
     val admitted = Seq(epoch(1L, 0L), epoch(10L, 5L), epoch(11L, 6L))
     admitted.reduce(_ unionAll _).orderBy("epoch", "doc_id")

@@ -87,28 +87,15 @@ object SemDedup {
     * with null cell/rep_sim and `removed = 0`: nothing can be a
     * semantic duplicate of garbage, and silently deleting such rows
     * from the kept corpus would be a data-loss trap. Filter
-    * `removed = 0` for the kept corpus.
+    * `removed = 0` for the kept corpus. The persisted cell-assignment
+    * projection lives as long as the enclosing [[graft.core.CacheScope]].
     */
   def withDecisions(
       df: DataFrame,
       vecCol: String,
       idCol: String,
       model: Ivf.Model,
-      eps: Double): DataFrame =
-    withDecisionsReleasable(df, vecCol, idCol, model, eps)._1
-
-  /** [[withDecisions]] plus a scoped release handle for the internal
-    * persisted cell-assignment projection (the plain form leaves it
-    * cached for the LRU to age out — see the in-body comment; a
-    * long-lived session running one pass should call the thunk after
-    * its terminal action).
-    */
-  def withDecisionsReleasable(
-      df: DataFrame,
-      vecCol: String,
-      idCol: String,
-      model: Ivf.Model,
-      eps: Double): (DataFrame, () => Unit) = {
+      eps: Double): DataFrame = {
     // The decision columns join back onto the caller's FULL frame; an
     // input already carrying one of these names would produce
     // ambiguous duplicates and a confusing na.fill failure.
@@ -120,24 +107,20 @@ object SemDedup {
     val cents = spark.createDataset(
       model.centroids.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "__centroid")
-    val withRep = Ivf.index(df, vecCol, idCol, model)
+    // three consumers (the pair join's two sides + the decision
+    // join-back): without the persist each one re-runs the
+    // full-corpus cell assignment (k x dim MACs per row — the
+    // operator's dominant cost). Lazy persist keeps DataFrame
+    // construction job-free.
+    val withRep = graft.core.CacheScope.persist(Ivf.index(df, vecCol, idCol, model)
       .join(broadcast(cents), Seq("cell"))
       .withColumn("rep_sim", Similarity.dot(col(vecCol), col("__centroid")))
-      .drop("__centroid")
-      // three consumers (the pair join's two sides + the decision
-      // join-back): without the persist each one re-runs the
-      // full-corpus cell assignment (k x dim MACs per row — the
-      // operator's dominant cost). Lazy persist keeps DataFrame
-      // construction job-free; the entry ages out of the LRU store
-      // (the one-shot-batch trade documented at
-      // PerceptualHash.videoDupPairsReleasable).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("__centroid"))
     val dec = decisions(withRep, vecCol, idCol, "cell", "rep_sim", eps)
       .select(col(idCol), col("cell"), col("rep_sim"),
         col("n_dup_partners"), col("removed"))
-    val out = df.join(dec, Seq(idCol), "left")
+    df.join(dec, Seq(idCol), "left")
       .na.fill(0, Seq("n_dup_partners", "removed"))
-    out -> (() => { withRep.unpersist(); () })
   }
 
   /** [[withDecisions]] filtered to the kept corpus — the SemDeDup

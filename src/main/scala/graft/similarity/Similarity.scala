@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.core.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -491,31 +492,7 @@ object Similarity {
       planes: Array[Array[Float]],
       bands: Int = 8,
       probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): DataFrame = {
-    val (out, release) = minePairs(batch, Some(ref), vecCol, idCol, threshold, planes, bands,
-      probeHamming, broadcastVerify)
-    // plain form: bound the internal signature persists instead of
-    // leaking them (see graft.core.CachePool)
-    graft.core.CachePool.register(batch.sparkSession, release)
-    out
-  }
-
-  /** [[nearDupPairsAgainst]] plus a scoped release handle for BOTH
-    * sides' internal persisted signature projections — the form the
-    * per-micro-batch ingest loops need (each batch persists fresh
-    * projections; without a handle a long-running stream pins two
-    * cache entries per micro-batch until LRU pressure).
-    */
-  def nearDupPairsAgainstReleasable(
-      batch: DataFrame,
-      ref: DataFrame,
-      vecCol: String,
-      idCol: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): (DataFrame, () => Unit) =
+      broadcastVerify: Boolean = false): DataFrame =
     minePairs(batch, Some(ref), vecCol, idCol, threshold, planes, bands,
       probeHamming, broadcastVerify)
 
@@ -553,45 +530,10 @@ object Similarity {
       bands: Int = 8,
       probeHamming: Int = 0,
       broadcastVerify: Boolean = false,
-      semiPruneVerify: Boolean = false): DataFrame = {
-    val (out, release) = dropSeenEmbeddingReleasable(
-      batch, ref, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-      semiPruneVerify)
-    // plain form: bound the internal signature persists instead of
-    // leaking them (see graft.core.CachePool)
-    graft.core.CachePool.register(batch.sparkSession, release)
-    out
-  }
-
-  /** [[dropSeenEmbedding]] plus a scoped release handle for the
-    * miner's internal signature persists — what the durable ingest
-    * loops call per micro-batch (they eagerly checkpoint the gate
-    * result, so the internals are releasable the moment the
-    * checkpoint materializes).
-    */
-  def dropSeenEmbeddingReleasable(
-      batch: DataFrame,
-      ref: DataFrame,
-      vecCol: String,
-      idCol: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false,
-      // OFF by default on the public surface (same rationale as
-      // dropSeenEmbedding: the semi-prune's broadcast can time out on
-      // a collision-heavy batch where the pure-shuffle plan would
-      // succeed). The durable ingest loops (SeenIndex) pass true
-      // explicitly — there the candidate set is known batch-bound and
-      // the semi-prune is THE term that stops the whole index's wide
-      // payload riding a shuffle every micro-batch.
-      semiPruneVerify: Boolean = false): (DataFrame, () => Unit) = {
-    val (pairs, release) = minePairs(
+      semiPruneVerify: Boolean = false): DataFrame =
+    dropSeenTail(batch, idCol, minePairs(
       batch, Some(ref), vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-      semiPruneVerify = semiPruneVerify)
-    dropSeenTail(batch, idCol, pairs) -> release
-  }
+      semiPruneVerify = semiPruneVerify))
 
   /** The shared gate tail: anti-join the batch against the distinct
     * matched batch-side ids of a cross-corpus pair mine (review r18:
@@ -602,7 +544,7 @@ object Similarity {
     batch.join(seen, col(idCol) === col("__seen_id"), "left_anti")
   }
 
-  /** [[dropSeenEmbeddingReleasable]] against a PRESIGNED reference:
+  /** [[dropSeenEmbedding]] against a PRESIGNED reference:
     * `refSigged` must carry `(idCol, vecCol as a UNIT vector, __sig,
     * __rsig, __rsig2)` — the projection [[withSignatures]] writes and
     * [[graft.dedup.SeenIndex]]'s signature cache re-reads. The gate
@@ -626,12 +568,10 @@ object Similarity {
       // SeenIndex durable-ingest loop, where candidates are known
       // batch-bound and the semi-prune is what keeps the index's
       // wide payload off the per-micro-batch shuffle
-      semiPruneVerify: Boolean = true): (DataFrame, () => Unit) = {
-    val (pairs, release) = minePairs(
+      semiPruneVerify: Boolean = true): DataFrame =
+    dropSeenTail(batch, idCol, minePairs(
       batch, None, vecCol, idCol, threshold, planes, bands, probeHamming, broadcastVerify,
-      refSigged = Some(refSigged), semiPruneVerify = semiPruneVerify)
-    dropSeenTail(batch, idCol, pairs) -> release
-  }
+      refSigged = Some(refSigged), semiPruneVerify = semiPruneVerify))
 
   /** All-pairs near-duplicate mining above a cosine threshold: LSH
     * band-bucket self-join (the scale path — candidate generation is a
@@ -662,32 +602,7 @@ object Similarity {
       planes: Array[Array[Float]],
       bands: Int = 8,
       probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): DataFrame = {
-    val (out, release) = minePairs(df, None, vecCol, idCol, threshold, planes, bands,
-      probeHamming, broadcastVerify)
-    // plain form: bound the internal signature persists instead of
-    // leaking them (see graft.core.CachePool)
-    graft.core.CachePool.register(df.sparkSession, release)
-    out
-  }
-
-  /** [[nearDupPairs]] plus a scoped release handle for the internal
-    * persisted (id, unit-vec, signatures) projection. The plain form
-    * registers the handle in the bounded [[graft.core.CachePool]] (a
-    * repeated mining workload keeps the LRU benefit; a long-lived
-    * session stays bounded); callers that must leave no cache entry
-    * behind call the thunk after their terminal action (same contract
-    * as [[graft.dedup.Dedup.verifyCandidatesReleasable]]).
-    */
-  def nearDupPairsReleasable(
-      df: DataFrame,
-      vecCol: String,
-      idCol: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8,
-      probeHamming: Int = 0,
-      broadcastVerify: Boolean = false): (DataFrame, () => Unit) =
+      broadcastVerify: Boolean = false): DataFrame =
     minePairs(df, None, vecCol, idCol, threshold, planes, bands,
       probeHamming, broadcastVerify)
 
@@ -832,6 +747,9 @@ object Similarity {
     *    whenever n x dim x 4 bytes fits a broadcast (~15 MB at
     *    60 k x 64) — exactly the regime where mid-threshold mining's
     *    near-quadratic candidate volume shows up.
+    *
+    * Its internal persists live as long as the enclosing
+    * [[graft.core.CacheScope]].
     */
   private def minePairs(
       df: DataFrame,
@@ -844,7 +762,7 @@ object Similarity {
       probeHamming: Int,
       broadcastVerify: Boolean,
       refSigged: Option[DataFrame] = None,
-      semiPruneVerify: Boolean = false): (DataFrame, () => Unit) = {
+      semiPruneVerify: Boolean = false): DataFrame = {
     require(ref.isEmpty || refSigged.isEmpty,
       "pass the reference either raw (ref) or presigned (refSigged), not both")
     require(planes.length % bands == 0,
@@ -880,9 +798,7 @@ object Similarity {
     // probe masks ReuseExchange cannot collapse them — unpersisted,
     // the full-corpus scan + normalization would run up to 4x and the
     // 190-plane signature pass twice. Lazy persist keeps DataFrame
-    // construction job-free (PlanContractSpec pins that for q30); the
-    // entry ages out of the LRU store, the one-shot-batch trade
-    // documented at PerceptualHash.videoDupPairsReleasable.
+    // construction job-free (PlanContractSpec pins that for q30).
     // spreadIfNarrow on the SELF-MINE only: a single-split vector
     // source otherwise serializes the 190-plane signature pass AND the
     // quadratic band self-join below it (both inherit the cache's
@@ -895,19 +811,15 @@ object Similarity {
     // adds per-task overhead to every downstream stage (measured r19:
     // q100/q104/q108 +0.7-1.2 s with the spread on).
     val crossCorpus = ref.nonEmpty || refSigged.nonEmpty
-    def sigged(vecs: DataFrame): DataFrame =
-      signatureTriple(
-        if (crossCorpus) vecs else graft.core.Parallelism.spreadIfNarrow(vecs),
-        vecCol, planes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def sigged(vecs: DataFrame): DataFrame = CacheScope.persist(signatureTriple(
+      if (crossCorpus) vecs else graft.core.Parallelism.spreadIfNarrow(vecs), vecCol, planes))
     val aS = sigged(unitVectors(df, vecCol, idCol))
     // presigned reference: the caller supplies (idCol, UNIT vecCol,
     // __sig, __rsig, __rsig2) — signatures read from a durable cache
     // instead of recomputed (the 190-plane pass is the term that
     // grows with index size); persisted here for the same
-    // multi-consumer reason as sigged, released by the same handle
-    val bS = refSigged
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // multi-consumer reason as sigged
+    val bS = refSigged.map(CacheScope.persist)
       .orElse(ref.map(r => sigged(unitVectors(r, vecCol, idCol))))
       .getOrElse(aS)
     def probedKeys(sigs: DataFrame, radius: Int): DataFrame = {
@@ -940,8 +852,7 @@ object Similarity {
     // prune's broadcast and the verify join) — lazy persist so the
     // band join still runs once and construction stays job-free
     val candidates =
-      if (semiPruneVerify && !broadcastVerify)
-        candidatesRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (semiPruneVerify && !broadcastVerify) CacheScope.persist(candidatesRaw)
       else candidatesRaw
     // the verify lookups read the SAME persisted projection (pruned to
     // (id, vec)) — no second scan of the vector source
@@ -971,17 +882,11 @@ object Similarity {
           vecB.join(broadcast(candidates.select("id_b").distinct()), Seq("id_b"), "left_semi")
             .hint("shuffle_hash"))
       else (vecA.hint("shuffle_hash"), vecB.hint("shuffle_hash"))
-    val pairs = candidates
+    candidates
       .join(ja, "id_a")
       .join(jb, "id_b")
       .withColumn("cosine", dot(col("vec_a"), col("vec_b"))) // unit vectors
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-    val releaseCandidates: () => Unit =
-      if (semiPruneVerify && !broadcastVerify) () => { candidates.unpersist(); () }
-      else () => ()
-    pairs -> (() => {
-      releaseCandidates(); aS.unpersist(); if (crossCorpus) bS.unpersist(); ()
-    })
   }
 }

@@ -804,7 +804,7 @@ object StreamingOps {
 
   /** Static shingle-hash index backing streaming exact verification —
     * the stream-side mirror of the persisted `gs` table inside
-    * [[graft.dedup.Dedup.verifyCandidatesReleasable]]: one row per
+    * [[graft.dedup.Dedup.verifyCandidates]]: one row per
     * document with its distinct byte-level shingle hashes. Compute it
     * over the indexed corpus, persist it, and refresh per ingestion
     * epoch (a static table is planned ONCE per micro-batch join — a

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.core.{Pipeline, PipelineContext, Processor}
+import graft.core.{CacheScope, Pipeline, PipelineContext, Processor}
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,12 +57,10 @@ object CurationPipeline {
     // single-task cache-fill jobs at the head of q36's profile, each
     // re-running tokens+langid+quality+fp); the checkpoint runs
     // annotate exactly once, up front (guide §5 — cache only reused,
-    // expensive-to-recompute intermediates). Bounded via CachePool
-    // like every other internal checkpoint.
-    val deduped = Dedup.exactDedup(ctx.table("annotated"), "text", "doc_id").localCheckpoint(true)
-    graft.core.CachePool.register(deduped.sparkSession,
-      () => { org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint(deduped); () })
-    ctx.withTable("exact_deduped", deduped)
+    // expensive-to-recompute intermediates).
+    val annotated = ctx.table("annotated")
+    ctx.withTable("exact_deduped",
+      CacheScope.checkpoint(annotated.sparkSession)(Dedup.exactDedup(annotated, "text", "doc_id")))
   }
 
   /** Keep one doc per transitive duplicate cluster: LSH candidates
@@ -76,13 +74,11 @@ object CurationPipeline {
     */
   val nearDedup: Processor = Processor("NearDedup", required = Seq("exact_deduped")) { ctx =>
     val docs = ctx.table("exact_deduped")
-    val (pairs, release) =
-      Dedup.verifyCandidatesReleasable(docs, "text", "doc_id", n = 3, threshold = 0.5)
-    // dupClusters materializes `pairs` eagerly at call time, so the
+    // dupClusters materializes the pairs eagerly at call time, so the
     // shingle-hash cache inside verifyCandidates is consumed exactly
-    // once and can be released as soon as the call returns.
-    val clusters = Dedup.dupClusters(pairs)
-    release()
+    // once: the scope releases it as soon as the call returns
+    val clusters = CacheScope.scoped(docs.sparkSession)(
+      Dedup.dupClusters(Dedup.verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5)))
     val losers = clusters
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as("doc_id"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Per-query plan dump at the BENCH session shape (guide §1.4/§7.2):
@@ -19,18 +18,8 @@ object PlanDump {
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val cpus = args.lift(3).getOrElse("32")
     val outDir = args.lift(4).getOrElse("plans/r20")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.debug.maxToStringFields", "100")
-      // AQE coalescing for cached plan fragments — see Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sort-writer shuffle at low reducer counts — see GraftSession
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // 64k AQE coalescing floor — see GraftSession
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

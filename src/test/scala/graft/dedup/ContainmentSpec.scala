@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.core.CacheScope
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
@@ -50,14 +51,15 @@ class ContainmentSpec extends SparkSpec {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val rel = Containment.containmentPairsPrefixReleasable(docs, "text", "doc_id", n = 3, threshold = 0.8)
-    val got = rel.result.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
-      "expected the shingle table to be persisted during the run")
-    rel.release()
-    rel.release() // idempotent
+    val got = CacheScope.run(spark) {
+      val rows = Containment.containmentPairsPrefix(docs, "text", "doc_id", n = 3, threshold = 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
+        "expected the shingle table to be persisted during the run")
+      rows
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "release() must drop every cache entry this call added")
+      "the scope must drop every cache entry this call added")
     val plain = Containment.containmentPairsPrefix(docs, "text", "doc_id", n = 3, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == plain)
@@ -69,25 +71,23 @@ class ContainmentSpec extends SparkSpec {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // resolution: Releasable twin of dropContained
-    val relDrop = Containment.dropContainedReleasable(docs, "text", "doc_id", threshold = 0.8)
-    val gotDrop = relDrop.result.collect().map(_.getLong(0)).toSet
-    relDrop.release(); relDrop.release() // idempotent
+    // resolution: dropContained in a scope
+    val gotDrop = CacheScope.run(spark)(
+      Containment.dropContained(docs, "text", "doc_id", threshold = 0.8).collect().map(_.getLong(0)).toSet)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "dropContainedReleasable.release() must drop its shingle cache")
+      "the scope must drop dropContained's shingle cache")
     assert(gotDrop == Containment.dropContained(docs, "text", "doc_id", threshold = 0.8)
       .collect().map(_.getLong(0)).toSet)
-    // gate: Releasable twin of dropSeenContained (two persisted tables)
+    // gate: dropSeenContained in a scope (two persisted tables)
     val batch = Seq((1L, (1 to 10).map(i => s"w$i").mkString(" ")),
       (2L, (500 to 560).map(i => s"z$i").mkString(" "))).toDF("doc_id", "text")
     val ref = Seq((10L, (1 to 40).map(i => s"w$i").mkString(" "))).toDF("doc_id", "text")
     spark.catalog.clearCache()
     val before2 = spark.sparkContext.getPersistentRDDs.keySet
-    val relGate = Containment.dropSeenContainedReleasable(batch, ref, "text", "doc_id", threshold = 0.8)
-    val gotGate = relGate.result.collect().map(_.getLong(0)).toSet
-    relGate.release()
+    val gotGate = CacheScope.run(spark)(Containment.dropSeenContained(
+      batch, ref, "text", "doc_id", threshold = 0.8).collect().map(_.getLong(0)).toSet)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before2).isEmpty,
-      "dropSeenContainedReleasable.release() must drop BOTH shingle caches")
+      "the scope must drop BOTH of dropSeenContained's shingle caches")
     assert(gotGate == Set(2L), s"got=$gotGate")
     spark.catalog.clearCache()
   }
@@ -170,11 +170,12 @@ class ContainmentSpec extends SparkSpec {
     val kept = Containment.dropSeenContained(batch, ref, "text", "doc_id", n = 3, threshold = 0.8)
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 3L, 4L), s"kept=$kept")
-    // release handle: same rows, then unpersists
-    val rel = Containment.containmentPairsAgainstReleasable(batch, ref, "text", "doc_id")
-    val relRows = rel.result.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    rel.release()
+    // in a scope: same rows, then unpersists
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val relRows = CacheScope.run(spark)(Containment.containmentPairsAgainst(batch, ref, "text", "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(relRows == got.keySet)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
   }
 
   test("documents below the shingle width never pair; threshold bounds are validated") {

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.core.CacheScope
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -97,27 +98,29 @@ class DedupSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // minhash candidates: sig + the banding pass's class/member maps
-    val (cand, releaseCand) = Dedup.minhashCandidatePairsReleasable(docs, "text", "doc_id")
-    val got = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
-      "expected the signature/class tables to be persisted during the run")
-    releaseCand()
-    releaseCand() // idempotent
+    val got = CacheScope.run(spark) {
+      val rows = Dedup.minhashCandidatePairs(docs, "text", "doc_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
+        "expected the signature/class tables to be persisted during the run")
+      rows
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "release() must drop every cache entry minhashCandidatePairsReleasable added")
+      "the scope must drop every cache entry minhashCandidatePairs added")
     assert(got == Dedup.minhashCandidatePairs(docs, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     // verified pairs: the shingle cache AND the banding internals both
-    // ride the one returned handle
-    val (pairs, releasePairs) = Dedup.verifyCandidatesReleasable(
-      docs, "text", "doc_id", n = 3, threshold = 0.5)
-    val gotPairs = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
-    releasePairs()
+    // belong to the one scope
+    val gotPairs = CacheScope.run(spark) {
+      val rows = Dedup.verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
+      rows
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "release() must drop the shingle cache and the banding class/member maps")
+      "the scope must drop the shingle cache and the banding class/member maps")
     assert(gotPairs == Dedup.verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     spark.catalog.clearCache()
@@ -464,10 +467,9 @@ class DedupSpec extends SparkSpec {
       } => id
     }.toSet
     assert(bRaw.map(_._1).toSet.diff(kept) == bruteSeen, s"gated=${bRaw.map(_._1).toSet.diff(kept)} brute=$bruteSeen")
-    // the release handle drops the caches without changing the result
-    val (df2, release) = Dedup.dropSeenJaccardReleasable(batch, ref, "text", "doc_id")
-    val kept2 = df2.collect().map(_.getLong(0)).toSet
-    release()
+    // a scope drops the caches without changing the result
+    val kept2 = CacheScope.run(spark)(
+      Dedup.dropSeenJaccard(batch, ref, "text", "doc_id").collect().map(_.getLong(0)).toSet)
     assert(kept2 == kept)
   }
 

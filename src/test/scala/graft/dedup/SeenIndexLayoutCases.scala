@@ -50,7 +50,7 @@ object SeenIndexLayoutCases {
   private val hashRows = (Seq((1L, sig0), (2L, ~sig0)), Seq((3L, sig0 ^ 3L), (4L, sig0 ^ 0xffffffffL)))
   private val vecRows = (Seq((1L, unit(0)), (2L, unit(1)), (3L, zero)), Seq((4L, unit(0)), (5L, unit(3))))
 
-  private def batch(r: graft.core.Releasable[DataFrame]): Unit = { r.result.count(); r.release() }
+  private def batch(r: => DataFrame): Unit = graft.core.CacheScope.run(SparkSession.active)(r.count())
 
   import SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Live, Simhash, Vectors, Window}
   private def emb(signatures: SeenIndex.Signatures, vecCol: String = "embedding", idCol: String = "vec_id") =

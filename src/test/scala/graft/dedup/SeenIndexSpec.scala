@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.core.CacheScope
 import graft.dedup.SeenIndex.{Auto, AutoAbove, Cached, Embedding, Hamming, Simhash, Vectors, Window}
 import org.apache.spark.sql.functions._
 
@@ -23,14 +24,12 @@ class SeenIndexSpec extends SparkSpec {
     assert(SeenIndex.read(spark, sigIndex, path).count() == 0)
     val e1 = SeenIndex.gateAndUpdate(
       Seq((1L, base), (2L, other)).toDF("doc_id", "text"), Simhash("text"), path)
-    assert(e1.result.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    e1.release()
+    assert(e1.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     // epoch 2: an exact re-ingest of epoch-1 content is gated, the
     // novel doc passes and is remembered in turn
     val batch2 = Seq((10L, base), (11L, novel)).toDF("doc_id", "text")
     val e2 = SeenIndex.gateAndUpdate(batch2, Simhash("text"), path)
-    val kept2 = e2.result.collect().map(_.getLong(0)).toSet
-    e2.release()
+    val kept2 = e2.collect().map(_.getLong(0)).toSet
     assert(kept2 == Set(11L), s"kept2=$kept2")
     // cross-session anchor: epoch-2 admission equals the stateless
     // gate against the union of all previously ADMITTED docs
@@ -42,8 +41,7 @@ class SeenIndexSpec extends SparkSpec {
     // append in epoch 2 is what makes the index remember it
     val e3 = SeenIndex.gateAndUpdate(
       Seq((20L, novel)).toDF("doc_id", "text"), Simhash("text"), path)
-    assert(e3.result.isEmpty)
-    e3.release()
+    assert(e3.isEmpty)
     // the index holds exactly the admitted signatures (3 distinct)
     assert(SeenIndex.read(spark, sigIndex, path).distinct().count() == 3)
   }
@@ -54,20 +52,17 @@ class SeenIndexSpec extends SparkSpec {
     val s0 = 0x0123456789abcdefL
     val e1 = SeenIndex.gateAndUpdate(
       Seq((1L, s0, "a")).toDF("media_id", "ahash", "tag"), Hamming("ahash"), path)
-    assert(e1.result.columns.toSeq == Seq("media_id", "ahash", "tag"))
-    assert(e1.result.count() == 1)
-    e1.release()
+    assert(e1.columns.toSeq == Seq("media_id", "ahash", "tag"))
+    assert(e1.count() == 1)
     // near (hamming 2) and far arrivals: only the far one is admitted
     val e2 = SeenIndex.gateAndUpdate(
       Seq((2L, s0 ^ 3L, "b"), (3L, ~s0, "c")).toDF("media_id", "ahash", "tag"), Hamming("ahash"), path)
-    val kept = e2.result.collect().map(r => (r.getLong(0), r.getString(2))).toSet
-    e2.release()
+    val kept = e2.collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(kept == Set((3L, "c")), s"kept=$kept")
     // within-batch duplicates both pass (history-only contract), one sig lands
     val e3 = SeenIndex.gateAndUpdate(
       Seq((4L, 0x7777L, "d"), (5L, 0x7777L, "e")).toDF("media_id", "ahash", "tag"), Hamming("ahash"), path)
-    assert(e3.result.count() == 2)
-    e3.release()
+    assert(e3.count() == 2)
     assert(SeenIndex.read(spark, sigIndex, path).filter(col("sig") === 0x7777L).count() == 1)
   }
 
@@ -87,22 +82,19 @@ class SeenIndexSpec extends SparkSpec {
     val novel = Seq(0f, 0f, 0f, 1f, 0f, 0f, 0f, 0f)
     // bootstrap: empty index admits everything
     val r1 = gate(Seq((1L, e1), (2L, e2)))
-    assert(r1.result.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    r1.release()
+    assert(r1.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     // epoch 2: an exact copy of an admitted vector is gated (identical
     // unit vectors share every band, cosine 1.0 — no LSH luck needed);
     // the orthogonal novel vector passes; the zero-norm degenerate is
     // KEPT (unhashable rows can't be proven seen, the family rule)
     val r2 = gate(Seq((10L, e1), (11L, novel), (12L, Seq.fill(dim)(0f))))
-    val kept2 = r2.result.collect().map(_.getLong(0)).toSet
-    r2.release()
+    val kept2 = r2.collect().map(_.getLong(0)).toSet
     assert(kept2 == Set(11L, 12L), s"kept2=$kept2")
     // epoch 3: re-ingesting epoch 2's finite survivor gates to ZERO;
     // the degenerate is admitted again (never enters the gate's
     // normalized space even though its row sits in the index)
     val r3 = gate(Seq((20L, novel), (21L, Seq.fill(dim)(0f))))
-    assert(r3.result.collect().map(_.getLong(0)).toSet == Set(21L))
-    r3.release()
+    assert(r3.collect().map(_.getLong(0)).toSet == Set(21L))
     // the index holds every admitted non-null vector row
     assert(SeenIndex.read(spark, vecIndex, path).count() == 5)
   }
@@ -153,11 +145,10 @@ class SeenIndexSpec extends SparkSpec {
     val path = tmpDir()
     val docA = (1 to 50).map(i => s"w$i").mkString(" ")
     val docB = (100 to 160).map(i => s"v$i").mkString(" ")
-    def gate(id: Long, text: String, epoch: Long, minEpoch: Long): Set[Long] = {
+    def gate(id: Long, text: String, epoch: Long, minEpoch: Long): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         Seq((id, text)).toDF("doc_id", "text"), Simhash("text"), path, Some(Window(epoch, minEpoch)))
-      val kept = r.result.collect().map(_.getLong(0)).toSet
-      r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     // epoch 1 bootstraps; epoch 2's window still covers epoch 1 -> gated
     assert(gate(1L, docA, epoch = 1, minEpoch = 0) == Set(1L))
@@ -168,8 +159,8 @@ class SeenIndexSpec extends SparkSpec {
     // epoch 11, window from 6: the epoch-10 re-admission is live again
     assert(gate(4L, docA, epoch = 11, minEpoch = 6).isEmpty)
     // an UNTAGGED admission (the pre-retention API) never expires
-    SeenIndex.gateAndUpdate(
-      Seq((20L, docB)).toDF("doc_id", "text"), Simhash("text"), path).release()
+    CacheScope.run[Unit](spark)(SeenIndex.gateAndUpdate(
+      Seq((20L, docB)).toDF("doc_id", "text"), Simhash("text"), path))
     assert(gate(21L, docB, epoch = 1000, minEpoch = 999).isEmpty)
     // compact: one row per sig, docA's sig keeps its LATEST epoch (10)
     // and docB's stays untagged — the SAME decisions replay after
@@ -185,11 +176,10 @@ class SeenIndexSpec extends SparkSpec {
     import sqlImplicits._
     val path = tmpDir()
     val s0 = 0x0f0f0f0f0f0f0f0fL
-    def gate(id: Long, sig: Long, epoch: Long, minEpoch: Long): Set[Long] = {
+    def gate(id: Long, sig: Long, epoch: Long, minEpoch: Long): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         Seq((id, sig)).toDF("media_id", "ahash"), Hamming("ahash"), path, Some(Window(epoch, minEpoch)))
-      val kept = r.result.collect().map(_.getLong(0)).toSet
-      r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     assert(gate(1L, s0, epoch = 1, minEpoch = 0) == Set(1L))
     // a NEAR signature (hamming 2) inside the window is gated
@@ -206,23 +196,22 @@ class SeenIndexSpec extends SparkSpec {
     val planes = graft.similarity.Similarity.hyperplanes(dim, numPlanes = 64)
     val e1 = Seq(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)
     val e2 = Seq(0f, 0f, 1f, 0f, 0f, 0f, 0f, 0f)
-    def gate(id: Long, v: Seq[Float], epoch: Long, minEpoch: Long): Set[Long] = {
+    def gate(id: Long, v: Seq[Float], epoch: Long, minEpoch: Long): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         Seq((id, v)).toDF("vec_id", "embedding"),
         Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
         path, Some(Window(epoch, minEpoch)))
-      val kept = r.result.collect().map(_.getLong(0)).toSet
-      r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     assert(gate(1L, e1, epoch = 1, minEpoch = 0) == Set(1L))
     assert(gate(2L, e1, epoch = 2, minEpoch = 1).isEmpty)   // in window -> gated
     assert(gate(3L, e1, epoch = 10, minEpoch = 5) == Set(3L)) // expired -> re-admitted
     assert(gate(4L, e1, epoch = 11, minEpoch = 6).isEmpty)  // clock reset at 10
     // an UNTAGGED vector (pre-retention API) never expires
-    SeenIndex.gateAndUpdate(
+    CacheScope.run[Unit](spark)(SeenIndex.gateAndUpdate(
       Seq((20L, e2)).toDF("vec_id", "embedding"),
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
-      path).release()
+      path))
     assert(gate(21L, e2, epoch = 1000, minEpoch = 999).isEmpty)
     // the un-windowed read sees every ADMITTED vector regardless of
     // tags: ids 1 and 3 (tagged epochs 1 and 10) plus 20 (untagged);
@@ -267,13 +256,12 @@ class SeenIndexSpec extends SparkSpec {
     SeenIndex.append(Seq((2L, e2)).toDF("id", "vec"), vecIndex, path)
     SeenIndex.append(Seq((2L, e2)).toDF("id", "vec"), vecIndex, path, Some(5L))
     assert(SeenIndex.read(spark, vecIndex, path).count() == 4)
-    def gate(id: Long, v: Seq[Float], epoch: Long, minEpoch: Long): Set[Long] = {
+    def gate(id: Long, v: Seq[Float], epoch: Long, minEpoch: Long): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         Seq((id, v)).toDF("vec_id", "embedding"),
         Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
         path, Some(Window(epoch, minEpoch)))
-      val kept = r.result.collect().map(_.getLong(0)).toSet
-      r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     SeenIndex.compact(spark, vecIndex, path)
     // physically one row per distinct (id, vec) now
@@ -1068,20 +1056,20 @@ class SeenIndexSpec extends SparkSpec {
     def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
     val zero = Seq.fill(dim)(0f)
     val pathU = tmpDir() + "/u"; val pathS = tmpDir() + "/s"
-    def gateU(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
+    def gateU(rows: Seq[(Long, Seq[Float])]): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         rows.toDF("vec_id", "embedding"),
         Embedding("embedding", "vec_id", threshold = 0.9, planes = planes, broadcastVerify = true),
         pathU)
-      val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
-    def gateS(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
+    def gateS(rows: Seq[(Long, Seq[Float])]): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         rows.toDF("vec_id", "embedding"),
         Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
           broadcastVerify = true, signatures = Cached),
         pathS)
-      val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     // three epochs, degenerates included: every admission decision
     // must match the unsigned gate exactly
@@ -1129,9 +1117,9 @@ class SeenIndexSpec extends SparkSpec {
     def emb(signatures: SeenIndex.Signatures) =
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
         broadcastVerify = true, signatures = signatures)
-    def gate(path: String, signatures: SeenIndex.Signatures, rows: Seq[(Long, Seq[Float])]): Set[Long] = {
+    def gate(path: String, signatures: SeenIndex.Signatures, rows: Seq[(Long, Seq[Float])]): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(rows.toDF("vec_id", "embedding"), emb(signatures), path)
-      val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     def appendCached(path: String, rows: Seq[(Long, Seq[Float])]): Unit =
       SeenIndex.append(rows.toDF("vec_id", "embedding"), emb(Cached), path)
@@ -1321,7 +1309,7 @@ class SeenIndexSpec extends SparkSpec {
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
         broadcastVerify = true, signatures = Cached),
       path)
-    assert(g1.result.collect().map(_.getLong(0)).toSet == Set(2L)); g1.release()
+    assert(g1.collect().map(_.getLong(0)).toSet == Set(2L))
     // compaction collapses the duplicate (3 -> 2 rows), then ONE
     // unsigned append restores the row count to 3: a cache validated
     // by row-count parity alone would see 3 == 3 and trust content
@@ -1334,9 +1322,8 @@ class SeenIndexSpec extends SparkSpec {
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
         broadcastVerify = true, signatures = Cached),
       path)
-    assert(g2.result.isEmpty,
+    assert(g2.isEmpty,
       "a vector appended after an equal-count compact+append sequence must still gate")
-    g2.release()
   }
 
   test("compaction carries the signature cache in lockstep: the next signed gate finds it SYNCED (no silent rebuild)") {
@@ -1345,13 +1332,13 @@ class SeenIndexSpec extends SparkSpec {
     val planes = graft.similarity.Similarity.hyperplanes(dim, numPlanes = 64)
     def unit(i: Int) = Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
     val path = tmpDir() + "/carryidx"
-    def gateS(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
+    def gateS(rows: Seq[(Long, Seq[Float])]): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         rows.toDF("vec_id", "embedding"),
         Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
           broadcastVerify = true, signatures = Cached),
         path)
-      val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     assert(gateS(Seq((1L, unit(0)), (2L, unit(1)))) == Set(1L, 2L))
     assert(gateS(Seq((3L, unit(2)))) == Set(3L))
@@ -1396,14 +1383,14 @@ class SeenIndexSpec extends SparkSpec {
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planesA,
         broadcastVerify = true, signatures = Cached),
       path)
-    g.result.count(); g.release()
+    g.count()
     // a read-only signed gate on a SECOND geometry builds its cache
     val r = SeenIndex.dropSeen(
       Seq((2L, unit(1))).toDF("vec_id", "embedding"),
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planesB,
         broadcastVerify = true, signatures = Cached),
       path)
-    r.result.count(); r.release()
+    r.count()
     val infos = SeenIndex.listSigCaches(spark, path)
     assert(infos.length == 2 && infos.forall(_.synced) && infos.forall(_.dataBytes > 0)
       && infos.map(_.geometryKey).distinct.length == 2, infos.toString)
@@ -1479,18 +1466,18 @@ class SeenIndexSpec extends SparkSpec {
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
         broadcastVerify = true, signatures = Auto),
       pathU)
-    assert(a1.result.collect().map(_.getLong(0)).toSet == Set(1L, 2L)); a1.release()
+    assert(a1.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     assert(SeenIndex.listSigCaches(spark, pathU).isEmpty,
       "auto must not build a cache under the byte floor")
     // floor 0: signed from the first gate, cache built and maintained
     val pathS = tmpDir() + "/autos"
-    def gateAuto(rows: Seq[(Long, Seq[Float])]): Set[Long] = {
+    def gateAuto(rows: Seq[(Long, Seq[Float])]): Set[Long] = CacheScope.run(spark) {
       val r = SeenIndex.gateAndUpdate(
         rows.toDF("vec_id", "embedding"),
         Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
           broadcastVerify = true, signatures = AutoAbove(0L)),
         pathS)
-      val kept = r.result.collect().map(_.getLong(0)).toSet; r.release(); kept
+      r.collect().map(_.getLong(0)).toSet
     }
     assert(gateAuto(Seq((1L, unit(0)), (2L, unit(1)))) == Set(1L, 2L))
     assert(gateAuto(Seq((3L, unit(0)), (4L, unit(4)))) == Set(4L)) // same decisions as unsigned
@@ -1503,7 +1490,7 @@ class SeenIndexSpec extends SparkSpec {
       Embedding("embedding", "vec_id", threshold = 0.9, planes = planes,
         broadcastVerify = true, signatures = Auto),
       pathS)
-    assert(a2.result.isEmpty); a2.release()
+    assert(a2.isEmpty)
     assert(SeenIndex.listSigCaches(spark, pathS).forall(_.synced))
     // stream form: batch 1 runs unsigned (empty index, 0 bytes < 1),
     // batch 2 crosses the floor and switches to signed

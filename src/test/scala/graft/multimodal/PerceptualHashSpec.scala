@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import graft.core.CacheScope
 import org.apache.spark.sql.functions._
 
 class PerceptualHashSpec extends SparkSpec {
@@ -216,17 +217,18 @@ class PerceptualHashSpec extends SparkSpec {
     val plain = PerceptualHash.videoDupPairs(ds, maxHamming = 2, minMatchFrac = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val beforeRel = spark.sparkContext.getPersistentRDDs.keySet
-    val rel = PerceptualHash.videoDupPairsReleasable(ds, maxHamming = 2, minMatchFrac = 0.9)
-    val got = rel.result.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = CacheScope.run(spark) {
+      val rows = PerceptualHash.videoDupPairs(ds, maxHamming = 2, minMatchFrac = 0.9)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(beforeRel).nonEmpty,
+        "expected the frame-hash table to be persisted during the run")
+      rows
+    }
     assert(got == plain && got == Set((1L, 2L)))
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(beforeRel).nonEmpty,
-      "expected the frame-hash table to be persisted during the run")
-    rel.release()
-    rel.release() // idempotent
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(beforeRel).isEmpty,
-      "release() must drop the cache entry this call added")
-    // the default entry point's cache ages out via LRU; drop it here so
-    // this suite leaves no residue for later suites
+      "the scope must drop the cache entries this call added")
+    // the unscoped call's caches sit in the bounded pool; drop them here
+    // so this suite leaves no residue for later suites
     spark.sparkContext.getPersistentRDDs.keySet.diff(before)
       .foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
   }

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.SparkSpec
+import graft.core.CacheScope
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -117,25 +118,24 @@ class SimilaritySpec extends SparkSpec {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (pairs, release) = Similarity.nearDupPairsReleasable(
-      df, "embedding", "vec_id", 0.99, planes, bands = 8)
-    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
-      "expected the signature projection to be persisted during the run")
-    release()
-    release() // idempotent
+    val got = CacheScope.run(spark) {
+      val rows = Similarity.nearDupPairs(df, "embedding", "vec_id", 0.99, planes, bands = 8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
+        "expected the signature projection to be persisted during the run")
+      rows
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "release() must drop the miner's internal persists")
+      "the scope must drop the miner's internal persists")
     assert(got == Seq((1L, 2L)))
-    // the cross-corpus gate's releasable form: both sides' projections
-    // ride the one handle
+    // the cross-corpus gate in a scope: both sides' projections belong
+    // to it
     val ref = Seq((10L, v)).toDF("vec_id", "embedding")
-    val (kept, releaseGate) = Similarity.dropSeenEmbeddingReleasable(
-      df, ref, "embedding", "vec_id", 0.99, planes, bands = 8)
-    assert(kept.collect().map(_.getLong(0)).toSet == Set(3L))
-    releaseGate()
+    val kept = CacheScope.run(spark)(Similarity.dropSeenEmbedding(
+      df, ref, "embedding", "vec_id", 0.99, planes, bands = 8).collect().map(_.getLong(0)).toSet)
+    assert(kept == Set(3L))
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "release() must drop BOTH sides' signature projections")
+      "the scope must drop BOTH sides' signature projections")
     spark.catalog.clearCache()
   }
 
