@@ -519,11 +519,11 @@ object SeenIndex {
     * gated against `indexPath` by the same step as [[gateAndUpdate]]'s
     * (with no bootstrap skip and no batch pin, see [[gateBatch]]), its
     * admitted rows are appended to `outPath`, then their keys to the
-    * index. The
-    * reference GROWS with every admitted arrival (unlike the
-    * stream-static [[graft.streaming.StreamingOps.dropSeenHammingStream]]),
-    * and a restarted query — or another cluster — resumes with
-    * everything any prior run admitted.
+    * index. The reference GROWS with every admitted arrival (unlike a
+    * static reference gated per micro-batch through
+    * [[graft.streaming.StreamingOps.perBatch]]), and a restarted query
+    * — or another cluster — resumes with everything any prior run
+    * admitted.
     *
     * AT-LEAST-ONCE: the output write runs BEFORE the index append, so a
     * failure between the two re-admits the batch on retry — duplicate

@@ -1,16 +1,21 @@
 package graft.streaming
 
+import graft.core.CacheScope
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
-/** Structured Streaming twins of the batch operators (SURVEY.md §2.10).
+/** Structured Streaming forms of the batch operators (SURVEY.md §2.10).
   * The reference is batch-only ("Analytics Approach: Batch Processing",
   * Requirements/requirements.md:6); these are the engine's additive
   * capability: the same weekly/hourly aggregations and cycle
   * segmentation over an unbounded `events` stream.
+  *
+  * A stateless per-document operator has no streaming twin: [[perBatch]]
+  * runs the batch operator itself on every micro-batch. The defs here
+  * are the behaviours that need state across micro-batches (windows,
+  * seen-sets, TTL miners, carried counters) or a stream-only plan.
   *
   * Design: `readStream` on the events schema -> watermarked windowed
   * aggregations (tumbling/sliding/session), and exact cycle labeling
@@ -100,6 +105,56 @@ object StreamingOps {
     }
     deduped.unionByName(unhashable).drop("__fp")
   }
+
+  // ------------------------------------------ the per-micro-batch lift
+
+  /** Run the BATCH operator `op` on every micro-batch of `stream` — the
+    * streaming form of any stateless per-document operator, in
+    * Structured Streaming's own model (the streaming query is the
+    * batch query, executed once per micro-batch). Stream and batch run
+    * one definition, so the batch semantics hold unchanged: null
+    * handling, duplicate rows, degenerate inputs.
+    *
+    * `op` must be per-document: a row's output may depend on the row
+    * and on static snapshots `op` closes over (a reference corpus, a
+    * fitted model, a gram or frequency table), never on other arriving
+    * rows, because micro-batch boundaries are arbitrary. Persist the
+    * snapshots: `op` re-plans them every micro-batch.
+    *
+    * Each micro-batch runs in [[graft.core.CacheScope.run]], so the
+    * operator's internal caches are released when its batch ends, and
+    * OVERWRITES `outPath/batch=<batchId>`: a replayed batch rewrites
+    * the same directory, so a deterministic `op` yields exactly-once
+    * output (the [[packBinsForeachBatch]] argument). Read `outPath` as
+    * one table; partition discovery adds a `batch` column, so `op`'s
+    * output must not carry one. `outPath` and the checkpoint are a
+    * unit: a fresh checkpoint restarts batch ids at 0.
+    */
+  def perBatch(stream: DataFrame, outPath: String, checkpointDir: String)(
+      op: DataFrame => DataFrame): StreamingQuery = {
+    val owner = stream.sparkSession
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        perBatchBody(batch, batchId, outPath, owner)(op)
+      }
+      .start()
+  }
+
+  /** One [[perBatch]] micro-batch, factored out so its replay
+    * idempotence is directly testable. The micro-batch frame belongs
+    * to the query's clone of `owner`, the snapshots `op` closes over
+    * to `owner` itself, so the scope covers both sessions: an
+    * operator persists tables derived from either side.
+    */
+  private[graft] def perBatchBody(
+      batch: DataFrame, batchId: Long, outPath: String, owner: SparkSession)(
+      op: DataFrame => DataFrame): Unit =
+    CacheScope.run(owner) {
+      CacheScope.run(batch.sparkSession) {
+        op(batch).write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      }
+    }
 
   // --------------------------------------------- streaming near-dedup
 
@@ -323,348 +378,6 @@ object StreamingOps {
             state.setTimeoutTimestamp(seen.map(_._3).min + ttlMs)
             out.iterator
           }
-        })
-  }
-
-  /** The shared admit-iff-zero-hits group pass behind the three
-    * stateless dropSeen stream gates (review r18: previously three
-    * hand-synced copies). State is NEVER set: all of a group's rows
-    * explode from one input row, so the group completes within its
-    * micro-batch — zero retained state by construction.
-    */
-  private def admitIfUnseen[K, H, O: org.apache.spark.sql.Encoder](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[K, H])(
-      isHit: H => Boolean)(out: K => O): Dataset[O] = {
-    implicit val longEnc: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-    grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-      (key: K, rows: Iterator[H], state: GroupState[Long]) => {
-        var hits = 0
-        rows.foreach { r => if (isHit(r)) hits += 1 }
-        if (hits == 0) Iterator.single(out(key)) else Iterator.empty
-      })
-  }
-
-  final case class SeenHit(id: Long, sig: Long, hit: Option[Int])
-  final case class KeptSig(id: Long, sig: Long)
-
-  /** Streaming twin of [[graft.dedup.Dedup.dropSeenHamming]] — the
-    * live ingest gate: each arriving (id, sig) row is admitted iff
-    * its signature is NOT within `maxHamming` of any signature in the
-    * STATIC reference index. The reference is banded once
-    * ([[graft.dedup.Dedup.bandedSigs]] — the same slicing as every
-    * batch join, so gate and batch can never disagree) and the stream
-    * side takes ONE stream-static LEFT join per arriving band slice:
-    * a candidate reference signature rides back on the row, the exact
-    * `bitCount(xor)` verifies it, and a per-id group pass admits the
-    * ids with zero verified hits. ZERO retained state (the group
-    * completes in its own micro-batch — all of an id's band rows
-    * explode from one input row) and the static side broadcasts /
-    * re-plans per micro-batch, so the gate's RETAINED cost is the
-    * batch's own size, independent of stream history. HONEST static
-    * caveat: the bands-way explode over the reference is derived
-    * INSIDE this function, so persisting `refSigs` does not stop the
-    * |ref| x bands banding from re-running each trigger — a
-    * reference-sized per-batch tax at second-scale triggers over a
-    * huge index. At that regime, gate in a `foreachBatch` loop with
-    * [[graft.dedup.Dedup.dropSeenHamming]] over a persisted banded
-    * table instead (the [[graft.dedup.SeenIndex]] ingest loops are
-    * exactly that shape).
-    *
-    * Parity (StreamingOpsSpec): kept ids over any stream prefix equal
-    * the batch gate on the union of those batches. Pigeonhole
-    * exactness carries over unchanged (`maxHamming < bands`). Rows
-    * with null id or sig are dropped (typed-Dataset poison pills;
-    * the batch twin KEEPS null sigs — gate them upstream, as its
-    * scaladoc already directs). The group key is `(id, sig)`, so an
-    * id carrying SEVERAL signatures in one micro-batch gates each row
-    * independently, exactly like the batch twin; only EXACT duplicate
-    * `(id, sig)` rows within a micro-batch collapse to one output row
-    * (the one residual divergence — a batch frame would keep both).
-    */
-  def dropSeenHammingStream(
-      hashed: DataFrame,
-      refSigs: DataFrame,
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int = 3,
-      bands: Int = 4): Dataset[KeptSig] = {
-    import hashed.sparkSession.implicits._
-    requireIntegralId(hashed, idCol)
-    val bandedRef = graft.dedup.Dedup.bandedSigs(refSigs, bands)
-      .toDF("ref_sig", "band", "h")
-    val grouped = hashed
-      .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig"))
-      .filter(col("sig").isNotNull && col("id").isNotNull)
-      .select(col("id"), col("sig"),
-        graft.dedup.Dedup.hammingBandKeys(col("sig"), bands).as("bk"))
-      .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.h").as("h"))
-      .join(bandedRef, Seq("band", "h"), "left")
-      .select(col("id"), col("sig"),
-        when(col("ref_sig").isNotNull &&
-          bit_count(col("sig").bitwiseXOR(col("ref_sig"))) <= maxHamming, lit(1)).as("hit"))
-      .as[SeenHit]
-      .groupByKey(r => (r.id, r.sig))
-    admitIfUnseen(grouped)(_.hit.isDefined)(k => KeptSig(k._1, k._2))
-  }
-
-  final case class SeenVecHit(id: Long, vec: Seq[Float], hit: Option[Int])
-  final case class KeptVec(id: Long, vec: Seq[Float])
-
-  /** [[graft.similarity.Similarity.dropSeenEmbedding]]'s Structured
-    * Streaming twin — the SEMANTIC ingest gate over an unbounded
-    * `(id, vec)` stream against a STATIC reference corpus: admit only
-    * the arrivals with no reference vector at cosine >= `threshold`.
-    * Same construction as [[dropSeenHammingStream]] lifted to
-    * embedding space: the reference unit-normalizes once into a
-    * banded RHP-signature table — NOTE the banding is derived INSIDE
-    * this function, downstream of `ref`, so persisting the input does
-    * not stop the normalize+signature pass re-executing every
-    * micro-batch; at reference sizes where that matters, run the
-    * batch gate in foreachBatch against a precomputed signature store
-    * instead (the [[graft.dedup.SeenIndex]] loops are exactly that
-    * shape). Each arrival pays one signature + one stream-static
-    * LEFT join per band slice, the candidate reference unit vector
-    * rides back on the row and the exact dot verifies it (the same
-    * [[graft.similarity.VecDot]] arithmetic as the batch gate, so
-    * stream and batch can never disagree on a candidate), and a
-    * per-id group pass admits ids with zero verified hits. ZERO
-    * retained state — all of an id's band rows explode from one input
-    * row, so its group completes in its own micro-batch and the
-    * per-batch cost is the batch's own size, independent of history.
-    *
-    * Radius-0 banding only (the gate regime: high thresholds where
-    * exact band collision carries the recall); LSH recall caveats
-    * carry over from the batch twin — a banding miss passes the gate.
-    * Output rows carry the ORIGINAL (un-normalized) vector.
-    *
-    * Parity (StreamingOpsSpec): kept ids over any stream prefix equal
-    * the batch gate on the union of those batches — minus degenerate
-    * rows: null/NaN/zero-norm vectors are DROPPED here (typed-Dataset
-    * poison pills, the [[dropSeenHammingStream]] rule) where the
-    * batch twin keeps them; gate them upstream. The group key is
-    * `(id, vec)` — an id carrying several vectors in one micro-batch
-    * gates each row independently, like the batch twin; only exact
-    * duplicate `(id, vec)` rows collapse to one output row. COST
-    * NOTE: that key ships the dim-float vector through the group
-    * exchange once per band row (bands x ~4*dim bytes per arrival) —
-    * fine at gate-batch sizes; at firehose volume use the durable
-    * foreachBatch loops, whose band join exchanges only LSH keys.
-    */
-  def dropSeenEmbeddingStream(
-      vecs: DataFrame,
-      ref: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      planes: Array[Array[Float]],
-      bands: Int = 8): Dataset[KeptVec] = {
-    import vecs.sparkSession.implicits._
-    import graft.similarity.Similarity
-    require(planes.length % bands == 0,
-      s"planes=${planes.length} must divide evenly into bands=$bands")
-    val bitsPerBand = planes.length / bands
-    require(bitsPerBand >= 8,
-      s"bitsPerBand=$bitsPerBand: bands narrower than 8 bits degenerate toward all-pairs")
-    requireIntegralId(vecs, idCol)
-    val mask = if (bitsPerBand == 64) -1L else (1L << bitsPerBand) - 1L
-    // same degenerate guard as the batch miners' unitVectors
-    // (Similarity.scala): null / NaN / zero AND INFINITE norms are
-    // excluded — x/Inf is NaN element-wise, and a NaN dot PASSES
-    // ">= threshold" under Spark's NaN ordering, so an unguarded Inf
-    // row would be silently gated (arrival side) or spuriously gate
-    // everything in its buckets (reference side)
-    def withUnit(df: DataFrame, vc: String) = df
-      .withColumn("__norm", Similarity.norm(col(vc)))
-      .withColumn("__uvec",
-        when(col("__norm") > 0 && !isnan(col("__norm")) &&
-            col("__norm") < lit(Double.PositiveInfinity),
-          transform(col(vc), x => x / col("__norm"))))
-      .filter(col("__uvec").isNotNull)
-      .drop("__norm")
-    def bandKeys(sig: org.apache.spark.sql.Column) = explode(array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(sig, b * bitsPerBand).bitwiseAND(lit(mask)).as("h"))
-    }: _*))
-    val bandedRef = withUnit(ref.select(col(vecCol)), vecCol)
-      .withColumn("__rsig", Similarity.rhpSignature(col("__uvec"), planes))
-      .select(col("__uvec").as("ref_uvec"), bandKeys(col("__rsig")).as("bk"))
-      .select(col("ref_uvec"), col("bk.band").as("band"), col("bk.h").as("h"))
-    val grouped = withUnit(
-      vecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-        .filter(col("id").isNotNull),
-      "vec")
-      .withColumn("__sig", Similarity.rhpSignature(col("__uvec"), planes))
-      .select(col("id"), col("vec"), col("__uvec"), bandKeys(col("__sig")).as("bk"))
-      .select(col("id"), col("vec"), col("__uvec"), col("bk.band").as("band"), col("bk.h").as("h"))
-      .join(bandedRef, Seq("band", "h"), "left")
-      .select(col("id"), col("vec"),
-        when(col("ref_uvec").isNotNull &&
-          Similarity.dot(col("__uvec"), col("ref_uvec")) >= threshold, lit(1)).as("hit"))
-      .as[SeenVecHit]
-      .groupByKey(r => (r.id, r.vec))
-    admitIfUnseen(grouped)(_.hit.isDefined)(k => KeptVec(k._1, k._2))
-  }
-
-  final case class SeenJacHit(id: Long, hit: Option[Int])
-  final case class KeptId(id: Long)
-
-  /** [[graft.dedup.Dedup.dropSeenJaccard]]'s Structured Streaming
-    * twin — the n-gram-overlap ingest gate over an unbounded
-    * `(id, text)` stream against a STATIC reference corpus: admit
-    * only arrivals with no reference document at exact Jaccard >=
-    * `threshold`. `refIndex` is the [[shingleIndex]] of the reference.
-    * HONEST static caveat: the reference's MinHash signatures and
-    * banding are derived INSIDE this function, so persisting
-    * `refIndex` caches only the shingle arrays — the 32-hash
-    * signature pass over the whole reference re-runs every trigger, a
-    * reference-sized per-batch tax at second-scale triggers. At that
-    * regime gate in a `foreachBatch` loop against a persisted
-    * signature table ([[graft.dedup.SeenIndex.gateStream]] is the
-    * durable form of exactly that shape). Each arrival pays one
-    * shingle+signature pass, one
-    * stream-static LEFT join per banded MinHash key against the
-    * reference's banded signatures, one stream-static join pulling
-    * each candidate's reference shingle set, and the EXACT Jaccard
-    * (identical arithmetic to the batch gate) decides the hit; a
-    * per-id group pass admits ids with zero verified hits. ZERO
-    * retained state — all of an id's rows derive from one input row,
-    * so its group completes in its own micro-batch.
-    *
-    * FULL batch parity, including the empty case: a shingle-less
-    * arrival's all-sentinel signature finds no banded match (the
-    * reference side excludes empty docs, the batch rule), so it is
-    * KEPT — same "unhashable rows cannot be proven seen" rule as the
-    * batch twin, with no divergence to document. Output is the kept
-    * ids only (carrying text through the band explode would multiply
-    * the payload by `bands`); semi-join the caller's frame to
-    * recover full rows. Because the output grain is the ID, ids must
-    * be UNIQUE within a micro-batch: two same-id rows with different
-    * text would collapse into one verdict (dropped if EITHER text
-    * hits). MinHash recall caveats carry over from the batch gate.
-    */
-  def dropSeenJaccardStream(
-      docs: DataFrame,
-      refIndex: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      seed: Long = 42L): Dataset[KeptId] = {
-    import docs.sparkSession.implicits._
-    import graft.dedup.{MinHashSig, ShingleHashes}
-    require(numHashes % bands == 0, s"numHashes=$numHashes must divide into bands=$bands")
-    requireIntegralId(docs, idCol)
-    val rowsPerBand = numHashes / bands
-    def bandKeys(sig: org.apache.spark.sql.Column) = explode(array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("h"))
-    }: _*))
-    // static banded reference signatures; empty docs excluded exactly
-    // as in the batch candidate stage
-    val bandedRef = refIndex.filter(size(col("gs")) > 0)
-      .select(col("id").as("ref_id"), MinHashSig.minhashSig(col("gs"), numHashes, seed).as("__sig"))
-      .select(col("ref_id"), bandKeys(col("__sig")).as("bk"))
-      .select(col("ref_id"), col("bk.band").as("band"), col("bk.h").as("h"))
-    val refGs = refIndex.select(col("id").as("ref_id"), col("gs").as("gs_b"))
-    val grouped = docs
-      .select(col(idCol).cast("long").as("id"),
-        ShingleHashes.shingleHashes(col(textCol), n).as("gs"))
-      .filter(col("id").isNotNull)
-      .withColumn("__sig", MinHashSig.minhashSig(col("gs"), numHashes, seed))
-      .select(col("id"), col("gs"), bandKeys(col("__sig")).as("bk"))
-      .select(col("id"), col("gs"), col("bk.band").as("band"), col("bk.h").as("h"))
-      .join(bandedRef, Seq("band", "h"), "left")
-      // candidate shingle sets arrive by id join, not by riding the
-      // banded table (which would duplicate every ref array x bands)
-      .join(refGs.hint("shuffle_hash"), Seq("ref_id"), "left")
-      .select(col("id"),
-        when(col("gs_b").isNotNull && {
-          val shared = size(array_intersect(col("gs"), col("gs_b"))).cast("long")
-          shared.cast("double") / (size(col("gs")) + size(col("gs_b")) - shared) >= threshold
-        }, lit(1)).as("hit"))
-      .as[SeenJacHit]
-      .groupByKey(_.id)
-    admitIfUnseen(grouped)(_.hit.isDefined)(KeptId(_))
-  }
-
-  final case class ContHit(id: Long, na: Long, ref_id: Option[Long])
-
-  /** [[graft.dedup.Containment.dropSeenContained]]'s Structured
-    * Streaming twin — the COVERAGE ingest gate over an unbounded
-    * `(id, text)` stream: admit only arrivals whose shingle set is
-    * NOT >= `threshold` covered by any single static reference
-    * document. EXACT like the batch gate (containment has no LSH
-    * recall), so parity is full set equality, shingle-less arrivals
-    * included (no shingles ⇒ coverage undefined ⇒ kept, the
-    * family-wide rule).
-    *
-    * Construction differs from the batch path deliberately: the
-    * batch prefix filter needs a per-corpus rank — a second stateful
-    * hop a stream cannot afford — so the stream joins EVERY arrival
-    * shingle against the static exploded reference shingle table
-    * (`refIndex` = [[shingleIndex]] of the reference; persist it) and
-    * one `flatMapGroupsWithState` pass per id counts shared shingles
-    * per candidate reference doc and tests `shared / na >= t`
-    * in-memory. Cost per micro-batch is the arrival shingles times
-    * their reference document frequency — the un-prefix-filtered
-    * candidate volume, bounded by the micro-batch, not the stream
-    * history; hot-shingle-heavy corpora should gate in larger batch
-    * windows with the prefix-filtered batch twin instead. ZERO
-    * retained state: all of an id's rows derive from one input row.
-    * HONEST static caveat: the exploded (ref_id, shingle) table is
-    * built INSIDE this function — persisting `refIndex` does not stop
-    * the corpus-token-sized explode + hash build from re-running per
-    * trigger; a huge reference at short triggers belongs in a
-    * `foreachBatch` loop over a persisted exploded table.
-    * Id-grain output, so ids must be UNIQUE within a micro-batch
-    * (the [[dropSeenJaccardStream]] rule).
-    */
-  def dropSeenContainedStream(
-      docs: DataFrame,
-      refIndex: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.8): Dataset[KeptId] = {
-    import docs.sparkSession.implicits._
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"containment threshold $threshold must be in (0, 1]")
-    requireIntegralId(docs, idCol)
-    val refSh = refIndex.select(col("id").as("ref_id"), explode(col("gs")).as("g"))
-    docs
-      .select(col(idCol).cast("long").as("id"),
-        graft.dedup.ShingleHashes.shingleHashes(col(textCol), n).as("gs"))
-      .filter(col("id").isNotNull)
-      // coalesce: NULL text null-propagates to a null gs, and under
-      // ANSI size(NULL) is NULL — decoded into ContHit's primitive
-      // `na: Long` that would NPE-kill the stream on replay forever
-      // (review r18). 0 = "cannot be proven contained" = kept, the
-      // batch twin's behavior for the same row.
-      .withColumn("na", coalesce(size(col("gs")).cast("long"), lit(0L)))
-      // explode_outer keeps shingle-less (and null-text) arrivals as
-      // one null-g row (joins nothing, na = 0 ⇒ kept)
-      .select(col("id"), col("na"), explode_outer(col("gs")).as("g"))
-      .join(refSh.hint("shuffle_hash"), Seq("g"), "left")
-      .select(col("id"), col("na"), col("ref_id"))
-      .as[ContHit]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[ContHit], state: GroupState[Long]) => {
-          // state is never set: all of an id's rows derive from one
-          // input row, so its group completes in its micro-batch.
-          // Shared-count map is bounded by this arrival's shingle
-          // count (distinct shingles ⇒ one row per (g, ref match)).
-          var na = 0L
-          val shared = scala.collection.mutable.HashMap.empty[Long, Long]
-          rows.foreach { r =>
-            na = r.na
-            r.ref_id.foreach(rid => shared.update(rid, shared.getOrElse(rid, 0L) + 1L))
-          }
-          val seen = na > 0 && shared.valuesIterator.exists(c => c.toDouble / na >= threshold)
-          if (seen) Iterator.empty else Iterator.single(KeptId(id))
         })
   }
 
@@ -1051,7 +764,7 @@ object StreamingOps {
       outPath: String,
       stateDir: String,
       checkpointDir: String,
-      numChunks: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
+      numChunks: Int = 64): StreamingQuery = {
     require(capacity > 0, s"capacity=$capacity must be positive")
     requireIntegralId(docs, orderCol)
     docs.writeStream
@@ -1076,7 +789,7 @@ object StreamingOps {
       capacity: Int,
       outPath: String,
       stateDir: String,
-      numChunks: Int = 64): Unit = {
+      numChunks: Int = 64): Unit = CacheScope.run(batch.sparkSession) {
     val spark = batch.sparkSession
     val carried = carriedOffsets(spark, stateDir, batchId)
       .toDF("__cb_key", "__cb_base")
@@ -1084,33 +797,32 @@ object StreamingOps {
       batch.filter(col(strataCol).isNotNull && col(orderCol).isNotNull &&
         col(textCol).isNotNull),
       textCol, strataCol, orderCol, capacity, numChunks)
-    // shift each stratum by its carried base; the snapshot is
-    // control-plane-sized (one row per stratum), so broadcast
-    val shifted = packed
-      .join(broadcast(carried), col(strataCol).cast("string") === col("__cb_key"), "left")
-      .withColumn("__cb_base", coalesce(col("__cb_base"), lit(0L)))
-      .withColumn("start_offset", col("start_offset") + col("__cb_base"))
-      // integral div, not floor-of-double: the carried start_offset
-      // accumulates over the stream's LIFETIME, so unlike the batch
-      // operator's single-corpus window it can cross 2^53 where double
-      // division loses exactness (the repo-wide div convention)
-      .withColumn("bin", expr(s"start_offset div ${capacity.toLong}"))
-      .drop("__cb_key")
-      // two consumers (output write + totals aggregate): one
-      // materialization, released before the batch returns
-      .localCheckpoint(true)
-    try {
-      shifted.drop("__cb_base").write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      // post-batch totals: end offset of each stratum's last doc;
-      // strata absent from this batch keep their carried value
-      val totals = shifted
-        .groupBy(col(strataCol).cast("string").as("key"))
-        .agg(max(col("start_offset") + col("n_tokens")).as("offset"))
-        .unionByName(carried.select(col("__cb_key").as("key"), col("__cb_base").as("offset")))
-        .groupBy(col("key")).agg(max(col("offset")).as("offset"))
-      totals.write.mode("overwrite").parquet(s"$stateDir/offsets-$batchId")
-      pruneOffsets(spark, stateDir, batchId)
-    } finally shifted.unpersist(blocking = false)
+    // two consumers (output write + totals aggregate): one
+    // materialization, released when the batch's scope ends
+    val shifted = CacheScope.checkpoint(spark) {
+      // shift each stratum by its carried base; the snapshot is
+      // control-plane-sized (one row per stratum), so broadcast
+      packed
+        .join(broadcast(carried), col(strataCol).cast("string") === col("__cb_key"), "left")
+        .withColumn("__cb_base", coalesce(col("__cb_base"), lit(0L)))
+        .withColumn("start_offset", col("start_offset") + col("__cb_base"))
+        // integral div, not floor-of-double: the carried start_offset
+        // accumulates over the stream's LIFETIME, so unlike the batch
+        // operator's single-corpus window it can cross 2^53 where double
+        // division loses exactness (the repo-wide div convention)
+        .withColumn("bin", expr(s"start_offset div ${capacity.toLong}"))
+        .drop("__cb_key")
+    }
+    shifted.drop("__cb_base").write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    // post-batch totals: end offset of each stratum's last doc;
+    // strata absent from this batch keep their carried value
+    val totals = shifted
+      .groupBy(col(strataCol).cast("string").as("key"))
+      .agg(max(col("start_offset") + col("n_tokens")).as("offset"))
+      .unionByName(carried.select(col("__cb_key").as("key"), col("__cb_base").as("offset")))
+      .groupBy(col("key")).agg(max(col("offset")).as("offset"))
+    totals.write.mode("overwrite").parquet(s"$stateDir/offsets-$batchId")
+    pruneOffsets(spark, stateDir, batchId)
   }
 
   /** [[lengthBatchingStream]]'s firehose escape (see the section
@@ -1134,7 +846,7 @@ object StreamingOps {
       outPath: String,
       stateDir: String,
       checkpointDir: String,
-      numChunks: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
+      numChunks: Int = 64): StreamingQuery = {
     require(bucketWidth > 0, s"bucketWidth=$bucketWidth must be positive")
     require(batchSize > 0, s"batchSize=$batchSize must be positive")
     requireIntegralId(docs, idCol)
@@ -1159,7 +871,7 @@ object StreamingOps {
       batchSize: Int,
       outPath: String,
       stateDir: String,
-      numChunks: Int = 64): Unit = {
+      numChunks: Int = 64): Unit = CacheScope.run(batch.sparkSession) {
     val spark = batch.sparkSession
     val carried = carriedOffsets(spark, stateDir, batchId)
       .toDF("__cb_key", "__cb_base")
@@ -1174,26 +886,25 @@ object StreamingOps {
       .withColumn("__one", lit(1L))
     val ranked = graft.text.SequencePacking.assignBinsDistributedFromCounts(
       prepped, "__one", "bucket", "id", batchSize, numChunks)
-    val shifted = ranked
-      .join(broadcast(carried), col("bucket").cast("string") === col("__cb_key"), "left")
-      .withColumn("__cb_base", coalesce(col("__cb_base"), lit(0L)))
-      .withColumn("batch_id",
-        expr(s"(start_offset + __cb_base) div ${batchSize.toLong}"))
-      .localCheckpoint(true)
-    try {
-      shifted.select(col("id"), col("n_tokens"), col("bucket"), col("batch_id"))
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      val totals = shifted
-        .groupBy(col("bucket").cast("string").as("key"))
-        .agg(max(col("start_offset") + col("__cb_base") + 1L).as("offset"))
-        .unionByName(carried.select(col("__cb_key").as("key"), col("__cb_base").as("offset")))
-        .groupBy(col("key")).agg(max(col("offset")).as("offset"))
-      totals.write.mode("overwrite").parquet(s"$stateDir/offsets-$batchId")
-      pruneOffsets(spark, stateDir, batchId)
-    } finally shifted.unpersist(blocking = false)
+    val shifted = CacheScope.checkpoint(spark) {
+      ranked
+        .join(broadcast(carried), col("bucket").cast("string") === col("__cb_key"), "left")
+        .withColumn("__cb_base", coalesce(col("__cb_base"), lit(0L)))
+        .withColumn("batch_id",
+          expr(s"(start_offset + __cb_base) div ${batchSize.toLong}"))
+    }
+    shifted.select(col("id"), col("n_tokens"), col("bucket"), col("batch_id"))
+      .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    val totals = shifted
+      .groupBy(col("bucket").cast("string").as("key"))
+      .agg(max(col("start_offset") + col("__cb_base") + 1L).as("offset"))
+      .unionByName(carried.select(col("__cb_key").as("key"), col("__cb_base").as("offset")))
+      .groupBy(col("key")).agg(max(col("offset")).as("offset"))
+    totals.write.mode("overwrite").parquet(s"$stateDir/offsets-$batchId")
+    pruneOffsets(spark, stateDir, batchId)
   }
 
-  // ----------------------------------- streaming text-analysis twins
+  // ------------------------------------------- streaming release gate
 
   /** The benchmark's distinct n-gram set collected to the driver —
     * the streaming counterpart of [[graft.text.Decontamination]]'s
@@ -1208,182 +919,6 @@ object StreamingOps {
         graft.text.Decontamination.distinctNgrams(col(textCol), n)).as("g"))
       .distinct().collect().map(_.getString(0)).toSeq
 
-  /** Streaming twin of [[graft.text.Decontamination.report]]: a
-    * document's contamination stats depend only on its own text and
-    * the (static) benchmark gram set, so the twin is a STATELESS
-    * per-row projection — tokenize once, build the n-gram array once,
-    * and take `array_intersect` against the literal benchmark set. No
-    * explode, no state, no shuffle; emits exactly the batch report's
-    * rows (clean documents filtered out) with identical arithmetic
-    * (both sides divide the same two integers). StreamingOpsSpec pins
-    * stream-vs-batch parity.
-    */
-  def decontaminationStream(
-      docs: DataFrame,
-      benchGrams: Seq[String],
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      flagThreshold: Double = 0.05,
-      maxBenchGrams: Int = 1000000): DataFrame = {
-    // The gram set is embedded as a plan LITERAL and intersected per
-    // row — O(|bench|) work per document and plan/task-serialization
-    // bytes proportional to the set. That is the right shape only for
-    // a control-plane-sized benchmark set (the batch twin broadcasts
-    // instead); fail fast on corpus-sized inputs rather than
-    // serializing a multi-GB plan into every task.
-    require(benchGrams.size <= maxBenchGrams,
-      s"decontaminationStream embeds benchGrams as a plan literal: ${benchGrams.size} grams " +
-        s"exceeds maxBenchGrams=$maxBenchGrams — for large benchmark sets use the stream-static " +
-        "join form (decontaminationStreamJoin over benchGramTable) or raise the bound knowingly")
-    docs
-      .withColumn("__st_gs",
-        graft.text.Decontamination.distinctNgrams(col(textCol), n))
-      .select(col(idCol),
-        size(col("__st_gs")).as("n_ngrams"),
-        size(array_intersect(col("__st_gs"), lit(benchGrams.toArray)))
-          .cast("long").as("n_overlap"))
-      .filter(col("n_overlap") > 0)
-      .withColumn("contam_frac",
-        col("n_overlap").cast("double") / col("n_ngrams").cast("double"))
-      .withColumn("flagged", (col("contam_frac") >= flagThreshold).cast("int"))
-  }
-
-  /** Streaming twin of
-    * [[graft.text.Decontamination.reportBySuite]]: per-suite
-    * contamination attribution for ARRIVING documents against a
-    * SNAPSHOT (gram → suites) map. A document's per-suite counts
-    * depend only on its own grams and the frozen map, so the twin is
-    * a STATELESS per-row flatMap — one broadcast of the snapshot, no
-    * aggregation state, append-mode-legal. Same control-plane size
-    * discipline as [[decontaminationStream]] (the batch twin's
-    * gram→suite table is broadcast there too); output rows/columns
-    * match the batch operator exactly (StreamingOpsSpec pins parity).
-    */
-  def decontaminationSuitesStream(
-      docs: DataFrame,
-      gramSuites: Map[String, Seq[String]],
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      flagThreshold: Double = 0.05,
-      maxGrams: Int = 1000000): DataFrame = {
-    require(gramSuites.size <= maxGrams,
-      s"decontaminationSuitesStream broadcasts the gram->suites snapshot: ${gramSuites.size} " +
-        s"grams exceeds maxGrams=$maxGrams — keep the snapshot control-plane sized")
-    val bc = docs.sparkSession.sparkContext.broadcast(gramSuites)
-    val hits = udf { (grams: Seq[String]) =>
-      val m = bc.value
-      val counts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      grams.foreach { g =>
-        m.getOrElse(g, Nil).foreach { s => counts.update(s, counts.getOrElse(s, 0L) + 1L) }
-      }
-      counts.toSeq
-    }
-    // ngrams (not distinctNgrams): null text coalesces to an empty
-    // array, so a null-text record emits nothing — matching the batch
-    // twin — instead of poisoning the stream with an NPE in the UDF
-    docs
-      .withColumn("__st_gs", graft.text.Decontamination.ngrams(col(textCol), n))
-      .select(col(idCol),
-        size(col("__st_gs")).cast("int").as("n_ngrams"),
-        explode(hits(col("__st_gs"))).as("__st_h"))
-      .select(col(idCol), col("__st_h._1").as("suite"), col("n_ngrams"),
-        col("__st_h._2").as("n_hits"))
-      .withColumn("overlap_frac",
-        col("n_hits").cast("double") / col("n_ngrams").cast("double"))
-      .withColumn("flagged", (col("overlap_frac") >= flagThreshold).cast("int"))
-  }
-
-  /** [[decontaminationSuitesStream]]'s snapshot builder: collect a
-    * bench frame's (gram → sorted distinct suites) map — compute once
-    * per benchmark release, like [[benchGramSet]].
-    */
-  def gramSuiteSnapshot(
-      bench: DataFrame,
-      textCol: String,
-      suiteCol: String,
-      n: Int = 3): Map[String, Seq[String]] =
-    bench
-      .select(explode(graft.text.Decontamination.distinctNgrams(col(textCol), n)).as("g"),
-        col(suiteCol).as("s"))
-      .groupBy(col("g")).agg(sort_array(collect_set(col("s"))).as("ss"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList.asInstanceOf[Seq[String]])
-      .toMap
-
-  /** The benchmark gram table as a DataFrame (column `g`, distinct) —
-    * [[benchGramSet]]'s distributed counterpart for benchmark sets too
-    * large to collect and embed as a plan literal. Compute once per
-    * benchmark release and persist (or write bucketed by `g`); the
-    * static side of a stream-static join is re-planned every
-    * micro-batch, so handing an unpersisted expression here re-runs
-    * the n-gram pass per batch.
-    */
-  def benchGramTable(bench: DataFrame, textCol: String, n: Int = 3): DataFrame =
-    bench
-      .select(explode(
-        graft.text.Decontamination.distinctNgrams(col(textCol), n)).as("g"))
-      .distinct()
-
-  final case class DcHit(id: Long, hit: Option[Int])
-  final case class DcOut(doc_id: Long, n_ngrams: Int, n_overlap: Long,
-      contam_frac: Double, flagged: Int)
-
-  /** Streaming twin of [[graft.text.Decontamination.report]] for
-    * CORPUS-SIZED benchmark gram sets — the scale path
-    * [[decontaminationStream]]'s literal-size guard points at. Same
-    * join-with-marker algebra as the batch form: explode the
-    * document's distinct n-grams (the construction IS the generator,
-    * planned once), stream-static LEFT join against the gram table
-    * tagged `__dc_hit=1`, then one group pass per document derives
-    * n_ngrams (row count) and n_overlap (hit count) — no `size()`
-    * anywhere, so the gram array is evaluated exactly once and
-    * documents never cross an exchange as text. Clean documents emit
-    * nothing, exactly like the batch report. Zero retained state and
-    * the same doc-atomicity contract as [[noveltyStream]]: a
-    * document's grams explode from one input row, so its group
-    * completes within its own micro-batch.
-    *
-    * `benchGrams` must be DISTINCT on `g` (use [[benchGramTable]];
-    * duplicates would multiply joined rows and corrupt both counts)
-    * and should be persisted — the static side re-plans per batch.
-    * Parity with the batch report is pinned by StreamingOpsSpec,
-    * doubles bit-identical (same two-integer divide on both sides).
-    */
-  def decontaminationStreamJoin(
-      docs: DataFrame,
-      benchGrams: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      flagThreshold: Double = 0.05): Dataset[DcOut] = {
-    import docs.sparkSession.implicits._
-    requireIntegralId(docs, idCol)
-    docs
-      .filter(col(idCol).isNotNull) // typed-decode poison pill
-      .select(col(idCol).cast("long").as("id"),
-        explode(
-          graft.text.Decontamination.distinctNgrams(col(textCol), n)).as("g"))
-      .join(benchGrams.select(col("g")).withColumn("__dc_hit", lit(1)), Seq("g"), "left")
-      .select(col("id"), col("__dc_hit").as("hit"))
-      .as[DcHit]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[DcHit], state: GroupState[Long]) => {
-          var nN = 0
-          var nOv = 0L
-          rows.foreach { r => nN += 1; if (r.hit.isDefined) nOv += 1 }
-          // state is never set: each doc's group is complete in its
-          // own micro-batch (grams explode from one input row)
-          if (nOv == 0L) Iterator.empty
-          else {
-            val frac = nOv.toDouble / nN.toDouble
-            Iterator(DcOut(id, nN, nOv, frac, if (frac >= flagThreshold) 1 else 0))
-          }
-        })
-  }
-
   /** Streaming twin of the q77 GATE CHAIN — the corpus-release
     * composition minus the permutation: exact dedup → Gopher quality
     * gate → decontamination REMOVAL, one composed stream. Each stage
@@ -1396,18 +931,18 @@ object StreamingOps {
     *    itself — every signal is row-local column algebra and the
     *    pushdown fence is a stateless leaf, so the exact batch
     *    operator runs unchanged on the stream (no twin needed);
-    *  - decontamination removal inverts [[decontaminationStream]]'s
-    *    flag: a document whose distinct-`n`-gram overlap fraction
-    *    with the benchmark snapshot reaches `flagThreshold` is
+    *  - decontamination removal inverts the
+    *    [[graft.text.Decontamination.report]] flag: a document whose
+    *    distinct-`n`-gram overlap fraction with the benchmark
+    *    snapshot reaches `flagThreshold` is
     *    DROPPED (the batch [[graft.text.Decontamination
     *    .decontaminated]] left-anti); gram-free documents (< n
     *    tokens) cannot be flagged and pass, exactly as in batch.
     *
     * Output = the caller's columns, append-mode-legal (dedup is the
-    * only stateful stage). Same control-plane-size guard as
-    * [[decontaminationStream]]: the gram set embeds as a plan
-    * literal. Parity (StreamingOpsSpec): over any prefix fed in id
-    * order, the kept id set equals the batch
+    * only stateful stage). The gram set embeds as a plan literal, so
+    * it is size-guarded (`maxBenchGrams`). Parity (StreamingOpsSpec):
+    * over any prefix fed in id order, the kept id set equals the batch
     * dedup→gophered→decontaminated composition on the union of those
     * batches — q77's released set when fed the corpus slice with the
     * bench slice's grams.
@@ -1437,7 +972,8 @@ object StreamingOps {
     require(benchGrams.size <= maxBenchGrams,
       s"releaseGateStream embeds benchGrams as a plan literal: ${benchGrams.size} grams " +
         s"exceeds maxBenchGrams=$maxBenchGrams — snapshot the grams into a static table " +
-        "and compose decontaminationStreamJoin instead, or raise the bound knowingly")
+        "and run Decontamination.reportWith per micro-batch (perBatch) instead, or raise " +
+        "the bound knowingly")
     // flagThreshold = 0 would make the zero-overlap short-circuit
     // below DIVERGE from the batch gate (contam_frac >= 0 flags every
     // gram-bearing doc there, while the stream would keep every
@@ -1463,118 +999,10 @@ object StreamingOps {
       .drop("__rg_gs", "__rg_overlap")
   }
 
-  /** Streaming twin of [[graft.text.LineOps]] boilerplate scrubbing
-    * (`dedupLines(keepFirst = false)` against a corpus snapshot):
-    * strip every line whose md5 is in the flagged-line snapshot from
-    * each ARRIVING document. Pure stateless projection — the flagged
-    * keys embed as a plan literal (same control-plane-size regime and
-    * guard as [[decontaminationStream]]; a corpus release's repeated-
-    * line table after the `n_docs >= minDocs` cut is boilerplate-
-    * sized, not corpus-sized). Keeper exemption is deliberately absent:
-    * a NEW incoming document is never the first occurrence of a line
-    * already flagged in the snapshot, so scrub-everywhere is the only
-    * coherent streaming policy (parity is against the batch
-    * `keepFirst = false` form).
-    *
-    * Per-line cost is O(|flagged|) via `array_contains` on the sorted
-    * literal — acceptable at control-plane sizes; beyond that,
-    * snapshot the keys into a static table and run the join form in
-    * `foreachBatch`.
-    */
-  def lineScrubStream(
-      docs: DataFrame,
-      flaggedKeys: Seq[String],
-      textCol: String,
-      idCol: String,
-      maxKeys: Int = 1000000,
-      minChars: Int = 1): DataFrame = {
-    require(flaggedKeys.size <= maxKeys,
-      s"lineScrubStream embeds flagged line keys as a plan literal: ${flaggedKeys.size} keys " +
-        s"exceeds maxKeys=$maxKeys — snapshot the keys into a static table and join in " +
-        "foreachBatch instead, or raise the bound knowingly")
-    // bind-once discipline (see Decontamination's scaladoc): the split
-    // and the O(lines x keys) md5 filter are staged as ATTRIBUTES so
-    // each evaluates once per row — inlined, the filter would run
-    // twice (size + array_join) and the split four times
-    val keys = lit(flaggedKeys.toArray)
-    docs
-      .select(col(idCol), split(col(textCol), "\n").as("__ls_arr"))
-      .select(col(idCol), col("__ls_arr"),
-        filter(col("__ls_arr"),
-          // lines shorter than minChars are EXEMPT from scrubbing,
-          // matching the batch form (LineOps.dedupAgainstFlagged
-          // filters length >= minChars before flag lookup) — a
-          // flagged short key must not strip blank separator lines
-          // the batch twin keeps
-          l => length(l) < minChars ||
-            !array_contains(keys, md5(l.cast("binary")))).as("__ls_kept"))
-      .select(
-        col(idCol),
-        size(col("__ls_arr")).cast("int").as("n_lines"),
-        (size(col("__ls_arr")) - size(col("__ls_kept"))).cast("int").as("n_removed"),
-        array_join(col("__ls_kept"), "\n").as("clean"))
-  }
-
-  final case class NovGram(id: Long, df: Long)
-  final case class NovOut(doc_id: Long, n_ngrams: Int, n_rare: Long,
-      max_df: Long, rare_frac: Double, mean_df: Double)
-
-  /** Streaming twin of [[graft.text.CorpusStats.noveltyReport]]:
-    * score ARRIVING documents against a SNAPSHOT document-frequency
-    * table ([[graft.text.CorpusStats.docFrequency]] over the corpus
-    * release — corpus-sized, so it stays a stream-static shuffle join
-    * on the gram, never a literal). The per-doc aggregation runs in
-    * `flatMapGroupsWithState` holding ZERO retained state: a
-    * document's grams explode from one input row, so every row of a
-    * doc-id group arrives in the SAME micro-batch and the group
-    * aggregates and emits immediately (the doc-atomicity contract —
-    * it holds by construction here, and a re-keyed upstream that
-    * splits a document across batches would break it, which is why it
-    * is stated). Grams absent from the snapshot are dropped by the
-    * inner join, exactly like documents unseen by the snapshotted
-    * corpus release in the batch two-pass form.
-    *
-    * Parity (pinned by StreamingOpsSpec): on a stream of documents
-    * scored against `docFrequency` of the SAME corpus, the result
-    * equals batch `noveltyReport` row-for-row, doubles bit-identical.
-    */
-  def noveltyStream(
-      docs: DataFrame,
-      dfTable: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 2,
-      rareMaxDf: Int = 2): Dataset[NovOut] = {
-    import docs.sparkSession.implicits._
-    require(rareMaxDf >= 1, s"rareMaxDf=$rareMaxDf must be >= 1")
-    requireIntegralId(docs, idCol)
-    docs
-      .filter(col(idCol).isNotNull) // typed-decode poison pill
-      .select(col(idCol).cast("long").as("id"),
-        explode(
-          graft.text.Decontamination.distinctNgrams(col(textCol), n)).as("g"))
-      .join(dfTable, Seq("g"))
-      .select(col("id"), col("df").cast("long").as("df"))
-      .as[NovGram]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[NovGram], state: GroupState[Long]) => {
-          val dfs = rows.map(_.df).toArray
-          val nN = dfs.length
-          val nRare = dfs.count(_ <= rareMaxDf).toLong
-          // state is never set: each doc's group is complete in its
-          // own micro-batch, so nothing is retained across batches
-          Iterator(NovOut(id, nN, nRare, dfs.max,
-            nRare.toDouble / nN, dfs.sum.toDouble / nN))
-        })
-  }
-
   // ------------------------------- streaming substring-dedup twins
 
   final case class SpanHit(id: Long, hit: Option[Int])
   final case class SpanStatsOut(doc_id: Long, n_spans: Int, dup_spans: Int, dup_ratio: Double)
-  final case class PruneRow(id: Long, pos: Int, tok: String, hit: Option[Int])
-  final case class PruneOut(doc_id: Long, n_tokens: Int, n_removed: Int, pruned_text: String)
 
   /** Streaming twin of [[graft.text.RepeatedSpans.docDupStats]]:
     * score ARRIVING documents against a SNAPSHOT span-frequency table
@@ -1582,7 +1010,8 @@ object StreamingOps {
     * release — corpus-sized, so it stays a stream-static join on the
     * span, never a literal; persist it, the static side re-plans per
     * micro-batch). Span positions explode from one input row
-    * (doc-atomicity, as in [[noveltyStream]]), LEFT-join the flagged
+    * (doc-atomicity: a document's group completes within its own
+    * micro-batch), LEFT-join the flagged
     * span set with a hit marker, and one zero-retained-state group
     * pass per document counts positions and hits. Documents shorter
     * than one span emit nothing (they have no positions — the batch
@@ -1623,318 +1052,6 @@ object StreamingOps {
           Iterator(SpanStatsOut(id, nPos, nHit, nHit.toDouble / nPos))
         })
   }
-
-  /** Streaming twin of [[graft.text.RepeatedSpans.pruneSpans]]:
-    * remove duplicated-span content from ARRIVING documents against
-    * the same snapshot span-frequency table. The keeper exemption is
-    * evaluated against the SNAPSHOT's `keeper` column, so a streamed
-    * document keeps a flagged span only if the snapshot already named
-    * it the keeper — a genuinely new document is scrubbed of all
-    * flagged content, which is exactly the production semantics for
-    * incremental corpus growth (the snapshot owns history).
-    *
-    * Mechanics: the document fans out as BOTH token rows
-    * (`pos = -tokenIndex`, carrying the token) and span rows
-    * (`pos = +spanStart`, LEFT-joined against the flagged spans), a
-    * self-union of the same input row — still doc-atomic. One
-    * zero-retained-state group pass reassembles the token sequence,
-    * sorts the flagged starts, and applies the SAME monotone-ends gap
-    * walk as the batch form (sorted equal-length intervals — the
-    * running coverage end is the previous start's end). Output rows
-    * match batch `pruneSpans` exactly, including untouched documents
-    * — for documents WITH tokenizable text: a null-text doc explodes
-    * to no rows and is absent here, where the batch left join emits
-    * it with null counts (documented divergence; there is nothing to
-    * prune and the stream cannot emit nullable primitives).
-    */
-  def pruneSpansStream(
-      docs: DataFrame,
-      spanFreq: DataFrame,
-      textCol: String,
-      idCol: String,
-      k: Int,
-      minDocs: Int = 2,
-      keepFirst: Boolean = true): Dataset[PruneOut] = {
-    import docs.sparkSession.implicits._
-    require(k > 0, s"k=$k must be positive")
-    require(minDocs >= 2, s"minDocs=$minDocs: a span is 'repeated' across >= 2 documents")
-    requireIntegralId(docs, idCol)
-    // __flagged marks JOIN MATCH separately from the keeper value:
-    // batch pruneSpans inner-joins, so flagged-ness never depends on
-    // the keeper being non-null — under keepFirst=false a null-keeper
-    // flagged span is scrubbed EVERYWHERE (the snapshot-only shape
-    // LineOps documents), and under keepFirst=true the null-keeper
-    // =!= comparison null-propagates to "kept", exactly like the
-    // batch filter
-    val flagged = spanFreq.filter(col("n_docs") >= minDocs)
-      .select(col("span"), col("keeper").cast("long").as("__keeper"), lit(1).as("__flagged"))
-    val safeDocs = docs.filter(col(idCol).isNotNull) // typed-decode poison pill
-    val tokRows = safeDocs
-      .select(col(idCol).cast("long").as("id"),
-        posexplode(graft.text.TextAnalysis.tokens(col(textCol))).as(Seq("__t0", "tok")))
-      .select(col("id"), (-col("__t0") - 1).as("pos"), col("tok"),
-        lit(null).cast("int").as("hit"))
-    val spanRows = graft.text.RepeatedSpans.spanPositions(safeDocs, textCol, idCol, k)
-      .select(col(idCol).cast("long").as("id"), col("pos"), col("span"))
-      .join(flagged, Seq("span"), "left")
-      .select(col("id"), col("pos"), lit(null).cast("string").as("tok"),
-        when(col("__flagged").isNotNull &&
-          (if (keepFirst) col("__keeper") =!= col("id") else lit(true)), 1)
-          .cast("int").as("hit"))
-    tokRows.unionByName(spanRows)
-      .as[PruneRow]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[PruneRow], state: GroupState[Long]) => {
-          val toksBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-          val startsBuf = scala.collection.mutable.ArrayBuffer.empty[Int]
-          rows.foreach { r =>
-            if (r.pos < 0) toksBuf += ((-r.pos, r.tok))
-            else if (r.hit.isDefined) startsBuf += r.pos
-          }
-          val toks = toksBuf.sortInPlace()(Ordering.by(_._1)).map(_._2)
-          val n = toks.length
-          val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-          var end = 0 // highest covered 1-based token index so far
-          startsBuf.sortInPlace().foreach { s =>
-            if (s > end + 1) kept ++= toks.slice(end, s - 1)
-            end = math.max(end, s + k - 1)
-          }
-          if (end < n) kept ++= toks.slice(end, n)
-          Iterator(PruneOut(id, n, n - kept.length, kept.mkString(" ")))
-        })
-  }
-
-  // -------------------------- streaming model-scoring twins (LM/DSIR)
-
-  final case class LmGram(id: Long, a_micro: Option[Long], d_micro: Option[Long])
-  final case class LmOut(doc_id: Long, n_bigrams: Long, lp_micro_sum: Long, log_ppl: Double)
-
-  /** Streaming twin of [[graft.text.NgramLm.logProb]]: score ARRIVING
-    * documents against a SNAPSHOT fitted bigram model (the production
-    * CCNet regime — fit once per target-corpus release, score the
-    * stream). The bigram stream explodes from one input row
-    * (doc-atomicity as in [[noveltyStream]]), stream-static LEFT joins
-    * the two model tables on their own grains (persist them — the
-    * static side re-plans per micro-batch), and one zero-retained-
-    * state group pass per document takes the exact integer sums.
-    *
-    * `d0Micro` — the unseen-context denominator `round(ln(V)*1e6)` —
-    * is a property of the fitted model, not of any document; read it
-    * from the snapshot's one-row vocab frame
-    * (`lm.vocab.select("d0_micro")`) once at stream construction, the
-    * same control-plane materialization as [[benchGramSet]] (one row,
-    * not corpus-sized). Documents with fewer than two tokens have no
-    * bigrams and emit nothing, exactly like the batch report. Parity
-    * with [[graft.text.NgramLm.logProb]] is pinned by
-    * StreamingOpsSpec, doubles bit-identical (same integer divide).
-    */
-  def perplexityStream(
-      docs: DataFrame,
-      pairLogNum: DataFrame,
-      ctxLogDen: DataFrame,
-      d0Micro: Long,
-      textCol: String,
-      idCol: String): Dataset[LmOut] = {
-    import docs.sparkSession.implicits._
-    requireIntegralId(docs, idCol)
-    docs
-      .filter(col(idCol).isNotNull) // typed-decode poison pill
-      .select(col(idCol).cast("long").as("id"),
-        explode(ColumnBridge.column(graft.text.GramOccurrences(
-          ColumnBridge.expression(col(textCol)), 2, 2))).as("g"))
-      .withColumn("w1", substring_index(col("g"), " ", 1))
-      .join(pairLogNum, Seq("g"), "left")
-      .join(ctxLogDen, Seq("w1"), "left")
-      .select(col("id"), col("a_micro"), col("d_micro"))
-      .as[LmGram]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[LmGram], state: GroupState[Long]) => {
-          var n = 0L
-          var lp = 0L
-          rows.foreach { r =>
-            n += 1
-            lp += r.a_micro.getOrElse(0L) - r.d_micro.getOrElse(d0Micro)
-          }
-          // state is never set: each doc's group completes in its own
-          // micro-batch (grams explode from one input row)
-          Iterator(LmOut(id, n, lp, -lp.toDouble / (n * 1000000L).toDouble))
-        })
-  }
-
-  final case class IwGram(id: Long, lr_nano: Option[Long])
-  final case class IwOut(doc_id: Long, n_grams: Long, weight_nano: Long)
-
-  /** Streaming twin of [[graft.text.ImportanceResampling.weights]]:
-    * score arriving documents against a SNAPSHOT bucket log-ratio
-    * table (fit once per corpus release — the table is <= 16^hexChars
-    * rows, so persist it and let every micro-batch's stream-static
-    * join broadcast it). Same shape as [[perplexityStream]]: gram
-    * occurrences explode from one input row, LEFT join on the bucket
-    * key, zero-retained-state per-document integer sums.
-    * `defaultNano` prices buckets missing from the snapshot
-    * ([[graft.text.ImportanceResampling.unseenBucketNano]]) — a
-    * stream, unlike self-scoring, can always surface new buckets.
-    * Parity with the batch `weights` is pinned by StreamingOpsSpec.
-    */
-  def importanceWeightsStream(
-      docs: DataFrame,
-      lrTable: DataFrame,
-      textCol: String,
-      idCol: String,
-      hexChars: Int = 2,
-      defaultNano: Long = 0L): Dataset[IwOut] = {
-    import docs.sparkSession.implicits._
-    requireIntegralId(docs, idCol)
-    docs
-      .filter(col(idCol).isNotNull) // typed-decode poison pill
-      .select(col(idCol).cast("long").as("id"),
-        explode(graft.text.ImportanceResampling.gramOccurrences(col(textCol))).as("__g"))
-      .select(col("id"),
-        graft.text.ImportanceResampling.bucketOf(col("__g"), hexChars).as("b"))
-      .join(lrTable, Seq("b"), "left")
-      .select(col("id"), col("lr_nano"))
-      .as[IwGram]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[IwGram], state: GroupState[Long]) => {
-          var n = 0L
-          var w = 0L
-          rows.foreach { r => n += 1; w += r.lr_nano.getOrElse(defaultNano) }
-          Iterator(IwOut(id, n, w))
-        })
-  }
-
-  final case class QgGram(id: Long, llr_nano: Option[Long])
-  final case class QgOut(doc_id: Long, n_grams: Long, score_nano: Long,
-      prob_nano: Long, keep: Boolean)
-
-  /** Streaming twin of [[graft.text.QualityClassifier.score]]: gate
-    * arriving documents against a SNAPSHOT model (fit once per
-    * release — [[graft.text.QualityClassifier.fit]] already returns a
-    * local bucket table plus plain constants, so the stream-static
-    * join broadcasts a job-free relation and the prior/unseen/Pareto
-    * arithmetic runs in the state function on exact integers). Same
-    * shape as [[importanceWeightsStream]]: grams explode from one
-    * input row, LEFT join on the bucket key, zero-retained-state
-    * per-document sums; the sigmoid/Pareto doubles replicate the
-    * batch expressions' HALF_UP rounding bit-for-bit
-    * (StreamingOpsSpec pins parity, keep decisions included).
-    */
-  def qualityGateStream(
-      docs: DataFrame,
-      model: graft.text.QualityClassifier.NbModel,
-      textCol: String,
-      idCol: String,
-      alpha: Double = 9.0,
-      seed: Long = 41L): Dataset[QgOut] = {
-    import docs.sparkSession.implicits._
-    require(alpha > 0.0, s"alpha=$alpha must be positive")
-    requireIntegralId(docs, idCol)
-    val priorNano = model.priorNano
-    val unseenNano = model.unseenNano
-    // Batch round(...) is Catalyst Round over doubles = HALF_UP on
-    // BigDecimal.valueOf — math.round (floor(x+0.5)) would diverge on
-    // negative halves, so mirror the exact semantics.
-    def halfUp(x: Double): Long =
-      java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-    docs
-      .filter(col(idCol).isNotNull) // typed-decode poison pill
-      .select(col(idCol).cast("long").as("id"),
-        explode(graft.text.ImportanceResampling.gramOccurrences(col(textCol))).as("__g"))
-      .select(col("id"),
-        graft.text.ImportanceResampling.bucketOf(col("__g"), model.hexChars).as("b"))
-      .join(model.bucketLlr, Seq("b"), "left")
-      .select(col("id"), col("llr_nano"))
-      .as[QgGram]
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: Long, rows: Iterator[QgGram], state: GroupState[Long]) => {
-          var n = 0L
-          var score = priorNano
-          rows.foreach { r => n += 1; score += r.llr_nano.getOrElse(unseenNano) }
-          val prob = halfUp(1e9 / (1.0 + math.exp(-score.toDouble / 1e9)))
-          val m = 2147483647L; val a = 48271L
-          val h0 = java.lang.Math.floorMod(id * a + seed % m, m)
-          val h1 = java.lang.Math.floorMod(h0 * a, m)
-          val u = (java.lang.Math.floorMod(h1 * a, m) + 0.5) / 2147483647.0
-          val pareto = halfUp(
-            math.min((math.pow(1.0 - u, -1.0 / alpha) - 1.0) * 1e9, 2e9))
-          Iterator(QgOut(id, n, score, prob, pareto > 1000000000L - prob))
-        })
-  }
-
-  /** Streaming twin of [[graft.text.Bm25.score]]: score ARRIVING
-    * documents against a SNAPSHOT idf table + corpus stats (fit once
-    * per corpus release — [[graft.text.Bm25.corpusStats]] /
-    * [[graft.text.Bm25.fitIdf]] collected at stream construction).
-    * A document's BM25 score depends only on its own text and the
-    * snapshot, so the twin is a STATELESS per-row projection —
-    * [[graft.text.Bm25.scoreRowLocal]], whose contributions are the
-    * same integer-nanounit chain as the batch aggregate (parity
-    * pinned by Bm25Spec and StreamingOpsSpec). The term set is
-    * control-plane-sized by the same argument as the idf broadcast in
-    * the batch plan; documents matching no query term are filtered,
-    * mirroring the batch output's row set.
-    */
-  def bm25Stream(
-      docs: DataFrame,
-      idfMicroByTerm: Map[String, Long],
-      stats: graft.text.Bm25.CorpusStats,
-      textCol: String,
-      idCol: String,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val (nTerms, scoreNano) =
-      graft.text.Bm25.scoreRowLocal(col(textCol), idfMicroByTerm, stats, k1, b)
-    docs
-      .select(col(idCol), nTerms.as("n_terms"), scoreNano.as("score_nano"))
-      .filter(col("n_terms") > 0)
-  }
-
-  /** Streaming twin of [[graft.text.BpeTokenizer.encode]]: tokenize
-    * ARRIVING documents under a SNAPSHOT model (fit once per tokenizer
-    * release, shipped as one broadcast). A document's token-id
-    * sequence depends only on its own text and the frozen merges, so
-    * the twin is a STATELESS per-row projection —
-    * [[graft.text.BpeTokenizer.encodeRowLocal]], token-identical to
-    * the batch encoder (parity pinned by StreamingOpsSpec). The batch
-    * path's once-per-distinct-word memoization is deliberately absent:
-    * a micro-batch has no corpus-wide distinct-word table to amortize
-    * against (see encodeRowLocal's scaladoc for the trade).
-    */
-  def bpeEncodeStream(
-      docs: DataFrame,
-      model: graft.text.BpeTokenizer.BpeModel,
-      textCol: String,
-      idCol: String): DataFrame =
-    docs.select(
-      col(idCol),
-      graft.text.BpeTokenizer.encodeRowLocal(col(textCol), model).as("token_ids"))
-      .withColumn("n_bpe_tokens", size(col("token_ids")).cast("long"))
-
-  /** Streaming twin of [[graft.text.Chunking.chunksByBpe]] — chunk
-    * assignment is purely per-document, so the stream form is a
-    * STATELESS projection: each arriving doc's whole chunk list
-    * computes row-locally ([[graft.text.Chunking.chunksRowLocal]],
-    * same segmenter / prefix-sum convention / vocab-drift failure as
-    * the batch form — ChunkingStreamSpec pins exact row-set parity)
-    * and explodes to `(idCol, chunk_idx, n_words, n_tokens,
-    * chunk_text)`. Wordless documents yield no rows, like the batch
-    * form.
-    */
-  def bpeChunkStream(
-      docs: DataFrame,
-      model: graft.text.BpeTokenizer.BpeModel,
-      textCol: String,
-      idCol: String,
-      budget: Int): DataFrame =
-    docs.select(
-      col(idCol),
-      explode(graft.text.Chunking.chunksRowLocal(col(textCol), model, budget)).as("__c"))
-      .select(col(idCol), col("__c.chunk_idx"), col("__c.n_words"),
-        col("__c.n_tokens"), col("__c.chunk_text"))
 
   final case class CapIn(id: Long, domain: String)
   final case class CapOut(id: Long, domain: String)

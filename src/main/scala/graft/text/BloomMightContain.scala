@@ -16,9 +16,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * state: the plan tree (and every task closure) carries only the
   * broadcast id, and each executor fetches the filter bits once —
   * embedding a multi-hundred-MB filter as a literal would bloat the
-  * plan the same way a corpus-sized `array_intersect` literal does
-  * (the guarded failure mode of
-  * [[graft.streaming.StreamingOps.decontaminationStream]]).
+  * plan the same way a corpus-sized `array_intersect` literal does.
   *
   * Probing hashes the column's UTF-8 bytes (`UTF8String.getBytes`),
   * which is byte-identical to what [[Decontamination.gramBloom]]'s

@@ -74,9 +74,8 @@ object Bm25 {
 
   /** The term-grain idf table `(w, df, idf_micro)` for `terms` —
     * derived from the corpus, |terms| rows, always broadcastable.
-    * Exposed separately so streaming callers can snapshot it
-    * ([[scoreRowLocal]]) the way [[QualityClassifier]] snapshots its
-    * bucket table.
+    * Exposed separately so callers can snapshot it for [[scoreWith]]
+    * the way [[QualityClassifier]] snapshots its bucket table.
     */
   def fitIdf(
       docs: DataFrame,
@@ -99,10 +98,8 @@ object Bm25 {
       (lit(stats.nDocs.toDouble) - df.cast("double") + lit(0.5)) /
         (df.cast("double") + lit(0.5)) + lit(1.0)) * lit(1000000.0)).cast("long")
 
-  /** The per-(term, doc) contribution in integer nanounits — shared by
-    * the batch and row-local paths so their arithmetic is identical:
-    * both compute the same doubles from the same integers in the same
-    * order and round once.
+  /** The per-(term, doc) contribution in integer nanounits: the same
+    * doubles from the same integers in the same order, rounded once.
     */
   private def contribNano(
       tf: Column, dl: Column, idfMicroCol: Column,
@@ -129,6 +126,26 @@ object Bm25 {
       statsIn: Option[CorpusStats] = None): DataFrame = {
     require(terms.nonEmpty, "BM25 needs a non-empty query term set")
     val stats = statsIn.getOrElse(corpusStats(docs, textCol))
+    scoreWith(docs, fitIdf(docs, textCol, terms, stats), stats, textCol, idCol, terms, k1, b)
+  }
+
+  /** [[score]] against a SUPPLIED idf table ([[fitIdf]]) and corpus
+    * stats — the snapshot form: fit both on a corpus release, then
+    * score any batch of documents against them. A document's score
+    * depends only on its own text and the snapshot, so scoring
+    * disjoint slices of a corpus against the whole corpus's snapshot
+    * unions to exactly [[score]] of the corpus (Bm25Spec pins it).
+    */
+  def scoreWith(
+      docs: DataFrame,
+      idf: DataFrame,
+      stats: CorpusStats,
+      textCol: String,
+      idCol: String,
+      terms: Seq[String],
+      k1: Double = 1.2,
+      b: Double = 0.75): DataFrame = {
+    require(terms.nonEmpty, "BM25 needs a non-empty query term set")
     // One pass: dl rides next to the exploded tokens so tf rows carry
     // it through the aggregate (same grain — (id, dl) is functional).
     val toks = docs
@@ -142,43 +159,13 @@ object Bm25 {
     // skew magnet (every matched row of a common term lands in one
     // reducer) — or a duplicated tf subtree the optimizer cannot
     // exchange-reuse (the df side prunes the count, making the
-    // exchanges differ — measured). The extra pass is a column-pruned
-    // map-side scan collapsing straight to |terms| rows.
-    val idf = fitIdf(docs, textCol, terms, stats)
+    // exchanges differ — measured). The extra pass ([[fitIdf]], in
+    // [[score]]) is a column-pruned map-side scan collapsing straight
+    // to |terms| rows.
     tf.join(bcast(idf.select("w", "idf_micro")), "w")
       .withColumn("__c_nano",
         contribNano(col("tf"), col("dl"), col("idf_micro"), stats, k1, b))
       .groupBy(col(idCol))
       .agg(count(lit(1)).cast("int").as("n_terms"), sum(col("__c_nano")).as("score_nano"))
-  }
-
-  /** Row-local scorer against a SNAPSHOT idf map — the streaming twin
-    * ([[graft.streaming.StreamingOps.bm25Stream]]): a document's score
-    * depends only on its own text and the (fit-time) idf/avgdl
-    * snapshot, so scoring is a stateless projection. `tf` per term is
-    * computed inside the row (`filter(tokens, = term)`), contributions
-    * use [[contribNano]] verbatim, and the sum over the literal term
-    * list is an exact integer `+` chain — bit-identical to the batch
-    * aggregate (pinned by Bm25Spec / StreamingOpsSpec).
-    */
-  def scoreRowLocal(
-      text: Column,
-      idfMicroByTerm: Map[String, Long],
-      stats: CorpusStats,
-      k1: Double = 1.2,
-      b: Double = 0.75): (Column, Column) = {
-    require(idfMicroByTerm.nonEmpty, "BM25 needs a non-empty query term set")
-    val toksCol = TextAnalysis.tokens(text)
-    val dl = size(toksCol).cast("long")
-    val perTerm = idfMicroByTerm.toSeq.sortBy(_._1).map { case (t, idfM) =>
-      val tf = size(filter(toksCol, x => x === lit(t))).cast("long")
-      struct(tf.as("tf"),
-        when(tf > 0, contribNano(tf, dl, lit(idfM), stats, k1, b))
-          .otherwise(lit(0L)).as("c"))
-    }
-    val entries = array(perTerm: _*)
-    val nTerms = size(filter(entries, e => e.getField("tf") > 0)).cast("int")
-    val scoreNano = aggregate(entries, lit(0L), (acc, e) => acc + e.getField("c"))
-    (nTerms, scoreNano)
   }
 }

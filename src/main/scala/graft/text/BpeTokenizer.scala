@@ -189,7 +189,7 @@ object BpeTokenizer {
     * rejection ([[requireNoMarker]]) and the vocab drift check (a
     * segmentation symbol outside the model's vocabulary means the
     * corpus drifted since fit — fail rather than count/emit tokens an
-    * encode could not produce). ONE definition so the four call sites
+    * encode could not produce). ONE definition so the call sites
     * can never silently diverge on the failure contract.
     */
   private[text] def segmentChecked(w: String, m: BpeModel): Seq[String] = {
@@ -200,27 +200,6 @@ object BpeTokenizer {
         s"symbol '$s' not in vocab — corpus drifted since fit (new character?)")
     }
     segs
-  }
-
-  /** Row-local encoding column: the whole document segmented in one
-    * UDF call — token-identical to [[encode]] (same segmenter, same
-    * vocab) but with NO vocab-grain memoization, so each occurrence
-    * of a word re-segments. That trade is right for a STREAM (a
-    * micro-batch has no corpus-wide distinct-word table to amortize
-    * against — [[graft.streaming.StreamingOps.bpeEncodeStream]]) and
-    * wrong for a 100 TB batch job, where [[encode]]'s
-    * once-per-distinct-word discipline wins by the corpus/vocab
-    * ratio.
-    */
-  def encodeRowLocal(textCol: org.apache.spark.sql.Column, model: BpeModel): org.apache.spark.sql.Column = {
-    val bc = org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(model)
-    val enc = udf { (text: String) =>
-      val m = bc.value
-      if (text == null) Array.emptyIntArray
-      else text.split(" ", -1).iterator.filter(_.nonEmpty)
-        .flatMap(w => segmentChecked(w, m).map(m.vocab)).toArray
-    }
-    enc(textCol)
   }
 
   /** Persist a trained model as plain parquet — two tiny tables a

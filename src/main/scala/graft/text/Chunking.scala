@@ -114,41 +114,4 @@ object Chunking {
           s => s.getField("__bp_w")),
           " ").as("chunk_text"))
   }
-
-  final case class BpeChunk(chunk_idx: Long, n_words: Long, n_tokens: Long, chunk_text: String)
-
-  /** Row-local form of [[chunksByBpe]]: one document's whole chunk
-    * list in a single call — chunk-identical to the distributed form
-    * (same segmenter, same crossing-allowed prefix-sum assignment,
-    * same vocab-drift failure; ChunkingStreamSpec pins equality), for
-    * per-row contexts like Structured Streaming where the vocab-grain
-    * join is unavailable. The vocab-grain batch path stays preferred
-    * for corpora (it segments each distinct word once; this segments
-    * per occurrence).
-    */
-  def chunksRowLocal(
-      textCol: Column,
-      model: BpeTokenizer.BpeModel,
-      budget: Int): Column = {
-    require(budget > 0, s"budget=$budget must be positive")
-    val bc = org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(model)
-    val chunker = udf { (text: String) =>
-      val m = bc.value
-      if (text == null) Array.empty[BpeChunk]
-      else {
-        val ws = text.split(" ", -1).filter(_.nonEmpty)
-        var cum = 0L
-        val rows = ws.map { w =>
-          val segs = BpeTokenizer.segmentChecked(w, m)
-          val idx = cum / budget
-          cum += segs.length
-          (idx, w, segs.length.toLong)
-        }
-        rows.groupBy(_._1).toArray.sortBy(_._1).map { case (idx, g) =>
-          BpeChunk(idx, g.length.toLong, g.map(_._3).sum, g.map(_._2).mkString(" "))
-        }
-      }
-    }
-    chunker(textCol)
-  }
 }

@@ -104,10 +104,9 @@ object Decontamination {
     * join-with-marker shape; `false` drops the hint so the planner
     * shuffles BOTH sides on the gram key instead — corpus grams cross
     * an exchange (never text), which is the right trade only when the
-    * gram table itself is beyond broadcast size. Mirrors the
-    * streaming twins ([[graft.streaming.StreamingOps
-    * .decontaminationStream]] literal / `decontaminationStreamJoin`
-    * shuffle) so both engines offer both regimes.
+    * gram table itself is beyond broadcast size. A stream scores
+    * arriving documents in either regime by running this operator per
+    * micro-batch ([[graft.streaming.StreamingOps.perBatch]]).
     *
     * `benchGrams` must be DISTINCT on `g` — duplicates multiply the
     * left-joined rows and corrupt BOTH counts.

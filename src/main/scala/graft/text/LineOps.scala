@@ -84,8 +84,8 @@ object LineOps {
     * and the `min(doc_id)` keeper. `line_key = md5(line)` — the key
     * that shuffles instead of the line text (engine-portable: DuckDB
     * computes the identical hex). Compute once per corpus release and
-    * persist; [[dedupLinesAgainst]] and the streaming twin join
-    * against it, [[dedupLines]] derives it inline.
+    * persist; [[dedupLinesAgainst]] joins against it, [[dedupLines]]
+    * derives it inline.
     */
   def lineFrequency(
       df: DataFrame,
@@ -139,9 +139,11 @@ object LineOps {
     * `(line_key [md5 hex], keeper [may be null])` — the snapshot form
     * ([[lineFrequency]] filtered to `n_docs >= minDocs`): production
     * pipelines score each corpus release against the previous
-    * release's line table, and the streaming twin joins stream-static
-    * against it. A null `keeper` (or `keepFirst = false`) removes the
-    * line everywhere.
+    * release's line table, and a stream scrubs arriving documents by
+    * running it per micro-batch ([[graft.streaming.StreamingOps.perBatch]]
+    * with `keepFirst = false`: a new document is never the first
+    * occurrence of a line the snapshot already flagged). A null
+    * `keeper` (or `keepFirst = false`) removes the line everywhere.
     */
   def dedupLinesAgainst(
       df: DataFrame,

@@ -54,9 +54,10 @@ object RepeatedSpans {
 
   /** Span-level corpus snapshot: `(span, n_docs, keeper)` — how many
     * DISTINCT documents each span occurs in, and the `min(doc_id)`
-    * keeper. This is the static side the streaming twins join against
-    * (compute once per corpus release and persist); [[docDupStats]]
-    * and [[pruneSpans]] derive the same table inline.
+    * keeper. Compute once per corpus release and persist: it is the
+    * static side of [[pruneSpansWith]] and of the streaming
+    * `repeatedSpansStream`; [[docDupStats]] and [[pruneSpans]] derive
+    * the same table inline.
     */
   def spanFrequency(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
     spanPositions(df, textCol, idCol, k)
@@ -64,13 +65,6 @@ object RepeatedSpans {
       .groupBy(col("span"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keeper"))
 
-  /** Per-document duplicated-span stats: `(doc_id, n_spans,
-    * dup_spans, dup_ratio)` where `n_spans = max(n_tokens - k + 1,
-    * 0)` is the document's span positions, `dup_spans` counts
-    * positions whose K-token span occurs in >= `minDocs` DISTINCT
-    * documents, and `dup_ratio = dup_spans / n_spans` (0 for
-    * documents shorter than one span). Unsorted (production form).
-    */
   /** Substring-level dedup, stage 2 (after [[docDupStats]] detects):
     * REMOVE every token covered by a cross-document duplicated K-token
     * span, keeping the span's content only in its keeper document
@@ -100,13 +94,31 @@ object RepeatedSpans {
       idCol: String,
       k: Int,
       minDocs: Int = 2,
+      keepFirst: Boolean = true): DataFrame =
+    pruneSpansWith(df, spanFrequency(df, textCol, idCol, k), textCol, idCol, k, minDocs, keepFirst)
+
+  /** [[pruneSpans]] against a SUPPLIED span-frequency snapshot
+    * `(span, n_docs, keeper)` ([[spanFrequency]] of a corpus release):
+    * a document keeps a flagged span only if the snapshot names it the
+    * keeper, so a document new to the snapshot loses all flagged
+    * content — the semantics for incremental corpus growth. A null
+    * keeper never matches, so under `keepFirst = true` its span is
+    * kept everywhere; `keepFirst = false` scrubs it everywhere.
+    */
+  def pruneSpansWith(
+      df: DataFrame,
+      spanFreq: DataFrame,
+      textCol: String,
+      idCol: String,
+      k: Int,
+      minDocs: Int = 2,
       keepFirst: Boolean = true): DataFrame = {
     require(k > 0, s"k=$k must be positive")
     require(minDocs >= 2, s"minDocs=$minDocs: a span is 'repeated' across >= 2 documents")
     val toksDf = df
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks"))
       .select(col(idCol), col("__toks"), size(col("__toks")).as("__n"))
-    val flagged = spanFrequency(df, textCol, idCol, k)
+    val flagged = spanFreq
       .filter(col("n_docs") >= minDocs)
       .select(col("span"), col("keeper").as("__keeper"))
     val hits = spanPositions(df, textCol, idCol, k).join(flagged, "span")
@@ -134,6 +146,13 @@ object RepeatedSpans {
         array_join(kept, " ").as("pruned_text"))
   }
 
+  /** Per-document duplicated-span stats: `(doc_id, n_spans,
+    * dup_spans, dup_ratio)` where `n_spans = max(n_tokens - k + 1,
+    * 0)` is the document's span positions, `dup_spans` counts
+    * positions whose K-token span occurs in >= `minDocs` DISTINCT
+    * documents, and `dup_ratio = dup_spans / n_spans` (0 for
+    * documents shorter than one span). Unsorted (production form).
+    */
   def docDupStats(
       df: DataFrame,
       textCol: String,

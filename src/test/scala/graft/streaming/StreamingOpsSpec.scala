@@ -4,10 +4,12 @@ import graft.SparkSpec
 import graft.ops.Sampling
 import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming twins driven synchronously: batch fixture parquet copied
-  * into a watched dir, memory sink, `processAllAvailable()`.
+/** Streaming operators driven synchronously: batch fixture parquet
+  * copied into a watched dir (or a MemoryStream), memory or parquet
+  * sink, `processAllAvailable()`.
   */
 class StreamingOpsSpec extends SparkSpec {
 
@@ -24,6 +26,18 @@ class StreamingOpsSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     spark.table(name)
+  }
+
+  /** Feed `batches` through [[StreamingOps.perBatch]] over `op`, one
+    * micro-batch each, and read the lifted output back as one table.
+    */
+  private def runPerBatch[A](input: MemoryStream[A], stream: DataFrame, batches: Seq[Seq[A]])(
+      op: DataFrame => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-perbatch").toString
+    val q = StreamingOps.perBatch(stream, s"$dir/out", s"$dir/cp")(op)
+    batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    q.stop()
+    spark.read.parquet(s"$dir/out")
   }
 
   private def runComplete(df: DataFrame, name: String): DataFrame = {
@@ -63,7 +77,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("watermark drops late data beyond the bound (append mode)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
@@ -89,7 +102,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming exact dedup keeps one doc per normalized content, across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)]
@@ -113,7 +125,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("null ids and null timestamps are dropped, never typed-decode poison pills that kill the query") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // a null id reaching .as[BandedDoc] would NPE the micro-batch and
@@ -147,7 +158,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming exact dedup passes every null-text row through, matching the batch rule") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, Option[String])]
@@ -182,7 +192,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("cycle labeling survives a null event timestamp and matches the batch twin's nulls-first order") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def t(ms: Long) = new java.sql.Timestamp(ms)
@@ -208,7 +217,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("phashDupPairsStreamTtl fails fast on a non-integral media id instead of an ANSI cast mid-stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, Array[Byte], java.sql.Timestamp)]
@@ -220,7 +228,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming minhash candidates match the batch pair set across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = (1 to 50).map(i => s"w$i").mkString(" ")
@@ -247,7 +254,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming banded-Hamming pairs match batch hammingPairs across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sigA = 0x0123456789abcdefL
@@ -274,7 +280,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming dropSeen gate equals the batch gate on the union of batches; static ref never grows state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val r0 = 0x0123456789abcdefL
@@ -285,12 +290,14 @@ class StreamingOpsSpec extends SparkSpec {
     val batch1 = Seq((1L, r0), (2L, r0 ^ 3L), (5L, ~r0))
     val batch2 = Seq((3L, r1 ^ 0x11L), (4L, r0 ^ 0x1fL))
     val input = MemoryStream[(Long, Long)]
-    val stream = StreamingOps.dropSeenHammingStream(
-      input.toDF().toDF("doc_id", "sig"), refSigs, "doc_id", "sig", maxHamming = 3)
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("dsg").start()
+    val dir = java.nio.file.Files.createTempDirectory("graft-dsg").toString
+    val q = StreamingOps.perBatch(input.toDF().toDF("doc_id", "sig"), s"$dir/out", s"$dir/cp")(
+      graft.dedup.Dedup.dropSeenHamming(_, refSigs, "sig", maxHamming = 3))
     Seq(batch1, batch2).foreach { b => input.addData(b); q.processAllAvailable() }
+    // the reference is re-read per micro-batch: no state operator at all
+    assert(q.recentProgress.nonEmpty && q.recentProgress.forall(_.stateOperators.isEmpty))
     q.stop()
-    val got = spark.table("dsg").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = spark.read.parquet(s"$dir/out").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = graft.dedup.Dedup.dropSeenHamming(
       (batch1 ++ batch2).toDF("doc_id", "sig"), refSigs, "sig", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -302,7 +309,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming dropSeen gates each (id, sig) row independently: a multi-sig id in one micro-batch matches the batch twin") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val r0 = 0x0123456789abcdefL
@@ -313,35 +319,33 @@ class StreamingOpsSpec extends SparkSpec {
     // the id to a single verdict.
     val batch = Seq((1L, r0), (1L, ~r0), (2L, r0 ^ 1L))
     val input = MemoryStream[(Long, Long)]
-    val stream = StreamingOps.dropSeenHammingStream(
-      input.toDF().toDF("doc_id", "sig"), refSigs, "doc_id", "sig", maxHamming = 3)
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("dsm").start()
-    input.addData(batch); q.processAllAvailable()
-    q.stop()
-    val got = spark.table("dsm").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = runPerBatch(input, input.toDF().toDF("doc_id", "sig"), Seq(batch))(
+      graft.dedup.Dedup.dropSeenHamming(_, refSigs, "sig", maxHamming = 3))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = graft.dedup.Dedup.dropSeenHamming(
       batch.toDF("doc_id", "sig"), refSigs, "sig", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want && got == Set((1L, ~r0)), s"stream=$got batch=$want")
-    // embedding form: same independence at the (id, vec) grain
+    // embedding form: the batch gate decides at the ID grain (a seen
+    // vector gates every row of its id), and the lifted stream runs
+    // that same gate
     val v = Array.tabulate(8)(i => (i + 1).toFloat)
     val u = Array.tabulate(8)(i => if (i % 2 == 0) 1.0f else -1.0f)
     val ref = Seq((10L, v)).toDF("vec_id", "embedding").persist()
     val planes = graft.similarity.Similarity.hyperplanes(8, 64)
+    val batch2 = Seq((1L, v.map(_ * 2f)), (1L, u))
+    def gate2(df: DataFrame) = graft.similarity.Similarity.dropSeenEmbedding(
+      df, ref, "embedding", "vec_id", threshold = 0.99, planes)
     val input2 = MemoryStream[(Long, Array[Float])]
-    val stream2 = StreamingOps.dropSeenEmbeddingStream(
-      input2.toDF().toDF("vec_id", "embedding"), ref, "vec_id", "embedding",
-      threshold = 0.99, planes)
-    val q2 = stream2.toDF().writeStream.outputMode("append").format("memory").queryName("dsm2").start()
-    input2.addData(Seq((1L, v.map(_ * 2f)), (1L, u))); q2.processAllAvailable()
-    q2.stop()
-    val got2 = spark.table("dsm2").collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSet
-    assert(got2 == Set((1L, u.toSeq)), s"got2=$got2")
+    val got2 = runPerBatch(input2, input2.toDF().toDF("vec_id", "embedding"), Seq(batch2))(gate2)
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSet
+    val want2 = gate2(batch2.toDF("vec_id", "embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSet
+    assert(got2 == want2 && got2.isEmpty, s"stream=$got2 batch=$want2")
     refSigs.unpersist(); ref.unpersist()
   }
 
   test("streaming embedding gate equals batch dropSeenEmbedding on the union of batches (degenerates dropped)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     import graft.similarity.Similarity
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -351,35 +355,29 @@ class StreamingOpsSpec extends SparkSpec {
     val ref = Seq((10L, v), (11L, w)).toDF("vec_id", "embedding").persist()
     val planes = Similarity.hyperplanes(8, 64)
     // arrivals: re-ingest of v (gated), novel direction (kept),
-    // zero-norm degenerate (dropped by the stream, kept by batch),
-    // rescaled w (gated: cosine 1), anti-parallel v (kept)
+    // zero-norm degenerate (kept: it cannot be proven seen), rescaled
+    // w (gated: cosine 1), anti-parallel v (kept)
     val batch1 = Seq((1L, v.map(_ * 1.001f)), (2L, u))
     val batch2 = Seq((3L, Array.fill(8)(0f)), (4L, w.map(_ * 0.5f)), (5L, v.map(x => -x)))
     val input = MemoryStream[(Long, Array[Float])]
-    val stream = StreamingOps.dropSeenEmbeddingStream(
-      input.toDF().toDF("vec_id", "embedding"), ref, "vec_id", "embedding",
-      threshold = 0.99, planes)
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("dse").start()
-    Seq(batch1, batch2).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("dse").collect().map(_.getLong(0)).toSet
+    val out = runPerBatch(input, input.toDF().toDF("vec_id", "embedding"), Seq(batch1, batch2))(
+      Similarity.dropSeenEmbedding(_, ref, "embedding", "vec_id", threshold = 0.99, planes))
+    val got = out.collect().map(_.getLong(0)).toSet
     val want = Similarity.dropSeenEmbedding(
       (batch1 ++ batch2).toDF("vec_id", "embedding"), ref,
       "embedding", "vec_id", threshold = 0.99, planes)
       .collect().map(_.getLong(0)).toSet
-    // parity up to the documented degenerate rule: the batch gate
-    // keeps the zero-norm row 3 (cannot be proven seen), the stream
-    // drops it as a poison pill
-    assert(want == Set(2L, 3L, 5L) && got == want - 3L, s"stream=$got batch=$want")
+    // full parity: the lifted stream runs the batch gate, which keeps
+    // the zero-norm row 3 (cannot be proven seen)
+    assert(want == Set(2L, 3L, 5L) && got == want, s"stream=$got batch=$want")
     // output carries the ORIGINAL un-normalized vector
-    val vec2 = spark.table("dse").collect()
+    val vec2 = out.collect()
       .find(_.getLong(0) == 2L).get.getSeq[Float](1)
     assert(vec2 == u.toSeq, s"vec2=$vec2")
     ref.unpersist()
   }
 
   test("streaming jaccard gate equals batch dropSeenJaccard on the union of batches, empties included") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = (1 to 50).map(i => s"w$i").mkString(" ")
@@ -387,28 +385,23 @@ class StreamingOpsSpec extends SparkSpec {
     val mild = (1 to 25).map(i => s"w$i").mkString(" ") + " " +
       (200 to 224).map(i => s"z$i").mkString(" ") // ~0.3: below 0.8
     val other = (100 to 160).map(i => s"v$i").mkString(" ")
-    val ref = Seq((10L, base), (11L, "a b")).toDF("doc_id", "text")
-    val index = StreamingOps.shingleIndex(ref, "text", "doc_id").persist()
+    val ref = Seq((10L, base), (11L, "a b")).toDF("doc_id", "text").persist()
     val batch1 = Seq((1L, base), (2L, nearDup))
     val batch2 = Seq((3L, mild), (4L, other), (5L, "one two"), (6L, ""))
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.dropSeenJaccardStream(
-      input.toDF().toDF("doc_id", "text"), index, "text", "doc_id", threshold = 0.8)
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("djg").start()
-    Seq(batch1, batch2).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("djg").collect().map(_.getLong(0)).toSet
+    val got = runPerBatch(input, input.toDF().toDF("doc_id", "text"), Seq(batch1, batch2))(
+      graft.dedup.Dedup.dropSeenJaccard(_, ref, "text", "doc_id", threshold = 0.8))
+      .collect().map(_.getLong(0)).toSet
     val want = graft.dedup.Dedup.dropSeenJaccard(
       (batch1 ++ batch2).toDF("doc_id", "text"), ref, "text", "doc_id", threshold = 0.8)
       .collect().map(_.getLong(0)).toSet
-    index.unpersist()
-    // FULL parity — shingle-less arrivals (5, 6) kept by BOTH twins
+    ref.unpersist()
+    // FULL parity — shingle-less arrivals (5, 6) kept by stream and batch
     assert(got == want, s"stream=$got batch=$want")
     assert(got == Set(3L, 4L, 5L, 6L), s"got=$got")
   }
 
   test("streaming containment gate equals batch dropSeenContained exactly on the union of batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val short = (1 to 10).map(i => s"w$i").mkString(" ")
@@ -418,31 +411,24 @@ class StreamingOpsSpec extends SparkSpec {
       (700 to 708).map(i => s"y$i").mkString(" ")
     val novel = (500 to 560).map(i => s"z$i").mkString(" ")
     val ref = Seq((10L, long), (11L, (900 to 950).map(i => s"q$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val index = StreamingOps.shingleIndex(ref, "text", "doc_id").persist()
+      .toDF("doc_id", "text").persist()
     val batch1 = Seq((1L, short), (2L, halfOld)) // 1 gated (coverage 1), 2 kept (~0.4)
-    // null text: a stream-killing poison pill before review r18
-    // (ANSI size(NULL) = NULL decoded into ContHit's primitive na);
-    // the family rule says unprovable => kept, like the batch twin
+    // null text: unprovable => kept, the family rule
     val batch2 = Seq((3L, novel), (4L, "a b"), (5L, null.asInstanceOf[String]))
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.dropSeenContainedStream(
-      input.toDF().toDF("doc_id", "text"), index, "text", "doc_id", threshold = 0.8)
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("dcg").start()
-    Seq(batch1, batch2).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("dcg").collect().map(_.getLong(0)).toSet
+    val got = runPerBatch(input, input.toDF().toDF("doc_id", "text"), Seq(batch1, batch2))(
+      graft.dedup.Containment.dropSeenContained(_, ref, "text", "doc_id", threshold = 0.8))
+      .collect().map(_.getLong(0)).toSet
     val want = graft.dedup.Containment.dropSeenContained(
       (batch1 ++ batch2).toDF("doc_id", "text"), ref, "text", "doc_id", threshold = 0.8)
       .collect().map(_.getLong(0)).toSet
-    index.unpersist()
-    // EXACT parity — both twins verify the exact coverage
+    ref.unpersist()
+    // EXACT parity — the containment gate verifies the exact coverage
     assert(got == want, s"stream=$got batch=$want")
     assert(got == Set(2L, 3L, 4L, 5L), s"got=$got")
   }
 
   test("streaming verified near-dedup equals batch verifyCandidates on the union of batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = (1 to 50).map(i => s"w$i").mkString(" ")
@@ -476,7 +462,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming sequence packing matches batch assignBins across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // skewed strata, in-order ids per stratum (the documented arrival
@@ -507,7 +492,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("stateless curation stages run unchanged on a stream: sampling and scrub parity") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = (0L until 400L).map { i =>
@@ -542,7 +526,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("epoch upsampling with a snapshot factor table runs unchanged on a stream: manifest parity") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = (0L until 300L).map(i => (i, s"src${i % 3}", (i % 15 + 1).toInt))
@@ -567,7 +550,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("releaseGateStream TTL mode: dedup state stays bounded under a 3x longer stream; expiry re-admits") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -615,7 +597,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("minhashVerifiedStream TTL mode: in-horizon pairs verified exactly, expired history never pairs") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -643,7 +624,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("packBinsForeachBatch: carried offsets equal the batch operator on the union; replays idempotent; wrapper end-to-end") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def tmp() = java.nio.file.Files.createTempDirectory("pbfb").toString
@@ -656,10 +636,14 @@ class StreamingOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // manual per-batch protocol, fed in id order (the parity contract)
     val out = tmp() + "/out"; val st = tmp() + "/state"
-    def runBatch(ids: Seq[Int], id: Long): Unit =
+    def runBatch(ids: Seq[Int], id: Long): Unit = {
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
       StreamingOps.packBinsBatch(
         docs.filter(d => ids.contains(d._1.toInt)).toDF("doc_id", "stratum", "text"),
         id, "text", "stratum", "doc_id", capacity = 5, out, st)
+      // the batch's checkpoint is released with its scope
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+    }
     runBatch(1 to 4, 0L)
     runBatch(5 to 8, 1L)
     runBatch(5 to 8, 1L) // replay: deterministic input offsets + overwrite => idempotent
@@ -694,10 +678,14 @@ class StreamingOpsSpec extends SparkSpec {
       .select("doc_id", "bucket", "batch_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val out = tmp() + "/out"; val st = tmp() + "/state"
-    def runBatch(ids: Seq[Int], id: Long): Unit =
+    def runBatch(ids: Seq[Int], id: Long): Unit = {
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
       StreamingOps.lengthBatchingBatch(
         docs.filter(d => ids.contains(d._1.toInt)).toDF("doc_id", "n_tokens"),
         id, "doc_id", "n_tokens", bucketWidth = 10, batchSize = 2, out, st)
+      // the batch's checkpoint is released with its scope
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+    }
     runBatch(1 to 4, 0L)
     runBatch(5 to 8, 1L)
     runBatch(5 to 8, 1L) // replay is a pure overwrite of the same rows
@@ -709,8 +697,39 @@ class StreamingOpsSpec extends SparkSpec {
     assert(got == want, s"got=$got\nwant=$want")
   }
 
+  test("perBatch: a replayed micro-batch leaves one identical batch directory") {
+    import sqlImplicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-replay").toString + "/out"
+    val batch = Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "alpha beta")).toDF("doc_id", "text")
+    def op(df: DataFrame) = df.withColumn("n_chars", length(col("text")))
+    def written(): Set[(Long, String, Int)] = spark.read.parquet(out)
+      .select("doc_id", "text", "n_chars").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    StreamingOps.perBatchBody(batch, 7L, out, spark)(op)
+    val first = written()
+    StreamingOps.perBatchBody(batch, 7L, out, spark)(op) // the replay overwrites, never appends
+    assert(new java.io.File(out).list().filter(_.startsWith("batch=")).toSeq == Seq("batch=7"))
+    assert(first.size == 3 && written() == first && spark.read.parquet(out).count() == 3)
+  }
+
+  test("perBatch releases the operator's internal caches after every micro-batch") {
+    import sqlImplicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = (1 to 50).map(i => s"w$i").mkString(" ")
+    val ref = Seq((10L, base)).toDF("doc_id", "text")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val input = MemoryStream[(Long, String)]
+    val batches = Seq(Seq((1L, base)), Seq((2L, "one two three four")), Seq((3L, base + " x")))
+    // crossVerifyCandidates persists its shingle and signature tables
+    // inside dropSeenJaccard; each micro-batch's scope must drop them
+    val kept = runPerBatch(input, input.toDF().toDF("doc_id", "text"), batches)(
+      graft.dedup.Dedup.dropSeenJaccard(_, ref, "text", "doc_id", threshold = 0.8))
+      .collect().map(_.getLong(0)).toSet
+    assert(kept == Set(2L))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+  }
+
   test("TTL-bounded streaming minhash: partners within the horizon pair, expired history does not") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -740,7 +759,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming BPE chunking matches the batch chunk table row for row") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = Seq(
@@ -751,14 +769,11 @@ class StreamingOpsSpec extends SparkSpec {
     val model = graft.text.BpeTokenizer.fit(
       corpus.toDF("doc_id", "text"), "text", numMerges = 8, maxVocab = 100000)
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.bpeChunkStream(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id", budget = 5)
-    val q = stream.writeStream.outputMode("append").format("memory").queryName("bcs").start()
-    corpus.grouped(2).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text"), corpus.grouped(2).toSeq)(
+      graft.text.Chunking.chunksByBpe(_, "text", "doc_id", model, budget = 5))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toSet
-    val got = rows(spark.table("bcs"))
+    val got = rows(out)
     val want = rows(graft.text.Chunking.chunksByBpe(
       corpus.toDF("doc_id", "text"), "text", "doc_id", model, budget = 5))
     assert(got == want, s"stream=$got batch=$want")
@@ -767,7 +782,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("TTL-bounded Hamming stream reports only in-horizon fingerprint pairs") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -796,7 +810,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming phash dedup (decode map-side) equals batch phashDupPairs within the horizon") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def png(fill: (Int, Int) => Int): Array[Byte] = {
@@ -839,7 +852,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming line scrub equals batch dedupLines(keepFirst=false) against the same snapshot") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val boiler = "all rights reserved click to accept cookies"
@@ -853,52 +865,37 @@ class StreamingOpsSpec extends SparkSpec {
     val corpus = docs.toDF("doc_id", "text")
     // snapshot: the corpus release's repeated-line table
     val flagged = graft.text.LineOps.lineFrequency(corpus, "text", "doc_id")
-      .filter($"n_docs" >= 2)
-    val keys = flagged.select("line_key").collect().map(_.getString(0)).toSeq
+      .filter($"n_docs" >= 2).persist()
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.lineScrubStream(
-      input.toDF().toDF("doc_id", "text"), keys, "text", "doc_id")
-    val q = stream.writeStream.outputMode("append").format("memory").queryName("lss").start()
-    docs.grouped(150).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text"), docs.grouped(150).toSeq)(
+      graft.text.LineOps.dedupLinesAgainst(_, "text", "doc_id", flagged, keepFirst = false))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_lines", "n_removed", "clean").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSet
-    val got = rows(spark.table("lss"))
+    val got = rows(out)
     val want = rows(graft.text.LineOps.dedupLines(
       corpus, "text", "doc_id", keepFirst = false))
+    flagged.unpersist()
     assert(got == want, s"stream-batch diff: ${(got diff want).take(3) ++ (want diff got).take(3)}")
     assert(got.exists(_._3 > 0)) // the weld really scrubs something
   }
 
-  test("lineScrubStream fails fast on a corpus-sized flagged-key set") {
-    import sqlImplicits._
-    val e = intercept[IllegalArgumentException] {
-      StreamingOps.lineScrubStream(
-        Seq((1L, "a\nb")).toDF("doc_id", "text"),
-        flaggedKeys = Seq("k1", "k2", "k3"), "text", "doc_id", maxKeys = 2)
-    }
-    assert(e.getMessage.contains("foreachBatch"), e.getMessage)
-  }
-
   test("streaming decontamination equals the batch report across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val (benchDocs, corpusDocs) = docs.partition(_._1 % 97 == 0)
-    val bench = StreamingOps.benchGramSet(benchDocs.toDF("doc_id", "text"), "text")
+    // the control-plane snapshot: the collected gram set as a local
+    // table, broadcast by the batch report
+    val bench = StreamingOps.benchGramSet(benchDocs.toDF("doc_id", "text"), "text").toDF("g")
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.decontaminationStream(
-      input.toDF().toDF("doc_id", "text"), bench, "text", "doc_id")
-    val q = stream.writeStream.outputMode("append").format("memory").queryName("dcs").start()
-    corpusDocs.grouped(200).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text"), corpusDocs.grouped(200).toSeq)(
+      graft.text.Decontamination.reportWith(_, bench, "text", "doc_id"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_ngrams", "n_overlap", "contam_frac", "flagged").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getInt(4))).toSet
-    val got = rows(spark.table("dcs"))
+    val got = rows(out)
     val want = rows(graft.text.Decontamination.report(
       corpusDocs.toDF("doc_id", "text"), benchDocs.toDF("doc_id", "text"), "text", "doc_id"))
     assert(got == want, s"stream-batch diff: ${(got diff want) ++ (want diff got)}")
@@ -906,25 +903,23 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("stream-static decontamination join equals the batch report (the corpus-sized-bench path)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val (benchDocs, corpusDocs) = docs.partition(_._1 % 97 == 0)
-    // the distributed gram table — never collected to the driver
-    val gramTable = StreamingOps.benchGramTable(
-      benchDocs.toDF("doc_id", "text"), "text").persist()
+    // the distributed gram table — never collected to the driver, and
+    // joined without the broadcast hint (the beyond-broadcast regime)
+    val gramTable = benchDocs.toDF("doc_id", "text")
+      .select(explode(graft.text.Decontamination.distinctNgrams(col("text"), 3)).as("g"))
+      .distinct().persist()
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.decontaminationStreamJoin(
-      input.toDF().toDF("doc_id", "text"), gramTable, "text", "doc_id")
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("dcj").start()
-    corpusDocs.grouped(200).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text"), corpusDocs.grouped(200).toSeq)(
+      graft.text.Decontamination.reportWith(_, gramTable, "text", "doc_id", broadcastBench = false))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_ngrams", "n_overlap", "contam_frac", "flagged").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getInt(4))).toSet
-    val got = rows(spark.table("dcj"))
+    val got = rows(out)
     val want = rows(graft.text.Decontamination.report(
       corpusDocs.toDF("doc_id", "text"), benchDocs.toDF("doc_id", "text"), "text", "doc_id"))
     gramTable.unpersist()
@@ -933,7 +928,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("releaseGateStream (q77's gate chain) matches the batch release content set") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
@@ -974,21 +968,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(kept.nonEmpty)
   }
 
-  test("decontaminationStream fails fast on a corpus-sized benchmark gram set") {
-    import sqlImplicits._
-    // the gram set embeds as a plan literal, so an over-bound set must
-    // be rejected before a multi-GB plan serializes into every task
-    val e = intercept[IllegalArgumentException] {
-      StreamingOps.decontaminationStream(
-        Seq((1L, "a b c")).toDF("doc_id", "text"),
-        benchGrams = Seq("a b", "b c", "c d"), "text", "doc_id",
-        maxBenchGrams = 2)
-    }
-    assert(e.getMessage.contains("stream-static"), e.getMessage)
-  }
-
   test("streaming novelty scoring against a snapshot df-table equals the batch report") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -996,16 +976,13 @@ class StreamingOpsSpec extends SparkSpec {
     val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val dfTable = graft.text.CorpusStats.docFrequency(corpus, "text", n = 2).persist()
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.noveltyStream(
-      input.toDF().toDF("doc_id", "text"), dfTable, "text", "doc_id")
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("nvs").start()
-    docs.grouped(200).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text"), docs.grouped(200).toSeq)(
+      graft.text.CorpusStats.noveltyReportWith(_, dfTable, "text", "doc_id"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_ngrams", "n_rare", "max_df", "rare_frac", "mean_df").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5))).toSet
-    val got = rows(spark.table("nvs"))
+    val got = rows(out)
     val want = rows(graft.text.CorpusStats.noveltyReport(corpus, "text", "doc_id"))
     dfTable.unpersist()
     // row-for-row parity, doubles bit-identical (same integer divides)
@@ -1014,7 +991,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming perplexity scoring against a snapshot bigram LM equals the batch report") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1022,23 +998,20 @@ class StreamingOpsSpec extends SparkSpec {
     val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     val lm = graft.text.NgramLm.fit(
       corpus.filter(org.apache.spark.sql.functions.col("lang") === "en"), "text")
+    // the model snapshot's tables, persisted: the lifted scorer
+    // re-plans them every micro-batch
     val pairs = lm.pairLogNum.persist()
     val ctx = lm.ctxLogDen.persist()
-    // the unseen-context constant is a 1-row control-plane read of the
-    // model snapshot, not a corpus materialization
-    val d0 = lm.vocab.select("d0_micro").as[Long].head()
+    def score(df: org.apache.spark.sql.DataFrame) = graft.text.NgramLm.logProb(df, lm, "text", "doc_id")
+      .selectExpr("doc_id", "cast(n_bigrams as long) n_bigrams", "lp_micro_sum", "log_ppl")
     val input = MemoryStream[(Long, String, String)]
-    val stream = StreamingOps.perplexityStream(
-      input.toDF().toDF("doc_id", "text", "lang"), pairs, ctx, d0, "text", "doc_id")
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("ppl").start()
-    docs.grouped(200).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text", "lang"),
+      docs.grouped(200).toSeq)(score)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_bigrams", "lp_micro_sum", "log_ppl").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val got = rows(spark.table("ppl"))
-    val want = rows(graft.text.NgramLm.logProb(corpus, lm, "text", "doc_id")
-      .selectExpr("doc_id", "cast(n_bigrams as long) n_bigrams", "lp_micro_sum", "log_ppl"))
+    val got = rows(out)
+    val want = rows(score(corpus))
     pairs.unpersist(); ctx.unpersist()
     // row-for-row parity, doubles bit-identical (same integer divide)
     assert(got == want, s"stream-batch diff: ${(got diff want) ++ (want diff got)}")
@@ -1046,7 +1019,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming importance weights against a snapshot bucket table equals the batch report") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1054,26 +1026,23 @@ class StreamingOpsSpec extends SparkSpec {
     val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     val lrTable = graft.text.ImportanceResampling.fitLogRatios(
       corpus, org.apache.spark.sql.functions.col("lang") === "en", "text").persist()
+    def weigh(df: org.apache.spark.sql.DataFrame) = graft.text.ImportanceResampling.weights(
+      df, lrTable, "text", "doc_id")
+      .selectExpr("doc_id", "cast(n_grams as long) n_grams", "weight_nano")
     val input = MemoryStream[(Long, String, String)]
-    val stream = StreamingOps.importanceWeightsStream(
-      input.toDF().toDF("doc_id", "text", "lang"), lrTable, "text", "doc_id")
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("iws").start()
-    docs.grouped(200).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text", "lang"),
+      docs.grouped(200).toSeq)(weigh)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_grams", "weight_nano").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = rows(spark.table("iws"))
-    val want = rows(graft.text.ImportanceResampling.weights(
-      corpus, lrTable, "text", "doc_id")
-      .selectExpr("doc_id", "cast(n_grams as long) n_grams", "weight_nano"))
+    val got = rows(out)
+    val want = rows(weigh(corpus))
     lrTable.unpersist()
     assert(got == want, s"stream-batch diff: ${(got diff want) ++ (want diff got)}")
     assert(got.size == docs.size) // self-scoring: every doc's buckets were fitted
   }
 
   test("streaming quality gate against a snapshot model equals the batch report, keep set included") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1088,18 +1057,17 @@ class StreamingOpsSpec extends SparkSpec {
           org.apache.spark.sql.functions.lit(5L)) === 1L,
         org.apache.spark.sql.functions.col("lang") === "en"),
       "text")
+    def score(df: org.apache.spark.sql.DataFrame) =
+      graft.text.QualityClassifier.score(df, model, "text", "doc_id")
+        .selectExpr("doc_id", "cast(n_grams as long) n_grams", "score_nano", "prob_nano", "keep")
     val input = MemoryStream[(Long, String, String)]
-    val stream = StreamingOps.qualityGateStream(
-      input.toDF().toDF("doc_id", "text", "lang"), model, "text", "doc_id")
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("qgs").start()
-    docs.grouped(200).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text", "lang"),
+      docs.grouped(200).toSeq)(score)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_grams", "score_nano", "prob_nano", "keep").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toSet
-    val got = rows(spark.table("qgs"))
-    val want = rows(graft.text.QualityClassifier.score(corpus, model, "text", "doc_id")
-      .selectExpr("doc_id", "cast(n_grams as long) n_grams", "score_nano", "prob_nano", "keep"))
+    val got = rows(out)
+    val want = rows(score(corpus))
     assert(got == want, s"stream-batch diff: ${(got diff want) ++ (want diff got)}")
     assert(got.size == docs.size)
     // the Pareto gate must actually split the stream at this SF
@@ -1107,7 +1075,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("interval join runs unchanged on a point stream: parity with batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // Static interval side (maintenance windows); streaming points.
@@ -1149,7 +1116,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("chunking runs unchanged on a stream: parity with batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1182,7 +1148,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming repeated-span scoring against a span-frequency snapshot equals batch docDupStats") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = spanFixtureDocs()
@@ -1207,22 +1172,18 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming span pruning against the snapshot equals batch pruneSpans, keeper exemption included") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = spanFixtureDocs()
     val corpus = docs.toDF("doc_id", "text")
     val snap = graft.text.RepeatedSpans.spanFrequency(corpus, "text", "doc_id", k = 8).persist()
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.pruneSpansStream(
-      input.toDF().toDF("doc_id", "text"), snap, "text", "doc_id", k = 8)
-    val q = stream.toDF().writeStream.outputMode("append").format("memory").queryName("pss").start()
-    docs.grouped(100).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
+    val out = runPerBatch(input, input.toDF().toDF("doc_id", "text"), docs.grouped(100).toSeq)(
+      graft.text.RepeatedSpans.pruneSpansWith(_, snap, "text", "doc_id", k = 8))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_tokens", "n_removed", "pruned_text").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSet
-    val got = rows(spark.table("pss"))
+    val got = rows(out)
     val want = rows(graft.text.RepeatedSpans.pruneSpans(corpus, "text", "doc_id", k = 8))
     snap.unpersist()
     assert(got == want, s"stream-batch diff: ${(got diff want) ++ (want diff got)}")
@@ -1233,7 +1194,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("quality gate runs unchanged on a stream: gophered parity with batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1255,7 +1215,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming temperature mixing with a snapshot rate table equals the batch row set") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1279,7 +1238,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming BM25 against a snapshot idf/stats equals the batch score, integers included") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1287,17 +1245,13 @@ class StreamingOpsSpec extends SparkSpec {
     val terms = Seq("spark", "vector", "dup")
     // fit snapshotted from the corpus the query set was designed on
     val stats = graft.text.Bm25.corpusStats(corpus, "text")
-    val idf = graft.text.Bm25.fitIdf(corpus, "text", terms, stats).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    val idf = graft.text.Bm25.fitIdf(corpus, "text", terms, stats).persist()
     val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.bm25Stream(
-      input.toDF().toDF("doc_id", "text"), idf, stats, "text", "doc_id")
-    val q = stream.writeStream.outputMode("append").format("memory").queryName("bm25").start()
-    docs.grouped(20).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("bm25").collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
+    val got = runPerBatch(input, input.toDF().toDF("doc_id", "text"), docs.grouped(20).toSeq)(
+      graft.text.Bm25.scoreWith(_, idf, stats, "text", "doc_id", terms))
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
+    idf.unpersist()
     val want = graft.text.Bm25.score(corpus, "text", "doc_id", terms).collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
     assert(got == want)
@@ -1305,7 +1259,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming domain cap admits first arrivals, bounds every domain, matches batch counts") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1332,7 +1285,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming length batching: same buckets, same batch-size multiset as the batch form") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1365,47 +1317,39 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming per-suite decontamination matches the batch attribution row-for-row") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val all = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
     val corpus = all.filter(pmod(col("doc_id"), lit(97L)) =!= 0L)
     val bench = all.filter(pmod(col("doc_id"), lit(97L)) === 0L)
       .withColumnRenamed("source", "suite")
-    val snapshot = StreamingOps.gramSuiteSnapshot(bench, "text", "suite")
+    val snapshot = bench.select("text", "suite").persist()
+    def bySuite(df: DataFrame) =
+      graft.text.Decontamination.reportBySuite(df, snapshot, "text", "doc_id", "suite")
     val docs = corpus.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.decontaminationSuitesStream(
-      input.toDF().toDF("doc_id", "text"), snapshot, "text", "doc_id")
-    val q = stream.writeStream.outputMode("append").format("memory").queryName("dsuite").start()
-    docs.grouped(31).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("doc_id"), r.getAs[String]("suite")) ->
         (r.getAs[Int]("n_ngrams"), r.getAs[Long]("n_hits"),
           r.getAs[Double]("overlap_frac"), r.getAs[Int]("flagged"))
-    val got = spark.table("dsuite").collect().map(key).toMap
+    val got = runPerBatch(input, input.toDF().toDF("doc_id", "text"), docs.grouped(31).toSeq)(bySuite)
+      .collect().map(key).toMap
     val want = graft.text.Decontamination
       .reportBySuite(corpus, bench, "text", "doc_id", "suite")
       .collect().map(key).toMap
     assert(got == want)
     assert(got.nonEmpty)
-    // a null-text record must emit nothing (batch drops it too), not
-    // poison the stream with an NPE inside the UDF
+    // a null-text record emits nothing and does not fail its batch
     val input2 = MemoryStream[(Long, String)]
     val nullable = input2.toDF().toDF("doc_id", "text")
       .withColumn("text", when(col("doc_id") === -1L, lit(null: String)).otherwise(col("text")))
-    val q2 = StreamingOps.decontaminationSuitesStream(nullable, snapshot, "text", "doc_id")
-      .writeStream.outputMode("append").format("memory").queryName("dsuite_null").start()
-    input2.addData(Seq((-1L, "ignored"), docs.head))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(spark.table("dsuite_null").filter(col("doc_id") === -1L).count() == 0)
+    val out2 = runPerBatch(input2, nullable, Seq(Seq((-1L, "ignored"), docs.head)))(bySuite)
+    assert(out2.filter(col("doc_id") === -1L).count() == 0)
+    snapshot.unpersist()
   }
 
   test("cycle stream matches batch labelCycles on NULL event types (SQL null semantics)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // batch change detector is null-safe (prev IS DISTINCT FROM cur,
@@ -1432,7 +1376,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("TTL near-dup stream enforces the pairwise event-time horizon within one micro-batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // identical texts -> same band buckets; A and B are 10h apart in
@@ -1458,7 +1401,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("per-suite/minhash streams survive null-text records (no poison pill)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)]
@@ -1480,14 +1422,13 @@ class StreamingOpsSpec extends SparkSpec {
     // snapshot-only shape: span keys with NULL keeper
     val docs = Seq((1L, "a b c d e"), (2L, "a b c z z")).toDF("doc_id", "text")
     val snapshot = Seq(("a b c", None: Option[Long], 2L)).toDF("span", "keeper", "n_docs")
-    val got = StreamingOps.pruneSpansStream(docs, snapshot, "text", "doc_id", k = 3,
+    val got = graft.text.RepeatedSpans.pruneSpansWith(docs, snapshot, "text", "doc_id", k = 3,
       keepFirst = false)
-      .collect().map(r => r.doc_id -> r.pruned_text).toMap
+      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(got == Map(1L -> "d e", 2L -> "z z"), got.toString)
   }
 
   test("streaming BPE encode matches the batch encoder token-for-token") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import sqlImplicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = graft.sources.Sources.documents(spark, "/root/testdata/sf0.001")
@@ -1495,13 +1436,9 @@ class StreamingOpsSpec extends SparkSpec {
     val model = graft.text.BpeTokenizer.fit(corpus, "text", numMerges = 50, maxVocab = 2000)
     val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val input = MemoryStream[(Long, String)]
-    val stream = StreamingOps.bpeEncodeStream(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id")
-    val q = stream.writeStream.outputMode("append").format("memory").queryName("bpe").start()
-    docs.grouped(17).foreach { b => input.addData(b); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("bpe").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
+    val got = runPerBatch(input, input.toDF().toDF("doc_id", "text"), docs.grouped(17).toSeq)(
+      graft.text.BpeTokenizer.encode(_, "text", "doc_id", model))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](r.fieldIndex("token_ids")).toList).toMap
     val want = graft.text.BpeTokenizer.encode(corpus, "text", "doc_id", model).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](r.fieldIndex("token_ids")).toList).toMap
     assert(got == want)

@@ -61,17 +61,19 @@ class Bm25Spec extends SparkSpec {
     assert(!got.contains(3L))
   }
 
-  test("row-local scorer is bit-identical to the batch aggregate") {
+  test("scoreWith on disjoint slices unions to the batch score, bit for bit") {
+    // the property a per-micro-batch lift depends on: a document's
+    // score depends only on its own text and the (idf, stats) snapshot
     val stats = Bm25.corpusStats(docs, "text")
-    val idf = Bm25.fitIdf(docs, "text", terms, stats).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    val (nTerms, scoreNano) = Bm25.scoreRowLocal(col("text"), idf, stats)
-    val local = docs.select(col("doc_id"), nTerms.as("n_terms"), scoreNano.as("score_nano"))
-      .filter(col("n_terms") > 0).collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
-    val batch = Bm25.score(docs, "text", "doc_id", terms).collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
-    assert(local == batch)
+    val idf = Bm25.fitIdf(docs, "text", terms, stats)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toSeq
+    val halves = Seq(col("doc_id") < 2L, col("doc_id") >= 2L).map { p =>
+      rows(Bm25.scoreWith(docs.filter(p), idf, stats, "text", "doc_id", terms))
+    }
+    val batch = rows(Bm25.score(docs, "text", "doc_id", terms))
+    assert(halves.forall(_.nonEmpty), halves)
+    assert((halves(0) ++ halves(1)).sortBy(_._1) == batch.sortBy(_._1))
   }
 
   test("fitIdf counts distinct documents, not occurrences") {
