@@ -63,4 +63,40 @@ class HvacPipelineSpec extends SparkSpec {
     assert(!heat.lowCycleCount,
       s"16 (device, cycle) heat cycles must clear MinCyclesForIssues: $issues")
   }
+
+  test("issues: short-cycling needs a High stage with enough cycles; low cycle counts for every stage") {
+    import sqlImplicits._
+    // one device, three interleaved stages (each run of one stage is
+    // one cycle):
+    //   busy  — High (values alternate 100/300: rCV 0.5), 12 cycles of
+    //           6 rows, 10 of them 50 s long and 2 of them 10 min long;
+    //   burst — High the same way, only 5 cycles (of 12 rows, so its
+    //           60 samples clear MinSamplesRaw);
+    //   quiet — Low (500..502 W), 12 cycles of 6 rows, all 50 s long.
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    var clockMs = t0
+    var eid = 0L
+    def cycle(stage: String, stepSeconds: Int, value: Int => Double, n: Int = 6) = (0 until n).map { i =>
+      eid += 1
+      clockMs += stepSeconds * 1000L
+      (eid, new java.sql.Timestamp(clockMs), 1L, stage, value(i))
+    }
+    val alternating = (i: Int) => if (i % 2 == 0) 100.0 else 300.0
+    val rows = (0 until 12).flatMap { c =>
+      cycle("busy", if (c < 10) 10 else 120, alternating) ++
+        cycle("quiet", 10, i => 500.0 + i % 3) ++
+        (if (c < 5) cycle("burst", 10, alternating, n = 12) else Nil)
+    }
+    val events = rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+    val ctx = HvacPipeline.pipeline.run(
+      graft.core.PipelineContext("issues", tables = Map("events" -> events)))
+    assert(ctx.errors.isEmpty, ctx.errors.toString)
+    val raw = ctx.result[Seq[VarianceVerdict]]("variance_raw").map(v => v.stage -> v.variance).toMap
+    assert(raw == Map("burst" -> "High", "busy" -> "High", "quiet" -> "Low"), raw.toString)
+    val issues = ctx.result[Seq[StageIssues]]("issues")
+    assert(issues == Seq(
+      StageIssues("burst", lowCycleCount = true, shortCycling = false),
+      StageIssues("busy", lowCycleCount = false, shortCycling = true),
+      StageIssues("quiet", lowCycleCount = false, shortCycling = false)), issues.toString)
+  }
 }
