@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   * energy (watts), `ts` ~ timeStamp. All windows partition by the
   * device key so every step shards at 100 TB.
   *
-  * Only the variance verdicts and thresholds are collect()ed — pipeline
-  * *control flow* reads them (conditional curation/baselines,
-  * ExamplePipelineCode.md:444-453,470-474); every data-plane table
-  * stays a lazy plan.
+  * The driver collects what pipeline *control flow* reads (conditional
+  * curation/baselines, ExamplePipelineCode.md:444-453,470-474): the
+  * per-stage issue counts, the thresholds, and — for the variance
+  * verdicts — each stage's capped sample (at most
+  * `MaxRawSamplesPerStage` values per stage), which the driver fits;
+  * every data-plane table stays a lazy plan.
   */
 object HvacPipeline {
 
@@ -58,44 +60,49 @@ object HvacPipeline {
       valueCol = "value",
       tsCol = "ts",
       stateCol = "event_type")
-    // eager localCheckpoint: four later steps fire separate driver
-    // actions over this frame (variance collect, cycle counts,
-    // short-cycling, curation) — without it each one re-executes the
-    // scan + two-level cycleStats aggregation + semi-join; blocks are
-    // reclaimed when the context becomes unreachable
+    // eager localCheckpoint: three later steps fire separate driver
+    // actions over this frame (variance samples, issues, curation) —
+    // without it each one re-executes the scan + two-level cycleStats
+    // aggregation + semi-join; blocks are reclaimed when the context
+    // becomes unreachable
     ctx.withTable("cleaned", cleaned.localCheckpoint(true))
   }
 
-  private def classifyPerStage(
-      spark: SparkSession,
-      df: DataFrame,
-      params: Variance.Params): Seq[VarianceVerdict] = {
-    import spark.implicits._
-    // null values never reach the typed decode: filterValidCycles
+  /** Classifies each stage of `df` (`event_type`, `value`): one action
+    * collects every stage's non-null samples, and the driver fits the
+    * stages concurrently — the reference's per-stage thread pool
+    * (ExamplePipelineCode.md:265-269). A Spark task per stage does not
+    * spread here: AQE coalesces the sub-MB per-stage shuffle into one
+    * partition, and the fits ran one after another on one core.
+    */
+  private def classifyPerStage(df: DataFrame, params: Variance.Params): Seq[VarianceVerdict] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    // nulls are dropped BEFORE the aggregation: filterValidCycles
     // deliberately keeps a valid cycle's null-value rows (they cannot
-    // disqualify it), and the pandas reference drops NaN from every
-    // variance statistic — without the filter the non-nullable Double
-    // decode kills the whole pipeline on one null watt reading
-    df.select(col("event_type").as("stage"), col("value"))
+    // disqualify it), the pandas reference drops NaN from every
+    // variance statistic, and a stage whose values are all null must
+    // yield no verdict rather than one over an empty sample
+    val samples = df
       .filter(col("value").isNotNull)
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (stage, rows) =>
-        Variance.classify(stage, rows.map(_._2).toArray, params)
-      }
+      .groupBy("event_type")
+      .agg(collect_list(col("value")))
       .collect()
-      .toSeq
-      .sortBy(_.stage)
+    val fits = samples.toSeq.map { r =>
+      val (stage, values) = (r.getString(0), r.getSeq[Double](1).toArray)
+      Future(Variance.classify(stage, values, params))
+    }
+    Await.result(Future.sequence(fits), Duration.Inf).sortBy(_.stage)
   }
 
   /** Step 3 — raw per-stage variance classification (A8+A9), capped to
     * the most recent 5000 samples per stage (W2).
     */
   val varianceRaw: Processor = Processor("IdentifyPowerVarianceRaw", required = Seq("cleaned")) { ctx =>
-    val spark = ctx.table("cleaned").sparkSession
     val capped = Segmentation.recencyTopK(
       ctx.table("cleaned"), Seq("event_type"), "ts", MaxRawSamplesPerStage, Seq(col("event_id").desc))
-    val verdicts = classifyPerStage(spark, capped, Variance.Params(minSamples = MinSamplesRaw))
+    val verdicts = classifyPerStage(capped, Variance.Params(minSamples = MinSamplesRaw))
     ctx.withResult("variance_raw", verdicts)
   }
 
@@ -106,36 +113,29 @@ object HvacPipeline {
     requiredRes = Seq("variance_raw")) { ctx =>
     val verdicts = ctx.result[Seq[VarianceVerdict]]("variance_raw")
     val high = verdicts.filter(_.variance == "High").map(_.stage).toSet
-    val cleaned = ctx.table("cleaned")
     // Cycle identity is (user_id, cycle) — labelCycles restarts
     // numbering per device key, and Step 2 already filters at that
     // grain. A bare `cycle` here merged device A's cycle 3 with
     // device B's cycle 3: distinct counts read as one device's worth
     // and merged pseudo-cycles spanned devices, inflating durations
     // (review r19; the single-device fixture tests never caught it).
-    val cycleCounts = cleaned
-      .groupBy("event_type")
-      .agg(countDistinct(col("user_id"), col("cycle")).as("n_cycles"))
+    // One pass serves both decisions for every stage: n_cycles counts
+    // the distinct (user_id, cycle) keys — countDistinct of the pair,
+    // as `cleaned` holds no null key (the valid-cycle semi-join drops
+    // them) — and short-cycling is kept for High stages only.
+    val perStage = ShortCycling
+      .detect(
+        ctx.table("cleaned").withColumn("__cycle_key", struct(col("user_id"), col("cycle"))),
+        Seq("event_type"), "__cycle_key", "ts")
+      .select("event_type", "n_cycles", "short_cycling")
       .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    val shortByStage: Map[String, Boolean] =
-      if (high.isEmpty) Map.empty
-      else
-        ShortCycling
-          .detect(
-            cleaned.filter(col("event_type").isInCollection(high))
-              .withColumn("__cycle_key", struct(col("user_id"), col("cycle"))),
-            Seq("event_type"), "__cycle_key", "ts")
-          .collect()
-          .map(r => r.getString(0) -> r.getAs[Boolean]("short_cycling"))
-          .toMap
-    val issues = cycleCounts.keys.toSeq.sorted.map { stage =>
+    val issues = perStage.toSeq.map { r =>
+      val stage = r.getString(0)
       StageIssues(
         stage,
-        lowCycleCount = cycleCounts(stage) < MinCyclesForIssues,
-        shortCycling = shortByStage.getOrElse(stage, false))
-    }
+        lowCycleCount = r.getLong(1) < MinCyclesForIssues,
+        shortCycling = high(stage) && r.getBoolean(2))
+    }.sortBy(_.stage)
     ctx.withResult("issues", issues)
   }
 
@@ -167,9 +167,8 @@ object HvacPipeline {
     */
   val varianceCurated: Processor = Processor("IdentifyPowerVarianceCurated", required = Seq("curated"),
     requiredRes = Seq("variance_raw")) { ctx =>
-    val spark = ctx.table("curated").sparkSession
     // same recency cap as the RAW classification: classifyPerStage
-    // materializes one stage's samples in one task, so an uncapped
+    // collects every stage's samples to the driver, so an uncapped
     // curated path would hold every cycle median of a stage in memory
     // — fine on the fixture, an OOM at billions of cycles. The cap is
     // a deliberate engine guard beyond the reference (whose pandas
@@ -179,7 +178,6 @@ object HvacPipeline {
       ctx.table("curated"), Seq("event_type"), "first_ts", MaxRawSamplesPerStage,
       Seq(col("user_id").desc, col("cycle").desc))
     val curatedVerdicts = classifyPerStage(
-      spark,
       cappedCurated.select(col("event_type"), col("median_energy_cycle").as("value")),
       Variance.Params(minSamples = MinSamplesCurated))
     val raw = ctx.result[Seq[VarianceVerdict]]("variance_raw")

@@ -10,9 +10,9 @@ package graft.ops
   *
   * This is per-group *algorithmic* work on a bounded sample (the
   * pipeline caps input at the 5000 most recent points per stage,
-  * ExamplePipelineCode.md:232), so it lives at the
-  * `Dataset.groupByKey(...).mapGroups` level — executor-local math, no
-  * Catalyst extension needed (SURVEY.md §2.9).
+  * ExamplePipelineCode.md:232): the pipeline collects each stage's
+  * sample and fits the stages concurrently on the driver — plain Scala
+  * math, no Catalyst extension needed (SURVEY.md §2.9).
   *
   * Determinism (SURVEY.md §7.4#4): no random init — means start at
   * evenly spaced quantiles of the sorted sample, variances at the
@@ -27,7 +27,18 @@ object Gmm {
   private val MaxIters = 200
   private val Tol = 1e-7
 
-  /** Deterministic EM fit of a k-component 1-D mixture. */
+  /** Deterministic EM fit of a k-component 1-D mixture.
+    *
+    * One flat `n*k` responsibility buffer serves every iteration, and
+    * `log(weight)` and `log(2π·variance)` are taken once per component
+    * per E-step. The convergence log-likelihood of the components an
+    * M-step produced is the log-sum-exp the next E-step computes
+    * anyway, point by point in the same order, so each iteration runs
+    * one pass over the points instead of two. Every per-element
+    * operation and every summation order is that of the textbook loop
+    * (E-step, M-step, log-likelihood), so each `Fit` is bit-identical
+    * to it (GmmSpec pins the bits).
+    */
   def fit(xs: Array[Double], k: Int): Fit = {
     val n = xs.length
     require(n >= k && k >= 1, s"need >= $k points, got $n")
@@ -36,84 +47,85 @@ object Gmm {
     val var0 = math.max(xs.map(x => (x - mean0) * (x - mean0)).sum / n, MinVariance)
 
     // Quantile-spaced initial means: q = (i+1)/(k+1).
-    var comps = Array.tabulate(k) { i =>
+    val weight = Array.fill(k)(1.0 / k)
+    val mean = Array.tabulate(k) { i =>
       val q = (i + 1).toDouble / (k + 1)
-      val idx = math.min((q * (n - 1)).round.toInt, n - 1)
-      Component(1.0 / k, sorted(idx), var0)
+      sorted(math.min((q * (n - 1)).round.toInt, n - 1))
     }
+    val variance = Array.fill(k)(var0)
+    val logW = new Array[Double](k)
+    val log2piV = new Array[Double](k)
+    val resp = new Array[Double](n * k) // point i, component j at i * k + j
 
-    def logPdf(x: Double, c: Component): Double = {
-      val d = x - c.mean
-      -0.5 * (math.log(2 * math.Pi * c.variance) + d * d / c.variance)
-    }
-
-    def logLik(cs: Array[Component]): Double = {
+    // E-step: responsibilities under the current components; returns
+    // their log-likelihood (log-sum-exp over components, summed over
+    // points in index order).
+    def eStep(): Double = {
+      var j = 0
+      while (j < k) {
+        logW(j) = math.log(weight(j))
+        log2piV(j) = math.log(2 * math.Pi * variance(j))
+        j += 1
+      }
       var ll = 0.0
       var i = 0
       while (i < n) {
         val x = xs(i)
-        // log-sum-exp over components
+        val row = i * k
         var mx = Double.NegativeInfinity
-        val lp = new Array[Double](k)
-        var j = 0
+        j = 0
         while (j < k) {
-          lp(j) = math.log(cs(j).weight) + logPdf(x, cs(j))
-          if (lp(j) > mx) mx = lp(j)
+          val d = x - mean(j)
+          val lp = logW(j) + -0.5 * (log2piV(j) + d * d / variance(j))
+          resp(row + j) = lp
+          if (lp > mx) mx = lp
           j += 1
         }
         var s = 0.0
         j = 0
-        while (j < k) { s += math.exp(lp(j) - mx); j += 1 }
+        while (j < k) { val e = math.exp(resp(row + j) - mx); resp(row + j) = e; s += e; j += 1 }
+        j = 0
+        while (j < k) { resp(row + j) /= s; j += 1 }
         ll += mx + math.log(s)
         i += 1
       }
       ll
     }
 
+    // M-step: component j from column j of the responsibilities; a
+    // component with no mass keeps its mean and falls back to var0.
+    def mStep(): Unit = {
+      var j = 0
+      while (j < k) {
+        var nk = 0.0
+        var sx = 0.0
+        var i = 0
+        while (i < n) { val r = resp(i * k + j); nk += r; sx += r * xs(i); i += 1 }
+        val m = if (nk > 0) sx / nk else mean(j)
+        var sv = 0.0
+        i = 0
+        while (i < n) { val d = xs(i) - m; sv += resp(i * k + j) * d * d; i += 1 }
+        weight(j) = math.max(nk / n, 1e-12)
+        mean(j) = m
+        variance(j) = math.max(if (nk > 0) sv / nk else var0, MinVariance)
+        j += 1
+      }
+    }
+
+    eStep() // the initial components' log-likelihood is never compared
     var prevLL = Double.NegativeInfinity
     var iter = 0
     var converged = false
     while (iter < MaxIters && !converged) {
-      // E-step: responsibilities
-      val resp = Array.ofDim[Double](n, k)
-      var i = 0
-      while (i < n) {
-        val x = xs(i)
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < k) {
-          resp(i)(j) = math.log(comps(j).weight) + logPdf(x, comps(j))
-          if (resp(i)(j) > mx) mx = resp(i)(j)
-          j += 1
-        }
-        var s = 0.0
-        j = 0
-        while (j < k) { resp(i)(j) = math.exp(resp(i)(j) - mx); s += resp(i)(j); j += 1 }
-        j = 0
-        while (j < k) { resp(i)(j) /= s; j += 1 }
-        i += 1
-      }
-      // M-step
-      comps = Array.tabulate(k) { j =>
-        var nk = 0.0
-        var sx = 0.0
-        var i2 = 0
-        while (i2 < n) { nk += resp(i2)(j); sx += resp(i2)(j) * xs(i2); i2 += 1 }
-        val m = if (nk > 0) sx / nk else comps(j).mean
-        var sv = 0.0
-        i2 = 0
-        while (i2 < n) { val d = xs(i2) - m; sv += resp(i2)(j) * d * d; i2 += 1 }
-        val v = math.max(if (nk > 0) sv / nk else var0, MinVariance)
-        Component(math.max(nk / n, 1e-12), m, v)
-      }
-      val ll = logLik(comps)
+      mStep()
+      val ll = eStep()
       if (math.abs(ll - prevLL) < Tol * (1 + math.abs(ll))) converged = true
       prevLL = ll
       iter += 1
     }
     val params = k * 2 + (k - 1) // means + variances + free weights
     val bic = -2 * prevLL + params * math.log(n.toDouble)
-    Fit(k, prevLL, bic, comps)
+    Fit(k, prevLL, bic, Array.tabulate(k)(j => Component(weight(j), mean(j), variance(j))))
   }
 
   /** Best fit over k = 1..maxK by BIC (lowest wins; ties -> smaller k). */

@@ -36,19 +36,21 @@ object ShortCycling {
       cycleCol: String,
       tsCol: String,
       p: Params = Params()): DataFrame = {
-    // unix_micros, not unix_timestamp: the latter truncates each
-    // endpoint to whole seconds, so a 299.6 s cycle could read 300
-    // and flip the short verdict at the boundary — the exact pitfall
-    // AsOfJoin's scaladoc documents (review r19). Microsecond longs
-    // subtract exactly.
+    // Duration as a timestamp DIFFERENCE (DayTimeInterval), as in
+    // AsOfJoin: microsecond-exact and type-correct for TIMESTAMP and
+    // TIMESTAMP_NTZ alike. unix_timestamp truncates each endpoint to
+    // whole seconds, so a 299.6 s cycle could read 300 and flip the
+    // short verdict at the boundary (review r19); unix_micros rejects
+    // TIMESTAMP_NTZ, the type of the events fixture's `ts`.
     val perCycle = df
       .groupBy((groupCols :+ cycleCol).map(col): _*)
-      .agg((unix_micros(max(col(tsCol))) - unix_micros(min(col(tsCol)))).as("duration_us"))
+      .agg((max(col(tsCol)) - min(col(tsCol))).as("duration"))
+    val minCycle = make_dt_interval(lit(0), lit(0), lit(0), lit(p.minCycleSeconds))
     perCycle
       .groupBy(groupCols.map(col): _*)
       .agg(
         count(lit(1)).as("n_cycles"),
-        sum(when(col("duration_us") < p.minCycleSeconds * 1000000L, 1).otherwise(0)).as("n_short"))
+        sum(when(col("duration") < minCycle, 1).otherwise(0)).as("n_short"))
       .withColumn("short_ratio", col("n_short") / col("n_cycles"))
       .withColumn(
         "short_cycling",

@@ -17,11 +17,15 @@ import graft.hvac.VarianceVerdict
   *      `separationThreshold` x overall median;
   *   4. else "Low".
   *
-  * Pure Scala on an `Array[Double]` so it runs inside
-  * `groupByKey(...).mapGroups` — one task per stage, executor-local
-  * (the joblib thread pool of the reference,
-  * ExamplePipelineCode.md:265-269, becomes Spark's own task
-  * parallelism).
+  * Pure Scala on an `Array[Double]`: the pipeline collects each
+  * stage's capped sample in one action and classifies the stages
+  * concurrently on the driver (the joblib thread pool of the
+  * reference, ExamplePipelineCode.md:265-269).
+  *
+  * Same input => same verdict (SURVEY.md §7.4#4) holds for the sample
+  * as a multiset: a stage's samples arrive in shuffle order, and the
+  * GMM's sums depend on the order, so `classify` sorts them once and
+  * every statistic runs on the ascending order.
   */
 object Variance {
 
@@ -38,8 +42,9 @@ object Variance {
       return VarianceVerdict(stage, "Low", s"insufficient_samples(n=$n<${p.minSamples})",
         0, Nil, Nil, Nil, None, n.toLong)
 
-    val med = medianOf(values)
-    val rcv = if (med != 0) Some(medianOf(values.map(v => math.abs(v - med))) / med) else None
+    val xs = values.sorted
+    val med = medianOfSorted(xs)
+    val rcv = if (med != 0) Some(medianOf(xs.map(v => math.abs(v - med))) / med) else None
     if (rcv.exists(_ > p.rcvThreshold))
       // Locale.ROOT: the reason string is DATA (compared in specs and
       // write-back outputs), so it must not vary with the JVM locale
@@ -48,7 +53,7 @@ object Variance {
           Double.box(rcv.get), Double.box(p.rcvThreshold)),
         0, Nil, Nil, Nil, rcv, n.toLong)
 
-    val fit = Gmm.bestByBic(values, p.maxComponents)
+    val fit = Gmm.bestByBic(xs, p.maxComponents)
     val significant = fit.components.filter(_.weight >= p.minSignificantWeight)
     val sep = p.separationThreshold * math.abs(med)
     // "at least two modes ... meaningfully separated" is an ANY-PAIR
@@ -69,8 +74,9 @@ object Variance {
   }
 
   /** Exact interpolated median, matching pandas/numpy. */
-  def medianOf(xs: Array[Double]): Double = {
-    val s = xs.sorted
+  def medianOf(xs: Array[Double]): Double = medianOfSorted(xs.sorted)
+
+  private def medianOfSorted(s: Array[Double]): Double = {
     val n = s.length
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }

@@ -67,6 +67,29 @@ class VarianceSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("verdicts do not depend on the arrival order of the samples") {
+    // a stage's samples reach classify in shuffle arrival order, and
+    // the GMM's sums depend on the order: every number of the verdict
+    // (means, weights, variances, rCV) must match across permutations
+    val bimodal = gaussians(150, 1000, 20, 31L) ++ gaussians(150, 1300, 20, 37L)
+    val unimodal = gaussians(300, 800, 15, 41L)
+    def shuffled(xs: Array[Double], seed: Long): Array[Double] = {
+      var s = seed
+      val out = xs.clone()
+      for (i <- out.indices.reverse) {
+        s = s * 6364136223846793005L + 1442695040888963407L
+        val j = ((s >>> 33) % (i + 1)).toInt
+        val t = out(i); out(i) = out(j); out(j) = t
+      }
+      out
+    }
+    for (xs <- Seq(bimodal, unimodal)) {
+      val base = Variance.classify("s", xs)
+      assert(base.reason.startsWith("multimodal") || base.reason.startsWith("unimodal"), base.reason)
+      for (seed <- 1L to 5L) assert(Variance.classify("s", shuffled(xs, seed)) == base, s"seed $seed")
+    }
+  }
+
   test("rCV is scale-invariant (property: rcv(kx) == rcv(x))") {
     val xs = gaussians(100, 500, 100, 11L).map(math.abs)
     def rcv(arr: Array[Double]): Double = {
