@@ -71,9 +71,9 @@ object HvacPipeline {
   /** Classifies each stage of `df` (`event_type`, `value`): one action
     * collects every stage's non-null samples, and the driver fits the
     * stages concurrently — the reference's per-stage thread pool
-    * (ExamplePipelineCode.md:265-269). A Spark task per stage does not
-    * spread here: AQE coalesces the sub-MB per-stage shuffle into one
-    * partition, and the fits ran one after another on one core.
+    * (ExamplePipelineCode.md:265-269). A Spark task per stage would
+    * not spread: AQE coalesces the sub-MB per-stage shuffle into one
+    * partition, so the fits would run one after another on one core.
     */
   private def classifyPerStage(df: DataFrame, params: Variance.Params): Seq[VarianceVerdict] = {
     import scala.concurrent.{Await, Future}

@@ -67,4 +67,19 @@ class ShortCyclingSpec extends SparkSpec {
     assert(out(0).getAs[Long]("n_cycles") == 10L, out(0).toString)
     assert(out(0).getAs[Boolean]("short_cycling"))
   }
+
+  test("TIMESTAMP_NTZ timestamps are measured like TIMESTAMP ones") {
+    import sqlImplicits._
+    // zone-less parquet timestamps (the events fixture's `ts`) arrive
+    // as TIMESTAMP_NTZ; the 299.6 s boundary cycles must read short
+    // there too
+    val rows = (1 to 10).flatMap { c =>
+      Seq(("A", c, ts(f"2024-01-01 0${c % 8}:$c%02d:00.7")),
+        ("A", c, ts(f"2024-01-01 0${c % 8}:${c + 5}%02d:00.3")))
+    }
+    val df = rows.toDF("stage", "cycle", "ts").withColumn("ts", $"ts".cast("timestamp_ntz"))
+    val out = ShortCycling.detect(df, Seq("stage"), "cycle", "ts").collect()
+    assert(out.length == 1 && out(0).getAs[Boolean]("short_cycling"), out.mkString(","))
+    assert(out(0).getAs[Long]("n_short") == 10L)
+  }
 }
