@@ -33,8 +33,8 @@ object Gmm {
     * `log(weight)` and `log(2π·variance)` are taken once per component
     * per E-step. The convergence log-likelihood of the components an
     * M-step produced is the log-sum-exp the next E-step computes
-    * anyway, point by point in the same order, so each iteration runs
-    * one pass over the points instead of two. Every per-element
+    * anyway, point by point in the same order, so an iteration is one
+    * M-step and one E-step. Every per-element
     * operation and every summation order is that of the textbook loop
     * (E-step, M-step, log-likelihood), so each `Fit` is bit-identical
     * to it (GmmSpec pins the bits).
