@@ -3,6 +3,7 @@ package graft.hvac
 import graft.core.{Pipeline, PipelineContext, Processor}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** E3 — the flagship analytics workload, re-expressed as composable
@@ -60,37 +61,29 @@ object HvacPipeline {
       valueCol = "value",
       tsCol = "ts",
       stateCol = "event_type")
-    // eager localCheckpoint: three later steps fire separate driver
-    // actions over this frame (variance samples, issues, curation) —
-    // without it each one re-executes the scan + two-level cycleStats
-    // aggregation + semi-join; blocks are reclaimed when the context
+    // eager localCheckpoint: two later steps fire separate driver
+    // actions over this frame (variance samples, issues) and a third
+    // (curation) reads it inside the curated tail's action — without it
+    // each one re-executes the scan, the labelling windows and the
+    // valid-cycle windows; blocks are reclaimed when the context
     // becomes unreachable
     ctx.withTable("cleaned", cleaned.localCheckpoint(true))
   }
 
-  /** Classifies each stage of `df` (`event_type`, `value`): one action
-    * collects every stage's non-null samples, and the driver fits the
-    * stages concurrently — the reference's per-stage thread pool
+  /** Fits each stage's sample on the driver, the stages concurrently —
+    * the reference's per-stage thread pool
     * (ExamplePipelineCode.md:265-269). A Spark task per stage would
     * not spread: AQE coalesces the sub-MB per-stage shuffle into one
     * partition, so the fits would run one after another on one core.
+    * A stage with an empty sample gets no verdict.
     */
-  private def classifyPerStage(df: DataFrame, params: Variance.Params): Seq[VarianceVerdict] = {
+  private def classifyPerStage(
+      samples: Seq[(String, Array[Double])],
+      params: Variance.Params): Seq[VarianceVerdict] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    // nulls are dropped BEFORE the aggregation: filterValidCycles
-    // deliberately keeps a valid cycle's null-value rows (they cannot
-    // disqualify it), the pandas reference drops NaN from every
-    // variance statistic, and a stage whose values are all null must
-    // yield no verdict rather than one over an empty sample
-    val samples = df
-      .filter(col("value").isNotNull)
-      .groupBy("event_type")
-      .agg(collect_list(col("value")))
-      .collect()
-    val fits = samples.toSeq.map { r =>
-      val (stage, values) = (r.getString(0), r.getSeq[Double](1).toArray)
+    val fits = samples.collect { case (stage, values) if values.nonEmpty =>
       Future(Variance.classify(stage, values, params))
     }
     Await.result(Future.sequence(fits), Duration.Inf).sortBy(_.stage)
@@ -102,7 +95,20 @@ object HvacPipeline {
   val varianceRaw: Processor = Processor("IdentifyPowerVarianceRaw", required = Seq("cleaned")) { ctx =>
     val capped = Segmentation.recencyTopK(
       ctx.table("cleaned"), Seq("event_type"), "ts", MaxRawSamplesPerStage, Seq(col("event_id").desc))
-    val verdicts = classifyPerStage(capped, Variance.Params(minSamples = MinSamplesRaw))
+    // one action collects every stage's non-null samples. Nulls are
+    // dropped BEFORE the aggregation: filterValidCycles deliberately
+    // keeps a valid cycle's null-value rows (they cannot disqualify
+    // it), the pandas reference drops NaN from every variance
+    // statistic, and a stage whose values are all null must yield no
+    // verdict rather than one over an empty sample
+    val samples = capped
+      .filter(col("value").isNotNull)
+      .groupBy("event_type")
+      .agg(collect_list(col("value")))
+      .collect()
+      .toSeq
+      .map(r => r.getString(0) -> r.getSeq[Double](1).toArray)
+    val verdicts = classifyPerStage(samples, Variance.Params(minSamples = MinSamplesRaw))
     ctx.withResult("variance_raw", verdicts)
   }
 
@@ -121,7 +127,7 @@ object HvacPipeline {
     // (review r19; the single-device fixture tests never caught it).
     // One pass serves both decisions for every stage: n_cycles counts
     // the distinct (user_id, cycle) keys — countDistinct of the pair,
-    // as `cleaned` holds no null key (the valid-cycle semi-join drops
+    // as `cleaned` holds no null key (the valid-cycle filter drops
     // them) — and short-cycling is kept for High stages only.
     val perStage = ShortCycling
       .detect(
@@ -155,60 +161,75 @@ object HvacPipeline {
       .agg(
         GroupStats.exactMedian(col("value")).as("median_energy_cycle"),
         min(col("ts")).as("first_ts"))
-    // two later steps (re-classification, thresholds) each fire a
-    // driver action over this aggregate — same eager-snapshot
-    // rationale as "cleaned"
-    ctx.withTable("curated", curated.localCheckpoint(true))
+    // no checkpoint: one action reads this aggregate — the curated
+    // tail's collect in IdentifyPowerVarianceCurated
+    ctx.withTable("curated", curated)
   }
 
   /** Step 6 — re-classify on per-cycle medians; a stage that looks
     * multimodal on its curated medians is upgraded to High
     * (ExamplePipelineCode.md:275-332).
+    *
+    * The curated tail in one action: a `groupBy(event_type)` collect
+    * over `curated` gathers each stage's recency-capped medians, which
+    * the driver fits, and the rounded median of all the stage's cycle
+    * medians, which Step 7 reads as `curated_medians` (stage ->
+    * median, for every curated stage with a non-null one).
     */
   val varianceCurated: Processor = Processor("IdentifyPowerVarianceCurated", required = Seq("curated"),
     requiredRes = Seq("variance_raw")) { ctx =>
-    // same recency cap as the RAW classification: classifyPerStage
-    // collects every stage's samples to the driver, so an uncapped
-    // curated path would hold every cycle median of a stage in memory
-    // — fine on the fixture, an OOM at billions of cycles. The cap is
-    // a deliberate engine guard beyond the reference (whose pandas
-    // frame is already all-in-memory); 5000 most recent cycles is the
-    // same statistical budget the raw pass runs on.
-    val cappedCurated = Segmentation.recencyTopK(
-      ctx.table("curated"), Seq("event_type"), "first_ts", MaxRawSamplesPerStage,
-      Seq(col("user_id").desc, col("cycle").desc))
+    // same recency cap as the RAW classification: the collect holds a
+    // stage's samples in driver memory, so an uncapped curated path
+    // would hold every cycle median of a stage — fine on the fixture,
+    // an OOM at billions of cycles. The cap is a deliberate engine
+    // guard beyond the reference (whose pandas frame is already
+    // all-in-memory); 5000 most recent cycles is the same statistical
+    // budget the raw pass runs on. No group limit applies, as the same
+    // pass takes the median over every cycle of the stage.
+    val recency = Window.partitionBy("event_type")
+      .orderBy(col("first_ts").desc, col("user_id").desc, col("cycle").desc)
+    val median = col("median_energy_cycle")
+    val perStage = ctx
+      .table("curated")
+      .withColumn("__rn", row_number().over(recency))
+      .groupBy("event_type")
+      .agg(
+        // collect_list drops the nulls: a stage whose capped medians
+        // are all null gets no verdict
+        collect_list(when(col("__rn") <= MaxRawSamplesPerStage, median)),
+        // bround = Python round() (HALF_EVEN) — the reference's
+        // round(median, 0); Spark's HALF_UP round flips every exact
+        // .5, which medians of even-count integer watt data hit
+        // constantly
+        bround(GroupStats.exactMedian(median), 0))
+      .collect()
+      .toSeq
     val curatedVerdicts = classifyPerStage(
-      cappedCurated.select(col("event_type"), col("median_energy_cycle").as("value")),
+      perStage.map(r => r.getString(0) -> r.getSeq[Double](1).toArray),
       Variance.Params(minSamples = MinSamplesCurated))
+    val medians = perStage.collect { case r if !r.isNullAt(2) => r.getString(0) -> r.getDouble(2) }.toMap
     val raw = ctx.result[Seq[VarianceVerdict]]("variance_raw")
     val byStage = curatedVerdicts.map(v => v.stage -> v).toMap
     val merged = raw.map { v =>
       if (v.variance == "High") v
       else byStage.get(v.stage).map(c => if (c.variance == "High") c else v).getOrElse(v)
     }
-    ctx.withResult("variance_final", merged).withResult("variance_curated", curatedVerdicts)
+    ctx
+      .withResult("variance_final", merged)
+      .withResult("variance_curated", curatedVerdicts)
+      .withResult("curated_medians", medians)
   }
 
   /** Step 7 — baseline thresholds: round(median of per-cycle medians)
     * per stage; None for High-variance or empty stages
-    * (ExamplePipelineCode.md:456-484).
+    * (ExamplePipelineCode.md:456-484). The medians come from Step 6's
+    * pass; this step only picks out the final-Low stages.
     */
-  val thresholds: Processor = Processor("CalculateBaselines", required = Seq("curated"),
-    requiredRes = Seq("variance_final")) { ctx =>
+  val thresholds: Processor = Processor("CalculateBaselines",
+    requiredRes = Seq("variance_final", "curated_medians")) { ctx =>
     val fin = ctx.result[Seq[VarianceVerdict]]("variance_final")
-    val low = fin.filter(_.variance == "Low").map(_.stage).toSet
-    val medians = ctx
-      .table("curated")
-      .filter(col("event_type").isInCollection(low))
-      .groupBy("event_type")
-      // bround = Python round() (HALF_EVEN) — the reference's
-      // round(median, 0); Spark's HALF_UP round flips every exact .5,
-      // which medians of even-count integer watt data hit constantly
-      .agg(bround(GroupStats.exactMedian(col("median_energy_cycle")), 0).as("threshold"))
-      .collect()
-      .map(r => r.getString(0) -> r.getDouble(1))
-      .toMap
-    val out = fin.map(v => StageThreshold(v.stage, if (low(v.stage)) medians.get(v.stage) else None))
+    val medians = ctx.result[Map[String, Double]]("curated_medians")
+    val out = fin.map(v => StageThreshold(v.stage, if (v.variance == "Low") medians.get(v.stage) else None))
     ctx.withResult("thresholds", out)
   }
 

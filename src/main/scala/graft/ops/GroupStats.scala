@@ -26,8 +26,9 @@ object GroupStats {
     * counts pick the SMALLEST value (reference vectorized mode:
     * Requirements/ExamplePipelineCode.md:188-202; pandas groupby sorts
     * keys so idxmax lands on the smallest). Two-level aggregate +
-    * ranked window; do NOT swap in Spark's `mode()` (tie-break
-    * unspecified).
+    * ranked window; do NOT swap in Spark's `mode(v, true)`: its value
+    * counts keep -0.0 and 0.0 apart, which grouping folds into one
+    * value (a cycle {-0.0, 0.0, 5.0, 5.0} reads mode 5.0, not 0.0).
     *
     * Returns one row per group: groupCols :+ outCol.
     */
@@ -111,17 +112,30 @@ object GroupStats {
       col(s"median_$valueCol") > 0 &&
       col(s"mode_$valueCol").isNotNull && col(s"mode_$valueCol") > 0
 
-  /** J2 — keep only rows whose group key passes `validCyclePredicate`:
-    * a left-semi join against the aggregated valid-key set (reference:
-    * Requirements/ExamplePipelineCode.md:211-218). NO broadcast hint:
-    * the valid set is one row per CYCLE — data-plane sized, linear in
-    * the corpus (a year of a million devices is billions of cycles),
-    * so a forced broadcast would hit the 8 GB hard limit exactly at
-    * the scale this operator exists for (review r19). At small scale
-    * AQE still picks a broadcast semi-join from the runtime size of
-    * the aggregated side; at crawl scale the semi-join shuffles
-    * co-partitioned on `groupCols`, which cycleStats already hash-
-    * partitions on.
+  /** J2 — keep only rows whose group key passes `validCyclePredicate`
+    * (reference: Requirements/ExamplePipelineCode.md:210-218), with
+    * the statistics of [[cycleStats]] computed as WINDOW aggregates
+    * over `partitionBy(groupCols)` instead of an aggregate joined back
+    * by a left-semi join. The join form evaluated `df`'s plan on both
+    * sides — for a labelled frame, the labelling exchange, sort and
+    * windows twice; here `df` runs once, and a frame hash-partitioned
+    * on a prefix of `groupCols` (labelCycles' device key) needs no
+    * further exchange. The same shape as EventsQueries.q13ValidCycleRows.
+    *
+    * Same verdict per group as cycleStats + validCyclePredicate:
+    *   - count = non-null values (NaN counts, as it does there);
+    *   - median = unweighted `percentile(v, 0.5)`: it builds the same
+    *     value -> count map the weighted form is given;
+    *   - mode = cycleStats' `max_by(v, (cnt, -v))` choice — most
+    *     frequent, then NaN (it ranks above every number), then the
+    *     smallest value — taken as the most frequent NEGATED value
+    *     with ties to the largest. `0.0 - v` also folds -0.0 into 0.0,
+    *     which grouping does and `mode`'s value counts do not. The
+    *     value is read as a DOUBLE.
+    * Rows with a null group key are dropped, as the equi-join dropped
+    * them. `tsCol` and `stateCol` feed only cycleStats' ordered-first
+    * columns, which the predicate does not read. Columns come out keys
+    * first, as the semi-join's USING columns gave them.
     */
   def filterValidCycles(
       df: DataFrame,
@@ -130,9 +144,14 @@ object GroupStats {
       tsCol: String,
       stateCol: String,
       minCount: Long = 4): DataFrame = {
-    val valid = cycleStats(df, groupCols, valueCol, tsCol, stateCol)
-      .filter(validCyclePredicate(valueCol, minCount))
-      .select(groupCols.map(col): _*)
-    df.join(valid, groupCols, "left_semi")
+    val w = Window.partitionBy(groupCols.map(col): _*)
+    val v = col(valueCol)
+    df.filter(groupCols.map(col(_).isNotNull).reduce(_ && _))
+      .withColumn("__neg", lit(0.0) - v)
+      .withColumn("__n", count(v).over(w))
+      .withColumn("__median", exactMedian(v).over(w))
+      .withColumn("__mode", -expr("mode() WITHIN GROUP (ORDER BY __neg DESC)").over(w))
+      .filter(col("__n") >= minCount && col("__median") > 0 && col("__mode") > 0)
+      .select((groupCols ++ df.columns.filterNot(groupCols.contains)).map(col): _*)
   }
 }

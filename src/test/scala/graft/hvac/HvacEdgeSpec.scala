@@ -41,7 +41,7 @@ class HvacEdgeSpec extends SparkSpec {
     val ctx = HvacPipeline.pipeline.run(
       PipelineContext("edge-null", tables = Map("events" -> events)))
     assert(ctx.errors.isEmpty, ctx.errors.toString)
-    assert(ctx.table("cleaned").count() == 8) // null rows kept by the valid-cycle semi-join
+    assert(ctx.table("cleaned").count() == 8) // null rows of a valid cycle kept by the valid-cycle filter
     val verdicts = ctx.result[Seq[VarianceVerdict]]("variance_final")
     assert(verdicts.map(_.stage) == Seq("a"))
     assert(verdicts.head.nSamples == 6L, "nulls excluded from the classified sample")

@@ -1,6 +1,11 @@
 package graft.hvac
 
 import graft.SparkSpec
+import graft.core.{PipelineContext, PipelineStepException}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 class HvacPipelineSpec extends SparkSpec {
 
@@ -35,13 +40,10 @@ class HvacPipelineSpec extends SparkSpec {
     assert(merged.count() == 2) // only aligned minutes survive
   }
 
-  test("issues count cycles at the (device, cycle) grain, not bare cycle ids") {
+  // two devices, each with 8 valid heat cycles whose per-device cycle
+  // ids COINCIDE (labelCycles restarts numbering per device)
+  private def multiDeviceEvents(): DataFrame = {
     import sqlImplicits._
-    // two devices, each with 8 valid heat cycles whose per-device
-    // cycle ids COINCIDE (labelCycles restarts numbering per device):
-    // 16 real heat cycles. The bare-cycle grain counted the distinct
-    // ids (8 < MinCyclesForIssues = 10) and wrongly flagged
-    // lowCycleCount on any multi-device frame (review r19).
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     var eid = 0L
     val rows = for {
@@ -54,9 +56,15 @@ class HvacPipelineSpec extends SparkSpec {
       val value = if (stage == "heat") 500.0 + i else 1.0
       (eid, ts(f"2024-01-0${dev} ${run}%02d:0$i:00"), dev, stage, value)
     }
-    val events = rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+  }
+
+  test("issues count cycles at the (device, cycle) grain, not bare cycle ids") {
+    // 16 real heat cycles. The bare-cycle grain counted the distinct
+    // ids (8 < MinCyclesForIssues = 10) and wrongly flagged
+    // lowCycleCount on any multi-device frame.
     val ctx = HvacPipeline.pipeline.run(
-      graft.core.PipelineContext("multidev", tables = Map("events" -> events)))
+      PipelineContext("multidev", tables = Map("events" -> multiDeviceEvents())))
     assert(ctx.errors.isEmpty, ctx.errors.toString)
     val issues = ctx.result[Seq[StageIssues]]("issues")
     val heat = issues.find(_.stage == "heat").get
@@ -98,5 +106,51 @@ class HvacPipelineSpec extends SparkSpec {
       StageIssues("burst", lowCycleCount = true, shortCycling = false),
       StageIssues("busy", lowCycleCount = false, shortCycling = true),
       StageIssues("quiet", lowCycleCount = false, shortCycling = false)), issues.toString)
+  }
+
+  test("one pipeline run fires at most 4 SQL actions") {
+    // Every SQL action (collect, eager checkpoint, count, ...) reports
+    // to a QueryExecutionListener on the listener bus, asynchronously;
+    // a tagged sentinel action after each phase, awaited by its own
+    // event, makes every earlier event arrive in its own phase.
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    @volatile var phase = "warmup"
+    def outputOf(qe: QueryExecution) = qe.analyzed.output.map(_.name).mkString(",")
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(phase -> outputOf(qe))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(phase -> outputOf(qe))
+    }
+    var syncN = 0
+    def sync(next: String): Unit = {
+      syncN += 1
+      val tag = s"graft_sync_$syncN"
+      spark.range(1).toDF(tag).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!actions.asScala.exists(_._2 == tag) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(actions.asScala.exists(_._2 == tag), s"sentinel $tag never arrived")
+      phase = next
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val events = multiDeviceEvents()
+      sync("run")
+      val ctx = HvacPipeline.pipeline.run(PipelineContext("budget", tables = Map("events" -> events)))
+      sync("done")
+      assert(ctx.errors.isEmpty, ctx.errors.toString)
+      val runActions = actions.asScala.count { case (p, out) => p == "run" && !out.startsWith("graft_sync_") }
+      assert(runActions <= 4, s"$runActions SQL actions in one run")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("CalculateBaselines without the curated medians fails with the named missing-result error") {
+    val verdict = VarianceVerdict("heat", "Low", "unimodal", 1, Seq(500.0), Seq(1.0), Seq(4.0), Some(0.004), 100L)
+    val ctx = PipelineContext("partial").withResult("variance_final", Seq(verdict))
+    val e = intercept[PipelineStepException](
+      HvacPipeline.pipeline.runPartial(ctx, "CalculateBaselines", "CalculateBaselines"))
+    assert(e.step == "CalculateBaselines")
+    assert(e.getCause.isInstanceOf[IllegalStateException], e.getCause.toString)
+    assert(e.getCause.getMessage.contains("required result 'curated_medians' missing"), e.getCause.getMessage)
   }
 }
