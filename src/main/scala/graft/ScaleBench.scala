@@ -367,10 +367,9 @@ object ScaleBench {
       "cc_chain_distributed" -> (() => {
         val chainLen = 100000L
         val nNodes = x * 300000L
-        val p = spark.range(nNodes)
+        val p = CacheScope.checkpoint(spark)(spark.range(nNodes)
           .filter(pmod(col("id") + 1, lit(chainLen)) =!= 0 && col("id") + 1 < nNodes)
-          .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-          .localCheckpoint(true)
+          .select(col("id").as("id_a"), (col("id") + 1).as("id_b")))
         val run = graft.dedup.Dedup.dupClustersDistributedRun(p, maxIter = 25)
         val nClusters = run.labels.dropDuplicates("cluster").count()
         ccExtra("cc_chain_distributed", run)
@@ -511,14 +510,14 @@ object ScaleBench {
                 concat(lit("u"), id, lit("c")))).as("text"))
           // collect() (not head()) so this Dataset's own adaptive
           // execution finalizes and the plan marker is readable
-          val snapshot = graft.text.CorpusStats
-            .docFrequency(hot, "text", n = 2).localCheckpoint(true)
-          val agg = graft.text.CorpusStats
-            .noveltyReportWith(hot, snapshot, "text", "doc_id", n = 2, rareMaxDf = 2)
-            .groupBy().count()
-          val n = agg.collect()(0).getLong(0)
-          val plan = agg.queryExecution.executedPlan.toString
-          snapshot.unpersist(blocking = true)
+          val (n, plan) = CacheScope.run(spark) {
+            val snapshot = CacheScope.checkpoint(spark)(graft.text.CorpusStats
+              .docFrequency(hot, "text", n = 2))
+            val agg = graft.text.CorpusStats
+              .noveltyReportWith(hot, snapshot, "text", "doc_id", n = 2, rareMaxDf = 2)
+              .groupBy().count()
+            (agg.collect()(0).getLong(0), agg.queryExecution.executedPlan.toString)
+          }
           extra("corpus_novelty_hotgram",
             s""","skew_join_fired":${plan.contains("skew=true")},""" +
               s""""skew_threshold_bytes":8192,"hot_doc_fraction":0.5""")

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -16,10 +17,19 @@ import org.apache.spark.storage.StorageLevel
   * read released blocks later, and a released checkpoint cannot be
   * recomputed.
   *
+  * A cache belongs to the scope of its `SparkContext`, not of its
+  * session: Structured Streaming hands `foreachBatch` a frame in a
+  * clone of the caller's session, and an operator there persists
+  * tables derived from both, so one scope opened for either session
+  * owns them all.
+  *
+  * This object is the only code that creates or releases an internal
+  * cache; `CacheScopeGuardSpec` keeps it so.
+  *
   * Outside any scope nothing tells the library when a result's last
   * action has run, so:
   *   - lazy persists go to a FIFO pool of at most [[MaxEntries]] per
-  *     session, and registering one more releases the oldest. An
+  *     context, and registering one more releases the oldest. An
   *     evicted persist is recomputed from lineage if its frame runs
   *     again; MEMORY_AND_DISK blocks never age out of the disk store
   *     on their own, so without the bound a long-lived session would
@@ -32,7 +42,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object CacheScope {
 
-  /** Lazy persists the pool keeps per session outside any scope. Each
+  /** Lazy persists the pool keeps per context outside any scope. Each
     * is a control-plane-sized projection (ids + signatures; payloads
     * never persist), and 8 covers every cache one plan consumes.
     */
@@ -52,7 +62,7 @@ object CacheScope {
       } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  private final class Scope(val session: SparkSession) {
+  private final class Scope(val sc: SparkContext) {
     val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
   }
 
@@ -63,18 +73,16 @@ object CacheScope {
     * internal caches it registered for `spark`.
     */
   def run[A](spark: SparkSession)(body: => A): A = {
-    val out = scoped(spark)(body)
+    val out = scoped(spark.sparkContext)(body)
     require(!out.isInstanceOf[Dataset[_]],
       "CacheScope.run returned a Dataset: its caches are already released, so run its " +
         "terminal action inside the scope and return the result instead")
     out
   }
 
-  /** [[run]] without the Dataset check, for a body whose frame no
-    * longer reads its caches (already collected or checkpointed).
-    */
-  private[graft] def scoped[A](spark: SparkSession)(body: => A): A = {
-    val scope = new Scope(spark)
+  /** [[run]] without the Dataset check, for [[checkpoint]]'s body. */
+  private def scoped[A](sc: SparkContext)(body: => A): A = {
+    val scope = new Scope(sc)
     scopes.set(scope :: scopes.get)
     try body
     finally {
@@ -83,18 +91,23 @@ object CacheScope {
     }
   }
 
+  private def innermost(sc: SparkContext): Option[Scope] = scopes.get.find(_.sc eq sc)
+
+  private def owns(sc: SparkContext)(e: Entry): Boolean = e.df.sparkSession.sparkContext eq sc
+
   /** `df` persisted lazily (MEMORY_AND_DISK), owned by the innermost
-    * scope of its session or else by the pool.
+    * scope of its context or else by the pool.
     */
   private[graft] def persist(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     val e = Entry(p, checkpointed = false)
-    scopes.get.find(_.session eq p.sparkSession) match {
+    val sc = p.sparkSession.sparkContext
+    innermost(sc) match {
       case Some(s) => s.entries += e
       case None =>
         val evicted = pool.synchronized {
           pool.addLast(e)
-          val mine = pool.toArray(Array.empty[Entry]).filter(_.df.sparkSession eq p.sparkSession)
+          val mine = pool.toArray(Array.empty[Entry]).filter(owns(sc))
           mine.take(mine.length - MaxEntries).map { old => pool.remove(old); old }
         }
         evicted.foreach(_.release())
@@ -103,21 +116,30 @@ object CacheScope {
   }
 
   /** `body`'s frame, eagerly `localCheckpoint`ed and owned by the
-    * innermost scope of `spark` (outside any scope, by nobody: see the
-    * object doc). `body` runs in a scope of its own, released once the
-    * checkpoint holds the rows — the checkpoint cut the lineage, so
-    * nothing cached while building it can be read through it again.
+    * innermost scope of `spark`'s context (outside any scope, by
+    * nobody: see the object doc). `body` runs in a scope of its own,
+    * released once the checkpoint holds the rows — the checkpoint cut
+    * the lineage, so nothing cached while building it can be read
+    * through it again.
     */
   private[graft] def checkpoint(spark: SparkSession)(body: => DataFrame): DataFrame = {
-    val c = scoped(spark)(body.localCheckpoint(true))
-    scopes.get.find(_.session eq spark).foreach(_.entries += Entry(c, checkpointed = true))
+    val c = scoped(spark.sparkContext)(body.localCheckpoint(true))
+    innermost(spark.sparkContext).foreach(_.entries += Entry(c, checkpointed = true))
     c
   }
 
-  /** Release the pool's entries for `spark`. */
+  /** Release a [[checkpoint]] now, before its scope ends: an iterative
+    * operator's superseded generation, which no later action reads.
+    */
+  private[graft] def release(checkpointed: DataFrame): Unit = {
+    scopes.get.foreach(_.entries.filterInPlace(_.df ne checkpointed))
+    Entry(checkpointed, checkpointed = true).release()
+  }
+
+  /** Release the pool's entries for `spark`'s context. */
   private[core] def drain(spark: SparkSession): Unit = {
     val mine = pool.synchronized {
-      val out = pool.toArray(Array.empty[Entry]).filter(_.df.sparkSession eq spark)
+      val out = pool.toArray(Array.empty[Entry]).filter(owns(spark.sparkContext))
       out.foreach(pool.remove)
       out
     }

@@ -12,8 +12,12 @@ import scala.util.control.NonFatal
   *
   * Checkpointing: the reference deep-copies the whole context per step
   * (pipeline.py:137-140). Plans are immutable here, so a "checkpoint"
-  * keeps the context reference and optionally `persist()`s its tables
-  * so replay from a step does not recompute upstream stages.
+  * is the context reference itself, recorded under the step's name.
+  * It persists nothing: replaying from a step recomputes upstream
+  * stages, except where a step checkpointed its own output through
+  * [[CacheScope]], which owns every internal cache — inside
+  * `CacheScope.run` those are released when the scope ends, outside
+  * it they follow the rules in its doc.
   */
 final class Pipeline(
     val processors: Seq[Processor],
@@ -56,12 +60,7 @@ final class Pipeline(
           }
         attempt match {
           case Right(next) =>
-            if (enableCheckpoints) {
-              next.tables.valuesIterator
-                .filter(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-                .foreach(_.persist())
-              checkpointStore.put(p.name, next)
-            }
+            if (enableCheckpoints) checkpointStore.put(p.name, next)
             next
           case Left(failed) =>
             // NO checkpoint for a step that never completed: recording

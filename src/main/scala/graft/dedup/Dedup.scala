@@ -250,9 +250,12 @@ object Dedup {
     * id reachable"; pinned by DedupSpec against the forced-distributed
     * path). Above the threshold the distributed min-label-propagation
     * loop runs — that is the genuinely-huge-graph fallback, and each
-    * superseded checkpointed generation is unpersisted as soon as the
+    * superseded checkpointed generation is released as soon as the
     * next one materializes so at most two generations of blocks are
-    * live at any time.
+    * live at any time. Every checkpoint goes through
+    * [[graft.core.CacheScope]]: the distributed path's result reads
+    * its final generation, which lives as long as the enclosing scope;
+    * the local path's result is a driver-built local relation.
     *
     * SIZE THE THRESHOLD TO THE DRIVER: the default (10 M edges)
     * collects a few GB of boxed rows at the limit — right for the
@@ -268,7 +271,7 @@ object Dedup {
     // both execution paths below consume the flat checkpointed list
     // (the union-find path would otherwise need a count + a collect =
     // two upstream runs to size itself safely).
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    val p = CacheScope.checkpoint(pairs.sparkSession)(pairs.select(col("id_a"), col("id_b")))
     val nEdges = p.count() // cheap: counts the checkpointed blocks
     val out =
       if (nEdges <= collectThreshold) dupClustersLocal(p)
@@ -291,7 +294,7 @@ object Dedup {
     val spark = p.sparkSession
     val idType = p.schema.fields(0).dataType
     val rows = p.collect()
-    unpersistCheckpointBlocks(p)
+    CacheScope.release(p)
     val parent = new java.util.HashMap[Any, Any]()
     def find(x0: Any): Any = {
       var x = x0
@@ -375,24 +378,23 @@ object Dedup {
     // still seeds a singleton label row — the same null semantics as
     // the driver-side union-find (nodes from any non-null endpoint,
     // edges only when both ends are non-null).
-    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
+    val spark = p.sparkSession
+    val edges = CacheScope.checkpoint(spark)(p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    var labels = p.select(col("id_a").as("id"))
+      .distinct())
+    var labels = CacheScope.checkpoint(spark)(p.select(col("id_a").as("id"))
       .union(p.select(col("id_b").as("id")))
       .where(col("id").isNotNull).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    unpersistCheckpointBlocks(p) // edges + labels carry everything the loop needs
+      .withColumn("label", col("id")))
+    CacheScope.release(p) // edges + labels carry everything the loop needs
     var iter = 0
     var converged = false
     val roundSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
     while (iter < maxIter && !converged) {
       val t0 = System.nanoTime()
       val neighborMin = edges
-        .join(labels.toDF("dst", "dst_label"), "dst")
+        .join(labels.select(col("id").as("dst"), col("label").as("dst_label")), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("dst_label")).as("nmin"))
       val stepped = labels.select(col("id"), col("label").as("old"))
@@ -407,13 +409,12 @@ object Dedup {
           col("l1") === col("pid"), "left")
         .select(col("id"), col("old"),
           least(col("l1"), coalesce(col("plabel"), col("l1"))).as("label"))
-      val updated = jumped
-        .select(col("id"), col("label"), (col("label") < col("old")).as("__chg"))
-        .localCheckpoint(true) // eager: materialize + truncate lineage
+      val updated = CacheScope.checkpoint(spark)(jumped
+        .select(col("id"), col("label"), (col("label") < col("old")).as("__chg")))
       // (null max => empty label table => converged)
       val anyChanged = java.lang.Boolean.TRUE == updated.agg(max(col("__chg"))).head().get(0)
-      unpersistCheckpointBlocks(labels) // superseded generation's blocks
-      labels = updated.select("id", "label")
+      CacheScope.release(labels) // the superseded generation
+      labels = updated
       converged = !anyChanged
       iter += 1
       roundSecs += (System.nanoTime() - t0) / 1e9
@@ -422,20 +423,11 @@ object Dedup {
       s"dupClusters: stopped at maxIter=$maxIter before convergence — a cluster's diameter " +
         s"exceeds 2^$maxIter propagation rounds and its labels are split; re-run with a larger maxIter")
     // edges' blocks are dead once the loop exits; the FINAL labels
-    // generation stays persisted — it backs the returned DataFrame.
-    unpersistCheckpointBlocks(edges)
-    CcRun(labels.withColumnRenamed("label", "cluster"), iter, converged, roundSecs.toSeq)
+    // generation backs the returned DataFrame and belongs to the
+    // caller's scope.
+    CacheScope.release(edges)
+    CcRun(labels.select(col("id"), col("label").as("cluster")), iter, converged, roundSecs.toSeq)
   }
-
-  /** Drop the storage blocks behind an eagerly `localCheckpoint`ed
-    * DataFrame (no-op for any other plan shape). Only call once the
-    * checkpointed generation can never be read again — local
-    * checkpoints cannot be recomputed after their blocks are gone.
-    */
-  private def unpersistCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
 
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 

@@ -1,6 +1,6 @@
 package graft.hvac
 
-import graft.core.{Pipeline, PipelineContext, Processor}
+import graft.core.{CacheScope, Pipeline, PipelineContext, Processor}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -55,19 +55,15 @@ object HvacPipeline {
 
   /** Step 2 — drop invalid cycles (A1/A2/A4 + P5 + J2). */
   val filterValidCycles: Processor = Processor("FilterValidCycles", required = Seq("labeled")) { ctx =>
-    val cleaned = GroupStats.filterValidCycles(
-      ctx.table("labeled"),
-      groupCols = Seq("user_id", "cycle"),
-      valueCol = "value",
-      tsCol = "ts",
-      stateCol = "event_type")
-    // eager localCheckpoint: two later steps fire separate driver
-    // actions over this frame (variance samples, issues) and a third
-    // (curation) reads it inside the curated tail's action — without it
-    // each one re-executes the scan, the labelling windows and the
-    // valid-cycle windows; blocks are reclaimed when the context
-    // becomes unreachable
-    ctx.withTable("cleaned", cleaned.localCheckpoint(true))
+    val labeled = ctx.table("labeled")
+    // eager checkpoint: two later steps fire separate driver actions
+    // over this frame (variance samples, issues) and a third (curation)
+    // reads it inside the curated tail's action — without it each one
+    // re-executes the scan, the labelling windows and the valid-cycle
+    // windows; blocks are released with the enclosing scope or, outside
+    // one, reclaimed when the context becomes unreachable
+    ctx.withTable("cleaned", CacheScope.checkpoint(labeled.sparkSession)(GroupStats.filterValidCycles(
+      labeled, groupCols = Seq("user_id", "cycle"), valueCol = "value")))
   }
 
   /** Fits each stage's sample on the driver, the stages concurrently —

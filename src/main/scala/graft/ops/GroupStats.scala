@@ -133,16 +133,13 @@ object GroupStats {
     *     which grouping does and `mode`'s value counts do not. The
     *     value is read as a DOUBLE.
     * Rows with a null group key are dropped, as the equi-join dropped
-    * them. `tsCol` and `stateCol` feed only cycleStats' ordered-first
-    * columns, which the predicate does not read. Columns come out keys
-    * first, as the semi-join's USING columns gave them.
+    * them. Columns come out keys first, as the semi-join's USING
+    * columns gave them.
     */
   def filterValidCycles(
       df: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
-      tsCol: String,
-      stateCol: String,
       minCount: Long = 4): DataFrame = {
     val w = Window.partitionBy(groupCols.map(col): _*)
     val v = col(valueCol)

@@ -326,11 +326,10 @@ object Sampling {
     // of their data for over-cap domains only (review r19)
     Seq("__rk", "__n").foreach(c => require(!df.columns.contains(c),
       s"domainCap: input already has a '$c' column — rename it first"))
-    val over = df.groupBy(col(domainCol))
+    val over = graft.core.CacheScope.checkpoint(df.sparkSession)(df.groupBy(col(domainCol))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > cap)
-      .select(col(domainCol))
-      .localCheckpoint(true)
+      .select(col(domainCol)))
     val underCapRows = df.join(bcast(over), Seq(domainCol), "left_anti")
     val rankedRows = df.join(bcast(over), Seq(domainCol), "left_semi")
       .withColumn("__rk",
@@ -379,9 +378,8 @@ object Sampling {
     require(p > 0.0 && p <= 1.0, s"p=$p must be in (0, 1]")
     Seq("__rk", "__k").foreach(c => require(!df.columns.contains(c),
       s"topFractionByScore: input already has a '$c' column — rename it first"))
-    val ks = df.groupBy(col(strataCol))
-      .agg(ceil(lit(p) * count(lit(1)).cast("double")).cast("long").as("__k"))
-      .localCheckpoint(true)
+    val ks = graft.core.CacheScope.checkpoint(df.sparkSession)(df.groupBy(col(strataCol))
+      .agg(ceil(lit(p) * count(lit(1)).cast("double")).cast("long").as("__k")))
     // empty input: max over zero strata is NULL -> 0 (rank <= 0 keeps
     // nothing, which is the right answer for an empty corpus)
     val maxK = ks.agg(max(col("__k"))).collect()

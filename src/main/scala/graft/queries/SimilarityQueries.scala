@@ -302,12 +302,13 @@ object SimilarityQueries {
   def q92ImageDedupResolution(spark: SparkSession, dir: String): DataFrame = {
     val media = graft.multimodal.Multimodal.syntheticImages(
       Sources.documents(spark, dir), "doc_id", "text")
-    // eager localCheckpoint, not persist: same single decode pass for
-    // both consumers, but the blocks are reclaimed by the
-    // ContextCleaner once the frame is unreachable — a plain persist
-    // here leaked one cache entry per invocation for the JVM lifetime
-    val hashed = graft.multimodal.PerceptualHash.perceptualHashes(media).toDF()
-      .localCheckpoint(true)
+    // eager checkpoint, not persist: same single decode pass for both
+    // consumers, but the blocks are reclaimed by the enclosing scope or,
+    // outside one, by the ContextCleaner once the frame is unreachable
+    // — a plain persist here leaked one cache entry per invocation for
+    // the JVM lifetime
+    val hashed = graft.core.CacheScope.checkpoint(spark)(
+      graft.multimodal.PerceptualHash.perceptualHashes(media).toDF())
     val clusters = graft.dedup.Dedup.hammingClusters(
       hashed.select(col("media_id").as("id"), col("ahash").as("sig")),
       "id", "sig", maxHamming = 3)

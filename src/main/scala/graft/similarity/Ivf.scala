@@ -101,12 +101,11 @@ object Ivf {
     val init = train(df, vecCol, k, iters = 0, sampleSize = sampleSize, seed = seed)
     if (iters == 0) return init
     // Same [[finiteNormed]] degenerate-vector guard as [[index]];
-    // normalized once, persisted across the Lloyd rounds, freed
-    // before returning.
-    val unit = finiteNormed(df.select(col(vecCol)), vecCol)
-      .select(transform(col(vecCol), x => x / col("__n")).as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // normalized once, persisted across the Lloyd rounds, released
+    // with the scope before returning.
+    graft.core.CacheScope.run(df.sparkSession) {
+      val unit = graft.core.CacheScope.persist(finiteNormed(df.select(col(vecCol)), vecCol)
+        .select(transform(col(vecCol), x => x / col("__n")).as("__v")))
       var centroids = init.centroids
       val dim = centroids.head.length
       var iter = 0
@@ -131,7 +130,7 @@ object Ivf {
         iter += 1
       }
       Model(centroids)
-    } finally unit.unpersist()
+    }
   }
 
   private def normalize(v: Array[Double]): Array[Double] = {

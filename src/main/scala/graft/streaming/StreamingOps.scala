@@ -132,28 +132,25 @@ object StreamingOps {
     */
   def perBatch(stream: DataFrame, outPath: String, checkpointDir: String)(
       op: DataFrame => DataFrame): StreamingQuery = {
-    val owner = stream.sparkSession
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        perBatchBody(batch, batchId, outPath, owner)(op)
+        perBatchBody(batch, batchId, outPath)(op)
       }
       .start()
   }
 
   /** One [[perBatch]] micro-batch, factored out so its replay
     * idempotence is directly testable. The micro-batch frame belongs
-    * to the query's clone of `owner`, the snapshots `op` closes over
-    * to `owner` itself, so the scope covers both sessions: an
-    * operator persists tables derived from either side.
+    * to the query's clone of the caller's session, the snapshots `op`
+    * closes over to the caller's session itself; both share one
+    * `SparkContext`, so the batch's scope owns the tables an operator
+    * persists from either side.
     */
-  private[graft] def perBatchBody(
-      batch: DataFrame, batchId: Long, outPath: String, owner: SparkSession)(
+  private[graft] def perBatchBody(batch: DataFrame, batchId: Long, outPath: String)(
       op: DataFrame => DataFrame): Unit =
-    CacheScope.run(owner) {
-      CacheScope.run(batch.sparkSession) {
-        op(batch).write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
+    CacheScope.run(batch.sparkSession) {
+      op(batch).write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
     }
 
   // --------------------------------------------- streaming near-dedup

@@ -51,13 +51,10 @@ object CurationPipeline {
     // EAGER localCheckpoint: exact_deduped is the one pipeline table
     // consumed by MORE than one action (the near-dedup pair
     // materialization AND the final curated plan; the stats step's
-    // counts when it runs). The Pipeline's lazy per-table persists
-    // materialized the heavy annotate projection once per first
-    // consumer anyway (measured r20: three sequential ~0.86 s
-    // single-task cache-fill jobs at the head of q36's profile, each
-    // re-running tokens+langid+quality+fp); the checkpoint runs
-    // annotate exactly once, up front (guide §5 — cache only reused,
-    // expensive-to-recompute intermediates).
+    // counts when it runs), so the checkpoint runs the heavy annotate
+    // projection (tokens+langid+quality+fp) exactly once, up front
+    // (guide §5 — cache only reused, expensive-to-recompute
+    // intermediates).
     val annotated = ctx.table("annotated")
     ctx.withTable("exact_deduped",
       CacheScope.checkpoint(annotated.sparkSession)(Dedup.exactDedup(annotated, "text", "doc_id")))
@@ -74,15 +71,22 @@ object CurationPipeline {
     */
   val nearDedup: Processor = Processor("NearDedup", required = Seq("exact_deduped")) { ctx =>
     val docs = ctx.table("exact_deduped")
-    // dupClusters materializes the pairs eagerly at call time, so the
-    // shingle-hash cache inside verifyCandidates is consumed exactly
-    // once: the scope releases it as soon as the call returns
-    val clusters = CacheScope.scoped(docs.sparkSession)(
-      Dedup.dupClusters(Dedup.verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5)))
-    val losers = clusters
-      .filter(col("id") =!= col("cluster"))
-      .select(col("id").as("doc_id"))
-    ctx.withTable("near_deduped", docs.join(broadcast(losers), Seq("doc_id"), "left_anti"))
+    val spark = docs.sparkSession
+    // the losers are collected inside the scope that owns the caches
+    // behind them — verifyCandidates' shingle hashes and, on
+    // dupClusters' distributed path, its final label generation — so
+    // near_deduped reads none of those once the scope releases them.
+    // The broadcast below holds them on the driver anyway; as a local
+    // relation they cost no job (dupClusters' local path already built
+    // one) and no broadcast job per action that reads near_deduped.
+    val (schema, losers) = CacheScope.run(spark) {
+      val l = Dedup.dupClusters(Dedup.verifyCandidates(docs, "text", "doc_id", n = 3, threshold = 0.5))
+        .filter(col("id") =!= col("cluster"))
+        .select(col("id").as("doc_id"))
+      (l.schema, l.collect())
+    }
+    ctx.withTable("near_deduped", docs.join(
+      broadcast(spark.createDataFrame(java.util.Arrays.asList(losers: _*), schema)), Seq("doc_id"), "left_anti"))
   }
 
   val qualityGate: Processor = Processor("QualityGate", required = Seq("near_deduped")) { ctx =>
@@ -102,17 +106,21 @@ object CurationPipeline {
 
   val steps: Seq[Processor] = Seq(annotate, exactDedup, nearDedup, qualityGate, stats)
 
-  /** Checkpointing ON: the stats step counts every intermediate table,
-    * and without persistence each count would recompute the MinHash
-    * candidate stage from scratch (3x the heaviest work).
+  /** No table persists: the stats step's counts read exact_deduped's
+    * checkpoint, and near_deduped and curated are broadcast anti-joins
+    * of it against the checkpointed losers, so no count reruns the
+    * MinHash candidate stage.
     */
-  def pipeline: Pipeline = new Pipeline(steps, enableCheckpoints = true)
+  def pipeline: Pipeline = new Pipeline(steps)
 
-  def run(spark: SparkSession, sfDir: String, minQuality: Double = 0.3): PipelineContext =
-    pipeline.run(PipelineContext(
+  private def context(spark: SparkSession, sfDir: String, minQuality: Double): PipelineContext =
+    PipelineContext(
       "corpus-curation",
       config = Map("min_quality" -> minQuality.toString),
-      tables = Map("documents" -> graft.sources.Sources.documents(spark, sfDir))))
+      tables = Map("documents" -> graft.sources.Sources.documents(spark, sfDir)))
+
+  def run(spark: SparkSession, sfDir: String, minQuality: Double = 0.3): PipelineContext =
+    pipeline.run(context(spark, sfDir, minQuality))
 
   /** Queries-map entry: the curated corpus with its annotations.
     * `fp` (the xxhash64 dedup key) stays internal — the projection is
@@ -129,16 +137,7 @@ object CurationPipeline {
     * read-only over it).
     */
   def curatedDf(spark: SparkSession, sfDir: String): DataFrame =
-    // checkpoints OFF on the query path: exact_deduped (the only
-    // multiply-consumed table) is eagerly checkpointed by its own
-    // step above, and the blanket per-table persists only added
-    // cache-fill materializations of single-consumer tables
-    // (annotated / near_deduped / curated) to the q36 plan.
-    new Pipeline(Seq(annotate, exactDedup, nearDedup, qualityGate), enableCheckpoints = false)
-      .run(PipelineContext(
-        "corpus-curation",
-        config = Map("min_quality" -> "0.3"),
-        tables = Map("documents" -> graft.sources.Sources.documents(spark, sfDir))))
+    pipeline.runPartial(context(spark, sfDir, 0.3), annotate.name, qualityGate.name)
       .table("curated")
       .select("doc_id", "detected_lang", "n_tokens", "quality")
       .orderBy("doc_id")

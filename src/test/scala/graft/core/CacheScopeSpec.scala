@@ -2,9 +2,12 @@ package graft.core
 
 import graft.SparkSpec
 import graft.dedup.{Containment, Dedup}
+import graft.hvac.{HvacPipeline, StageThreshold}
 import graft.multimodal.{Avi, Multimodal, PerceptualHash}
+import graft.ops.Sampling
 import graft.similarity.{Ivf, SemDedup, Similarity}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, length, substring}
 
 /** The internal-cache lifetime: a scope releases exactly what its body
   * registered, and outside any scope lazy persists stay bounded while
@@ -118,6 +121,35 @@ class CacheScopeSpec extends SparkSpec {
       }
       assert(persisted == before, s"$name: the scope left ${persisted -- before} persisted")
     }
+  }
+
+  /** Operators that checkpoint or persist without a release twin. */
+  private val owned: Seq[(String, Int => Any)] = Seq(
+    "Sampling.domainCap" -> (k => Sampling.domainCap(
+      docs(k).withColumn("domain", substring(col("text"), 1, 2)), "doc_id", "domain", cap = 1).collect()),
+    "Sampling.topFractionByScore" -> (k => Sampling.topFractionByScore(
+      docs(k).withColumn("score", length(col("text"))), "doc_id", "text", "score", p = 0.5).collect()),
+    "Dedup.dupClusters (distributed)" -> (k => Dedup.dupClusters(
+      sigs(k).select(col("id").as("id_a"), (col("id") + 1).as("id_b")), collectThreshold = 0).collect()),
+    "HvacPipeline.pipeline" -> (_ => HvacPipeline.run(spark, "/root/testdata/sf0.001")
+      .result[Seq[StageThreshold]]("thresholds")))
+
+  test("a scope owns the caches of operators that never had a release twin, and releases them all") {
+    clean()
+    def leak(name: String, before: Set[Int]) =
+      if (persisted == before) None else Some(s"$name left ${persisted -- before}")
+    val leaks = owned.flatMap { case (name, op) =>
+      val before = persisted
+      CacheScope.run(spark) {
+        op(6)
+        assert(persisted != before, s"$name: expected internal caches while the scope is open")
+      }
+      leak(name, before)
+    }
+    val before = persisted
+    CacheScope.run(spark)(Ivf.trainDistributed(vecs(6), "embedding", k = 2, iters = 2))
+    val all = leaks ++ leak("Ivf.trainDistributed", before)
+    assert(all.isEmpty, all.mkString("; "))
   }
 
   test("nested scopes release only their own entries") {

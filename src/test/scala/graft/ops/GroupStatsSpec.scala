@@ -36,7 +36,7 @@ class GroupStatsSpec extends SparkSpec {
         (6 to 10).map(i => (i.toLong, 1, 3, 0.0)) // cycle 3: 5 rows but zero energy
     val surviving = (11 to 14).map(i => (i.toLong, 1, 4, 30.0)) // cycle 4: 4 rows positive
     val df = (rows ++ surviving).toDF("ts", "tstate", "cycle", "energy")
-    val out = GroupStats.filterValidCycles(df, Seq("cycle"), "energy", "ts", "tstate")
+    val out = GroupStats.filterValidCycles(df, Seq("cycle"), "energy")
     assert(out.select("cycle").distinct().as[Int].collect().toSeq == Seq(4))
     assert(out.count() == 4)
   }
@@ -96,7 +96,7 @@ class GroupStatsSpec extends SparkSpec {
   }.sorted
 
   private def assertSameAsReference(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val out = GroupStats.filterValidCycles(df, keys, "value", "ts", "event_type")
+    val out = GroupStats.filterValidCycles(df, keys, "value")
     val ref = semiJoinReference(df, keys)
     assert(out.schema == ref.schema, s"${out.schema.treeString} vs ${ref.schema.treeString}")
     val (got, want) = (rawRows(out), rawRows(ref))

@@ -705,9 +705,9 @@ class StreamingOpsSpec extends SparkSpec {
     def written(): Set[(Long, String, Int)] = spark.read.parquet(out)
       .select("doc_id", "text", "n_chars").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    StreamingOps.perBatchBody(batch, 7L, out, spark)(op)
+    StreamingOps.perBatchBody(batch, 7L, out)(op)
     val first = written()
-    StreamingOps.perBatchBody(batch, 7L, out, spark)(op) // the replay overwrites, never appends
+    StreamingOps.perBatchBody(batch, 7L, out)(op) // the replay overwrites, never appends
     assert(new java.io.File(out).list().filter(_.startsWith("batch=")).toSeq == Seq("batch=7"))
     assert(first.size == 3 && written() == first && spark.read.parquet(out).count() == 3)
   }
@@ -726,6 +726,32 @@ class StreamingOpsSpec extends SparkSpec {
       graft.dedup.Dedup.dropSeenJaccard(_, ref, "text", "doc_id", threshold = 0.8))
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+  }
+
+  test("a foreachBatch body scoped on the batch's session releases the caches it derives from the caller's session") {
+    import sqlImplicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = (1 to 50).map(i => s"w$i").mkString(" ")
+    // the reference lives in the caller's session, each micro-batch in
+    // the query's clone of it; dropSeenJaccard persists tables of both
+    val ref = Seq((10L, base)).toDF("doc_id", "text")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val input = MemoryStream[(Long, String)]
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = input.toDF().toDF("doc_id", "text").writeStream
+      .option("checkpointLocation", java.nio.file.Files.createTempDirectory("graft-clone").toString)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        assert(batch.sparkSession ne spark)
+        kept ++= graft.core.CacheScope.run(batch.sparkSession)(
+          graft.dedup.Dedup.dropSeenJaccard(batch, ref, "text", "doc_id", threshold = 0.8)
+            .collect().map(_.getLong(0)).toSeq)
+        ()
+      }
+      .start()
+    Seq(Seq((1L, base)), Seq((2L, "one two three four"))).foreach { b => input.addData(b); q.processAllAvailable() }
+    q.stop()
+    assert(kept.toSet == Set(2L))
     assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
   }
 
